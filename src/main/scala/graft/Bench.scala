@@ -105,25 +105,25 @@ object Bench {
     """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r.findAllMatchIn(obj)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
 
-  /** The last committed same-sf full-suite line's per-query map, from
-    * bench_out.json. "Same suite" is judged by overlap: the line must
-    * cover at least 80% of this run's query names (the suite grows every
-    * round, so exact-set matching would never fire). */
-  private def lastCommittedQueries(sfNum: String, names: Seq[String])
-      : Option[Map[String, Double]] = scala.util.Try {
-    val lines = Files.readAllLines(Paths.get("bench_out.json"))
+  /** The last committed same-sf, same-cpus full-suite line's per-query
+    * map among `lines` (bench_out.json). "Same suite" is judged by
+    * overlap: the line must cover at least 80% of this run's query names
+    * (the suite grows every round, so exact-set matching would never
+    * fire). `cpus` is matched too, quoted or bare: a line from a box with
+    * another core count is no measure of contention on this one. */
+  private[graft] def lastCommittedQueries(lines: Seq[String], sfNum: String,
+      cpus: String, names: Seq[String]): Option[Map[String, Double]] = {
     val nameSet = names.toSet
-    import scala.jdk.CollectionConverters._
-    lines.asScala.reverseIterator.flatMap { l =>
-      val sfOk = """"sf":([0-9.eE+-]+)""".r.findFirstMatchIn(l)
-        .exists(_.group(1) == sfNum)
-      if (!sfOk) None
+    def field(l: String, key: String) =
+      s""""$key":"?([^",}]+)""".r.findFirstMatchIn(l).map(_.group(1))
+    lines.reverseIterator.flatMap { l =>
+      if (!field(l, "sf").contains(sfNum) || !field(l, "cpus").contains(cpus)) None
       else braceObj(l, "queries").map(parseFlatMap).filter { m =>
         val common = m.keySet.intersect(nameSet).size
         common >= math.max(1, (nameSet.size * 0.8).toInt)
       }
     }.nextOption()
-  }.toOption.flatten
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -153,7 +153,10 @@ object Bench {
     val names = suite.map(_._1)
     val sfNum = "sf([0-9]+(?:\\.[0-9]+)?)$".r.findFirstMatchIn(sfDir)
       .map(_.group(1)).getOrElse("-1")
-    val prev = lastCommittedQueries(sfNum, names)
+    val prev = scala.util.Try {
+      import scala.jdk.CollectionConverters._
+      Files.readAllLines(Paths.get("bench_out.json")).asScala.toSeq
+    }.toOption.flatMap(lastCommittedQueries(_, sfNum, cpus, names))
 
     case class Run(results: Seq[(String, Double)], calBefore: Double,
                    calAfter: Double, loadBefore: Double, loadAfter: Double) {

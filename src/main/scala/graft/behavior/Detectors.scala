@@ -482,19 +482,6 @@ object Detectors {
     blobSpeedG(Cols.normalizeNtz(blob).withColumn(G, lit("")), fps, cm2px,
       bucketSeconds).drop(G)
 
-  /** [[blobSpeed]] with an explicit frame-id baseline (the POSE stream's
-    * start, so speed frames align with the detector's frame grid) — used by
-    * the streaming poller's incremental speed table
-    * ([[graft.streaming.FightStream.updateBlobSpeeds]]). */
-  def blobSpeedWithBase(blob: DataFrame, fps: Double, cm2px: Double,
-      t0us: Long, bucketSeconds: Long = 3600): DataFrame = {
-    val spark = blob.sparkSession
-    import spark.implicits._
-    val bounds = Seq(("", t0us)).toDF(G, "t0us")
-    blobSpeedG(Cols.normalizeNtz(blob).withColumn(G, lit("")), fps, cm2px,
-      bucketSeconds, Some(bounds)).drop(G)
-  }
-
   /** Grouped core of [[blobSpeed]]: `blob` carries the shard key `_g`;
     * every window and bucket chain is per-shard. `boundsOpt` supplies a
     * shared per-shard frame-id baseline (the POSE stream's start when

@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 import graft.behavior.Detectors
 import graft.behavior.Detectors.{FightEvent, FightParams}
+import graft.functions.Cols
+import scala.collection.mutable.ArrayBuffer
 
 /** End-to-end INCREMENTAL fight detection — the reference's operational
   * mode (`combine_pose_id_automated.py:149-185`: a 30-minute polling loop
@@ -40,11 +42,18 @@ import graft.behavior.Detectors.{FightEvent, FightParams}
   * form. The poll contract is the file-discovery contract: `upToUs` must
   * not exceed the earliest event time that could still arrive.
   *
-  * Condition 3 (blob speed): an incrementally-maintained per-frame speed
-  * table ([[updateBlobSpeeds]] — the exact batch recipe over the trailing
-  * hour buckets, dynamic partition overwrite) stream-static-joined into
-  * stage 2; omitting `blobDir` disables it, exactly like `blob = None` in
-  * batch.
+  * Condition 3 (blob speed): stage 0, a fourth checkpointed query drained
+  * before stage 2, carries the batch recipe [[Detectors.blobSpeed]]
+  * across polls in `flatMapGroupsWithState` keyed by epoch
+  * ([[carryBlobSpeed]]): per poll it reads only the newly landed blob
+  * files. Its sink holds each frame's speed once as a final row when the
+  * frame's smoothing windows are complete, plus per poll a provisional
+  * set for the pending tail (at most four kept samples' windows still
+  * open, truncated at the newest sample). Stage 2 stream-static-joins
+  * every final row plus each epoch's newest provisional set
+  * ([[blobSpeeds]]), which is exactly the recipe over all blob rows landed
+  * so far, the end of an epoch's blob stream included. Omitting `blobDir`
+  * disables condition 3, exactly like `blob = None` in batch.
   *
   * Deviations from batch [[Detectors.detectFights]] (documented): a camera
   * gap that SPANS a poll frontier gets
@@ -115,8 +124,26 @@ object FightStream {
     StructField("time", TimestampType), StructField("x", DoubleType),
     StructField("y", DoubleType)))
 
-  private val speedSchema: StructType = StructType(Seq(
-    StructField("frame", LongType), StructField("blob_speed", DoubleType)))
+  /** Stage-0 input: one blob sample of an epoch, null/NaN x/y already
+    * dropped, `frame` on the epoch's pose frame grid. */
+  case class BlobSample(epoch: String, tUs: Long, frame: Long, x: Double, y: Double)
+
+  /** Stage-0 output: one frame's smoothed blob speed. A final row is
+    * written once, when every sample of its frame has its full smoothing
+    * window. A provisional row is a frame of the pending tail, its windows
+    * truncated at the newest sample like the batch recipe's at the end of
+    * a stream; it is superseded by the epoch's next provisional set
+    * (`asOfUs` = the newest sample time when the set was written). */
+  case class BlobSpeedRow(epoch: String, frame: Long, blob_speed: Double,
+      isFinal: Boolean, asOfUs: Long)
+
+  /** Stage-0 carry of one epoch: the newest raw sample time (the
+    * dt-anomaly predecessor), the last kept sample (the lag predecessor),
+    * the lag speeds of up to five kept samples before the pending ones
+    * (their smoothing context) and the pending kept samples, those of the
+    * frames not yet written as final. */
+  case class BlobCarry(lastRawUs: Long, lastUs: Long, lastX: Double, lastY: Double,
+      hist: Seq[Double], pendFrame: Seq[Long], pendLag: Seq[Double])
 
   /** Stage 1 plan: N per-epoch pose streams (each unioned with its marker
     * channel and tagged by [[Poll.prePivot]] with its OWN `t0us` grid and
@@ -286,6 +313,7 @@ object FightStream {
   private val silverSchema = org.apache.spark.sql.Encoders.product[SilverRow].schema
   private val filledSchema = org.apache.spark.sql.Encoders.product[FilledRow].schema
   private val eventSchema = org.apache.spark.sql.Encoders.product[EpochFightEvent].schema
+  private val blobSpeedSchema = org.apache.spark.sql.Encoders.product[BlobSpeedRow].schema
 
   private def drain(df: DataFrame, outPath: String, checkpoint: String): Unit =
     Poll.drain(df, outPath, checkpoint)
@@ -293,53 +321,103 @@ object FightStream {
   private def ensureDir(spark: SparkSession, path: String): Unit =
     Poll.ensureDir(spark, path)
 
-  /** Incrementally maintain the per-frame smoothed blob-speed table
-    * (condition 3, reference `social_behaviour_detection.py:579-601`): the
-    * exact batch recipe ([[Detectors.blobSpeedWithBase]], dt-anomaly drop →
-    * lag recompute → 10-row smoothing, hour-bucketed) recomputed each poll
-    * for only the LAST TWO existing hour-bucket partitions plus anything
-    * newer, then written with dynamic partition overwrite. Earlier buckets
-    * already had their full ±5-row smoothing context when written, so they
-    * are final — per-poll work is O(new data), not O(epoch).
-    *
-    * Speeds are final for every frame with ≥ 5 blob samples after it, so
-    * the poll contract extends to the blob stream: blob data through
-    * `upToUs` plus 5 samples must have landed before the pose frontier
-    * advances to `upToUs`. */
-  def updateBlobSpeeds(spark: SparkSession, blobDir: String, speedDir: String,
-      p: FightParams, t0us: Long, bucketSeconds: Long = 3600): Unit = {
-    val durUs = frameDurUs(p.fps)
-    val bUs = bucketSeconds * 1000000L
-    val root = new org.apache.hadoop.fs.Path(speedDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existingMax: Option[Long] =
-      if (!fs.exists(root)) None
-      else fs.listStatus(root).iterator
-        .map(_.getPath.getName).filter(_.startsWith("_sb="))
-        .map(_.stripPrefix("_sb=").toLong)
-        .foldLeft(Option.empty[Long])((acc, b) => Some(acc.fold(b)(math.max(_, b))))
-    val b0 = existingMax.map(_ - 1)
-    val blob = spark.read.schema(blobSchema).parquet(blobDir)
-    // input THREE buckets behind the recompute floor: the floor's ghost
-    // rows come from bucket b0−1, whose smoothing partition takes the last
-    // 6 SURVIVORS of b0−2 as its own ghosts; b0−2's survivor set needs its
-    // head row's pass-1 dt decision, which needs the last row of b0−3.
-    // (Two buckets of slack closed only one level of this chain — a
-    // sparse b0−2 whose head sat among its last-6 survivors could diverge
-    // from the batch computation. The chain terminates here because only
-    // the PRESENCE of b0−3's last row matters for b0−2's pass 1; the
-    // residual all-buckets-sparse case is excluded by the documented
-    // ≥-window-extent-rows-per-bucket precondition that blobSpeed's
-    // guardSparse enforces.)
-    val sliced = b0.fold(blob)(b =>
-      blob.filter(unix_micros(col("time")) >= lit((b - 3) * bUs)))
-    val sp = Detectors.blobSpeedWithBase(sliced, p.fps, p.cm2px, t0us, bucketSeconds)
-      // integral div: a double round-trip could flip floor at exact
-      // bucket-boundary microseconds
-      .withColumn("_sb", expr(s"(${t0us}L + frame * ${durUs}L) div ${bUs}L"))
-    b0.fold(sp)(b => sp.filter(col("_sb") >= b))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_sb").parquet(speedDir)
+  /** Stage 0 plan: one blob file source per epoch with a `blobDir`
+    * (positional, like stage 1's pose sources), tagged with the epoch key
+    * and framed on its `t0us` grid as literals, into ONE epoch-keyed
+    * sequential carry ([[carryBlobSpeed]]) — the batch recipe
+    * [[Detectors.blobSpeed]] extended sample by sample, so per-poll work
+    * is proportional to the delivery, not to the blob history. */
+  def blobSpeedQuery(spark: SparkSession, epochs: Seq[FightEpoch],
+      p: FightParams): Dataset[BlobSpeedRow] = {
+    import spark.implicits._
+    val branches = epochs.flatMap(e => e.blobDir.map { bd =>
+      val tUs = unix_micros(col("time"))
+      spark.readStream.schema(blobSchema).parquet(bd)
+        .na.drop(Seq("x", "y"))
+        .select(lit(e.epoch).as("epoch"), tUs.as("tUs"),
+          Cols.frameId(tUs, lit(e.t0us), p.fps).as("frame"), col("x"), col("y"))
+    })
+    branches.reduce(_.unionByName(_)).as[BlobSample]
+      .groupByKey(_.epoch)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (epoch: String, it: Iterator[BlobSample], state: GroupState[BlobCarry]) =>
+          val (carry, rows) = carryBlobSpeed(epoch, state.getOption,
+            it.toArray.sortBy(_.tUs), p.cm2px)
+          carry.foreach(state.update)
+          rows.iterator
+      }
+  }
+
+  /** One epoch's stage-0 step over time-ordered `samples`: the batch
+    * recipe as a sequential carry. A sample under 10 ms after the previous
+    * raw sample is dropped; a kept sample's lag speed is
+    * `hypot / floor(dt ms) / cm2px * 1000` against the previous kept one
+    * (0 for the first); its smoothed speed is the left-to-right sum of the
+    * lag speeds of kept rows [−5, +4] divided by 10; a frame's speed is
+    * the mean over its kept samples. Frames whose samples all have four
+    * kept samples after them are final; the rest are returned as the
+    * provisional set, only when a new sample arrived. A sample at or
+    * before the newest one already carried arrived late and is dropped. */
+  private[streaming] def carryBlobSpeed(epoch: String, prior: Option[BlobCarry],
+      samples: Seq[BlobSample], cm2px: Double): (Option[BlobCarry], Seq[BlobSpeedRow]) = {
+    var lastRaw = prior.fold(Long.MinValue)(_.lastRawUs)
+    var (lastUs, lastX, lastY) = prior.fold((0L, 0.0, 0.0))(c => (c.lastUs, c.lastX, c.lastY))
+    val hist = prior.fold(Seq.empty[Double])(_.hist)
+    val frames = ArrayBuffer.from(prior.fold(Seq.empty[Long])(_.pendFrame))
+    val lags = ArrayBuffer.from(prior.fold(Seq.empty[Double])(_.pendLag))
+    samples.foreach { s =>
+      if (s.tUs > lastRaw) {
+        val first = lastRaw == Long.MinValue
+        if (first || (s.tUs - lastRaw) / 1000.0 >= 10.0) {
+          lags += (if (first) 0.0 else math.hypot(s.x - lastX, s.y - lastY) /
+            math.floor((s.tUs - lastUs) / 1000.0) / cm2px * 1000.0)
+          frames += s.frame
+          lastUs = s.tUs; lastX = s.x; lastY = s.y
+        }
+        lastRaw = s.tUs
+      }
+    }
+    if (lastRaw == Long.MinValue) return (None, Nil)
+    val advanced = prior.forall(_.lastRawUs != lastRaw)
+    // hist holds every earlier kept sample while there are fewer than
+    // five, so clipping the window at index 0 is the stream start
+    val all = hist ++ lags
+    def smoothed(g: Int): Double = {
+      var sum = 0.0
+      for (k <- math.max(0, g - 5) to math.min(all.length - 1, g + 4)) sum += all(k)
+      sum / 10.0
+    }
+    val n = lags.length
+    val out = ArrayBuffer.empty[BlobSpeedRow]
+    var nFinal = 0
+    var j = 0
+    while (j < n) {
+      var k = j
+      while (k + 1 < n && frames(k + 1) == frames(j)) k += 1
+      val isFinal = k <= n - 5
+      if (isFinal) nFinal = k + 1
+      if (isFinal || advanced) {
+        var sum = 0.0
+        for (i <- j to k) sum += smoothed(hist.length + i)
+        out += BlobSpeedRow(epoch, frames(j), sum / (k - j + 1), isFinal, lastRaw)
+      }
+      j = k + 1
+    }
+    (Some(BlobCarry(lastRaw, lastUs, lastX, lastY,
+      (hist ++ lags.take(nFinal)).takeRight(5),
+      frames.drop(nFinal).toSeq, lags.drop(nFinal).toSeq)), out.toSeq)
+  }
+
+  /** The per-frame blob speeds stage 2 joins: every final stage-0 row plus
+    * each epoch's newest provisional set. Columns `epoch, frame,
+    * blob_speed`; one row per (epoch, frame) with a kept blob sample. */
+  def blobSpeeds(spark: SparkSession, workDir: String): DataFrame = {
+    val sp = spark.read.schema(blobSpeedSchema).parquet(s"$workDir/blob_speed")
+    val newest = sp.filter(!col("isFinal"))
+      .groupBy("epoch").agg(max(col("asOfUs")).as("_newest"))
+    sp.join(broadcast(newest), Seq("epoch"), "left")
+      .filter(col("isFinal") || col("asOfUs") === col("_newest"))
+      .select("epoch", "frame", "blob_speed")
   }
 
   /** One incremental poll over N epochs (the reference's 30-minute loop
@@ -374,6 +452,22 @@ object FightStream {
     * ENFORCED: the ordered epoch list is persisted to `workDir/epochs.txt`
     * on the first poll and must match exactly (same keys, same ORDER — the
     * source slots and per-epoch dirs are positional) on every later poll.
+    * Which epochs have a `blobDir` is fixed the same way (stage 0 has one
+    * positional source per such epoch), recorded in
+    * `workDir/blob_sources.txt`.
+    *
+    * Blob contract (condition 3): a frame's speed is exact once four kept
+    * blob samples follow it; before that stage 2 sees the truncated-window
+    * speed the batch recipe gives at the end of a blob stream, so blob
+    * data should run a few samples past `upToUs` when the pose frontier
+    * gets there. Blob samples must land in time order across polls: a
+    * sample at or before the newest sample of an earlier poll is dropped,
+    * like a late pose row. Stage 0's sink and checkpoint
+    * (`workDir/blob_speed`, `workDir/ckpt_blob_speed`) replace the
+    * hour-bucketed `workDir/speed` table of earlier versions, which is
+    * left untouched: the first poll of such a `workDir` reads its whole
+    * blob history in one stage-0 batch, a one-time catch-up whose samples
+    * pass through one task per epoch.
     *
     * Memory contract: each poll's silver rows pass through one stateful
     * task PER EPOCH ([[fillAndFlag]]'s sequential carry), so a poll must be
@@ -393,50 +487,44 @@ object FightStream {
     // the stage checkpoints and per-epoch dirs are positional — the epoch
     // sequence must be byte-identical on every poll of this workDir
     Poll.checkEpochManifest(spark, workDir, epochs.map(_.epoch))
+    Poll.checkBlobManifest(spark, workDir,
+      epochs.map(e => (e.epoch, e.blobDir.isDefined)))
     val durUs = frameDurUs(p.fps)
     val markerRoot = s"$workDir/markers"
     val silverDir = s"$workDir/silver"
     val filledDir = s"$workDir/filled"
     val eventsDir = s"$workDir/events"
-    val speedRoot = s"$workDir/speed"
-    // single-epoch workDirs keep the pre-multi layout (markers/ and speed/
-    // directly under workDir): the stage-1 checkpoint pins its source
-    // PATHS and the speed table is incrementally maintained in place, so a
-    // layout change would orphan a live deployment's seen-file logs and
-    // hour buckets and recompute its whole speed history in one poll
-    val single = epochs.lengthCompare(1) == 0
-    def slotDir(root: String, i: Int): String =
-      if (single) root else s"$root/m$i"
+    // single-epoch workDirs keep the pre-multi layout (markers/ directly
+    // under workDir): the stage-1 checkpoint pins its source PATHS
+    val markerDirs =
+      if (epochs.lengthCompare(1) == 0) Seq(markerRoot)
+      else epochs.indices.map(i => s"$markerRoot/m$i")
     Seq(silverDir, filledDir, eventsDir).foreach(ensureDir(spark, _))
     val t0ByEpoch = epochs.map(e => e.epoch -> e.t0us).toMap
-    val markerDirs = epochs.indices.map(i => slotDir(markerRoot, i))
-    epochs.zipWithIndex.foreach { case (e, i) =>
-      ensureDir(spark, markerDirs(i))
-      // condition 3: refresh the incremental per-frame speed table BEFORE
-      // the filled stage reads it (stream-static join below)
-      e.blobDir.foreach(bd =>
-        updateBlobSpeeds(spark, bd, slotDir(speedRoot, i), p, e.t0us))
-      Poll.writeMarkers(spark, markerDirs(i), upToUs, durUs)
+    markerDirs.foreach { md =>
+      ensureDir(spark, md)
+      Poll.writeMarkers(spark, md, upToUs, durUs)
     }
+    val hasBlob = epochs.exists(_.blobDir.isDefined)
+    // condition 3: stage 0 extends the blob-speed sink BEFORE stage 2
+    // reads it (stream-static join below)
+    if (hasBlob)
+      drain(blobSpeedQuery(spark, epochs, p).toDF(), s"$workDir/blob_speed",
+        s"$workDir/ckpt_blob_speed")
     drain(silverQueryMulti(spark, epochs, markerDirs, parts, p.fps),
       silverDir, s"$workDir/ckpt_silver")
     val silver = spark.readStream.schema(silverSchema).parquet(silverDir)
       // pre-epoch-column rows read back as null = the single-epoch key ""
       .withColumn("epoch", coalesce(col("epoch"), lit("")))
-    // stream-static left join against the per-epoch speed tables (batch
-    // joins the same shape onto the dense spine); an epoch with no blob
-    // source gets speed = MaxValue (condition 3 off, like blob = None),
-    // one WITH a source but no sample for a frame gets NaN (not a
-    // candidate, like batch's null left join)
-    val withSpeed = if (epochs.exists(_.blobDir.isDefined)) {
-      val speeds = epochs.zipWithIndex.flatMap { case (e, i) =>
-        e.blobDir.map(_ => spark.read.schema(speedSchema)
-          .parquet(slotDir(speedRoot, i))
-          .select(lit(e.epoch).as("epoch"), col("frame"), col("blob_speed")))
-      }.reduce(_.unionByName(_))
+    // stream-static left join against the stage-0 speeds (batch joins the
+    // same shape onto the dense spine); an epoch with no blob source gets
+    // speed = MaxValue (condition 3 off, like blob = None), one WITH a
+    // source but no sample for a frame gets NaN (not a candidate, like
+    // batch's null left join)
+    val withSpeed = if (hasBlob) {
       val defaults = epochs.map(e =>
         e.epoch -> (if (e.blobDir.isDefined) Double.NaN else Double.MaxValue)).toMap
-      silver.join(speeds, Seq("epoch", "frame"), "left")
+      silver.join(blobSpeeds(spark, workDir), Seq("epoch", "frame"), "left")
         .withColumn("speed", coalesce(col("blob_speed"),
           element_at(typedLit(defaults), col("epoch"))))
         .drop("blob_speed")
@@ -449,20 +537,18 @@ object FightStream {
     // sink slice, written per micro-batch under an id-keyed subdir —
     // overwrite of the same subdir makes checkpoint replays idempotent
     // (exactly-once events without relying on sink transactionality)
-    def goldOnce(): Unit =
-      goldSessions(filled, p, t0ByEpoch).writeStream
-        .option("checkpointLocation", s"$workDir/ckpt_gold")
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val spans = batch.select("epoch", "minF", "maxF").collect()
-            .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-          if (spans.nonEmpty)
-            eventsFromSpans(batch.sparkSession, spans, filledDir, p).toDF()
-              .write.mode("overwrite").parquet(s"$eventsDir/b$batchId")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    goldOnce(); goldOnce()
+    goldSessions(filled, p, t0ByEpoch).writeStream
+      .option("checkpointLocation", s"$workDir/ckpt_gold")
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spans = batch.select("epoch", "minF", "maxF").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        if (spans.nonEmpty)
+          eventsFromSpans(batch.sparkSession, spans, filledDir, p).toDF()
+            .write.mode("overwrite").parquet(s"$eventsDir/b$batchId")
+        ()
+      }
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
   }
 
   /** Single-epoch poll (epoch key `""`): the multi-epoch poller with one

@@ -91,13 +91,12 @@ private[streaming] object Poll {
       t0us: Long, ids: Seq[String]): DataFrame =
     pivotFeatures(prePivot(pose, "", parts, fps, t0us, ids), fps)
 
-  def drain(df: DataFrame, outPath: String, checkpoint: String): Unit = {
-    // second pass: stateful append sinks evict with the watermark advanced
-    // by the FIRST pass's data, so a no-data flush run emits what the data
-    // run closed — without it, emission would lag one poll behind
+  /** One AvailableNow pass. A stateful append sink evicts with the
+    * watermark its data batch advanced in the trailing no-data batch that
+    * AvailableNow runs before it terminates, so what this poll's data
+    * closed is emitted by this same pass, not one poll later. */
+  def drain(df: DataFrame, outPath: String, checkpoint: String): Unit =
     Streaming.drainToParquet(df, outPath, checkpoint)
-    Streaming.drainToParquet(df, outPath, checkpoint)
-  }
 
   /** Pre-create a work dir THROUGH the Hadoop filesystem of its path —
     * java.io.File.mkdirs on an hdfs:///s3a:// URI would create a junk
@@ -128,9 +127,9 @@ private[streaming] object Poll {
   }
 
   /** Persist and validate the ORDERED epoch list of a multi-epoch
-    * `workDir`. The stage-1 streaming sources and the per-epoch
-    * marker/speed dirs are POSITIONAL (slot i of the source union, dir
-    * `m$i`), and Structured Streaming's per-source seen-file logs are
+    * `workDir`. The stage-1 streaming sources and the per-epoch marker
+    * dirs are POSITIONAL (slot i of the source union, dir `m$i`), and
+    * Structured Streaming's per-source seen-file logs are
     * keyed by that position — so the epoch sequence must be byte-stable
     * across polls of the same `workDir`. The first poll writes
     * `workDir/epochs.txt` (one key per line, in order); every later poll
@@ -138,12 +137,38 @@ private[streaming] object Poll {
     * Map or a directory listing and gets a different order fails HERE,
     * loudly, instead of silently crediting one epoch's files to another
     * epoch's source slot (which would re-ingest already-seen files as new
-    * and join the wrong speed table). */
+    * and tag them with the wrong epoch key). */
   def checkEpochManifest(spark: SparkSession, workDir: String,
       epochs: Seq[String]): Unit = {
     require(epochs.forall(e => !e.contains("\n") && !e.contains("\r")),
       "epoch keys must not contain line breaks")
-    val p = new org.apache.hadoop.fs.Path(s"$workDir/epochs.txt")
+    checkManifest(spark, s"$workDir/epochs.txt", epochs,
+      s"epoch list of workDir '$workDir' changed: the checkpointed " +
+        "stages are positional, so the epoch Seq must be identical " +
+        "(same keys, same order) on every poll",
+      "Onboarding or removing an epoch requires a new workDir.")
+  }
+
+  /** Persist and validate which epochs of a fight `workDir` have a blob
+    * source. Stage 0 of [[FightStream.pollFightsMulti]] has one positional
+    * file source per such epoch, pinned in its checkpoint like stage 1's
+    * pose sources, so this set is as fixed as the epoch list. Recorded in
+    * `workDir/blob_sources.txt`, one `blob <key>` or `none <key>` line per
+    * epoch in epoch order, by the first poll that finds it absent. */
+  def checkBlobManifest(spark: SparkSession, workDir: String,
+      epochs: Seq[(String, Boolean)]): Unit =
+    checkManifest(spark, s"$workDir/blob_sources.txt",
+      epochs.map { case (e, hasBlob) => (if (hasBlob) "blob " else "none ") + e },
+      s"blob sources of workDir '$workDir' changed: stage 0 has one " +
+        "positional file source per epoch with a blobDir, so the set of " +
+        "epochs with a blob source must be identical on every poll",
+      "Adding or removing an epoch's blob source requires a new workDir.")
+
+  /** Write `lines` to `path` on the first call, require them unchanged on
+    * every later one. */
+  private def checkManifest(spark: SparkSession, path: String,
+      lines: Seq[String], changed: String, remedy: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {
       val in = fs.open(p)
@@ -153,16 +178,12 @@ private[streaming] object Poll {
       // file ends with one trailing \n; split -1 keeps interior empties
       // (the single-epoch key is ""), init drops the trailing one
       val prior = content.split("\n", -1).toSeq.init
-      require(prior == epochs,
-        s"epoch list of workDir '$workDir' changed: the checkpointed " +
-          s"stages are positional, so the epoch Seq must be identical " +
-          s"(same keys, same order) on every poll. Recorded: " +
-          s"${prior.mkString("[", ", ", "]")}; got: " +
-          s"${epochs.mkString("[", ", ", "]")}. Onboarding or removing " +
-          "an epoch requires a new workDir.")
+      require(prior == lines,
+        s"$changed. Recorded: ${prior.mkString("[", ", ", "]")}; got: " +
+          s"${lines.mkString("[", ", ", "]")}. $remedy")
     } else {
       val out = fs.create(p, false)
-      try out.write(epochs.mkString("", "\n", "\n").getBytes("UTF-8"))
+      try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
       finally out.close()
     }
   }

@@ -15,7 +15,10 @@ import org.apache.spark.sql.types.StructType
   * time after the period ends (`:182-184`). Structured Streaming's file
   * source + checkpoint replaces all of it: exactly-once file tracking is
   * the checkpoint's job, idempotent output is the sink's job, and the
-  * bounded watch is `Trigger.AvailableNow` re-runs (or a timed `stop()`).
+  * bounded watch is one `Trigger.AvailableNow` run per poll (or a timed
+  * `stop()`): AvailableNow ends with the no-data batch in which a
+  * stateful append query evicts with the watermark its last data batch
+  * advanced, so one run emits everything that poll's data closed.
   *
   * Sessionization parity: `session_window(time, gap)` is the streaming
   * flavor of the batch cumulative-sum `Sessionize` — both split on

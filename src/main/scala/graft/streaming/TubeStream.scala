@@ -223,21 +223,19 @@ object TubeStream {
     // gold: closed spans → exact batch tail over the densified silver
     // slice, written per micro-batch under an id-keyed subdir — overwrite
     // of the same subdir makes checkpoint replays idempotent
-    def goldOnce(): Unit =
-      goldSessions(silver, p, t0ByEpoch).writeStream
-        .option("checkpointLocation", s"$workDir/ckpt_gold")
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val spans = batch.select("epoch", "minF", "maxF").collect()
-            .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-          if (spans.nonEmpty)
-            eventsFromSpans(batch.sparkSession, spans, silverDir, p, epochs)
-              .toDF()
-              .write.mode("overwrite").parquet(s"$eventsDir/b$batchId")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    goldOnce(); goldOnce()
+    goldSessions(silver, p, t0ByEpoch).writeStream
+      .option("checkpointLocation", s"$workDir/ckpt_gold")
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spans = batch.select("epoch", "minF", "maxF").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        if (spans.nonEmpty)
+          eventsFromSpans(batch.sparkSession, spans, silverDir, p, epochs)
+            .toDF()
+            .write.mode("overwrite").parquet(s"$eventsDir/b$batchId")
+        ()
+      }
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
   }
 
   /** Single-epoch poll (epoch key `""`): the multi-epoch poller with one
