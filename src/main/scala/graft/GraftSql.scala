@@ -1744,20 +1744,13 @@ object GraftSql {
     * ([[graft.streaming.PipelineStream]]) from SQL: one checkpointed poll
     * dedups every newly-landed (doc_id, text, embedding) file against the
     * full corpus state and appends only NEW cluster representatives'
-    * embeddings to the persisted IVF index. `spanTokens > 0` switches on
-    * the ingest span-duplication floor (documents whose duplicate-text
-    * fraction against the accumulated corpus exceeds `maxDupFrac` are
-    * dropped before dedup and indexing); `maxDupWordFrac` /
-    * `maxTopBigramFrac < 1.0` the stateless Gopher repetition floor;
-    * `benchView` (a registered view with a `text` column) plus
-    * `maxContamFrac < 1.0` the benchmark decontamination gate; `gopher`
-    * the Gopher/MassiveText rule floor; `minQuality`/'stop,words' the
-    * quality floor and 'keep,langs' + 'en:the,a;de:der' the language
-    * floor; `'classifierView'` + `classifierDim` + `minLogitMicro` the
-    * classifier floor (a (feature, w_micro) weight view, the
-    * `graft_classifier_train_t` output) — all with
-    * [[graft.llm.Corpus.prepare]] / [[graft.llm.Dedup
-    * .contaminationStats]] parameter semantics. EAGER side effect;
+    * embeddings to the persisted IVF index. The arguments after
+    * `minJaccard` are the ingest gates, each the [[graft.llm.Gates]] field
+    * of the same name ('stop,words' the quality stops, 'keep,langs' the
+    * langs, 'en:the,a;de:der' the langMarkers, the views registered
+    * `text` and (feature, w_micro) tables). A gate is on once its
+    * threshold is set: spanTokens > 0, a fraction or semMinCos < 1.0,
+    * minQuality > 0, a view or language list given. EAGER side effect;
     * isolated session for the same deadlock reason as
     * `graft_ingest_dedup_t`; returns the accumulated (doc_id, rep_id)
     * assignment table. */
@@ -1853,15 +1846,24 @@ object GraftSql {
     val minLogitMicro =
       if (args.length == 21) lngLit(args(20), fn, "minLogitMicro")
       else Long.MinValue
-    graft.streaming.PipelineStream.pollIngest(iso, landing,
-      work, index, p, spanTokens = spanTokens, maxDupFrac = maxDupFrac,
-      maxDupWordFrac = maxDupWordFrac, maxTopBigramFrac = maxTopBigramFrac,
-      benchDocs = benchDocs, contamN = contamN, maxContamFrac = maxContamFrac,
-      normalize = normalize, semMinCos = semMinCos, gopher = gopher,
-      minQuality = minQuality, qualityStops = qualityStops,
-      langs = langs, langMarkers = langMarkers,
-      classifier = classifier, classifierDim = classifierDim,
-      minLogitMicro = minLogitMicro)
+    import graft.llm.Gates
+    val gates = Gates(
+      normalize = normalize,
+      semantic = Option.when(semMinCos < 1.0)(Gates.Semantic(semMinCos)),
+      span = Option.when(spanTokens > 0)(Gates.Span(spanTokens, maxDupFrac)),
+      repetition = Option.when(maxDupWordFrac < 1.0 || maxTopBigramFrac < 1.0)(
+        Gates.Repetition(maxDupWordFrac, maxTopBigramFrac)),
+      gopher = gopher,
+      classifier = classifier.map(Gates.Classifier(_, minLogitMicro,
+        classifierDim)),
+      contamination = benchDocs.map(Gates.Contamination(_, maxContamFrac,
+        contamN)),
+      quality = Option.when(minQuality > 0.0)(
+        Gates.QualityFloor(minQuality, qualityStops)),
+      language = Option.when(langs.nonEmpty || langMarkers.nonEmpty)(
+        Gates.Language(langs, langMarkers)))
+    graft.streaming.PipelineStream.pollIngest(iso, landing, work, index,
+      gates, p)
     graft.streaming.DedupStream.assignments(spark, work)
       .queryExecution.logical
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.llm.{Quality, Similarity}
+import graft.llm.{Gates, Quality, Similarity}
 import graft.streaming.{DedupStream, PipelineStream}
 
 /** Ingest-at-scale probe (round-11 stretch 8): `pollIngest` end-to-end
@@ -144,22 +144,21 @@ object IngestProbe {
       docs.write.mode("overwrite").parquet(s"$landing/d$dlv")
 
       val t0 = System.nanoTime()
-      PipelineStream.pollIngest(spark, landing, work, index, p,
-        compactEvery = 4,
-        spanTokens = 8, maxDupFrac = 0.5,
-        maxDupWordFrac = 0.6, maxTopBigramFrac = 0.3,
-        benchDocs = Some(bench), contamN = 5, maxContamFrac = 0.2,
-        normalize = true,
-        lmModel = Some(uni), maxPpl = 50000.0,
-        semMinCos = 0.95,
-        gopher = false, // the stop-heavy fixture is tuned for quality/lang
-        minQuality = 0.5, qualityStops = Seq("the", "a", "of", "and", "to"),
-        langs = Seq("en"),
-        langMarkers = Seq("en" -> Seq("the", "of"), "es" -> Seq("el", "la")),
-        classifier = Some(clfW), classifierDim = dim,
-        minLogitMicro = 0L,
-        biLm = Some(bi),
-        langClassifier = Some(langW), langClassifierDim = dim)
+      PipelineStream.pollIngest(spark, landing, work, index, Gates(
+          normalize = true,
+          semantic = Some(Gates.Semantic(0.95)),
+          span = Some(Gates.Span(8, 0.5)),
+          repetition = Some(Gates.Repetition(0.6, 0.3)),
+          gopher = false, // the stop-heavy fixture is tuned for quality/lang
+          perplexity = Some(Gates.Perplexity(uni, 50000.0, Some(bi))),
+          classifier = Some(Gates.Classifier(clfW, 0L, dim)),
+          contamination = Some(Gates.Contamination(bench, 0.2, 5)),
+          quality = Some(Gates.QualityFloor(0.5,
+            Seq("the", "a", "of", "and", "to"))),
+          language = Some(Gates.Language(Seq("en"),
+            Seq("en" -> Seq("the", "of"), "es" -> Seq("el", "la")),
+            Some(langW), dim))),
+        p, compactEvery = 4)
       val wall = (System.nanoTime() - t0) / 1e9
       walls(dlv) = wall
       val survivors = DedupStream.assignments(spark, work).count()

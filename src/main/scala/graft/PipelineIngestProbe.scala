@@ -78,7 +78,7 @@ object PipelineIngestProbe {
       corpusSlice(k * copiesPerPoll, (k + 1) * copiesPerPoll)
         .write.parquet(s"$landing/poll$k")
       val t0 = System.nanoTime()
-      PipelineStream.pollIngest(spark, landing, work, index, p,
+      PipelineStream.pollIngest(spark, landing, work, index, p = p,
         compactEvery = 3)
       val w = (System.nanoTime() - t0) / 1e9
       if (indexCount != nBase.toLong) badPolls += 1

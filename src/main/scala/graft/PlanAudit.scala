@@ -3,7 +3,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: scan every query's physical plan for scale red flags —
   * cartesian products, unbroadcast nested-loop joins, global windows/sorts
-  * that move all rows to one partition. */
+  * that move all rows to one partition — and print its Exchange count
+  * (shuffle, broadcast and reused exchange nodes), the plan-shape figure
+  * to compare across commits. One line per query: name, Exchanges, flags. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -21,7 +23,8 @@ object PlanAudit {
             l.contains("Window") && l.contains("partitionBy=[]") && !l.contains("partitionBy=[%")),
           "SinglePartWindow" -> (plan.contains("Window [") && plan.contains("windowspecdefinition()"))
         ).collect { case (f, true) => f }
-        println(s"$name\t${if (flags.isEmpty) "ok" else flags.mkString(",")}")
+        val exchanges = plan.linesIterator.count(_.contains("Exchange"))
+        println(s"$name\t$exchanges\t${if (flags.isEmpty) "ok" else flags.mkString(",")}")
       } catch { case e: Throwable => println(s"$name\tERROR ${e.getMessage.take(80)}") }
     }
     spark.stop()

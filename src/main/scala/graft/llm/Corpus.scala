@@ -9,255 +9,42 @@ import org.apache.spark.sql.functions._
   */
 object Corpus {
 
-  /** Filter to documents meeting a quality floor (rounded to 6 decimals —
-    * the same fixed-point the differential oracles compare at, so the
-    * boundary is bit-stable across engines) in the selected predicted
-    * languages, then exact-dedup the survivors. Per-document stats
-    * (token count, content hash) are computed BEFORE grouping, so the
-    * aggregation shuffles only 32-byte hashes and counters — documents
-    * themselves never shuffle. Output: (rep_id, n_copies, n_tokens) per
-    * distinct surviving content. Near-dup collapse beyond exact content
-    * is [[Dedup.minhashRepresentatives]] composed downstream.
+  /** Gate `docs` through `gates` (see [[Gates]] for each gate), then
+    * exact-dedup the survivors. Per-document stats (token count, content
+    * hash) are computed BEFORE grouping, so the aggregation shuffles only
+    * 32-byte hashes and counters — documents themselves never shuffle.
+    * Output: (rep_id, n_copies, n_tokens) per distinct surviving content.
+    * Near-dup collapse beyond exact content is
+    * [[Dedup.minhashRepresentatives]] composed downstream.
     *
-    * `spanTokens > 0` additionally applies the span-duplication floor
-    * (the [[Dedup.spanDupStats]] signal as a THRESHOLD DROP, the
-    * document-level form of the Lee-et-al recipe): documents whose
-    * fraction of `spanTokens`-token windows duplicated in ≥ `spanMinDocs`
-    * distinct documents exceeds `maxDupFrac` are dropped before the
-    * quality/language/dedup composition. The span stats join shuffles
-    * only (doc_id, three counters); docs shorter than the span have no
-    * windows and always pass. Span-level EXCISION (clean the spans, keep
-    * the doc) is [[Dedup.removeDupSpans]] composed upstream instead.
-    *
-    * `maxDupWordFrac` / `maxTopBigramFrac < 1.0` additionally apply the
-    * WITHIN-document repetition floor (the Gopher-style filters from
-    * [[Quality.repetitionStats]]): documents whose duplicate-word
-    * fraction or top-bigram fraction exceeds its threshold are dropped
-    * by a TRUE scan filter ([[Quality.repetitionPass]], one compiled
-    * doc-local pass — no drop list, no join, no shuffle). The two floors
-    * target different pathologies (cross-corpus boilerplate vs
-    * within-doc looping) and compose independently.
-    *
-    * `normalize = true` canonicalizes text FIRST ([[Quality.normalizeText]]
-    * — control-strip, whitespace collapse, trim), so byte-level transport
-    * noise (CRLF vs LF, tab indentation, trailing blanks) cannot split an
-    * exact-duplicate group in the dedup below, and every downstream floor
-    * (span windows, repetition fractions, quality tokens) sees the
-    * canonical token stream. Pure per-row column math ahead of the
-    * existing plan — no new shuffle, and the default false is
-    * bit-identical to the un-normalized composition.
-    *
-    * `lm` + `maxPpl` additionally apply the PERPLEXITY floor (the
-    * CCNet-shaped reference-LM quality filter, [[Quality.lmPerplexity]]
-    * over a [[Quality.unigramLm]] model): documents whose smoothed
-    * perplexity under the reference model exceeds `maxPpl` are dropped
-    * by a doc_id-only left-anti. The model is vocab-sized and
-    * broadcasts; the scoring join shuffles (doc_id, counters), never
-    * text. Runs with the other stateless per-document floors, after
-    * repetition and before the quality/language/dedup composition.
-    *
-    * `embeddings` + `semCentroids` + `semMinCos < 1.0` additionally apply
-    * the SEMANTIC floor ([[Similarity.semDedup]] — SemDeDup's
-    * cluster-scoped embedding near-dup): every non-min member of a
-    * within-cell cosine-≥-`semMinCos` component is dropped by a
-    * doc_id-only left-anti before the text floors. The embeddings table
-    * is keyed by the SAME ids (`idCol` ↔ its id column's values);
-    * documents without an embedding row are unscorable and pass through.
-    * The quadratic term is bounded per coarse cell — see
-    * [[Similarity.semDedupPairs]] for the 100 TB shape.
-    *
-    * `gopher = true` additionally applies the Gopher/MassiveText rule
-    * floor ([[Quality.gopherPass]] at its published defaults, with
-    * `gopherStops` the one commonly-retuned knob): documents failing any
-    * of the seven rules are dropped. The rules are per-row column math
-    * applied as a TRUE filter, so this gate adds NO shuffle at all — it
-    * folds into the scan. Custom thresholds compose manually:
-    * `docs.filter(Quality.gopherPass(col(text), ...))` ahead of
-    * `prepare`.
-    *
-    * `benchDocs` (with `maxContamFrac < 1.0`) additionally applies
-    * BENCHMARK DECONTAMINATION ([[Dedup.contaminationStats]] as a
-    * threshold drop, the GPT-3/PaLM recipe): documents whose fraction of
-    * distinct `contamN`-token shingles found in the benchmark set exceeds
-    * `maxContamFrac` are dropped. The benchmark set is broadcast (eval
-    * suites are tiny next to a corpus), so nothing corpus-sized shuffles;
-    * `contamHash = false` keys shingles by string for hash-parity-free
-    * differential replay (the d9/d16 convention — hashed ≡ string is
-    * spec-pinned). This closes batch/stream gate symmetry with
-    * [[graft.streaming.PipelineStream.pollIngest]]: every landing-time
-    * gate now has the identical batch parameter.
-    *
-    * `classifier` + `minLogitMicro` additionally apply the CLASSIFIER
-    * floor ([[Quality.scoreTextClassifier]] under a frozen
-    * [[Quality.trainTextClassifier]] weight table — the fastText-shaped
-    * CCNet/GPT-3 "looks like the reference corpus" gate): documents
-    * whose exact integer logit falls below the floor are dropped by a
-    * doc_id-only left-anti. The dim-bounded model broadcasts;
-    * `classifierDim` must equal the dim the table was trained at. */
-  def prepare(docs: DataFrame, idCol: String, textCol: String,
-      stops: Seq[String], markers: Seq[(String, Seq[String])],
-      minQuality: Double, langs: Seq[String],
-      spanTokens: Int = 0, maxDupFrac: Double = 1.0,
-      spanMinDocs: Int = 2,
-      maxDupWordFrac: Double = 1.0, maxTopBigramFrac: Double = 1.0,
-      normalize: Boolean = false,
-      lm: Option[DataFrame] = None, maxPpl: Double = Double.MaxValue,
+    * The semantic floor needs `embeddings` (keyed by the same ids as
+    * `idCol`, in `vec_id`/`embedding` columns) and `semCentroids` (`cell`,
+    * `_cv`); both come with `gates.semantic` or not at all. Null-text
+    * rows drop whether or not the quality floor is on. */
+  def prepare(docs: DataFrame, idCol: String, textCol: String, gates: Gates,
       embeddings: Option[DataFrame] = None,
-      semCentroids: Option[DataFrame] = None,
-      semMinCos: Double = 1.0,
-      semIdCol: String = "vec_id", semVecCol: String = "embedding",
-      gopher: Boolean = false,
-      gopherStops: Seq[String] = Quality.GopherStops,
-      benchDocs: Option[DataFrame] = None, contamN: Int = 5,
-      maxContamFrac: Double = 1.0, contamHash: Boolean = true,
-      // new defaulted parameters at the END of the list — the signature
-      // convention (see pollIngest's contamHash note)
-      classifier: Option[DataFrame] = None,
-      classifierDim: Int = 1 << 18,
-      minLogitMicro: Long = Long.MinValue,
-      // bigram upgrade of the perplexity floor: with `biLm` the ppl
-      // floor scores under the stupid-backoff n-gram model
-      // ([[Quality.ngramPerplexity]]) instead of the unigram scorer —
-      // same broadcast-model shape, word order now visible
-      biLm: Option[DataFrame] = None,
-      lmBackoff: Double = 0.4,
-      // trained language gate: with `langClassifier` (a
-      // [[Quality.trainTextClassifierMulti]] (label, feature, w_micro)
-      // table whose labels are language codes) the language selection
-      // uses [[Quality.langIdTrained]]'s argmax instead of the marker
-      // vote — the `markers` argument becomes inert for gating
-      langClassifier: Option[DataFrame] = None,
-      langClassifierDim: Int = 1 << 18): DataFrame = {
+      semCentroids: Option[DataFrame] = None): DataFrame = {
     require(embeddings.isEmpty == semCentroids.isEmpty,
       "prepare: embeddings and semCentroids come together — pass both or neither")
-    // the bench-gate lesson: a floor the caller believes is on must not
-    // silently no-op on a default threshold
-    require(embeddings.isEmpty || semMinCos < 1.0,
-      "prepare: embeddings given but semMinCos is 1.0 (semantic floor off) — " +
-        "set semMinCos < 1.0, or drop the embeddings argument")
-    require(lm.isEmpty || maxPpl < Double.MaxValue,
-      "prepare: lm given but maxPpl is unset (perplexity floor off) — " +
-        "set maxPpl, or drop the lm argument")
-    require(biLm.isEmpty || lm.nonEmpty,
-      "prepare: biLm given without lm — the bigram floor backs off to " +
-        "the unigram model; pass both")
-    require(langClassifier.isEmpty || langs.nonEmpty,
-      "prepare: langClassifier given but langs is empty (gate off) — " +
-        "select the languages to keep, or drop the classifier")
-    require(benchDocs.isEmpty || maxContamFrac < 1.0,
-      "prepare: benchDocs given but maxContamFrac is 1.0 (gate off) — " +
-        "set maxContamFrac < 1.0 to decontaminate, or drop benchDocs")
-    require(classifier.isEmpty || minLogitMicro > Long.MinValue,
-      "prepare: classifier given but minLogitMicro is unset (gate off) — " +
-        "set the logit floor, or drop the classifier argument")
-    val normalized =
-      if (!normalize) docs
-      else docs.withColumn(textCol, Quality.normalizeText(col(textCol)))
-    val source = embeddings match {
-      case Some(embs) =>
-        normalized.join(
-          Similarity.semDedupDropped(embs, semCentroids.get, semIdCol,
-              semVecCol, semMinCos)
-            .select(col("_drop").as(idCol)),
-          Seq(idCol), "left_anti")
-      case None => normalized
-    }
-    val t: Column = col(textCol)
-    val spanFloored =
-      if (spanTokens <= 0) source
-      else source.join(
-        Dedup.spanDupStats(source, idCol, textCol, spanTokens, spanMinDocs)
-          .filter(col("dup_frac") > maxDupFrac)
+    require(embeddings.isEmpty == gates.semantic.isEmpty,
+      "prepare: the semantic floor needs gates.semantic AND embeddings — " +
+        "pass both, or neither")
+    val normalized = gates.normalized(docs, textCol)
+    val source = gates.semantic.fold(normalized)(sem =>
+      normalized.join(
+        Similarity.semDedupDropped(embeddings.get, semCentroids.get,
+            "vec_id", "embedding", sem.semMinCos)
+          .select(col("_drop").as(idCol)),
+        Seq(idCol), "left_anti"))
+    val spanFloored = gates.span.fold(source)(span =>
+      source.join(
+        Dedup.spanDupStats(source, idCol, textCol, span.spanTokens)
+          .filter(col("dup_frac") > span.maxDupFrac)
           .select(col("doc_id").as(idCol)),
-        Seq(idCol), "left_anti")
-    // within-doc repetition floor: doc-local compiled predicate — a TRUE
-    // scan filter like gopherPass (the old drop-list left-anti re-derived
-    // the stats AND shuffled both corpus-sized sides). Null-id/text rows
-    // pass through here and die in the final quality filter as always.
-    val repFloored =
-      if (maxDupWordFrac >= 1.0 && maxTopBigramFrac >= 1.0) spanFloored
-      else spanFloored.filter(col(idCol).isNull || col(textCol).isNull ||
-        Quality.repetitionPass(t, maxDupWordFrac, maxTopBigramFrac))
-    // the Gopher rule floor is doc-local column math — a TRUE filter
-    // (gopherPass folds into the scan), never a drop-list anti-join:
-    // Gopher drops ~half of raw web text, so the list outgrows broadcast
-    // and the join would shuffle both corpus-sized sides. Null-id/text
-    // rows pass through here (the gopherRules scoring contract) and die
-    // in the final quality filter like everywhere else.
-    val gopherFloored =
-      if (!gopher) repFloored
-      else repFloored.filter(col(idCol).isNull || col(textCol).isNull ||
-        Quality.gopherPass(col(textCol), stops = gopherStops))
-    // EVERY per-document scorer gate (perplexity, classifier,
-    // decontamination, trained langid) scores the SAME base — the corpus
-    // after the scan-filter floors — instead of the previous gate's
-    // output. Each score is a pure per-document function under a frozen
-    // broadcast model/benchmark, so scoring a superset and intersecting
-    // the drop/keep decisions by anti/semi join is bit-identical to the
-    // chained composition (an id absent from the left side is inert in
-    // an anti OR semi join). The chained shape nested each gate's scorer
-    // over the previous gate's JOIN, so with k gates active the
-    // scan+floor subtree appeared 2^k times in the physical plan and no
-    // exchange could be reused across branches (d21's plan: 619 nodes,
-    // 336 Exchanges); the flat shape is k scorer branches over one
-    // shared base.
-    val scoreBase = gopherFloored
-    val pplFloored = lm match {
-      case Some(model) if maxPpl < Double.MaxValue =>
-        val scored = biLm match {
-          case Some(bi) => Quality.ngramPerplexity(scoreBase, model,
-            bi, idCol, textCol, lmBackoff)
-          case None => Quality.lmPerplexity(scoreBase, model, idCol,
-            textCol)
-        }
-        gopherFloored.join(
-          scored.filter(col("ppl") > maxPpl)
-            .select(col("doc_id").as(idCol)),
-          Seq(idCol), "left_anti")
-      case _ => gopherFloored
-    }
-    // classifier floor (the fastText-shaped "looks like the reference
-    // corpus" gate): exact integer logits under a FROZEN weight table —
-    // the dim-bounded model broadcasts as a primitive-keyed map and the
-    // scoring is a zero-shuffle typed scan (no exchange at any width);
-    // drop-list left-anti like the perplexity floor it runs beside.
-    // Null-id/text rows are unscorable and pass through to die in the
-    // final quality filter.
-    val clfFloored = classifier match {
-      case Some(w) if minLogitMicro > Long.MinValue =>
-        pplFloored.join(
-          Quality.scoreTextClassifier(scoreBase, idCol, textCol, w,
-              classifierDim)
-            .filter(col("logit_micro") < minLogitMicro)
-            .select(col("doc_id").as(idCol)),
-          Seq(idCol), "left_anti")
-      case _ => pplFloored
-    }
-    val base = benchDocs match {
-      case Some(bench) if maxContamFrac < 1.0 =>
-        clfFloored.join(
-          Dedup.contaminationStats(scoreBase, bench, idCol, textCol,
-              contamN, hashShingles = contamHash)
-            .filter(col("contam_frac") > maxContamFrac)
-            .select(col("doc_id").as(idCol)),
-          Seq(idCol), "left_anti")
-      case _ => clfFloored
-    }
-    // language selection: the marker vote inline, or — with a trained
-    // model — the argmax langid as a doc_id semi-join (the scorer is a
-    // typed scan; its label re-attaches by id, uniform key)
-    val langGated = langClassifier match {
-      case Some(w) if langs.nonEmpty =>
-        base.join(
-          Quality.langIdTrained(scoreBase, idCol, textCol, w,
-              langClassifierDim)
-            .filter(col("lang").isin(langs: _*))
-            .select(col("doc_id").as(idCol)),
-          Seq(idCol), "left_semi")
-      case _ => base.filter(TextStats.langId(t, markers).isin(langs: _*))
-    }
-    langGated
-      .filter(round(TextStats.qualityScore(t, stops), 6) >= minQuality)
+        Seq(idCol), "left_anti"))
+    val t: Column = col(textCol)
+    gates.filter(spanFloored, idCol, textCol)
+      .filter(t.isNotNull)
       .select(col(idCol), TextStats.tokenCount(t).as("_nt"),
         sha2(t, 256).as("_ch"))
       .groupBy("_ch")

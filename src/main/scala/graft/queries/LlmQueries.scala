@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.llm.{Bpe, Corpus, Dedup, Multimodal, Quality, Relevance, Sampling, Similarity, TextStats}
+import graft.llm.{Bpe, Corpus, Dedup, Gates, Multimodal, Quality, Relevance, Sampling, Similarity, TextStats}
 import Q._
 
 /** LLM training-data pipeline queries over the `documents` and `embeddings`
@@ -20,6 +20,9 @@ object LlmQueries {
     "en" -> Seq("the", "a", "of", "and"),
     "de" -> Seq("der", "die", "das", "und"),
     "es" -> Seq("el", "la", "los", "y"))
+  /** d7's gates: quality floor 0.5 and English by marker vote. */
+  private val D7 = Gates(quality = Some(Gates.QualityFloor(0.5, STOPS)),
+    language = Some(Gates.Language(Seq("en"), MARKERS)))
 
   /** Chunk-every-4-tokens line injection for d16/tx9/d21 —
     * alternation-free and backtracking-trivial so Java and RE2 replace
@@ -410,8 +413,7 @@ object LlmQueries {
     // boundary) + predicted-language selection + exact dedup — the batch
     // recipe a training-data pipeline runs, as ONE oracle-gated query
     "d7_corpus_prepare" -> ((s, dir) => {
-      sortAll(Corpus.prepare(docs(s, dir), "doc_id", "text",
-        STOPS, MARKERS, 0.5, Seq("en")))
+      sortAll(Corpus.prepare(docs(s, dir), "doc_id", "text", D7))
     }),
 
     // d7's composition with transport noise injected (tx7's deterministic
@@ -428,7 +430,7 @@ object LlmQueries {
             lit("\u0001"), col("text").substr(p + 1, length(col("text"))),
             lit("  \r\n")).as("text"))
       sortAll(Corpus.prepare(messy, "doc_id", "text",
-        STOPS, MARKERS, 0.5, Seq("en"), normalize = true))
+        D7.copy(normalize = true)))
     }),
 
     // Span-dup REMOVAL — the cleaning action behind d8's signal: excise
@@ -447,7 +449,7 @@ object LlmQueries {
     // recipe, composed and oracle-gated as one query
     "d10_prepare_span_floor" -> ((s, dir) => {
       sortAll(Corpus.prepare(docs(s, dir), "doc_id", "text",
-        STOPS, MARKERS, 0.5, Seq("en"), spanTokens = 5, maxDupFrac = 0.2))
+        D7.copy(span = Some(Gates.Span(5, 0.2)))))
     }),
 
     // Token counting: whitespace + BPE-ish regex estimate
@@ -563,8 +565,7 @@ object LlmQueries {
     // filters composed and oracle-gated as one query
     "d11_prepare_repetition_floor" -> ((s, dir) => {
       sortAll(Corpus.prepare(docs(s, dir), "doc_id", "text",
-        STOPS, MARKERS, 0.5, Seq("en"),
-        maxDupWordFrac = 0.6, maxTopBigramFrac = 0.1))
+        D7.copy(repetition = Some(Gates.Repetition(0.6, 0.1)))))
     }),
 
     // Benchmark decontamination: distinct 5-shingle overlap of every
@@ -716,8 +717,7 @@ object LlmQueries {
       val cents = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
       sortAll(Corpus.prepare(docs(s, dir), "doc_id", "text",
-        STOPS, MARKERS, 0.5, Seq("en"), embeddings = Some(e),
-        semCentroids = Some(cents), semMinCos = 0.35))
+        D7.copy(semantic = Some(Gates.Semantic(0.35))), Some(e), Some(cents)))
     }),
 
     // Line-level duplicate removal (the CCNet/RefinedWeb recipe): chunk
@@ -840,9 +840,9 @@ object LlmQueries {
     "d17_prepare_decontaminated" -> ((s, dir) => {
       val d = docs(s, dir)
       sortAll(Corpus.prepare(d.filter(col("source") =!= "src0"),
-        "doc_id", "text", STOPS, MARKERS, 0.5, Seq("en"),
-        benchDocs = Some(d.filter(col("source") === "src0")),
-        contamN = 5, maxContamFrac = 0.05, contamHash = false))
+        "doc_id", "text", D7.copy(contamination = Some(Gates.Contamination(
+          d.filter(col("source") === "src0"), maxContamFrac = 0.05,
+          contamN = 5, contamHash = false)))))
     }),
 
     // d7's composition with the Gopher/MassiveText rule floor in front:
@@ -851,7 +851,7 @@ object LlmQueries {
     // quality/language/dedup
     "d18_prepare_gopher_floor" -> ((s, dir) => {
       sortAll(Corpus.prepare(docs(s, dir), "doc_id", "text",
-        STOPS, MARKERS, 0.5, Seq("en"), gopher = true))
+        D7.copy(gopher = true)))
     }),
 
     // d7's composition with the CLASSIFIER floor switched on, under the
@@ -869,9 +869,8 @@ object LlmQueries {
         .unionByName(s.range(1).select(lit(-1L).as("feature"),
           lit(12345L).as("w_micro")))
       sortAll(Corpus.prepare(docs(s, dir), "doc_id", "text",
-        STOPS, MARKERS, 0.5, Seq("en"),
-        classifier = Some(weights), classifierDim = dim,
-        minLogitMicro = 0L))
+        D7.copy(classifier = Some(Gates.Classifier(weights,
+          minLogitMicro = 0L, classifierDim = dim)))))
     }),
 
     // Top-3 TF-IDF terms per document — integer micro-unit scores (the
@@ -976,9 +975,9 @@ object LlmQueries {
       val weights = cls("en", 1999, 999, 1000000L)
         .unionByName(cls("fr", 2003, 1001, -500000L))
         .unionByName(cls("de", 1993, 996, 0L))
-      sortAll(Corpus.prepare(docs(s, dir), "doc_id", "text", STOPS,
-        MARKERS, 0.5, Seq("en"),
-        langClassifier = Some(weights), langClassifierDim = dim))
+      sortAll(Corpus.prepare(docs(s, dir), "doc_id", "text",
+        D7.copy(language = Some(Gates.Language(Seq("en"), MARKERS,
+          Some(weights), dim)))))
     }),
 
     "tx17_classifier_score" -> ((s, dir) => {
@@ -1101,17 +1100,17 @@ object LlmQueries {
       val e = embs(s, dir)
       val cents = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
-      val prepared = Corpus.prepare(normed, "doc_id", "text", STOPS,
-        MARKERS, 0.5, Seq("en"),
-        maxDupWordFrac = 0.6, maxTopBigramFrac = 0.1,
-        lm = Some(uni), maxPpl = 2000.0, biLm = Some(bi),
-        embeddings = Some(e), semCentroids = Some(cents), semMinCos = 0.35,
-        gopher = true,
-        benchDocs = Some(bench), contamN = 5, maxContamFrac = 0.05,
-        contamHash = false,
-        classifier = Some(w19), classifierDim = dim,
-        minLogitMicro = 12000L,
-        langClassifier = Some(w20), langClassifierDim = dim)
+      val prepared = Corpus.prepare(normed, "doc_id", "text", D7.copy(
+          semantic = Some(Gates.Semantic(0.35)),
+          repetition = Some(Gates.Repetition(0.6, 0.1)),
+          gopher = true,
+          perplexity = Some(Gates.Perplexity(uni, 2000.0, Some(bi))),
+          classifier = Some(Gates.Classifier(w19, 12000L, dim)),
+          contamination = Some(Gates.Contamination(bench, 0.05, 5,
+            contamHash = false)),
+          language = Some(Gates.Language(Seq("en"), MARKERS, Some(w20),
+            dim))),
+        Some(e), Some(cents))
       // representatives back to text + source for the packaging tail
       val sv = prepared.select(col("rep_id"))
         .join(normed.select(col("doc_id").as("rep_id"), col("text")),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.llm.Similarity
+import graft.llm.{Gates, Similarity}
 
 /** The composed training-data ingest loop: documents and their embeddings
   * land together, every delivery is near-dup deduped against the ENTIRE
@@ -89,7 +89,7 @@ object PipelineStream {
   }
 
   /** Score one delivery through the semantic floor (contract in
-    * [[pollIngest]]'s scaladoc) and land its survivors as `sem/b<id>`;
+    * [[graft.llm.Gates.Semantic]]) and land its survivors as `sem/b<id>`;
     * returns the delivery minus floored documents. */
   private def semGate(sp: SparkSession, batch0: DataFrame, workDir: String,
       indexDir: String, semMinCos: Double, compactEvery: Int,
@@ -160,283 +160,39 @@ object PipelineStream {
     batch0.join(floored, Seq("doc_id"), "left_anti")
   }
 
-  /** One incremental poll over doc+embedding deliveries: dedup against
-    * the full corpus state under `workDir`, then index only the new
-    * representatives. `compactEvery`/`retain` control the INDEX fold
-    * cadence ([[IvfStream.pollAppend]] semantics); the dedup state
-    * compacts on `p.compactEvery` as always.
-    *
-    * `spanTokens > 0` additionally applies the SPAN-DUPLICATION FLOOR at
-    * ingest — the streaming analogue of [[graft.llm.Corpus.prepare]]'s
-    * `spanTokens` gate, with the identical parameter tail: the delivery
-    * is first scored by [[SpanDupStream.processBatch]] against the
-    * accumulated window state (which accumulates EVERY landed document,
-    * floored ones included — exactly as the batch floor counts dropped
-    * documents' windows toward others' frequencies), then documents
-    * whose dup_frac exceeds `maxDupFrac` are dropped BEFORE dedup and
-    * indexing: boilerplate-heavy documents never enter cluster state or
-    * the index. Crash replay stays convergent — the span scorer's
-    * per-batch dirs rewrite bit-identically and the gate re-reads them.
-    * Inherits [[SpanDupStream]]'s scored-at-landing contract: a document
-    * is floored against the corpus as of its delivery (the batch floor
-    * over the final corpus is the repair, as ever).
-    *
-    * `maxDupWordFrac` / `maxTopBigramFrac < 1.0` additionally apply the
-    * WITHIN-document repetition floor at ingest — the streaming analogue
-    * of [[graft.llm.Corpus.prepare]]'s Gopher-style gate with the
-    * identical parameter tail. Repetition is a per-document property
-    * ([[graft.llm.Quality.repetitionStats]] keys within the doc), so
-    * unlike the span floor this needs NO accumulated state: a stateless
-    * per-delivery filter, bit-identical to the batch floor over the same
-    * documents, applied after the span gate (the batch composition's
-    * order) and before dedup — looping documents never enter cluster
-    * state or the index.
-    *
-    * `benchDocs` (with `maxContamFrac < 1.0`) applies BENCHMARK
-    * DECONTAMINATION at ingest — [[graft.llm.Dedup.contaminationStats]]
-    * as a gate: documents whose fraction of distinct `contamN`-token
-    * shingles found in the benchmark set exceeds `maxContamFrac` are
-    * dropped before dedup and indexing. The benchmark set is broadcast
-    * (eval suites are tiny next to a corpus), so this too is stateless
-    * per delivery — nothing delivery-sized shuffles, and the composed
-    * landing-time recipe quality ∘ repetition ∘ span ∘ dedup ∘
-    * decontamination closes without an offline pass.
-    *
-    * `lmModel` (with `maxPpl`) applies the PERPLEXITY floor at ingest —
-    * the streaming analogue of [[graft.llm.Corpus.prepare]]'s `lm` gate:
-    * documents whose smoothed perplexity under the reference unigram LM
-    * ([[graft.llm.Quality.lmPerplexity]]) exceeds `maxPpl` are dropped
-    * before dedup and indexing. The model is vocab-sized and broadcast,
-    * so like repetition this is stateless per delivery — applied after
-    * the repetition gate and before decontamination (the batch
-    * composition's relative order).
-    *
-    * `gopher = true` applies the Gopher/MassiveText rule floor at ingest
-    * — [[graft.llm.Quality.gopherRules]] at its published defaults
-    * (`gopherStops` the retunable knob), the batch `prepare(gopher =
-    * true)` gate with the identical parameter tail. The rules are
-    * doc-local column math: stateless per delivery, no shuffle, applied
-    * between the repetition and perplexity gates (the batch composition's
-    * relative order).
-    *
-    * `minQuality > 0` / `langs` non-empty apply the QUALITY and LANGUAGE
-    * floors at ingest — the batch `prepare`'s built-in final filter
-    * ([[graft.llm.TextStats.qualityScore]] on the 6-decimal fixed point,
-    * [[graft.llm.TextStats.langId]] over `langMarkers`) as optional
-    * landing gates, applied last before dedup. Doc-local column math:
-    * stateless, no shuffle. With every gate enabled the landing-time
-    * recipe is now parameter-complete against the batch composition:
-    * normalize ∘ semantic ∘ span ∘ repetition ∘ gopher ∘ perplexity ∘
-    * classifier ∘ decontamination ∘ quality ∘ language ∘ dedup.
-    *
-    * `classifier` + `minLogitMicro` apply the CLASSIFIER floor
-    * ([[graft.llm.Quality.scoreTextClassifier]] under a frozen
-    * [[graft.llm.Quality.trainTextClassifier]] weight table): deliveries
-    * whose exact integer logit falls below the floor are dropped after
-    * the perplexity gate — the batch `prepare` parameter tail,
-    * stateless per delivery, dim-bounded broadcast model.
-    *
-    * `normalize = true` canonicalizes delivery text FIRST
-    * ([[graft.llm.Quality.normalizeText]] — the batch `prepare` order),
-    * so transport noise cannot split an exact-duplicate group in cluster
-    * state and every gate below sees the canonical token stream. Pure
-    * per-row column math on the delivery; deterministic, so crash replay
-    * re-lands identical bytes.
-    *
-    * `semMinCos < 1.0` applies the SEMANTIC floor at ingest — the
-    * streaming analogue of [[graft.llm.Corpus.prepare]]'s
-    * embeddings/semCentroids gate (SemDeDup), using the INDEX's stored
-    * coarse centroids: a delivery document is dropped when its embedding
-    * is within `semMinCos` cosine of (a) a surviving lower-id document
-    * in the SAME delivery (within-delivery [[graft.llm.Similarity
-    * .semDedup]], cluster-scoped), or (b) any previously-landed SURVIVOR
-    * (the `sem/b<id>` state table — per-batch dirs with [[DedupStream]]'s
-    * exactly-once discipline: replays read only below their own id and
-    * rewrite their own dir bit-identically; folded into `snap<m>` on the
-    * dedup state's cadence). Survivors' (id, cell, vector) land as the
-    * next deliveries' reference set — unscorable vectors (zero/NaN norm)
-    * are never floored and never become reference vectors, the batch
-    * contract. Scale shape: the delivery side is BROADCAST, the state
-    * scan is pre-filtered to the delivery's probed cells (an `isin` the
-    * parquet scan prunes row groups by — state files are written sorted
-    * by cell), and nothing corpus-sized shuffles. Documented deviation,
-    * the [[DedupStream]] bridge contract's semantic twin: components
-    * never merge ACROSS deliveries — a doc within `semMinCos` of an
-    * already-DROPPED doc (but of no survivor) survives where batch
-    * `semDedup` over the full corpus would drop it; the floor is scored
-    * at landing, as ever.
-    *
-    * Defaults leave the pipeline byte-identical to the ungated form. */
+  /** One incremental poll over doc+embedding deliveries: gate each
+    * delivery through `gates` ([[graft.llm.Gates]], the same value and
+    * order as the batch [[graft.llm.Corpus.prepare]]; the semantic and
+    * span gates score against state accumulated under `workDir`), dedup
+    * the survivors against the full corpus state, then index only the new
+    * representatives — gated documents never enter cluster state or the
+    * index. `compactEvery`/`retain` control the INDEX fold cadence
+    * ([[IvfStream.pollAppend]] semantics); the dedup, span and semantic
+    * state compact on `p.compactEvery`. */
   def pollIngest(spark: SparkSession, landingDir: String, workDir: String,
-      indexDir: String, p: DedupStream.Params = DedupStream.Params(),
-      compactEvery: Int = 16, retain: Int = 0,
-      spanTokens: Int = 0, maxDupFrac: Double = 1.0,
-      spanMinDocs: Int = 2,
-      maxDupWordFrac: Double = 1.0, maxTopBigramFrac: Double = 1.0,
-      benchDocs: Option[DataFrame] = None, contamN: Int = 5,
-      maxContamFrac: Double = 1.0,
-      normalize: Boolean = false,
-      lmModel: Option[DataFrame] = None, maxPpl: Double = Double.MaxValue,
-      semMinCos: Double = 1.0,
-      gopher: Boolean = false,
-      gopherStops: Seq[String] = graft.llm.Quality.GopherStops,
-      minQuality: Double = 0.0,
-      qualityStops: Seq[String] = Seq.empty,
-      langs: Seq[String] = Seq.empty,
-      langMarkers: Seq[(String, Seq[String])] = Seq.empty,
-      // new defaulted parameters go at the END of the list (the
-      // Corpus.prepare convention): contamHash was once inserted
-      // mid-signature and any positional caller written against the old
-      // shape would have silently bound its normalize flag here
-      contamHash: Boolean = true,
-      classifier: Option[DataFrame] = None,
-      classifierDim: Int = 1 << 18,
-      minLogitMicro: Long = Long.MinValue,
-      // bigram upgrade of the perplexity gate, parameter-symmetric with
-      // Corpus.prepare: with `biLm` the gate scores under the
-      // stupid-backoff n-gram model instead of the unigram scorer
-      biLm: Option[DataFrame] = None,
-      lmBackoff: Double = 0.4,
-      // trained language gate, parameter-symmetric with Corpus.prepare:
-      // with `langClassifier` the language selection scores argmax under
-      // the multi-class model instead of the marker vote
-      langClassifier: Option[DataFrame] = None,
-      langClassifierDim: Int = 1 << 18): Unit = {
-    // a bench set with the threshold left at its 1.0 default means the
-    // caller BELIEVES decontamination is on while the gate below
-    // (`if maxContamFrac < 1.0`) never fires — refuse loudly instead of
-    // silently ingesting contaminated documents
-    require(benchDocs.isEmpty || maxContamFrac < 1.0,
-      "pollIngest: benchDocs given but maxContamFrac is 1.0 (gate off) — " +
-        "set maxContamFrac < 1.0 to decontaminate, or drop benchDocs")
-    require(lmModel.isEmpty || maxPpl < Double.MaxValue,
-      "pollIngest: lmModel given but maxPpl is unset (gate off) — " +
-        "set maxPpl to floor on perplexity, or drop lmModel")
-    require(biLm.isEmpty || lmModel.nonEmpty,
-      "pollIngest: biLm given without lmModel — the bigram gate backs " +
-        "off to the unigram model; pass both")
-    require(classifier.isEmpty || minLogitMicro > Long.MinValue,
-      "pollIngest: classifier given but minLogitMicro is unset (gate " +
-        "off) — set the logit floor, or drop the classifier argument")
-    require(if (langs.isEmpty) langMarkers.isEmpty
-        else langMarkers.nonEmpty || langClassifier.nonEmpty,
-      "pollIngest: langs needs a language identifier (langMarkers or " +
-        "langClassifier) and vice versa — pass them together")
-    require(langClassifier.isEmpty || langs.nonEmpty,
-      "pollIngest: langClassifier given but langs is empty (gate off) — " +
-        "select the languages to keep, or drop the classifier")
-    // an empty stop list zeroes the score's 0.3 stopword band — a caller
-    // flooring at minQuality > 0.7 would silently drop EVERYTHING, and
-    // any positive floor would silently diverge from the batch prepare
-    // (where stops is a mandatory argument feeding the same score)
-    require(minQuality <= 0.0 || qualityStops.nonEmpty,
-      "pollIngest: minQuality set but qualityStops is empty — the quality " +
-        "score's stopword band would be zero for every document; pass the " +
-        "stop list the batch prepare uses")
+      indexDir: String, gates: Gates = Gates(),
+      p: DedupStream.Params = DedupStream.Params(),
+      compactEvery: Int = 16, retain: Int = 0): Unit = {
     spark.readStream.schema(landingSchema).parquet(s"$landingDir/*")
       .writeStream.option("checkpointLocation", s"$workDir/ckpt")
       .outputMode("append")
       .foreachBatch { (batch1: DataFrame, batchId: Long) =>
         val sp = batch1.sparkSession
-        val normGated =
-          if (!normalize) batch1
-          else batch1.withColumn("text",
-            graft.llm.Quality.normalizeText(col("text")))
-        // semantic floor first — the batch prepare order (embedding
-        // near-dups drop before any text floor sees them)
-        val batch0 =
-          if (semMinCos >= 1.0) normGated
-          else semGate(sp, normGated, workDir, indexDir, semMinCos,
-            p.compactEvery, batchId)
-        val spanGated =
-          if (spanTokens <= 0) batch0
-          else {
-            SpanDupStream.processBatch(sp, batch0.select("doc_id", "text"),
-              workDir, SpanDupStream.Params(spanTokens, spanMinDocs,
-                p.compactEvery), batchId)
-            val floored = sp.read.schema(SpanDupStream.statsSchema)
-              .parquet(s"$workDir/stats/b$batchId")
-              .filter(col("dup_frac") > maxDupFrac)
-              .select("doc_id")
-            batch0.join(floored, Seq("doc_id"), "left_anti")
-          }
-        // within-document repetition floor is stateless per delivery AND
-        // doc-local: the same compiled scan filter as Corpus.prepare
-        // (repetitionPass — no drop list, no join, no shuffle); null
-        // id/text rows pass through to die in the final quality gate
-        val repGated =
-          if (maxDupWordFrac >= 1.0 && maxTopBigramFrac >= 1.0) spanGated
-          else spanGated.filter(col("doc_id").isNull || col("text").isNull ||
-            graft.llm.Quality.repetitionPass(col("text"),
-              maxDupWordFrac, maxTopBigramFrac))
-        // Gopher rule floor: doc-local column math (the batch prepare's
-        // gate with the identical parameter tail) — a TRUE filter via
-        // gopherPass, no join, no state, no shuffle
-        val gopherGated =
-          if (!gopher) repGated
-          else repGated.filter(col("doc_id").isNull || col("text").isNull ||
-            graft.llm.Quality.gopherPass(col("text"), stops = gopherStops))
-        // perplexity floor: stateless per delivery like the repetition
-        // gate — the vocab-sized model broadcasts into the batch plan
-        val pplGated = lmModel match {
-          case Some(model) if maxPpl < Double.MaxValue =>
-            val scored = biLm match {
-              case Some(bi) => graft.llm.Quality.ngramPerplexity(
-                gopherGated, model, bi, "doc_id", "text", lmBackoff)
-              case None => graft.llm.Quality.lmPerplexity(gopherGated,
-                model, "doc_id", "text")
-            }
-            gopherGated.join(
-              scored.filter(col("ppl") > maxPpl).select("doc_id"),
-              Seq("doc_id"), "left_anti")
-          case _ => gopherGated
+        val normGated = gates.normalized(batch1, "text")
+        val batch0 = gates.semantic.fold(normGated)(sem =>
+          semGate(sp, normGated, workDir, indexDir, sem.semMinCos,
+            p.compactEvery, batchId))
+        val spanGated = gates.span.fold(batch0) { span =>
+          SpanDupStream.processBatch(sp, batch0.select("doc_id", "text"),
+            workDir, SpanDupStream.Params(spanTokens = span.spanTokens,
+              compactEvery = p.compactEvery), batchId)
+          val floored = sp.read.schema(SpanDupStream.statsSchema)
+            .parquet(s"$workDir/stats/b$batchId")
+            .filter(col("dup_frac") > span.maxDupFrac)
+            .select("doc_id")
+          batch0.join(floored, Seq("doc_id"), "left_anti")
         }
-        // classifier floor: the batch prepare's gate at the identical
-        // parameter tail — frozen weight table broadcasts into the
-        // delivery-sized plan, exact integer logits, drop-list left-anti
-        val clfGated = classifier match {
-          case Some(w) if minLogitMicro > Long.MinValue =>
-            pplGated.join(
-              graft.llm.Quality.scoreTextClassifier(pplGated, "doc_id",
-                  "text", w, classifierDim)
-                .filter(col("logit_micro") < minLogitMicro)
-                .select("doc_id"),
-              Seq("doc_id"), "left_anti")
-          case _ => pplGated
-        }
-        val contamGated = benchDocs match {
-          case Some(bench) if maxContamFrac < 1.0 =>
-            clfGated.join(
-              graft.llm.Dedup.contaminationStats(clfGated, bench,
-                  "doc_id", "text", contamN, hashShingles = contamHash)
-                .filter(col("contam_frac") > maxContamFrac)
-                .select("doc_id"),
-              Seq("doc_id"), "left_anti")
-          case _ => clfGated
-        }
-        // quality/language floor: prepare's built-in final filter as an
-        // optional landing gate — doc-local column math, same rounded
-        // fixed point, so stream ≡ batch exactly
-        val qualityGated = {
-          val q = if (minQuality <= 0.0) contamGated
-            else contamGated.filter(round(
-              graft.llm.TextStats.qualityScore(col("text"), qualityStops),
-              6) >= minQuality)
-          langClassifier match {
-            case Some(w) if langs.nonEmpty =>
-              q.join(
-                graft.llm.Quality.langIdTrained(q, "doc_id", "text", w,
-                    langClassifierDim)
-                  .filter(col("lang").isin(langs: _*))
-                  .select("doc_id"),
-                Seq("doc_id"), "left_semi")
-            case _ =>
-              if (langs.isEmpty) q
-              else q.filter(graft.llm.TextStats.langId(col("text"),
-                langMarkers).isin(langs: _*))
-          }
-        }
-        val batch = qualityGated
+        val batch = gates.filter(spanGated, "doc_id", "text")
         DedupStream.processBatch(sp, batch.select("doc_id", "text"),
           workDir, p, batchId)
         // explicit schema: an all-filtered batch writes an assignment dir
@@ -493,7 +249,7 @@ object PipelineStream {
     * scores each delivery against SURVIVORS only, so a document near an
     * already-DROPPED document (but no survivor) survives where batch
     * [[Similarity.semDedup]] over the full corpus would fold it into the
-    * chain component (documented at [[pollIngest]]). The state carries
+    * chain component (documented at [[graft.llm.Gates.Semantic]]). The state carries
     * every scorable vector it ever gated, dropped ones included (see
     * `semSchema`), so the FULL within-cell near-dup graph is rebuildable
     * offline: [[Similarity.semDedupDropped]] over ALL stored vectors

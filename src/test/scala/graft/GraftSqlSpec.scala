@@ -1467,7 +1467,8 @@ class GraftSqlSpec extends AnyFunSuite {
     Seq((1L, member("a"), v(0.10f))).toDF("doc_id", "text", "embedding")
       .write.parquet(s"$landing/d0")
     def poll(): Unit = graft.streaming.PipelineStream.pollIngest(spark,
-      landing, work, index, compactEvery = 0, semMinCos = 0.995)
+      landing, work, index, graft.llm.Gates(semantic =
+        Some(graft.llm.Gates.Semantic(0.995))), compactEvery = 0)
     poll()
     Seq((11L, member("b"), v(0.189f))).toDF("doc_id", "text", "embedding")
       .write.parquet(s"$landing/d1")

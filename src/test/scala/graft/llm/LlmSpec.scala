@@ -224,15 +224,41 @@ class LlmSpec extends AnyFunSuite {
       2L -> s"the of a and to $boiler",
       3L -> ("the a of and to " + (1 to 30).map(i => s"u$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val kept = Corpus.prepare(fix, "doc_id", "text", stops, markers,
-        0.0, Seq("en"), spanTokens = 5, maxDupFrac = 0.2)
+    val kept = Corpus.prepare(fix, "doc_id", "text", Gates(
+        quality = Some(Gates.QualityFloor(0.0, stops)),
+        language = Some(Gates.Language(Seq("en"), markers)),
+        span = Some(Gates.Span(5, 0.2))))
       .select("rep_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(3L),
       s"docs 1/2 share a 30-token span (dup_frac > 0.2) and must drop: $kept")
     // default params leave the composition unchanged (no span filtering)
-    val all = Corpus.prepare(fix, "doc_id", "text", stops, markers,
-      0.0, Seq("en")).count()
+    val all = Corpus.prepare(fix, "doc_id", "text", Gates(
+      quality = Some(Gates.QualityFloor(0.0, stops)),
+      language = Some(Gates.Language(Seq("en"), markers)))).count()
     assert(all === 3L)
+  }
+
+  test("Corpus.prepare language gate: langs and a language identifier come together") {
+    import spark.implicits._
+    val fix = Seq(1L -> "the cat sat on the mat").toDF("doc_id", "text")
+    val quality = Some(Gates.QualityFloor(0.0, Seq("the")))
+    // markers without langs: an isin over no languages kept zero documents
+    val noLangs = intercept[IllegalArgumentException] {
+      Corpus.prepare(fix, "doc_id", "text", Gates(quality = quality,
+        language = Some(Gates.Language(Seq.empty, Seq("en" -> Seq("the"))))))
+    }
+    assert(noLangs.getMessage.contains("langs is empty"))
+    // langs without markers or a classifier: langId over no marker sets
+    // failed with NoSuchElementException while the plan was built
+    val noId = intercept[IllegalArgumentException] {
+      Corpus.prepare(fix, "doc_id", "text", Gates(quality = quality,
+        language = Some(Gates.Language(Seq("en")))))
+    }
+    assert(noId.getMessage.contains("langMarkers"))
+    val kept = Corpus.prepare(fix, "doc_id", "text", Gates(quality = quality,
+        language = Some(Gates.Language(Seq("en"), Seq("en" -> Seq("the"))))))
+      .select("rep_id").collect().map(_.getLong(0)).toSet
+    assert(kept === Set(1L))
   }
 
   test("exact dedup groups by content, representative = min id") {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import graft.llm.Similarity
+import graft.llm.{Gates, Similarity}
 
 /** The composed dedup→index ingest loop: after every poll the ANN index
   * must contain EXACTLY the cluster representatives accumulated so far —
@@ -60,7 +60,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     // poll 1: clusters a (3 members) and b (1), one exact dup of a's rep
     delivery(1L -> member("a", 0), 2L -> member("a", 1), 3L -> member("b", 0),
       4L -> member("a", 0)).write.parquet(s"$landing/d0")
-    PipelineStream.pollIngest(spark, landing, work, index, p, compactEvery = 2)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p,
+      compactEvery = 2)
     assert(indexedIds() === Set(1L, 3L),
       "index = one vector per cluster: a's rep 1, b's rep 3")
 
@@ -68,7 +69,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     // cluster c (grows) — batch id 1 also triggers the fold
     delivery(11L -> member("a", 2), 12L -> member("b", 1),
       13L -> member("c", 0)).write.parquet(s"$landing/d1")
-    PipelineStream.pollIngest(spark, landing, work, index, p, compactEvery = 2)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p,
+      compactEvery = 2)
     assert(indexedIds() === Set(1L, 3L, 13L),
       "re-deliveries attach without indexing; new cluster c indexed")
     assert(new java.io.File(index).listFiles().map(_.getName)
@@ -81,7 +83,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     assert(reps === Set(1L, 3L, 13L))
 
     // idempotent empty re-poll
-    PipelineStream.pollIngest(spark, landing, work, index, p, compactEvery = 2)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p,
+      compactEvery = 2)
     assert(indexedIds() === Set(1L, 3L, 13L))
 
     // replay of the last batch (a restarted poller re-running batch 1):
@@ -127,14 +130,14 @@ class PipelineStreamSpec extends AnyFunSuite {
     val d1 = Seq(11L -> boiler, 12L -> uniq("d"))
 
     delivery(d0: _*).write.parquet(s"$landing/d0")
-    PipelineStream.pollIngest(spark, landing, work, index, p,
-      compactEvery = 2, spanTokens = 5, maxDupFrac = 0.6)
+    PipelineStream.pollIngest(spark, landing, work, index,
+      Gates(span = Some(Gates.Span(5, 0.6))), p, compactEvery = 2)
     assert(indexedIds() === Set(1L, 2L, 3L, 6L),
       "identical boilerplate docs floored before indexing; half-boiler survives")
 
     delivery(d1: _*).write.parquet(s"$landing/d1")
-    PipelineStream.pollIngest(spark, landing, work, index, p,
-      compactEvery = 2, spanTokens = 5, maxDupFrac = 0.6)
+    PipelineStream.pollIngest(spark, landing, work, index,
+      Gates(span = Some(Gates.Span(5, 0.6))), p, compactEvery = 2)
     assert(indexedIds() === Set(1L, 2L, 3L, 6L, 12L),
       "late boilerplate reuse floored against the accumulated window state")
     val assigned = DedupStream.assignments(spark, work)
@@ -182,13 +185,15 @@ class PipelineStreamSpec extends AnyFunSuite {
 
     delivery(1L -> member("a", 0), 2L -> member("a", 1), 3L -> member("b", 0))
       .write.parquet(s"$landing/d0")
-    PipelineStream.pollIngest(spark, landing, work, index, p, compactEvery = 2)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p,
+      compactEvery = 2)
     assert(indexedIds() === Set(1L, 3L))
 
     // poll 2 folds (batch id 1): flavor must carry, ingest keeps quantizing
     delivery(11L -> member("a", 2), 13L -> member("c", 0))
       .write.parquet(s"$landing/d1")
-    PipelineStream.pollIngest(spark, landing, work, index, p, compactEvery = 2)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p,
+      compactEvery = 2)
     assert(indexedIds() === Set(1L, 3L, 13L))
     val latest = new java.io.File(index).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.last
@@ -233,14 +238,16 @@ class PipelineStreamSpec extends AnyFunSuite {
 
     delivery(1L -> member("a", 0), 2L -> member("a", 1), 3L -> member("b", 0))
       .write.parquet(s"$landing/d0")
-    PipelineStream.pollIngest(spark, landing, work, index, p, compactEvery = 2)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p,
+      compactEvery = 2)
     assert(indexedIds() === Set(1L, 3L))
 
     // poll 2 folds (batch id 1): flavor + codebooks must carry, ingest
     // keeps PQ-encoding
     delivery(11L -> member("a", 2), 13L -> member("c", 0))
       .write.parquet(s"$landing/d1")
-    PipelineStream.pollIngest(spark, landing, work, index, p, compactEvery = 2)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p,
+      compactEvery = 2)
     assert(indexedIds() === Set(1L, 3L, 13L))
     val latest = new java.io.File(index).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.last
@@ -287,9 +294,9 @@ class PipelineStreamSpec extends AnyFunSuite {
       if (i == 5) s"${c}_b5" else word(c, i)).mkString(" ")
     delivery(100L -> aDoc("u"), 200L -> bDoc("u"), 500L -> "lone text here")
       .write.parquet(s"$landing/d0")
-    PipelineStream.pollIngest(spark, landing, work, index, p)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p)
     delivery(700L -> xDoc("u"), 800L -> aDoc("w")).write.parquet(s"$landing/d1")
-    PipelineStream.pollIngest(spark, landing, work, index, p)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p)
     // pre-repair: u's two clusters are both represented (the deviation)
     assert(indexedIds() === Set(100L, 200L, 500L, 800L))
     PipelineStream.repairAndPrune(spark, work, index, p)
@@ -303,7 +310,7 @@ class PipelineStreamSpec extends AnyFunSuite {
     // the poller resumes on repaired state: a near-copy of the absorbed
     // cluster attaches to the merged rep, index unchanged
     delivery(900L -> bDoc("u")).write.parquet(s"$landing/d2")
-    PipelineStream.pollIngest(spark, landing, work, index, p)
+    PipelineStream.pollIngest(spark, landing, work, index, p = p)
     assert(DedupStream.assignments(spark, work).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet.contains(900L -> 100L))
     assert(indexedIds() === Set(100L, 500L, 800L))
@@ -346,9 +353,9 @@ class PipelineStreamSpec extends AnyFunSuite {
     val d1 = Seq(11L -> loop.replace("x", "y"), 12L -> uniq("d"))
 
     def poll(): Unit = PipelineStream.pollIngest(spark, landing, work,
-      index, p, compactEvery = 2,
-      maxDupWordFrac = 0.7, maxTopBigramFrac = 0.25,
-      benchDocs = Some(bench), contamN = 5, maxContamFrac = 0.3)
+      index, Gates(repetition = Some(Gates.Repetition(0.7, 0.25)),
+        contamination = Some(Gates.Contamination(bench, contamN = 5,
+          maxContamFrac = 0.3))), p, compactEvery = 2)
 
     delivery(d0: _*).write.parquet(s"$landing/d0")
     poll()
@@ -413,7 +420,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cut = 50.0
 
     def poll(): Unit = PipelineStream.pollIngest(spark, landing, work,
-      index, p, compactEvery = 2, lmModel = Some(lm), maxPpl = cut)
+      index, Gates(perplexity = Some(Gates.Perplexity(lm, maxPpl = cut))),
+      p, compactEvery = 2)
 
     delivery(1L -> inVocab1, 2L -> alien1).write.parquet(s"$landing/d0")
     poll()
@@ -436,8 +444,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     assert(floored === Set(2L, 12L))
     // arg validation: a model without a threshold must refuse loudly
     val err = intercept[IllegalArgumentException] {
-      PipelineStream.pollIngest(spark, landing, work, index, p,
-        lmModel = Some(lm))
+      PipelineStream.pollIngest(spark, landing, work, index,
+        Gates(perplexity = Some(Gates.Perplexity(lm))), p)
     }
     assert(err.getMessage.contains("maxPpl"))
   }
@@ -470,8 +478,8 @@ class PipelineStreamSpec extends AnyFunSuite {
       "text", "label", dim, iters = 200).localCheckpoint()
 
     def poll(): Unit = PipelineStream.pollIngest(spark, landing, work,
-      index, p, compactEvery = 2, classifier = Some(w),
-      classifierDim = dim, minLogitMicro = 0L)
+      index, Gates(classifier = Some(Gates.Classifier(w,
+        classifierDim = dim, minLogitMicro = 0L))), p, compactEvery = 2)
 
     delivery(1L -> "thoughtful prose writing",
       2L -> "spam click now").write.parquet(s"$landing/d0")
@@ -497,23 +505,26 @@ class PipelineStreamSpec extends AnyFunSuite {
       .filter(col("logit_micro") < 0L)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(floored === Set(2L, 12L))
-    val prepared = graft.llm.Corpus.prepare(all, "doc_id", "text",
-        stops = Seq("the"),
-        markers = Seq("en" -> Seq("prose", "click")), minQuality = 0.0,
-        langs = Seq("en"), classifier = Some(w), classifierDim = dim,
-        minLogitMicro = 0L)
+    val prepared = graft.llm.Corpus.prepare(all, "doc_id", "text", Gates(
+        quality = Some(Gates.QualityFloor(minQuality = 0.0,
+          stops = Seq("the"))),
+        language = Some(Gates.Language(langs = Seq("en"),
+          langMarkers = Seq("en" -> Seq("prose", "click")))),
+        classifier = Some(Gates.Classifier(w, classifierDim = dim,
+          minLogitMicro = 0L))))
       .select("rep_id").collect().map(_.getLong(0)).toSet
     assert(prepared === Set(1L, 11L),
       "batch prepare's classifier floor drops the same documents")
     // arg validation: a classifier without a floor must refuse loudly
     val err = intercept[IllegalArgumentException] {
-      PipelineStream.pollIngest(spark, landing, work, index, p,
-        classifier = Some(w))
+      PipelineStream.pollIngest(spark, landing, work, index,
+        Gates(classifier = Some(Gates.Classifier(w))), p)
     }
     assert(err.getMessage.contains("minLogitMicro"))
     val err2 = intercept[IllegalArgumentException] {
-      graft.llm.Corpus.prepare(all, "doc_id", "text", Seq("the"),
-        Seq.empty, 0.0, Seq.empty, classifier = Some(w))
+      graft.llm.Corpus.prepare(all, "doc_id", "text", Gates(
+        quality = Some(Gates.QualityFloor(0.0, Seq("the"))),
+        classifier = Some(Gates.Classifier(w))))
     }
     assert(err2.getMessage.contains("minLogitMicro"))
   }
@@ -542,7 +553,7 @@ class PipelineStreamSpec extends AnyFunSuite {
     val noStops = Array.fill(60)("data").mkString(" ")
 
     def poll(): Unit = PipelineStream.pollIngest(spark, landing, work,
-      index, p, compactEvery = 2, gopher = true)
+      index, Gates(gopher = true), p, compactEvery = 2)
 
     delivery(1L -> clean("a"), 2L -> short).write.parquet(s"$landing/d0")
     poll()
@@ -591,8 +602,9 @@ class PipelineStreamSpec extends AnyFunSuite {
       .mkString(" ")
 
     def poll(): Unit = PipelineStream.pollIngest(spark, landing, work,
-      index, p, compactEvery = 2, minQuality = 0.5,
-      qualityStops = stops, langs = Seq("en"), langMarkers = markers)
+      index, Gates(quality = Some(Gates.QualityFloor(0.5, stops)),
+        language = Some(Gates.Language(Seq("en"), markers))),
+      p, compactEvery = 2)
 
     delivery(1L -> good("a"), 2L -> lowQ, 3L -> german("a"))
       .write.parquet(s"$landing/d0")
@@ -614,10 +626,81 @@ class PipelineStreamSpec extends AnyFunSuite {
     assert(kept === Set(1L, 11L))
     // langs without markers must refuse loudly
     val err = intercept[IllegalArgumentException] {
-      PipelineStream.pollIngest(spark, landing, work, index, p,
-        langs = Seq("en"))
+      PipelineStream.pollIngest(spark, landing, work, index,
+        Gates(language = Some(Gates.Language(Seq("en")))), p)
     }
     assert(err.getMessage.contains("langMarkers"))
+  }
+
+  test("every doc-local gate at once: three deliveries ≡ batch prepare over the landed corpus, one Gates value") {
+    val root = java.nio.file.Files.createTempDirectory("graft_pipeall").toString
+    val landing = s"$root/landing"; val work = s"$root/work"
+    val index = s"$root/index"
+    new java.io.File(landing).mkdirs()
+    val cents = (0L until 4L).map(c => (c, {
+      val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
+    })).toDF("cell", "_cv")
+    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+      centroids = Some(cents))
+
+    // 80-token documents over a shared vocabulary: the clean ones pass
+    // every gate, and each of the others fails exactly one, so a gate
+    // missing from either path leaves its planted document in
+    val lead = "the of and to "
+    def words(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
+    def clean(k: Int) = lead + words("wd", 75) + s" tag$k"
+    val loop = lead + Seq.fill(38)("wd10 wd11").mkString(" ")   // repetition
+    val hashes = lead + words("wd", 66) + " " + Seq.fill(10)("#").mkString(" ")
+    val alien = lead + words("zq", 76)                          // perplexity
+    val spam = lead + words("sp", 76)                           // classifier
+    val contaminated = lead + words("bm", 40) + " " + words("wd", 36)
+    val short = lead + words("wd", 48)                          // quality
+    val german = "der die das and to " + words("wd", 75)        // language
+    val bench = Seq(words("bm", 42)).toDF("text")
+    // the reference LM knows the clean, spam and bench vocabularies:
+    // clean text scores ppl ≈ 200, all-but-4-OOV text ≈ 1,900
+    val lm = graft.llm.Quality.unigramLm(
+      Seq(clean(0), spam, words("bm", 42)).flatMap(Seq.fill(10)(_))
+        .toDF("text"), "text", 256)
+    val dim = 1 << 14
+    val labeled = (0 until 10).flatMap(i => Seq(
+        (100L + i, lead + words("wd", 75) + s" pos$i", 1),
+        (200L + i, lead + words("sp", 75) + s" neg$i", 0)))
+      .toDF("doc_id", "text", "label")
+    val w = graft.llm.Quality.trainTextClassifier(labeled, "doc_id",
+      "text", "label", dim, iters = 200).localCheckpoint()
+    val gates = Gates(
+      repetition = Some(Gates.Repetition(0.5, 0.25)),
+      gopher = true,
+      perplexity = Some(Gates.Perplexity(lm, maxPpl = 500.0)),
+      classifier = Some(Gates.Classifier(w, minLogitMicro = 0L,
+        classifierDim = dim)),
+      contamination = Some(Gates.Contamination(bench, maxContamFrac = 0.3)),
+      quality = Some(Gates.QualityFloor(0.55,
+        Seq("the", "a", "of", "and", "to"))),
+      language = Some(Gates.Language(Seq("en"),
+        Seq("en" -> Seq("the", "of"), "de" -> Seq("der", "die")))))
+
+    def poll(): Unit = PipelineStream.pollIngest(spark, landing, work,
+      index, gates, p, compactEvery = 2)
+    delivery(1L -> clean(1), 3L -> loop, 4L -> hashes, 5L -> alien)
+      .write.parquet(s"$landing/d0")
+    poll()
+    delivery(2L -> clean(2), 6L -> spam, 7L -> contaminated)
+      .write.parquet(s"$landing/d1")
+    poll()
+    delivery(11L -> clean(11), 8L -> short, 9L -> german)
+      .write.parquet(s"$landing/d2")
+    poll()
+    val streamed = DedupStream.assignments(spark, work)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val landed = spark.read.parquet(s"$landing/*").select("doc_id", "text")
+    val batch = graft.llm.Corpus.prepare(landed, "doc_id", "text", gates)
+      .select("rep_id").collect().map(_.getLong(0)).toSet
+    assert(streamed === Set(1L, 2L, 11L),
+      "each planted document falls to a gate; the clean ones pass them all")
+    assert(streamed === batch, "stream ≡ batch prepare under one Gates value")
   }
 
   test("normalize at ingest: transport-noise variants of one content collapse to one cluster and one vector") {
@@ -642,11 +725,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val d0 = Seq(1L -> clean, 2L -> (clean + " \r\n"),
       3L -> ("\t" + clean.replace(" a_w7 ", " \ta_w7  ")),
       8L -> member("z", 0))
-    PipelineStream.pollIngest(spark, landing, work, index, p,
-      compactEvery = 2, normalize = true)
+    PipelineStream.pollIngest(spark, landing, work, index,
+      Gates(normalize = true), p, compactEvery = 2)
     delivery(d0: _*).write.parquet(s"$landing/d0")
-    PipelineStream.pollIngest(spark, landing, work, index, p,
-      compactEvery = 2, normalize = true)
+    PipelineStream.pollIngest(spark, landing, work, index,
+      Gates(normalize = true), p, compactEvery = 2)
     // 1/2/3 are byte-identical after canonicalization: ONE cluster under
     // rep 1 (exact-dup collapse, not even banding needed), one vector
     assert(indexedIds() === Set(1L, 8L),
@@ -658,8 +741,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     // the landed cluster-state contents are the CANONICAL text: a later
     // clean re-delivery of the same content is an exact dup against state
     delivery(21L -> clean).write.parquet(s"$landing/d1")
-    PipelineStream.pollIngest(spark, landing, work, index, p,
-      compactEvery = 2, normalize = true)
+    PipelineStream.pollIngest(spark, landing, work, index,
+      Gates(normalize = true), p, compactEvery = 2)
     val assigned2 = DedupStream.assignments(spark, work)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(assigned2(21L) === 1L, "state holds canonical text")
@@ -706,7 +789,8 @@ class PipelineStreamSpec extends AnyFunSuite {
       rows.toSeq.toDF("doc_id", "text", "embedding")
         .write.parquet(s"$landing/$name")
     def poll(): Unit = PipelineStream.pollIngest(spark, landing, work,
-      index, p, compactEvery = 2, semMinCos = 0.995)
+      index, Gates(semantic = Some(Gates.Semantic(0.995))), p,
+      compactEvery = 2)
 
     land("d0", (1L, member("a", 0), A), (2L, member("b", 0), A2),
       (4L, member("c", 0), C), (9L, member("z", 0), zero))
