@@ -133,7 +133,8 @@ import scala.collection.mutable
   *     layout, and the OPQ rotated space (`graft_opq_train_t` trains
   *     the rotation);
   *     `graft_ivf_append_t` grows quantized AND product-quantized
-  *     indexes too (the append follows the index's recorded flavor);
+  *     indexes too (the append follows the flavor in the index's
+  *     version manifest);
   *   - `graft_repetition_t('docsV', 'id', 'text')` — Gopher-style
   *     repetition fractions (duplicate-word / duplicate-bigram /
   *     top-bigram) per document;

@@ -28,7 +28,7 @@ import graft.streaming.IvfStream
   * 50000), `SPARK_GRAFT_IVF_POLLS` = delivery count (default 6).
   *
   * `SPARK_GRAFT_IVF_QUANT=1` runs the SQ8 flavor: quantized base save,
-  * the SAME poller (appendIvfIndex reads the `_QUANTIZED` marker and
+  * the SAME poller (appendIvfIndex reads the version manifest's flavor and
   * encodes deliveries per-row), quantized serve after every poll — and
   * the exactness assert becomes served ≡ a full quantize-everything
   * rebuild with the stored centroids (per-row encoding is arrival-order-

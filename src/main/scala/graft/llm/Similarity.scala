@@ -581,6 +581,11 @@ object Similarity extends Serializable {
     *     (scan the probed fraction of the corpus, not all of it) realized
     *     at the FILE level;
     *   - `v<n>/centroids`: (cell, _cv);
+    *   - `v<n>/codebooks` and `v<n>/rotation`: the PQ tier's tables
+    *     ([[saveIvfIndexPQ]]);
+    *   - `v<n>/_MANIFEST`: the version's flavor and folded-delta ledger
+    *     ([[IvfManifest]]), closed before `_COMMIT` is created, so a
+    *     reader that sees `_COMMIT` always sees a complete manifest;
     *   - `v<n>/_COMMIT`: created LAST — readers resolve the HIGHEST
     *     committed version, so a rebuild is never visible half-done: a
     *     crash mid-save leaves an uncommitted v-dir that readers skip and
@@ -606,26 +611,14 @@ object Similarity extends Serializable {
       dir: String, nlist: Int, sampleFraction: Double = 1.0,
       seed: Long = 42L, maxIter: Int = 20,
       centroids: Option[DataFrame] = None, retain: Int = 0): Unit = {
-    val spark = corpus.sparkSession
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = ivfVersions(spark, dir).map(_._1).maxOption.getOrElse(0L) + 1
-    val vdir = s"$dir/v$n"
     // `centroids` (cell, _cv) injects an externally-trained codebook —
     // offline training on a sample, or a deterministic picker a
     // differential oracle can replay — and skips the k-means fit
     // (`nlist`/`sampleFraction`/`seed`/`maxIter` unused then)
     val cents = centroids.getOrElse(
       trainCentroids(corpus, vecCol, nlist, sampleFraction, seed, maxIter))
-    val corpusOut = assignedRows(corpus, cents, idCol, vecCol)
-    val centsOut = cents.select(col("cell"), col("_cv")).coalesce(1)
-    awaitWrites(
-      () => corpusOut
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$vdir/corpus"),
-      () => centsOut
-        .write.mode("overwrite").parquet(s"$vdir/centroids"))
-    f.create(new org.apache.hadoop.fs.Path(vdir, "_COMMIT"), true).close()
-    sweepOldVersions(spark, dir, n, retain)
+    commitVersion(corpus.sparkSession, dir, IvfManifest(IvfFlavor.Float),
+      retain, assignedRows(corpus, cents, idCol, vecCol), cents)
   }
 
   /** The float serving projection WITH its cell assignment —
@@ -664,13 +657,49 @@ object Similarity extends Serializable {
       col("_cn"), col("cell"))
   }
 
-  /** Sweep version dirs older than `n`, keeping the newest `retain`
-    * COMMITTED ones (uncommitted/crashed versions are always swept) —
-    * the shared tail of every version-writing mutation. */
-  private def sweepOldVersions(spark: org.apache.spark.sql.SparkSession,
-      dir: String, n: Long, retain: Int): Unit = {
+  /** The version commit protocol, the one tail of every version writer
+    * ([[saveIvfIndex]], [[saveIvfIndexQuantized]], [[saveIvfIndexPQ]],
+    * [[rewriteIvfIndex]], [[compactIvfIndex]]): the tables land in the
+    * next `v<n>` dir (`corpus` partitioned by cell, `centroids` and each
+    * of `extra` as one file), then the manifest, then `_COMMIT`; then
+    * versions older than `n` are swept, keeping the newest `retain`
+    * COMMITTED ones (uncommitted/crashed versions are always swept).
+    *
+    * The table writes run CONCURRENTLY (guide §2.6 — overlap independent
+    * jobs): each is a separate job whose scheduling latency would
+    * serialize with the others; submitted together, the tiny metadata
+    * writes back-fill the corpus write's straggler tail. Every write
+    * completes (or this throws) BEFORE the manifest and `_COMMIT`, so a
+    * failed write leaves an uncommitted version dir readers skip. */
+  // CALLER CONTRACT: every DataFrame passed in must be FULLY CONSTRUCTED
+  // (hence analyzed) on the calling thread — Dataset construction on a
+  // pool thread runs the analyzer there, and an SQL entry point that
+  // mutates an index during function resolution (GraftSql's table-function
+  // plans) holds the SessionCatalog monitor while awaiting, so a
+  // foreign-thread UnresolvedFunction lookup deadlocks. The futures below
+  // only EXECUTE pre-analyzed write plans.
+  private def commitVersion(spark: org.apache.spark.sql.SparkSession,
+      dir: String, manifest: IvfManifest, retain: Int, corpus: DataFrame,
+      centroids: DataFrame, extra: (String, DataFrame)*): Unit = {
+    import scala.concurrent.{Await, Future}
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val n = ivfVersions(spark, dir).map(_._1).maxOption.getOrElse(0L) + 1
+    val vdir = s"$dir/v$n"
+    val tables = ("centroids" -> centroids.select(col("cell"), col("_cv"))) +:
+      extra
+    val writes = (() => corpus.write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$vdir/corpus")) +:
+      tables.map { case (name, df) =>
+        val one = df.coalesce(1)
+        () => one.write.mode("overwrite").parquet(s"$vdir/$name")
+      }
+    Await.result(Future.sequence(writes.map(w => Future(w()))),
+      scala.concurrent.duration.Duration.Inf)
+    IvfManifest.write(spark, vdir, manifest)
+    f.create(new org.apache.hadoop.fs.Path(vdir, "_COMMIT"), true).close()
     val keep = ivfVersions(spark, dir)
       .filter(v => v._1 < n &&
         f.exists(new org.apache.hadoop.fs.Path(v._2, "_COMMIT")))
@@ -679,124 +708,26 @@ object Similarity extends Serializable {
       .foreach(v => f.delete(new org.apache.hadoop.fs.Path(v._2), true))
   }
 
-  /** Whether a version dir holds SQ8 rows — recorded EXPLICITLY by the
-    * `_QUANTIZED` marker [[saveIvfIndexQuantized]] writes (and
-    * compaction/rewrite carry forward), never inferred from the corpus
-    * schema alone: an index seeded EMPTY with external centroids has no
-    * readable corpus schema, and inferring would misread it as float —
-    * exactly the append that bricks every subsequent quantized read.
-    *
-    * LEGACY read-repair: a quantized version written before the marker
-    * existed has SQ8 rows but no marker, and trusting its absence would
-    * commit a float delta onto byte rows (the same brick, from the other
-    * side). When the marker is missing, the stored corpus schema is
-    * sniffed for the `_cq` byte column and a found marker is migrated in
-    * place (idempotent empty-file create; Try-guarded because read-only
-    * serving paths also land here). An empty-seeded legacy dir cannot
-    * exist — empty seeding shipped together with the marker — so
-    * "no marker, no readable corpus" still correctly means float. */
-  /** Per-vdir flavor cache: a version's flavor is IMMUTABLE once the
-    * dir is consulted (markers are written before `_COMMIT`, version
-    * numbers are monotonic so a pruned dir's path is never reused with
-    * a different flavor), so every serve/append after the first need
-    * not re-read parquet footers for an unmarked legacy float dir —
-    * and a read-only principal whose marker migration always fails
-    * pays the sniff once per JVM, not once per call. */
-  private val flavorSniffCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  private def isQuantizedVersion(spark: org.apache.spark.sql.SparkSession,
-      vdir: String): Boolean = {
-    // the marker is checked EVERY call (one FS stat — cheap, and it keeps
-    // a marker written after a same-path rebuild authoritative); the cache
-    // only short-circuits the legacy SNIFF, and only a sniff that actually
-    // READ the corpus schema is cached — a transient read failure must not
-    // become a JVM-lifetime "float" verdict that lands float deltas in a
-    // byte corpus (the next call re-sniffs and self-heals instead)
-    val p = new org.apache.hadoop.fs.Path(vdir, "_QUANTIZED")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (f.exists(p)) true
-    else {
-      val cached = flavorSniffCache.get(vdir)
-      if (cached != null) cached.booleanValue()
-      else scala.util.Try(parquetDirSchema(spark, s"$vdir/corpus")
-          .fieldNames.contains("_cq")) match {
-        case scala.util.Success(legacy) =>
-          if (legacy) scala.util.Try(f.create(p, true).close())
-          flavorSniffCache.put(vdir, java.lang.Boolean.valueOf(legacy))
-          legacy
-        case scala.util.Failure(_) => false // indeterminate: never cached
-      }
-    }
-  }
-
-  /** Carry a version's flavor artifacts into a successor dir — the SQ8
-    * marker, or the PQ marker plus its codebooks table (appends must
-    * keep encoding against the SAME codebooks after a fold/rewrite) —
-    * called by compaction and rewrite before they write `_COMMIT`. */
+  /** A PQ version's codebooks (and rotation) as tables for a successor
+    * version: appends must keep encoding against the SAME codebooks after
+    * a fold or rewrite. Nothing for the other flavors. */
   private def carryFlavor(spark: org.apache.spark.sql.SparkSession,
-      vold: String, vnew: String,
-      f: org.apache.hadoop.fs.FileSystem): Unit = {
-    if (isPqVersion(spark, vold)) {
-      readParquetDir(spark, s"$vold/codebooks").coalesce(1)
-        .write.mode("overwrite").parquet(s"$vnew/codebooks")
-      f.create(new org.apache.hadoop.fs.Path(vnew, "_PQ"), true).close()
-      if (isResidualPqVersion(spark, vold))
-        f.create(new org.apache.hadoop.fs.Path(vnew, "_PQRES"), true).close()
-      if (isLocalPqVersion(spark, vold))
-        f.create(new org.apache.hadoop.fs.Path(vnew, "_PQLOCAL"), true).close()
-      if (isRotatedPqVersion(spark, vold)) {
-        readParquetDir(spark, s"$vold/rotation").coalesce(1)
-          .write.mode("overwrite").parquet(s"$vnew/rotation")
-        f.create(new org.apache.hadoop.fs.Path(vnew, "_PQROT"), true).close()
-      }
-    } else if (isQuantizedVersion(spark, vold))
-      f.create(new org.apache.hadoop.fs.Path(vnew, "_QUANTIZED"), true).close()
-  }
+      vold: String, flavor: IvfFlavor): Seq[(String, DataFrame)] =
+    flavor match {
+      case pq: IvfFlavor.Pq =>
+        (Seq("codebooks") ++ (if (pq.rotated) Seq("rotation") else Nil))
+          .map(t => t -> readParquetDir(spark, s"$vold/$t"))
+      case _ => Nil
+    }
 
-  /** Whether a version dir holds PQ rows — the `_PQ` marker written by
-    * [[saveIvfIndexPQ]] (and carried by compaction/rewrite). No legacy
-    * sniff: the PQ tier shipped together with its marker. */
-  private def isPqVersion(spark: org.apache.spark.sql.SparkSession,
-      vdir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(vdir, "_PQ")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Whether a PQ version encodes RESIDUALS (v − coarse centroid) — the
-    * `_PQRES` marker written by [[saveIvfIndexPQ]] with `residual = true`
-    * next to `_PQ`, carried like it. Appends and serving read it so the
-    * encoding space and the ADC score stay consistent for the version's
-    * whole life. */
-  private def isResidualPqVersion(spark: org.apache.spark.sql.SparkSession,
-      vdir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(vdir, "_PQRES")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Whether a PQ version carries PER-CELL codebooks — the `_PQLOCAL`
-    * marker written by [[saveIvfIndexPQ]] with `perCell = true` next to
-    * `_PQ`/`_PQRES`, carried like them. Appends encode deliveries against
-    * the stored cell's codebooks; serving builds its ADC lookup table per
-    * (query, probed cell) instead of per query. */
-  private def isLocalPqVersion(spark: org.apache.spark.sql.SparkSession,
-      vdir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(vdir, "_PQLOCAL")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Whether a PQ version is ROTATED (OPQ) — the `_PQROT` marker written
-    * by [[saveIvfIndexPQ]] with `rotation = Some(...)`, next to a
-    * `rotation` table in the version dir. Appends rotate deliveries into
-    * the same space before encoding; serving rotates the QUERY for its
-    * ADC lookup table (R is orthogonal, so dot(Rq, Rv) = dot(q, v) — the
-    * residual add-back and the stored norms stay in the original
-    * space). */
-  private def isRotatedPqVersion(spark: org.apache.spark.sql.SparkSession,
-      vdir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(vdir, "_PQROT")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** The flavor of a version that must be PQ, or an error naming `op`. */
+  private def pqFlavor(spark: org.apache.spark.sql.SparkSession,
+      vdir: String, op: String): IvfFlavor.Pq =
+    IvfManifest.read(spark, vdir).flavor match {
+      case pq: IvfFlavor.Pq => pq
+      case other => throw new IllegalArgumentException(
+        s"$vdir is a $other index, not PQ-flavored — $op")
+    }
 
   /** The stored rotation of a version dir as a dense row-major matrix —
     * d×d floats, driver-bounded by the same budget as the broadcast
@@ -974,30 +905,6 @@ object Similarity extends Serializable {
       corpus, k, salt)
   }
 
-  /** Run independent index-write actions CONCURRENTLY (guide §2.6 —
-    * overlap independent jobs): a version save lands one corpus table
-    * and up to three single-file metadata tables, each a separate job
-    * whose scheduling latency serializes with the others; submitted
-    * together, the tiny metadata writes back-fill the corpus write's
-    * straggler tail. Failure semantics unchanged: every action completes
-    * (or this throws) BEFORE the caller stamps `_COMMIT`, so a failed
-    * write still leaves an uncommitted version dir readers skip. */
-  // CALLER CONTRACT: every DataFrame an action writes must be FULLY
-  // CONSTRUCTED (hence analyzed) on the calling thread before awaitWrites
-  // — Dataset construction on a pool thread runs the analyzer there, and
-  // an SQL entry point that mutates an index during function resolution
-  // (GraftSql's table-function plans) holds the SessionCatalog monitor
-  // while awaiting, so a foreign-thread UnresolvedFunction lookup
-  // deadlocks. The actions below only EXECUTE pre-analyzed write plans.
-  private def awaitWrites(actions: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    Await.result(
-      Future.sequence(actions.toSeq.map(a => Future(a()))),
-      scala.concurrent.duration.Duration.Inf): Unit
-  }
-
   /** Explicit schema of a parquet dir written by this module, read from
     * ONE footer on the driver: every schema-inferring
     * `spark.read.parquet` schedules a one-task footer job, and a refined
@@ -1073,27 +980,20 @@ object Similarity extends Serializable {
       vdir: String): DataFrame = {
     val paths = s"$vdir/corpus" +:
       committedDeltas(spark, vdir).map(d => s"${d._2}/corpus")
-    val f = new org.apache.hadoop.fs.Path(vdir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a corpus written from zero rows has no cell= children and no
-    // readable schema — skip such paths (an index seeded EMPTY with
-    // external centroids, to be grown purely by appends, is legal)
-    val readable = paths.filter { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      f.exists(hp) && f.listStatus(hp)
-        .exists(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-    }
+    // an index seeded EMPTY with external centroids, to be grown purely
+    // by appends, is legal: skip corpus paths without rows
+    val readable = paths.filter(hasCells(spark, _))
     if (readable.isEmpty) {
       import org.apache.spark.sql.types._
       // empty-seeded index: the schema comes from the version's recorded
-      // flavor (the `_QUANTIZED` marker), matching what appends will write
-      val payload =
-        if (isPqVersion(spark, vdir))
-          Seq(StructField("_pq", ArrayType(ByteType)))
-        else if (isQuantizedVersion(spark, vdir)) Seq(
+      // flavor, matching what appends will write
+      val payload = IvfManifest.read(spark, vdir).flavor match {
+        case _: IvfFlavor.Pq => Seq(StructField("_pq", ArrayType(ByteType)))
+        case IvfFlavor.Sq8 => Seq(
           StructField("_qoff", FloatType), StructField("_qstep", FloatType),
           StructField("_cq", ArrayType(ByteType)))
-        else Seq(StructField("_cv", ArrayType(FloatType)))
+        case IvfFlavor.Float => Seq(StructField("_cv", ArrayType(FloatType)))
+      }
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(StructField("neighbor_id", LongType) +: payload :+
           StructField("_cn", DoubleType) :+ StructField("cell", IntegerType)))
@@ -1131,20 +1031,14 @@ object Similarity extends Serializable {
       .sortBy(_._1)
   }
 
-  /** Delta names already folded into this version by [[compactIvfIndex]]
-    * (the `_FOLDED` ledger) — a replayed streaming append whose delta was
-    * folded must be a no-op, or its rows would land twice. */
-  private def foldedDeltas(spark: org.apache.spark.sql.SparkSession,
-      vdir: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(vdir, "_FOLDED")
+  /** Whether a cell-partitioned corpus dir holds rows: a write of zero
+    * rows leaves no `cell=` children, and no schema parquet can read. */
+  private def hasCells(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) Set.empty
-    else {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toSet
-      finally in.close()
-    }
+    f.exists(p) && f.listStatus(p)
+      .exists(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
   }
 
   /** Incremental corpus growth for a persisted index — the serving-time
@@ -1171,13 +1065,13 @@ object Similarity extends Serializable {
     * `deltaName` keys the delta for IDEMPOTENT replay (streaming pollers
     * pass their micro-batch id): re-appending an existing name rewrites
     * the same dir from the same deterministic input, and a name already
-    * folded into the version by [[compactIvfIndex]] (the `_FOLDED`
+    * folded into the version by [[compactIvfIndex]] (the manifest's
     * ledger) is a no-op — without either, a crash-replay straddling an
     * append or a compaction would land the delivery's rows twice.
     * Anonymous appends are auto-numbered and never no-op.
     *
     * The delta's row format FOLLOWS THE INDEX FLAVOR (the version's
-    * `_QUANTIZED` marker): on an SQ8 index the delivery is quantized
+    * manifest): on an SQ8 index the delivery is quantized
     * per-row before landing — quantization params are per-row
     * ([[quantizeProjection]]), so nothing corpus-proportional happens and the
     * cheapest serving tier stays fresh by the same delivery-proportional
@@ -1189,7 +1083,8 @@ object Similarity extends Serializable {
       indexDir: String, deltaName: Option[String] = None): Unit = {
     val spark = newVectors.sparkSession
     val vdir = latestIvfVersion(spark, indexDir)
-    if (!deltaName.exists(foldedDeltas(spark, vdir))) {
+    val manifest = IvfManifest.read(spark, vdir)
+    if (!deltaName.exists(manifest.folded)) {
       val f = new org.apache.hadoop.fs.Path(vdir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val cents = readParquetDir(spark, s"$vdir/centroids")
@@ -1206,17 +1101,14 @@ object Similarity extends Serializable {
       // separate assignCells output back to the delivery, checkpointed
       // on the residual path because that join read it twice)
       val assigned = assignedRows(newVectors, cents, idCol, vecCol)
-      val residualIdx = isPqVersion(spark, vdir) &&
-        isResidualPqVersion(spark, vdir)
-      val rows =
-        if (isPqVersion(spark, vdir)) {
+      val rows = manifest.flavor match {
+        case pq: IvfFlavor.Pq =>
           val cbs = readParquetDir(spark, s"$vdir/codebooks")
           // the delivery follows the version's FULL flavor stack: rotate
-          // into the stored space first (the _PQROT marker), then encode
-          // residual / per-cell / plain exactly as the base was
+          // into the stored space first, then encode residual / per-cell /
+          // plain exactly as the base was
           val rotM =
-            if (isRotatedPqVersion(spark, vdir))
-              Some(readRotation(spark, vdir))
+            if (pq.rotated) Some(readRotation(spark, vdir))
             else None
           def residualRows() = {
             val r = residualVectors(assigned, cents)
@@ -1226,10 +1118,10 @@ object Similarity extends Serializable {
               case None => r
             }
           }
-          if (isLocalPqVersion(spark, vdir))
+          if (pq.perCell)
             pqRowsLocal(residualRows(), "neighbor_id", "_rv", cbs,
               Some("_ov"))
-          else if (residualIdx)
+          else if (pq.residual)
             pqRows(residualRows(), "neighbor_id", "_rv", cbs, Some("_ov"))
           else rotM match {
             case Some(rm) =>
@@ -1241,21 +1133,17 @@ object Similarity extends Serializable {
                 "neighbor_id", "_rot", cbs, Some("_ov"))
             case None => pqRows(assigned, "neighbor_id", "_cv", cbs)
           }
-        }
-        else if (isQuantizedVersion(spark, vdir))
-          quantizeProjection(assigned)
-        else assigned
+        case IvfFlavor.Sq8 => quantizeProjection(assigned)
+        case IvfFlavor.Float => assigned
+      }
       rows.write.mode("overwrite").partitionBy("cell").parquet(s"$ddir/corpus")
       // an all-rows-excluded delivery (empty batch, or every vector
       // zero/NaN-norm — assignCells drops those by contract) writes a
-      // partitioned dir with NO cell= children, which parquet schema
-      // inference cannot read and which would poison every union read:
-      // leave NO delta rather than an unreadable one (replays converge
-      // to the same nothing)
-      val wroteRows = f.exists(new org.apache.hadoop.fs.Path(s"$ddir/corpus")) &&
-        f.listStatus(new org.apache.hadoop.fs.Path(s"$ddir/corpus"))
-          .exists(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      if (!wroteRows) f.delete(new org.apache.hadoop.fs.Path(ddir), true)
+      // partitioned dir with NO cell= children, which would poison every
+      // union read: leave NO delta rather than an unreadable one (replays
+      // converge to the same nothing)
+      if (!hasCells(spark, s"$ddir/corpus"))
+        f.delete(new org.apache.hadoop.fs.Path(ddir), true)
       else f.create(new org.apache.hadoop.fs.Path(ddir, "_COMMIT"), true).close()
       // sweep crashed (uncommitted) other deltas — unreadable leftovers
       // (single-writer contract: no concurrent append can be mid-write)
@@ -1277,34 +1165,20 @@ object Similarity extends Serializable {
     * contract for lossy storage. Constant-component vectors (max = min)
     * take step 0 and reconstruct exactly.
     *
-    * Same version layout and commit protocol as [[saveIvfIndex]] (shared
-    * `latestIvfVersion` / `ivfIndexStats`), plus a `_QUANTIZED` marker
-    * recording the version's flavor explicitly (written before `_COMMIT`,
-    * carried forward by compaction/rewrite): [[appendIvfIndex]] reads the
-    * marker and quantizes deliveries per-row, so the SQ8 tier grows by
-    * the same delivery-proportional appends as the float tier — never a
-    * silent float/byte schema mix. `retain` as in [[saveIvfIndex]]. */
+    * Same version layout and commit protocol as [[saveIvfIndex]]; the
+    * manifest records the SQ8 flavor, so [[appendIvfIndex]] quantizes
+    * deliveries per-row and the SQ8 tier grows by the same
+    * delivery-proportional appends as the float tier — never a silent
+    * float/byte schema mix. `retain` as in [[saveIvfIndex]]. */
   def saveIvfIndexQuantized(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nlist: Int, sampleFraction: Double = 1.0,
       seed: Long = 42L, maxIter: Int = 20,
       centroids: Option[DataFrame] = None, retain: Int = 0): Unit = {
-    val spark = corpus.sparkSession
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = ivfVersions(spark, dir).map(_._1).maxOption.getOrElse(0L) + 1
-    val vdir = s"$dir/v$n"
     val cents = centroids.getOrElse(
       trainCentroids(corpus, vecCol, nlist, sampleFraction, seed, maxIter))
-    val corpusOut = quantizeProjection(assignedRows(corpus, cents, idCol, vecCol))
-    val centsOut = cents.select(col("cell"), col("_cv")).coalesce(1)
-    awaitWrites(
-      () => corpusOut
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$vdir/corpus"),
-      () => centsOut
-        .write.mode("overwrite").parquet(s"$vdir/centroids"))
-    f.create(new org.apache.hadoop.fs.Path(vdir, "_QUANTIZED"), true).close()
-    f.create(new org.apache.hadoop.fs.Path(vdir, "_COMMIT"), true).close()
-    sweepOldVersions(spark, dir, n, retain)
+    commitVersion(corpus.sparkSession, dir, IvfManifest(IvfFlavor.Sq8),
+      retain, quantizeProjection(assignedRows(corpus, cents, idCol, vecCol)),
+      cents)
   }
 
   /** Serve a [[saveIvfIndexQuantized]] directory: exact query vectors
@@ -2084,10 +1958,10 @@ object Similarity extends Serializable {
     * remedy.
     *
     * Same version/commit protocol as the other tiers, plus a
-    * `codebooks` table in the version dir and a `_PQ` flavor marker
-    * (written before `_COMMIT`, carried by compaction and rewrite):
-    * [[appendIvfIndex]] reads the marker and PQ-encodes deliveries
-    * against the STORED codebooks, so the PQ tier grows by the same
+    * `codebooks` table in the version dir (carried by compaction and
+    * rewrite); the manifest records the PQ flavor, and
+    * [[appendIvfIndex]] PQ-encodes deliveries against the STORED
+    * codebooks, so the PQ tier grows by the same
     * delivery-proportional appends — never a mixed-format corpus.
     * `centroids`/`codebooks` seed an empty index; `retain` as in
     * [[saveIvfIndex]]. */
@@ -2099,11 +1973,6 @@ object Similarity extends Serializable {
       residual: Boolean = false, perCell: Boolean = false,
       maxTrainPerCell: Int = 20000,
       rotation: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = ivfVersions(spark, dir).map(_._1).maxOption.getOrElse(0L) + 1
-    val vdir = s"$dir/v$n"
     val cents = centroids.getOrElse(
       trainCentroids(corpus, vecCol, nlist, sampleFraction, seed, maxIter))
     // `perCell = true` is the LOCAL-codebook layout: each cell trains
@@ -2113,8 +1982,8 @@ object Similarity extends Serializable {
     // residuals: k-means is translation-invariant, so per-cell-on-raw
     // would learn the same codebooks translated by the centroid — the
     // residual frame keeps the ADC add-back machinery shared with
-    // `_PQRES`.
-    val useResidual = residual || perCell
+    // `residual` (the `Pq` flavor sets it whenever `perCell` is set).
+    val flavor = IvfFlavor.Pq(residual, perCell, rotation.nonEmpty)
     // ONE assignment pass carrying (_cv, _cn, cell) — every downstream
     // branch (residual frame, plain encode, the corpus write) consumes
     // the cell from here; the earlier shape joined a separate
@@ -2127,8 +1996,8 @@ object Similarity extends Serializable {
     // carried by the cell id), so the same m bytes spend their codes on
     // the fine structure — bytes unchanged, reconstruction error lower
     // wherever cells capture real cluster mass. Serving adds dot(q, c)
-    // back per probed cell (see [[ivfTopKPQ]]); appends read the
-    // `_PQRES` marker and encode against the same residual space.
+    // back per probed cell (see [[ivfTopKPQ]]); appends read the flavor
+    // from the manifest and encode against the same residual space.
     // `rotation` (the OPQ layout — see [[trainOpqRotation]]): codes
     // quantize R·r (or R·v on the plain path) instead of r. R is
     // orthogonal, so reconstruction error, stored norms, and the `_qerr`
@@ -2138,7 +2007,7 @@ object Similarity extends Serializable {
     // codes quantize.
     val rotM = rotation.map(rotationMatrix)
     val res0 =
-      if (useResidual) Some(residualVectors(assigned, cents))
+      if (flavor.residual) Some(residualVectors(assigned, cents))
       else None
     // the residual table is consumed by every k-means action in
     // trainPqCodebooks (~2 per subspace) plus the encode pass —
@@ -2165,7 +2034,7 @@ object Similarity extends Serializable {
     // checkpoint when training happens (explicit codebooks: encode is
     // the only consumer)
     val plainRot: Option[DataFrame] =
-      if (useResidual) None
+      if (flavor.residual) None
       else rotM.map { rm =>
         val rp = rotateVecCol(
           assigned.select(col("neighbor_id"), col("_cv").as("_rot"),
@@ -2225,28 +2094,10 @@ object Similarity extends Serializable {
     val cbCols =
       if (perCell) Seq(col("cell"), col("m"), col("code"), col("_cbv"))
       else Seq(col("m"), col("code"), col("_cbv"))
-    val centsOut = cents.select(col("cell"), col("_cv")).coalesce(1)
-    val cbsOut = cbs.select(cbCols: _*).coalesce(1)
-    val rotOut = rotation.map(
-      _.select(col("i").cast("int").as("i"), col("_rv")).coalesce(1))
-    awaitWrites(Seq[() => Unit](
-      () => rows.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$vdir/corpus"),
-      () => centsOut
-        .write.mode("overwrite").parquet(s"$vdir/centroids"),
-      () => cbsOut
-        .write.mode("overwrite").parquet(s"$vdir/codebooks")) ++
-      rotOut.map(r => () =>
-        r.write.mode("overwrite").parquet(s"$vdir/rotation")): _*)
-    f.create(new org.apache.hadoop.fs.Path(vdir, "_PQ"), true).close()
-    if (useResidual)
-      f.create(new org.apache.hadoop.fs.Path(vdir, "_PQRES"), true).close()
-    if (perCell)
-      f.create(new org.apache.hadoop.fs.Path(vdir, "_PQLOCAL"), true).close()
-    if (rotation.nonEmpty)
-      f.create(new org.apache.hadoop.fs.Path(vdir, "_PQROT"), true).close()
-    f.create(new org.apache.hadoop.fs.Path(vdir, "_COMMIT"), true).close()
-    sweepOldVersions(spark, dir, n, retain)
+    commitVersion(corpus.sparkSession, dir, IvfManifest(flavor), retain,
+      rows, cents, Seq("codebooks" -> cbs.select(cbCols: _*)) ++
+        rotation.map(r => "rotation" ->
+          r.select(col("i").cast("int").as("i"), col("_rv"))): _*)
   }
 
   /** CODEBOOK-DRIFT diagnostic for a PQ index — the [[ivfIndexStats]]
@@ -2271,19 +2122,12 @@ object Similarity extends Serializable {
   def pqIndexStats(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
     val vdir = latestIvfVersion(spark, indexDir)
-    require(isPqVersion(spark, vdir),
-      s"$indexDir's current version is not PQ-flavored — pqIndexStats " +
-        "reads the encode-time _qerr only PQ rows carry")
-    val f = new org.apache.hadoop.fs.Path(vdir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    pqFlavor(spark, vdir,
+      "pqIndexStats reads the encode-time _qerr only PQ rows carry")
     val units = ("base", s"$vdir/corpus") +:
       committedDeltas(spark, vdir).map { case (nm, p) =>
         (s"delta$nm", s"$p/corpus") }
-    val readable = units.filter { case (_, p) =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      f.exists(hp) && f.listStatus(hp)
-        .exists(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-    }
+    val readable = units.filter { case (_, p) => hasCells(spark, p) }
     val empty = {
       import org.apache.spark.sql.types._
       spark.createDataFrame(
@@ -2323,20 +2167,16 @@ object Similarity extends Serializable {
       seed: Long = 42L, maxIter: Int = 20, retain: Int = 1): Unit = {
     val spark = corpus.sparkSession
     val vdir = latestIvfVersion(spark, indexDir)
-    require(isPqVersion(spark, vdir),
-      s"$indexDir's current version is not PQ-flavored — refresh retrains " +
-        "PQ codebooks only")
+    val pq = pqFlavor(spark, vdir, "refresh retrains PQ codebooks only")
     val cents = readParquetDir(spark, s"$vdir/centroids")
     val (m, _) = pqShape(readParquetDir(spark, s"$vdir/codebooks"))
     saveIvfIndexPQ(corpus, idCol, vecCol, indexDir,
       nlist = 0 /* unused: centroids are injected */, pqM = m, pqK = pqK,
       sampleFraction = sampleFraction, seed = seed, maxIter = maxIter,
       centroids = Some(cents), retain = retain,
-      residual = isResidualPqVersion(spark, vdir),
-      perCell = isLocalPqVersion(spark, vdir),
+      residual = pq.residual, perCell = pq.perCell,
       rotation =
-        if (isRotatedPqVersion(spark, vdir))
-          Some(readParquetDir(spark, s"$vdir/rotation"))
+        if (pq.rotated) Some(readParquetDir(spark, s"$vdir/rotation"))
         else None)
   }
 
@@ -2373,10 +2213,11 @@ object Similarity extends Serializable {
     // Per-row work is O(nlist + m·k·(dim/m)); kernels are the shared
     // bit-identical ones (topCellsKernel / rotateKernel / dotKernel —
     // the DotProduct contract).
-    val local = isLocalPqVersion(spark, vdir)
-    val residual = isResidualPqVersion(spark, vdir)
+    val pq = pqFlavor(spark, vdir, "ivfTopKPQ serves PQ codes only")
+    val local = pq.perCell
+    val residual = pq.residual
     val rotOpt: Option[Array[Array[Float]]] =
-      if (isRotatedPqVersion(spark, vdir)) Some(readRotation(spark, vdir))
+      if (pq.rotated) Some(readRotation(spark, vdir))
       else None
     val centArr = collectCents(cents)
     // per-cell lookup for the residual add-back (cells are the probe
@@ -2498,41 +2339,18 @@ object Similarity extends Serializable {
   /** Rewrite the serving corpus of an index through `f` (a filter /
     * projection over the version's serving columns — (neighbor_id, _cv,
     * _cn, cell) float / (neighbor_id, _qoff, _qstep, _cq, _cn, cell)
-    * SQ8, flavor marker carried forward — cell assignments and
+    * SQ8, flavor carried forward — cell assignments and
     * vector payloads must be preserved) into ONE new committed version
     * with the SAME centroids, riding the version-swap protocol: a crashed
     * rewrite leaves an uncommitted v-dir readers skip, and the old
-    * version serves throughout. The `_FOLDED` ledger is carried forward,
-    * so streaming replays of folded batches still no-op afterwards.
+    * version serves throughout. The folded-delta ledger is carried
+    * forward, so streaming replays of folded batches still no-op afterwards.
     * Single-writer, like every index mutation here. The load-bearing use:
     * pruning absorbed ex-representatives after an offline
     * [[graft.streaming.DedupStream.repairMerges]]. */
   def rewriteIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, retain: Int = 0)(f: DataFrame => DataFrame): Unit = {
-    val vdir = latestIvfVersion(spark, indexDir)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = ivfVersions(spark, indexDir).map(_._1).max + 1
-    val vnew = s"$indexDir/v$n"
-    val corpusOut = f(ivfCorpus(spark, vdir))
-    val centsOut = readParquetDir(spark, s"$vdir/centroids").coalesce(1)
-    awaitWrites(
-      () => corpusOut
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$vnew/corpus"),
-      () => centsOut
-        .write.mode("overwrite").parquet(s"$vnew/centroids"))
-    val ledger = (foldedDeltas(spark, vdir) ++
-      committedDeltas(spark, vdir).map(_._1)).toSeq.sorted
-    if (ledger.nonEmpty) {
-      val out = fs.create(new org.apache.hadoop.fs.Path(vnew, "_FOLDED"), true)
-      try out.write((ledger.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-    carryFlavor(spark, vdir, vnew, fs)
-    fs.create(new org.apache.hadoop.fs.Path(vnew, "_COMMIT"), true).close()
-    sweepOldVersions(spark, indexDir, n, retain)
-  }
+      indexDir: String, retain: Int = 0)(f: DataFrame => DataFrame): Unit =
+    foldInto(spark, indexDir, retain, latestIvfVersion(spark, indexDir), f)
 
   /** Fold base + committed deltas into ONE new committed version with the
     * SAME centroids (no retrain — compaction changes file layout, never
@@ -2552,31 +2370,24 @@ object Similarity extends Serializable {
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, retain: Int = 0): Unit = {
     val vdir = latestIvfVersion(spark, indexDir)
-    val folding = committedDeltas(spark, vdir)
-    if (folding.nonEmpty) {
-      val f = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val n = ivfVersions(spark, indexDir).map(_._1).max + 1
-      val vnew = s"$indexDir/v$n"
-      val corpusOut = ivfCorpus(spark, vdir)
-      val centsOut = readParquetDir(spark, s"$vdir/centroids").coalesce(1)
-      awaitWrites(
-        () => corpusOut
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$vnew/corpus"),
-        () => centsOut
-          .write.mode("overwrite").parquet(s"$vnew/centroids"))
-      // the cumulative folded ledger (before _COMMIT): every delta name
-      // ever folded, carried across versions, so a replayed streaming
-      // append of a long-folded batch stays a no-op
-      val ledger = (foldedDeltas(spark, vdir) ++ folding.map(_._1)).toSeq.sorted
-      val out = f.create(new org.apache.hadoop.fs.Path(vnew, "_FOLDED"), true)
-      try out.write((ledger.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      carryFlavor(spark, vdir, vnew, f)
-      f.create(new org.apache.hadoop.fs.Path(vnew, "_COMMIT"), true).close()
-      sweepOldVersions(spark, indexDir, n, retain)
-    }
+    if (committedDeltas(spark, vdir).nonEmpty)
+      foldInto(spark, indexDir, retain, vdir, identity)
+  }
+
+  /** Write `vdir`'s serving corpus (base + committed deltas) through `f`
+    * as the next version, with the same centroids and flavor, and a
+    * ledger extended by the deltas it folds — every delta name ever
+    * folded, carried across versions, so a replayed streaming append of
+    * a long-folded batch stays a no-op. */
+  private def foldInto(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, retain: Int, vdir: String,
+      f: DataFrame => DataFrame): Unit = {
+    val m = IvfManifest.read(spark, vdir)
+    commitVersion(spark, indexDir,
+      m.copy(folded = m.folded ++ committedDeltas(spark, vdir).map(_._1)),
+      retain, f(ivfCorpus(spark, vdir)),
+      readParquetDir(spark, s"$vdir/centroids"),
+      carryFlavor(spark, vdir, m.flavor): _*)
   }
 
   /** Embedding near-duplicate pairs: all (i < j) with cosine ≥ minCos —

@@ -169,9 +169,9 @@ object LlmQueries {
           round(col("cos"), 6).as("cos")))
     }),
 
-    // Quantized tier END TO END through the driver differential: SQ8-save
-    // half the corpus, append the other half (the _QUANTIZED marker makes
-    // the append quantize per-row), then serve REFINED at full candidate
+    // Quantized tier END TO END through the driver differential: SQ8-save half
+    // the corpus, append the other half (the version manifest's SQ8 flavor
+    // makes the append quantize per-row), then serve REFINED at full candidate
     // width — every probed pair is exactly re-scored, so the result is the
     // exact probed-cell top-5 and replays in DuckDB like ann3. The refine
     // contract ("quantized proposes, exact re-scoring decides") is the
@@ -197,8 +197,8 @@ object LlmQueries {
 
     // Product-quantized tier end to end: PQ save (8 subspaces, per-row
     // 8-byte codes) over half the corpus, delivery-proportional append
-    // of the other half (encoded against the STORED codebooks — the _PQ
-    // flavor marker selects the format), then the refined serve. The
+    // of the other half (encoded against the STORED codebooks — the
+    // manifest's PQ flavor selects the format), then the refined serve. The
     // refine factor spans the whole corpus, so exact rescoring decides
     // every rank and the result is independent of the trained codebooks
     // — what makes a lossy tier's construction loop oracle-able (the
@@ -233,8 +233,8 @@ object LlmQueries {
 
     // RESIDUAL PQ (the FAISS IVFPQ layout) end to end: save with
     // residual=true so codes quantize v − c(cell), append the odd half
-    // (the _PQRES marker routes delivery encoding through the stored
-    // residual space), serve refined at full candidate width — exact
+    // (the manifest's residual flag routes delivery encoding through the
+    // stored residual space), serve refined at full candidate width — exact
     // rescoring decides every rank, which is what makes the lossy
     // construction loop oracle-able (ann5/ann6's pattern); residual raw
     // recall and error superiority stay gated in ScalaTest
@@ -263,14 +263,14 @@ object LlmQueries {
     }),
 
     // PER-CELL (local) PQ end to end: save with perCell=true and EXPLICIT
-    // cell-varying codebooks (cell c's code k = slices of embedding
-    // (c + k) mod 8 — every cell a DIFFERENT table, so the gate actually
-    // exercises per-cell routing in encode, append, and the per-(query,
-    // probed cell) ADC lookup), append the odd half (the _PQLOCAL marker
-    // routes delivery encoding through the stored cell's codebooks),
-    // serve refined at full candidate width — exact rescoring decides
-    // every rank (the ann5/ann6/ann8 pattern), so the lossy local
-    // construction loop replays as the probed-cell exact top-5.
+    // cell-varying codebooks (cell c's code k = slices of embedding (c + k) mod
+    // 8 — every cell a DIFFERENT table, so the gate actually exercises per-cell
+    // routing in encode, append, and the per-(query, probed cell) ADC lookup),
+    // append the odd half (the manifest's per-cell flag routes delivery
+    // encoding through the stored cell's codebooks), serve refined at full
+    // candidate width — exact rescoring decides every rank (the ann5/ann6/ann8
+    // pattern), so the lossy local construction loop replays as the probed-cell
+    // exact top-5.
     "ann10_ivf_pq_local" -> ((s, dir) => {
       val e = embs(s, dir)
       val cents = e.filter(col("vec_id") < 8)
@@ -300,14 +300,14 @@ object LlmQueries {
           round(col("cos"), 6).as("cos")))
     }),
 
-    // ROTATED (OPQ-layout) PQ end to end: save with an EXPLICIT
-    // orthogonal rotation (the dimension-reversal permutation — exactly
-    // orthogonal, and it genuinely reshuffles what every subspace sees)
-    // plus explicit codebooks, append the odd half (the _PQROT marker
-    // routes delivery encoding through the stored rotated space), serve
-    // refined at full width — the query side must rotate for its ADC
-    // lookups, and exact rescoring decides every rank, so the rotated
-    // construction loop replays as the same probed-cell exact top-5.
+    // ROTATED (OPQ-layout) PQ end to end: save with an EXPLICIT orthogonal
+    // rotation (the dimension-reversal permutation — exactly orthogonal, and it
+    // genuinely reshuffles what every subspace sees) plus explicit codebooks,
+    // append the odd half (the manifest's rotated flag routes delivery encoding
+    // through the stored rotated space), serve refined at full width — the
+    // query side must rotate for its ADC lookups, and exact rescoring decides
+    // every rank, so the rotated construction loop replays as the same
+    // probed-cell exact top-5.
     "ann11_ivf_pq_rotated" -> ((s, dir) => {
       val e = embs(s, dir)
       val cents = e.filter(col("vec_id") < 8)

@@ -29,7 +29,8 @@ import graft.llm.Similarity
   * same dir from the same deterministic file-source slice (the marker is
   * dropped before the rewrite — no half-written files behind a stale
   * commit), and a replay whose delta was already folded by a compaction
-  * finds its batch id in the version's `_FOLDED` ledger and no-ops.
+  * finds its batch id in the version manifest's folded-delta ledger and
+  * no-ops.
   * Either way the replayed poll converges to the exact pre-crash state.
   *
   * Landing layout: parquet files of (vec_id bigint, embedding
@@ -38,7 +39,7 @@ import graft.llm.Similarity
   *
   * The poller is FLAVOR-AGNOSTIC: deliveries land in whatever format the
   * index records ([[graft.llm.Similarity.appendIvfIndex]] reads the
-  * version's `_QUANTIZED` marker and quantizes per-row), so an SQ8 index
+  * version manifest's flavor and quantizes per-row), so an SQ8 index
   * — the cheapest serving tier — stays fresh by the same delivery-
   * proportional polls as a float one (spec-pinned: served ≡ a full
   * quantize-everything rebuild, across compaction and crash replay).

@@ -28,8 +28,8 @@ import graft.llm.{Gates, Similarity}
   *
   * A crash between (1) and (3) replays the whole batch: (1) rewrites the
   * same state dirs, (2) reads the same rewritten assignment, (3) rewrites
-  * the same delta or no-ops via the `_FOLDED` ledger — convergent at
-  * every cut point.
+  * the same delta or no-ops via the index's folded-delta ledger —
+  * convergent at every cut point.
   *
   * Seed the index before the first poll — with a corpus, or EMPTY with
   * externally-trained centroids (`saveIvfIndex(centroids = Some(...))`
@@ -229,7 +229,7 @@ object PipelineStream {
     * afterwards the index holds one vector per REPAIRED cluster — the
     * state a batch pipeline over the full corpus would have produced.
     * Rides the index version protocol ([[graft.llm.Similarity
-    * .rewriteIvfIndex]]): crash-safe, `_FOLDED` ledger carried, resuming
+    * .rewriteIvfIndex]]): crash-safe, folded-delta ledger carried, resuming
     * the poller afterwards is the documented single-writer hand-back. */
   def repairAndPrune(spark: SparkSession, workDir: String, indexDir: String,
       p: DedupStream.Params = DedupStream.Params(), retain: Int = 0): Unit = {

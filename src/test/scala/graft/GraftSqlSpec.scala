@@ -611,7 +611,8 @@ class GraftSqlSpec extends AnyFunSuite {
     spark.sql("SELECT * FROM graft_ivf_save_pq_t(" +
       s"'ivfpq_c', 'vec_id', 'embedding', '$rdir', 4, 4, 16, 42, true)")
       .collect()
-    assert(new java.io.File(s"$rdir/v1/_PQRES").exists(),
+    assert((graft.llm.IvfManifest.read(spark, s"$rdir/v1").flavor match {
+      case f: graft.llm.IvfFlavor.Pq => f.residual; case _ => false }),
       "the SQL save form carries the residual flavor marker")
     val rresSql = spark.sql("SELECT query_id, neighbor_id, cos FROM " +
       s"graft_ivf_topk_pq_t('ivfpq_q', '$rdir', 'vec_id', 'embedding', 5, 2)")
@@ -629,8 +630,10 @@ class GraftSqlSpec extends AnyFunSuite {
     spark.sql("SELECT * FROM graft_ivf_save_pq_t(" +
       s"'ivfpq_c', 'vec_id', 'embedding', '$ldir', 4, 4, 16, 42, false, " +
       "true)").collect()
-    assert(new java.io.File(s"$ldir/v1/_PQLOCAL").exists() &&
-      new java.io.File(s"$ldir/v1/_PQRES").exists(),
+    assert((graft.llm.IvfManifest.read(spark, s"$ldir/v1").flavor match {
+      case f: graft.llm.IvfFlavor.Pq => f.perCell; case _ => false }) &&
+      (graft.llm.IvfManifest.read(spark, s"$ldir/v1").flavor match {
+      case f: graft.llm.IvfFlavor.Pq => f.residual; case _ => false }),
       "the SQL save form carries the per-cell flavor markers")
     val lSql = spark.sql("SELECT query_id, neighbor_id, cos FROM " +
       s"graft_ivf_topk_pq_t('ivfpq_q', '$ldir', 'vec_id', 'embedding', 5, 2)")
@@ -651,7 +654,8 @@ class GraftSqlSpec extends AnyFunSuite {
     spark.sql("SELECT * FROM graft_ivf_save_pq_t(" +
       s"'ivfpq_c', 'vec_id', 'embedding', '$odir', 4, 4, 16, 42, true, " +
       "false, 'ivfpq_rot_v')").collect()
-    assert(new java.io.File(s"$odir/v1/_PQROT").exists() &&
+    assert((graft.llm.IvfManifest.read(spark, s"$odir/v1").flavor match {
+      case f: graft.llm.IvfFlavor.Pq => f.rotated; case _ => false }) &&
       new java.io.File(s"$odir/v1/rotation").exists(),
       "the SQL save form carries the rotation artifacts")
     val oSql = spark.sql("SELECT query_id, neighbor_id, cos FROM " +

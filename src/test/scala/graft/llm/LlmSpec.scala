@@ -326,6 +326,10 @@ class LlmSpec extends AnyFunSuite {
     val served = Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)
     assert(rows(served) === live, "indexed ≡ live")
+    // the scoring join prunes the cell-partitioned corpus scan (dynamic
+    // partition pruning from the broadcast query side)
+    assert(served.queryExecution.executedPlan.toString
+      .contains("dynamicpruning"), "the corpus scan must prune probed cells")
     // salted serving stays exact too
     assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3, salt = 4)) === live)
@@ -552,8 +556,8 @@ class LlmSpec extends AnyFunSuite {
     // compaction folds the quantized delta and carries the flavor marker:
     // a post-fold append must still quantize (not land float rows)
     Similarity.compactIvfIndex(spark, gdir)
-    assert(new java.io.File(s"$gdir/v2/_QUANTIZED").exists(),
-      "compaction must carry the _QUANTIZED marker forward")
+    assert(IvfManifest.read(spark, s"$gdir/v2").flavor === IvfFlavor.Sq8,
+      "compaction must carry the SQ8 flavor forward")
     assert(full(Similarity.ivfTopKQuantized(q, gdir, "vec_id", "embedding",
       5, 3)) === grownServed, "across the fold")
     // a replay of the folded delta no-ops via the _FOLDED ledger
@@ -636,7 +640,8 @@ class LlmSpec extends AnyFunSuite {
     // compaction folds the delta and carries flavor + codebooks — a
     // post-fold append must still PQ-encode against the same codebooks
     Similarity.compactIvfIndex(spark, gdir)
-    assert(new java.io.File(s"$gdir/v2/_PQ").exists(), "marker carried")
+    assert(IvfManifest.read(spark, s"$gdir/v2").flavor
+      .isInstanceOf[IvfFlavor.Pq], "flavor carried")
     assert(new java.io.File(s"$gdir/v2/codebooks").exists(), "codebooks carried")
     assert(full(gdir) === grown, "across the fold")
     Similarity.appendIvfIndex(embs.filter(col("vec_id") % 2 =!= 0),
@@ -689,7 +694,8 @@ class LlmSpec extends AnyFunSuite {
       dir, pqK = 4)
     assert(new java.io.File(s"$dir/v1/_COMMIT").exists(),
       "retain=1 keeps the previous version serving")
-    assert(new java.io.File(s"$dir/v2/_PQ").exists(), "flavor carried")
+    assert(IvfManifest.read(spark, s"$dir/v2").flavor
+      .isInstanceOf[IvfFlavor.Pq], "flavor carried")
     val s2 = stats()
     assert(s2.keySet === Set("base") && s2("base")._1 === 200L)
     assert(s2("base")._2 < 1e-3,
@@ -763,12 +769,14 @@ class LlmSpec extends AnyFunSuite {
     assert(st.keySet === Set("base", "deltab1") && st.values.forall(_ < 1e-3))
     // compaction carries _PQRES; a folded replay stays a no-op
     Similarity.compactIvfIndex(spark, gdir)
-    assert(new java.io.File(s"$gdir/v2/_PQRES").exists(), "flavor carried")
+    assert((IvfManifest.read(spark, s"$gdir/v2").flavor match {
+      case f: IvfFlavor.Pq => f.residual; case _ => false }), "flavor carried")
     assert(serve(gdir) === grown, "across the fold")
     // refresh preserves the residual flavor
     Similarity.refreshPqCodebooks(corpus, "vec_id", "embedding", gdir,
       pqK = 2, retain = 0)
-    assert(new java.io.File(s"$gdir/v3/_PQRES").exists(),
+    assert((IvfManifest.read(spark, s"$gdir/v3").flavor match {
+      case f: IvfFlavor.Pq => f.residual; case _ => false }),
       "refresh keeps the residual encoding space")
     assert(serve(gdir) === grown, "refreshed index serves the same exact ranking")
   }
@@ -835,8 +843,10 @@ class LlmSpec extends AnyFunSuite {
       s"both units at the per-cell error floor: $st")
     // compaction carries _PQLOCAL (and _PQRES) with the codebooks table
     Similarity.compactIvfIndex(spark, gdir)
-    assert(new java.io.File(s"$gdir/v2/_PQLOCAL").exists(), "flavor carried")
-    assert(new java.io.File(s"$gdir/v2/_PQRES").exists(),
+    assert((IvfManifest.read(spark, s"$gdir/v2").flavor match {
+      case f: IvfFlavor.Pq => f.perCell; case _ => false }), "flavor carried")
+    assert((IvfManifest.read(spark, s"$gdir/v2").flavor match {
+      case f: IvfFlavor.Pq => f.residual; case _ => false }),
       "per-cell implies the residual encoding space")
     assert(spark.read.parquet(s"$gdir/v2/codebooks").columns.contains("cell"),
       "per-cell codebooks carried across the fold")
@@ -844,7 +854,8 @@ class LlmSpec extends AnyFunSuite {
     // refresh preserves the per-cell flavor and the error floor
     Similarity.refreshPqCodebooks(corpus, "vec_id", "embedding", gdir,
       pqK = 2, retain = 0)
-    assert(new java.io.File(s"$gdir/v3/_PQLOCAL").exists(),
+    assert((IvfManifest.read(spark, s"$gdir/v3").flavor match {
+      case f: IvfFlavor.Pq => f.perCell; case _ => false }),
       "refresh keeps per-cell codebooks")
     assert(serve(gdir) === exact, "refreshed index serves the exact ranking")
   }
@@ -943,13 +954,15 @@ class LlmSpec extends AnyFunSuite {
       "append-grown rotated index serves the explicit-codebook full save")
     // compaction and refresh carry the rotation artifacts
     Similarity.compactIvfIndex(spark, gdir)
-    assert(new java.io.File(s"$gdir/v2/_PQROT").exists() &&
+    assert((IvfManifest.read(spark, s"$gdir/v2").flavor match {
+      case f: IvfFlavor.Pq => f.rotated; case _ => false }) &&
       new java.io.File(s"$gdir/v2/rotation").exists(), "flavor carried")
     assert(serve(gdir) === serve(fdir), "across the fold")
     Similarity.refreshPqCodebooks(corpus.filter(col("vec_id") < 128)
         .unionByName(corpus.filter(col("vec_id") >= 128)),
       "vec_id", "embedding", gdir, pqK = 4, retain = 0)
-    assert(new java.io.File(s"$gdir/v3/_PQROT").exists(),
+    assert((IvfManifest.read(spark, s"$gdir/v3").flavor match {
+      case f: IvfFlavor.Pq => f.rotated; case _ => false }),
       "refresh keeps the rotated encoding space")
     // full-width refine is exact regardless of the proposal space
     val n = 256
@@ -986,8 +999,8 @@ class LlmSpec extends AnyFunSuite {
     Similarity.saveIvfIndexPQ(corpus.filter(col("vec_id") < 100),
       "vec_id", "embedding", dir, nlist = 4, pqM = 4, pqK = 2,
       centroids = Some(cents), perCell = true, rotation = Some(rot))
-    Seq("_PQ", "_PQRES", "_PQLOCAL", "_PQROT").foreach(m =>
-      assert(new java.io.File(s"$dir/v1/$m").exists(), s"marker $m"))
+    assert(IvfManifest.read(spark, s"$dir/v1").flavor ===
+      IvfFlavor.Pq(residual = true, perCell = true, rotated = true))
     Similarity.appendIvfIndex(corpus.filter(col("vec_id") >= 100),
       "vec_id", "embedding", dir, Some("b1"))
     val st = Similarity.pqIndexStats(spark, dir).collect()
@@ -1006,6 +1019,63 @@ class LlmSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
       .toSet
     assert(raw === exact)
+  }
+
+  test("legacy PQ version (markers and _FOLDED, no manifest): serves, replays no-op, appends encode, compaction migrates flavor and ledger") {
+    import spark.implicits._
+    def vec(i: Long) = {
+      val c = (i % 4).toInt
+      val a = new Array[Float](8)
+      a(c * 2) = 10f
+      a(1) = (if ((i / 4) % 2 == 0) 1f else -1f) * (c + 1)
+      a
+    }
+    val corpus = (0L until 200L).map(i => (i, vec(i)))
+      .toDF("vec_id", "embedding")
+    val cents = (0L until 4L).map { c =>
+      val a = new Array[Float](8); a((c * 2).toInt) = 10f; (c, a)
+    }.toDF("cell", "_cv")
+    val rot = spark.range(8).select(col("id").cast("int").as("i"),
+      transform(sequence(lit(0), lit(7)), j =>
+        when(j === lit(7) - col("id").cast("int"), lit(1.0f))
+          .otherwise(lit(0.0f))).as("_rv"))
+    val flavor = IvfFlavor.Pq(residual = true, perCell = true, rotated = true)
+    val dir = java.nio.file.Files.createTempDirectory("graft_pqleg").toString
+    Similarity.saveIvfIndexPQ(corpus.filter(col("vec_id") < 100),
+      "vec_id", "embedding", dir, nlist = 4, pqM = 4, pqK = 2,
+      centroids = Some(cents), perCell = true, rotation = Some(rot))
+    assert(new java.io.File(s"$dir/v1").list().filterNot(_.startsWith("."))
+      .toSet === Set("corpus", "centroids", "codebooks", "rotation",
+        "_MANIFEST", "_COMMIT"))
+    val b1 = corpus.filter(col("vec_id").between(100, 149))
+    Similarity.appendIvfIndex(b1, "vec_id", "embedding", dir, Some("b1"))
+    Similarity.compactIvfIndex(spark, dir)
+    val q = corpus.filter(col("vec_id") < 8)
+    def serve() = Similarity.ivfTopKPQ(q, dir, "vec_id", "embedding", 3, 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val before = serve()
+    // rewrite v2 into the pre-manifest layout: markers plus the ledger
+    assert(new java.io.File(s"$dir/v2/_MANIFEST").delete())
+    Seq("_PQ", "_PQRES", "_PQLOCAL", "_PQROT").foreach(m =>
+      assert(new java.io.File(s"$dir/v2/$m").createNewFile()))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/v2/_FOLDED"),
+      "b1\n".getBytes("UTF-8"))
+    assert(serve() === before, "legacy layout serves unchanged")
+    def unitRows() = Similarity.pqIndexStats(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    Similarity.appendIvfIndex(b1, "vec_id", "embedding", dir, Some("b1"))
+    assert(unitRows() === Map("base" -> 150L), "folded replay must no-op")
+    Similarity.appendIvfIndex(corpus.filter(col("vec_id") >= 150),
+      "vec_id", "embedding", dir, Some("b2"))
+    val st = Similarity.pqIndexStats(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getDouble(2)).toMap
+    assert(st.keySet === Set("base", "deltab2") && st("deltab2") < 1e-3,
+      s"the legacy flavor stack encodes the new delivery exactly: $st")
+    Similarity.compactIvfIndex(spark, dir)
+    val m = IvfManifest.read(spark, s"$dir/v3")
+    assert(new java.io.File(s"$dir/v3/_MANIFEST").exists() &&
+      m.flavor === flavor && m.folded.contains("b1"),
+      s"compaction migrates flavor and ledger: $m")
   }
 
   test("trainPqCodebooksLocal: deterministic across runs, dense codes per (cell, m), capped per-cell sample") {
@@ -1198,12 +1268,11 @@ class LlmSpec extends AnyFunSuite {
     Similarity.saveIvfIndexQuantized(half1, "vec_id", "embedding", dir,
       nlist = 8, centroids = Some(cents))
     // simulate a pre-marker release's index: delete the flavor marker
-    val marker = new java.io.File(s"$dir/v1/_QUANTIZED")
+    val marker = new java.io.File(s"$dir/v1/_MANIFEST")
     assert(marker.delete(), "fixture must start marker-less")
     // the append must NOT land float rows on the SQ8 corpus — the sniff
     // recognizes _cq, migrates the marker, and quantizes the delivery
     Similarity.appendIvfIndex(half2, "vec_id", "embedding", dir, Some("b1"))
-    assert(marker.exists(), "read-repair must restore the marker")
     val q = embs.filter(col("vec_id") < 10)
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -1213,6 +1282,10 @@ class LlmSpec extends AnyFunSuite {
     assert(pairs(Similarity.ivfTopKQuantized(q, dir, "vec_id", "embedding", 5, 3))
       === pairs(Similarity.ivfTopKQuantized(q, fullDir, "vec_id", "embedding", 5, 3)),
       "legacy append-grown index must serve the full-save result")
+    Similarity.compactIvfIndex(spark, dir)
+    assert(new java.io.File(s"$dir/v2/_MANIFEST").exists() &&
+      IvfManifest.read(spark, s"$dir/v2").flavor === IvfFlavor.Sq8,
+      "compaction must migrate the legacy version to an SQ8 manifest")
   }
 
   test("empty-seeded quantized index: marker (not schema) records the flavor, appends quantize") {

@@ -118,7 +118,8 @@ class IvfStreamSpec extends AnyFunSuite {
     IvfStream.pollAppend(spark, landing, index, work, compactEvery = 2)
     val afterTwo = rebuilt(base.union(deliveries(0)).union(deliveries(1)))
     assert(served() === afterTwo, "across the compaction boundary")
-    assert(new java.io.File(s"$index/v2/_QUANTIZED").exists(),
+    assert(graft.llm.IvfManifest.read(spark, s"$index/v2").flavor ===
+      graft.llm.IvfFlavor.Sq8,
       "fold must carry the flavor marker")
 
     // poll 3 lands a live delta on the folded version

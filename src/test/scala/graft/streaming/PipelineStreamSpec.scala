@@ -197,7 +197,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     assert(indexedIds() === Set(1L, 3L, 13L))
     val latest = new java.io.File(index).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.last
-    assert(new java.io.File(s"$index/$latest/_QUANTIZED").exists(),
+    assert(graft.llm.IvfManifest.read(spark, s"$index/$latest").flavor ===
+      graft.llm.IvfFlavor.Sq8,
       "flavor marker must survive the fold")
     // the stored rows really are SQ8 (bytes), not float
     val schema = spark.read.parquet(s"$index/$latest/corpus").schema.fieldNames
@@ -208,7 +209,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     PipelineStream.repairAndPrune(spark, work, index, p)
     val afterPrune = new java.io.File(index).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.last
-    assert(new java.io.File(s"$index/$afterPrune/_QUANTIZED").exists(),
+    assert(graft.llm.IvfManifest.read(spark, s"$index/$afterPrune").flavor ===
+      graft.llm.IvfFlavor.Sq8,
       "flavor marker must survive repairAndPrune")
     assert(indexedIds() === Set(1L, 3L, 13L), "no bridges here: prune is a no-op")
   }
@@ -251,7 +253,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     assert(indexedIds() === Set(1L, 3L, 13L))
     val latest = new java.io.File(index).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.last
-    assert(new java.io.File(s"$index/$latest/_PQ").exists(),
+    assert(graft.llm.IvfManifest.read(spark, s"$index/$latest").flavor
+      .isInstanceOf[graft.llm.IvfFlavor.Pq],
       "flavor marker must survive the fold")
     assert(new java.io.File(s"$index/$latest/codebooks").exists(),
       "codebooks must survive the fold")
@@ -262,7 +265,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     PipelineStream.repairAndPrune(spark, work, index, p)
     val afterPrune = new java.io.File(index).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.last
-    assert(new java.io.File(s"$index/$afterPrune/_PQ").exists() &&
+    assert(graft.llm.IvfManifest.read(spark, s"$index/$afterPrune").flavor
+      .isInstanceOf[graft.llm.IvfFlavor.Pq] &&
       new java.io.File(s"$index/$afterPrune/codebooks").exists(),
       "flavor + codebooks must survive repairAndPrune")
     assert(indexedIds() === Set(1L, 3L, 13L), "no bridges here: prune is a no-op")
