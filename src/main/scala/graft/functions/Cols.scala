@@ -355,7 +355,8 @@ object Cols {
     * identical to [[normalizeNtz]], but with no expression layer over the
     * scan, so time predicates still push down to the parquet row groups
     * (an expression-wrapped column defeats PushedFilters — measured on
-    * s1_time_range_scan; `graft.PushProbe` re-checks it). The PATH-level
+    * s1_time_range_scan; `NtzBoundarySpec` "readNtzAsInstant: a time
+    * predicate still pushes down to the parquet scan" pins it). The PATH-level
     * boundary form; [[normalizeNtz]] covers frames received as
     * DataFrames. */
   def readNtzAsInstant(spark: org.apache.spark.sql.SparkSession,

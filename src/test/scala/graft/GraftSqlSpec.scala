@@ -1488,4 +1488,56 @@ class GraftSqlSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(typed === got, "SQL ≡ semSurvivors")
   }
+
+  test("integer literals: an out-of-int value is refused, never wrapped; every integral type reads") {
+    GraftSql.registerFunctions(spark)
+    spark.range(2000).selectExpr("id AS doc_id", "concat('w', id) AS text")
+      .createOrReplaceTempView("int_lit_v")
+    // 2^32 + 50 wrapped to 50 and sampled half the view
+    val wide = intercept[IllegalArgumentException] {
+      spark.sql("SELECT * FROM graft_sample_t('int_lit_v', 'doc_id', 4294967346)")
+        .collect()
+    }
+    assert(wide.getMessage.contains("graft_sample_t") &&
+      wide.getMessage.contains("pct") && wide.getMessage.contains("4294967346"))
+    // 2^32 + 1 wrapped to a 1-token chunk
+    val chunk = intercept[IllegalArgumentException] {
+      spark.sql("SELECT * FROM graft_chunk_t('int_lit_v', 'doc_id', 'text', " +
+        "4294967297)").collect()
+    }
+    assert(chunk.getMessage.contains("graft_chunk_t") &&
+      chunk.getMessage.contains("maxTokens"))
+    // TINYINT, SMALLINT, INT and BIGINT literals all read as the same value
+    val counts = Seq("37Y", "37S", "37", "37L").map { pct =>
+      spark.sql(s"SELECT * FROM graft_sample_t('int_lit_v', 'doc_id', $pct)").count()
+    }
+    assert(counts.distinct.size === 1 && counts.head > 0L && counts.head < 2000L)
+  }
+
+  test("the SQL surface: 76 table functions, arity and string parameters checked from each usage") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    GraftSql.registerFunctions(spark)
+    val fns = GraftSql.functions
+    assert(fns.size === 76)
+    assert(fns.map(_.name).distinct.size === 76)
+    def call(f: GraftSql.TableFn, args: Seq[String]): Unit =
+      spark.sql(s"SELECT * FROM ${f.name}(${args.mkString(", ")})")
+    fns.foreach { f =>
+      assert(spark.sessionState.tableFunctionRegistry
+        .functionExists(FunctionIdentifier(f.name)), f.name)
+      assert(f.minArgs >= 1 && f.minArgs <= f.maxArgs, f.name)
+      // these calls fail before the builder runs: no view is looked up
+      for (n <- Seq(f.minArgs - 1, f.maxArgs + 1)) {
+        val e = intercept[IllegalArgumentException](call(f, Seq.fill(n)("'x'")))
+        assert(e.getMessage.contains(f.usage), s"${f.name} with $n arguments")
+      }
+      if (f.params.head.startsWith("'")) {
+        val e = intercept[IllegalArgumentException] {
+          call(f, "1" +: Seq.fill(f.minArgs - 1)("'x'"))
+        }
+        assert(e.getMessage.contains("must be a string literal") &&
+          e.getMessage.contains(f.params.head), f.name)
+      }
+    }
+  }
 }

@@ -165,6 +165,26 @@ class NtzBoundarySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === want)
   }
 
+  test("readNtzAsInstant: a time predicate still pushes down to the parquet scan") {
+    val dir = Files.createTempDirectory("graft_ntz_push").toString + "/t"
+    (0 until 100).map(i => (new java.sql.Timestamp(t0.getTime + i * 60000L), i.toLong))
+      .toDF("time", "v").withColumn("time", col("time").cast(TimestampNTZType))
+      .write.parquet(dir)
+    def pushed(df: DataFrame): String = df.queryExecution.executedPlan.toString
+      .linesIterator.filter(_.contains("PushedFilters")).mkString("\n")
+    val df = Cols.readNtzAsInstant(spark, dir)
+    assert(df.schema("time").dataType === TimestampType)
+    val lo = new java.sql.Timestamp(
+      df.agg(min(col("time"))).head().getTimestamp(0).getTime + 30L * 60000L)
+    val q = df.filter(col("time") >= lit(lo))
+    assert(pushed(q).contains("GreaterThanOrEqual(time,"), pushed(q))
+    assert(q.count() === 70L)
+    // the expression form over the same file cannot push the comparison
+    val wrapped = Cols.normalizeNtz(spark.read.parquet(dir)).filter(col("time") >= lit(lo))
+    assert(!pushed(wrapped).contains("GreaterThanOrEqual(time,"), pushed(wrapped))
+    assert(wrapped.count() === 70L)
+  }
+
   test("band/as-of joins reject cross-kind time columns loudly") {
     import org.apache.spark.sql.functions.col
     val inst = Seq((new java.sql.Timestamp(t0.getTime), 1L)).toDF("t", "v")
