@@ -51,14 +51,20 @@ object GraftSql {
     registerFunctions(spark)
   }
 
-  /** Register the SQL-callable operator kernels (idempotent). */
+  /** Register the SQL-callable operator kernels in `spark`'s session.
+    * Idempotent: a name the session already holds is skipped, not
+    * replaced (a replacement logs one WARN per name). */
   def registerFunctions(spark: SparkSession): Unit = {
-    functions.foreach { f =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(
-        FunctionIdentifier(f.name), new ExpressionInfo("graft.GraftSql", f.name),
-        (args: Seq[Expression]) => f.plan(args))
-    }
-    spark.udf.register("graft_sessionize",
+    val tables = spark.sessionState.tableFunctionRegistry
+    functions.filterNot(f => tables.functionExists(FunctionIdentifier(f.name)))
+      .foreach { f =>
+        tables.registerFunction(FunctionIdentifier(f.name),
+          new ExpressionInfo("graft.GraftSql", f.name),
+          (args: Seq[Expression]) => f.plan(args))
+      }
+    def absent(name: String) =
+      !spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
+    if (absent("graft_sessionize")) spark.udf.register("graft_sessionize",
       (times: Seq[Long], gapUs: Long) => {
         var sid = 0L
         var prev = Long.MinValue
@@ -68,7 +74,7 @@ object GraftSql {
           sid
         }
       })
-    spark.udf.register("graft_assign",
+    if (absent("graft_assign")) spark.udf.register("graft_assign",
       (pairs: Seq[(java.lang.Long, String, java.lang.Double)]) => {
         // boxed field types: a NULL l/r/cost decodes as null (a primitive
         // tuple would crash the decoder with AssertNotNull) and is dropped
@@ -210,8 +216,8 @@ object GraftSql {
   private val scoreUsage =
     "('docsView', 'idCol', 'textCol', 'weightsView', dim[, bigrams])"
 
-  import graft.llm.{Bpe, Dedup, Multimodal, Quality, Relevance, Sampling,
-    Similarity, SpUnigram}
+  import graft.llm.{Bpe, Dedup, IvfRefine, IvfTier, Multimodal, Quality,
+    Relevance, Sampling, Similarity, SpUnigram}
   import graft.streaming.{DedupStream, PipelineStream, SpanDupStream}
 
   /** The SQL surface: every `graft_*_t` table function, registered by
@@ -283,9 +289,9 @@ object GraftSql {
       "semMinCos[, gopher[, minQuality[, 'stop,words'[, 'keep,langs'[, " +
       "'lang:marker,words;lang2:…'[, 'classifierView'[, classifierDim[, " +
       "minLogitMicro]]]]]]]]]]]]]]]]]])", ingestPipelineTable),
-    TableFn("graft_ivf_save_t", ivfSaveUsage, ivfSaveTable),
+    TableFn("graft_ivf_save_t", ivfSaveUsage, ivfSaveTable(_ => IvfTier.Float)),
     TableFn("graft_ivf_topk_indexed_t", "('queriesView', 'dir', 'idCol', " +
-      "'vecCol', k, nprobe[, salt[, 'allowView']])", ivfTopkIndexedTable),
+      "'vecCol', k, nprobe[, salt[, 'allowView']])", ivfServeTable("float")),
     TableFn("graft_ivf_append_t",
       "('newVectorsView', 'idCol', 'vecCol', 'dir'[, compact])", ivfAppendTable),
     TableFn("graft_ivf_stats_t", indexDirUsage,
@@ -294,17 +300,15 @@ object GraftSql {
       a => Similarity.pqIndexStats(a.spark, a.str(0))),
     TableFn("graft_pq_refresh_t",
       "('corpusView', 'idCol', 'vecCol', 'dir'[, pqK[, retain]])", pqRefreshTable),
-    TableFn("graft_ivf_save_q_t", ivfSaveUsage, ivfSaveQTable),
-    TableFn("graft_ivf_topk_q_t", ivfServeUsage,
-      ivfServeTable(Similarity.ivfTopKQuantized(_, _, _, _, _, _, _))),
-    TableFn("graft_ivf_topk_qr_t", ivfRefineUsage,
-      ivfRefineTable(Similarity.ivfTopKQuantizedRefined)),
+    TableFn("graft_ivf_save_q_t", ivfSaveUsage, ivfSaveTable(_ => IvfTier.Sq8)),
+    TableFn("graft_ivf_topk_q_t", ivfServeUsage, ivfServeTable("sq8")),
+    TableFn("graft_ivf_topk_qr_t", ivfRefineUsage, ivfServeTable("sq8", refine = true)),
     TableFn("graft_ivf_save_pq_t", "('corpusView', 'idCol', 'vecCol', 'dir', " +
-      "nlist, m, k[, seed[, residual[, perCell[, 'rotationView']]]])", ivfSavePqTable),
-    TableFn("graft_ivf_topk_pq_t", ivfServeUsage,
-      ivfServeTable(Similarity.ivfTopKPQ(_, _, _, _, _, _, _))),
-    TableFn("graft_ivf_topk_pqr_t", ivfRefineUsage,
-      ivfRefineTable(Similarity.ivfTopKPQRefined)),
+      "nlist, m, k[, seed[, residual[, perCell[, 'rotationView']]]])",
+      ivfSaveTable(a => IvfTier.Pq(a.int(5), a.int(6), a.bool(8, false),
+        a.bool(9, false), rotation = Option.when(a.has(10))(a.view(10))))),
+    TableFn("graft_ivf_topk_pq_t", ivfServeUsage, ivfServeTable("pq")),
+    TableFn("graft_ivf_topk_pqr_t", ivfRefineUsage, ivfServeTable("pq", refine = true)),
     TableFn("graft_dhash_pairs_t", dhashUsage, dhashTable(Multimodal.dHashPairs)),
     TableFn("graft_dhash_clusters_t", dhashUsage,
       dhashTable(Multimodal.dHashClusters)),
@@ -934,63 +938,66 @@ object GraftSql {
     PipelineStream.semSurvivors(a.spark, a.str(0))
   }
 
-  /** `graft_ivf_save_t` — train-once IVF index persistence from SQL.
-    * EAGER with a SIDE EFFECT, like `graft_ingest_dedup_t`: analysis runs
-    * [[graft.llm.Similarity.saveIvfIndex]] (k-means + corpus cell
-    * assignment, written cell-partitioned under `dir`), and the statement
-    * returns the saved centroid table (cell, _cv). */
-  private def ivfSaveTable(a: Args): DataFrame = {
-    Similarity.saveIvfIndex(a.view(0), a.str(1), a.str(2), a.str(3), a.int(4),
-      seed = a.long(5, 42L))
+  /** `graft_ivf_save_t`, `graft_ivf_save_q_t`, `graft_ivf_save_pq_t` —
+    * train-once IVF index persistence from SQL in the float, SQ8 or PQ
+    * [[graft.llm.IvfTier]] that `tier` reads from the row's arguments
+    * ([[graft.llm.Similarity.saveIvf]]: k-means + corpus cell assignment,
+    * written cell-partitioned under `dir`). The PQ row's optional
+    * `residual` / `perCell` / `rotationView` tail selects the residual
+    * encoding, the per-cell codebook layout and the OPQ rotated space
+    * (`graft_opq_train_t` trains the rotation). EAGER with a SIDE EFFECT,
+    * like `graft_ingest_dedup_t`: analysis writes the index, and the
+    * statement returns the saved centroid table (cell, _cv). */
+  private def ivfSaveTable(tier: Args => IvfTier)(a: Args): DataFrame = {
+    val t = tier(a)
+    val seedAt = t match { case _: IvfTier.Pq => 7; case _ => 5 }
+    Similarity.saveIvf(a.view(0), a.str(1), a.str(2), a.str(3), t, a.int(4),
+      seed = a.long(seedAt, 42L))
     Similarity.ivfCentroids(a.spark, a.str(3))
   }
 
-  /** `graft_ivf_save_q_t` — SQ8 quantized index persistence
-    * ([[graft.llm.Similarity.saveIvfIndexQuantized]]): ~4× smaller stored
-    * vectors, recall-floor contract. EAGER side effect like
-    * `graft_ivf_save_t`; returns the saved centroid table. */
-  private def ivfSaveQTable(a: Args): DataFrame = {
-    Similarity.saveIvfIndexQuantized(a.view(0), a.str(1), a.str(2), a.str(3),
-      a.int(4), seed = a.long(5, 42L))
-    Similarity.ivfCentroids(a.spark, a.str(3))
+  /** The five serve rows — [[graft.llm.Similarity.ivfServe]] over a saved
+    * index, probed-cells-only scan (dynamic partition pruning over the
+    * cell-partitioned layout): `graft_ivf_topk_indexed_t` serves a float
+    * index, and its `'allowView'` restricts the answers to the ids it
+    * lists; `graft_ivf_topk_q_t` an SQ8 one, `graft_ivf_topk_pq_t` a PQ
+    * one by ADC. The `refine` rows `graft_ivf_topk_qr_t` and
+    * `graft_ivf_topk_pqr_t` re-score `k·refineFactor` candidates exactly
+    * against `refineView` ([[graft.llm.IvfRefine]], output gains the
+    * `refined` flag). Each row serves only the flavor its name implies
+    * (see [[requireFlavor]]). */
+  private def ivfServeTable(implied: String, refine: Boolean = false)(
+      a: Args): DataFrame = {
+    val r = if (refine) 1 else 0 // the refine usage puts refineView third
+    val (dir, idCol) = (a.str(1), a.str(2 + r))
+    // filtered search: a single-column allow view resolves positionally
+    // (renamed to the serve's idCol); a wider one must carry idCol by
+    // name — stated here so the failure names the contract instead of
+    // surfacing as an unresolved-column AnalysisException downstream
+    val allow = Option.when(!refine && a.has(7)) {
+      val av = a.view(7)
+      if (av.columns.length == 1) av.toDF(idCol)
+      else {
+        a.check(av.columns.contains(idCol), "allow view must have exactly one " +
+          s"column or contain the id column '$idCol' (has: ${av.columns.mkString(", ")})")
+        av
+      }
+    }
+    requireFlavor(a, dir, implied)
+    Similarity.ivfServe(a.view(0), dir, idCol, a.str(3 + r), a.int(4 + r),
+      a.int(5 + r), a.int(6 + 2 * r, 1),
+      refine = Option.when(refine)(IvfRefine(a.view(2), a.int(7, 4))),
+      allow = allow, allowIdCol = idCol)
   }
 
-  /** `graft_ivf_save_pq_t` — write a product-quantized index
-    * ([[graft.llm.Similarity.saveIvfIndexPQ]]: m one-byte codes per
-    * vector, deepest compression); the optional `residual` / `perCell` /
-    * `rotationView` tail selects the FAISS-style residual encoding, the
-    * per-cell (local) codebook layout, and the OPQ rotated space
-    * (`graft_opq_train_t` trains the rotation). Returns its centroids. */
-  private def ivfSavePqTable(a: Args): DataFrame = {
-    Similarity.saveIvfIndexPQ(a.view(0), a.str(1), a.str(2), a.str(3), a.int(4),
-      pqM = a.int(5), pqK = a.int(6), seed = a.long(7, 42L),
-      residual = a.bool(8, false), perCell = a.bool(9, false),
-      rotation = Option.when(a.has(10))(a.view(10)))
-    Similarity.ivfCentroids(a.spark, a.str(3))
+  /** Refuse a serve row whose name implies a flavor (`float`, `sq8` or
+    * `pq`) other than the one `dir`'s manifest records: served anyway, the
+    * wrong name would silently change what the statement means. */
+  private def requireFlavor(a: Args, dir: String, implied: String): Unit = {
+    val flavor = Similarity.ivfFlavor(a.spark, dir).name
+    a.check(flavor.takeWhile(_ != ' ') == implied,
+      s"$dir holds a '$flavor' index, not $implied")
   }
-
-  /** `graft_ivf_topk_q_t` — serve a quantized index
-    * ([[graft.llm.Similarity.ivfTopKQuantized]]); `graft_ivf_topk_pq_t` —
-    * ADC serve of a PQ index ([[graft.llm.Similarity.ivfTopKPQ]]). */
-  private def ivfServeTable(
-      op: (DataFrame, String, String, String, Int, Int, Int) => DataFrame)(
-      a: Args): DataFrame =
-    op(a.view(0), a.str(1), a.str(2), a.str(3), a.int(4), a.int(5), a.int(6, 1))
-
-  /** `graft_ivf_topk_qr_t` — SQ8 + REFINE
-    * ([[graft.llm.Similarity.ivfTopKQuantizedRefined]]): the quantized
-    * index proposes k·refineFactor candidates, ONLY those are re-scored
-    * exactly against the full-precision `refineView` — the serving form
-    * you actually want when quantization noise reaches the score gaps
-    * among near-tied neighbors. Output carries a `refined` flag: false
-    * marks candidates absent from the refine view (kept at their
-    * quantized score, ranked after every exact rescore).
-    * `graft_ivf_topk_pqr_t` — the same contract on the PQ proposal tier
-    * ([[graft.llm.Similarity.ivfTopKPQRefined]]). */
-  private def ivfRefineTable(op: (DataFrame, String, DataFrame, String, String,
-      Int, Int, Int, Int) => DataFrame)(a: Args): DataFrame =
-    op(a.view(0), a.str(1), a.view(2), a.str(3), a.str(4), a.int(5), a.int(6),
-      a.int(7, 4), a.int(8, 1))
 
   /** `graft_pq_refresh_t` — retrain a drifted PQ index's codebooks on the
     * full-precision corpus view and rewrite one new committed version
@@ -1020,30 +1027,6 @@ object GraftSql {
     Similarity.appendIvfIndex(a.view(0), a.str(1), a.str(2), a.str(3))
     if (compact) Similarity.compactIvfIndex(a.spark, a.str(3))
     Similarity.ivfCentroids(a.spark, a.str(3))
-  }
-
-  /** `graft_ivf_topk_indexed_t` — IVF top-k served from a
-    * `graft_ivf_save_t` directory: no training, no corpus assignment,
-    * probed-cells-only scan (dynamic partition pruning over the
-    * cell-partitioned layout); `'allowView'` restricts the answers to the
-    * ids it lists. */
-  private def ivfTopkIndexedTable(a: Args): DataFrame = {
-    val idCol = a.str(2)
-    // filtered search: a single-column allow view resolves positionally
-    // (renamed to the serve's idCol); a wider one must carry idCol by
-    // name — stated here so the failure names the contract instead of
-    // surfacing as an unresolved-column AnalysisException downstream
-    val allow = Option.when(a.has(7)) {
-      val av = a.view(7)
-      if (av.columns.length == 1) av.toDF(idCol)
-      else {
-        a.check(av.columns.contains(idCol), "allow view must have exactly one " +
-          s"column or contain the id column '$idCol' (has: ${av.columns.mkString(", ")})")
-        av
-      }
-    }
-    Similarity.ivfTopKIndexed(a.view(0), a.str(1), idCol, a.str(3), a.int(4),
-      a.int(5), a.int(6, 1), allow = allow, allowIdCol = idCol)
   }
 
   /** `graft_ivf_topk_t` — IVF approximate nearest neighbors from pure

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.llm.{Gates, Quality, Similarity}
+import graft.llm.{Gates, IvfTier, Quality, Similarity}
 import graft.streaming.{DedupStream, PipelineStream}
 
 /** Ingest-at-scale probe (round-11 stretch 8): `pollIngest` end-to-end
@@ -89,9 +89,10 @@ object IngestProbe {
       (((c * 31L + i) * 0x9e3779b97f4a7c15L >>> 40) % 2001 - 1000) / 1000.0f
     }
     val cents = (0L until 64L).map(c => (c, rnd16(c))).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(
+    Similarity.saveIvf(
       Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"),
-      "vec_id", "embedding", index, nlist = 64, centroids = Some(cents))
+      "vec_id", "embedding", index, IvfTier.Float, nlist = 64,
+      centroids = Some(cents))
 
     val p = DedupStream.Params()
 

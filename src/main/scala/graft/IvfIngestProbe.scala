@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.llm.Similarity
+import graft.llm.{IvfTier, Similarity}
 import graft.streaming.IvfStream
 
 /** ANN-index ingest probe (SURVEY §8): the [[IvfStream]] poller at the
@@ -65,23 +65,16 @@ object IvfIngestProbe {
           ).cast("float")).as("embedding"))
 
     val quant = sys.env.get("SPARK_GRAFT_IVF_QUANT").contains("1")
+    val tier = if (quant) IvfTier.Sq8 else IvfTier.Float
     val t0 = System.nanoTime()
-    if (quant)
-      Similarity.saveIvfIndexQuantized(vectors(0, nBase), "vec_id",
-        "embedding", index, nlist,
-        sampleFraction = math.min(1.0, 100000.0 / nBase))
-    else
-      Similarity.saveIvfIndex(vectors(0, nBase), "vec_id", "embedding", index,
-        nlist, sampleFraction = math.min(1.0, 100000.0 / nBase))
+    Similarity.saveIvf(vectors(0, nBase), "vec_id", "embedding", index, tier,
+      nlist, sampleFraction = math.min(1.0, 100000.0 / nBase))
     val tBuild = (System.nanoTime() - t0) / 1e9
     val cents = Similarity.ivfCentroids(spark, index).localCheckpoint(true)
     val queries = vectors(0, 200).localCheckpoint(true)
 
-    def served() = (if (quant)
-        Similarity.ivfTopKQuantized(queries, index, "vec_id", "embedding",
-          k = 10, nprobe = 3)
-      else Similarity.ivfTopKIndexed(queries, index, "vec_id", "embedding",
-        k = 10, nprobe = 3))
+    def served(dir: String) = Similarity.ivfServe(queries, dir, "vec_id",
+        "embedding", k = 10, nprobe = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     // the exactness reference over the accumulated corpus: the live float
@@ -90,11 +83,9 @@ object IvfIngestProbe {
     def want(hi: Long) =
       if (quant) {
         val d = java.nio.file.Files.createTempDirectory("graft_ivfqw").toString
-        Similarity.saveIvfIndexQuantized(vectors(0, hi), "vec_id",
-          "embedding", d, nlist, centroids = Some(cents))
-        Similarity.ivfTopKQuantized(queries, d, "vec_id", "embedding",
-            k = 10, nprobe = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        Similarity.saveIvf(vectors(0, hi), "vec_id", "embedding", d, tier,
+          nlist, centroids = Some(cents))
+        served(d)
       } else Similarity.ivfTopK(queries, vectors(0, hi), cents,
           "vec_id", "embedding", k = 10, nprobe = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -107,7 +98,7 @@ object IvfIngestProbe {
       IvfStream.pollAppend(spark, landing, index, work, compactEvery = 3)
       val pollS = (System.nanoTime() - tp) / 1e9
       val ts = System.nanoTime()
-      val got = served()
+      val got = served(index)
       val serveS = (System.nanoTime() - ts) / 1e9
       if (got != want(hi)) mismatches += 1
       val vdir = new java.io.File(index).listFiles().map(_.getName)

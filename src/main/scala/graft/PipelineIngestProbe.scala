@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.llm.Similarity
+import graft.llm.{IvfTier, Similarity}
 import graft.streaming.{DedupStream, PipelineStream}
 
 /** Composed ingest-loop probe (SURVEY §8): [[PipelineStream]] at the
@@ -65,9 +65,10 @@ object PipelineIngestProbe {
       transform(sequence(lit(0), lit(dim - 1)), j =>
         when(j === col("id").cast("int"), lit(1.0f)).otherwise(lit(0.0f)))
         .as("_cv"))
-    Similarity.saveIvfIndex(
+    Similarity.saveIvf(
       corpusSlice(0, 0).select(col("doc_id").as("vec_id"), col("embedding")),
-      "vec_id", "embedding", index, nlist = 16, centroids = Some(cents))
+      "vec_id", "embedding", index, IvfTier.Float, nlist = 16,
+      centroids = Some(cents))
 
     val p = DedupStream.Params(n = 3, numHashes = 64, bands = 16,
       minJaccard = 0.7, compactEvery = 3)

@@ -3,8 +3,19 @@ package graft.llm
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The storage tier of one IVF index version. */
-private[graft] sealed trait IvfFlavor
+/** The storage tier of one IVF index version, as its manifest records it
+  * ([[IvfTier]] is the save-side config that maps to it). */
+private[graft] sealed trait IvfFlavor {
+  /** The flavor as the manifest spells it: `float`, `sq8`, or `pq`
+    * followed by its set flags. */
+  def name: String = this match {
+    case IvfFlavor.Float => "float"
+    case IvfFlavor.Sq8 => "sq8"
+    case p: IvfFlavor.Pq =>
+      ("pq" +: Seq(p.residual -> "residual", p.perCell -> "per-cell",
+        p.rotated -> "rotated").collect { case (true, s) => s }).mkString(" ")
+  }
+}
 
 private[graft] object IvfFlavor {
   /** Float rows (neighbor_id, _cv, _cn, cell). */
@@ -41,15 +52,8 @@ private[graft] object IvfManifest {
   /** Write `m` as `vdir`'s manifest. Callers create `_COMMIT` after this
     * returns. */
   def write(spark: SparkSession, vdir: String, m: IvfManifest): Unit = {
-    val flavor = m.flavor match {
-      case IvfFlavor.Float => "float"
-      case IvfFlavor.Sq8 => "sq8"
-      case p: IvfFlavor.Pq =>
-        ("pq" +: Seq(p.residual -> "residual", p.perCell -> "per-cell",
-          p.rotated -> "rotated").collect { case (true, s) => s })
-          .mkString(" ")
-    }
-    val text = (s"flavor $flavor" +: m.folded.toSeq.sorted.map("folded " + _))
+    val text = (s"flavor ${m.flavor.name}" +:
+        m.folded.toSeq.sorted.map("folded " + _))
       .mkString("", "\n", "\n")
     val p = new Path(vdir, Name)
     val out = fs(spark, p).create(p, true)

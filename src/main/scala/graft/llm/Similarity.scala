@@ -512,7 +512,8 @@ object Similarity extends Serializable {
 
   /** Shared IVF scoring tail over a prepared query side (query_id, _qv,
     * _qn, cell) and corpus side (neighbor_id, _cv, _cn, cell) — the
-    * optionally-salted cell equi-join, exact re-scoring, then per-query
+    * optionally-salted cell equi-join, the cosine `dot / (_qn·_cn)` with
+    * the tier's `dot` (exact by default), then per-query
     * top-k with a per-partition bounded k-heap PRE-REDUCE (same contract
     * as [[cosineTopK]]'s): the shuffle into the final per-query window
     * carries ≤ partitions·k rows per query instead of every scored pair —
@@ -523,9 +524,8 @@ object Similarity extends Serializable {
     * the reduced set contains exactly the window's winners. NaN cosines
     * cannot occur here: both sides pass [[assignCells]], which drops
     * zero/NaN-norm vectors by contract. */
-  private def ivfScore(q: DataFrame, c: DataFrame, k: Int,
-      salt: Int, score: Column = dotNative(col("_qv"), col("_cv")) /
-        (col("_qn") * col("_cn"))): DataFrame = {
+  private def ivfScore(q: DataFrame, c: DataFrame, k: Int, salt: Int,
+      dot: Column = dotNative(col("_qv"), col("_cv"))): DataFrame = {
     require(salt >= 1, s"salt must be >= 1, got $salt")
     val spark = q.sparkSession
     import spark.implicits._
@@ -538,7 +538,8 @@ object Similarity extends Serializable {
         qs.join(cs, Seq("cell", "_salt"))
       })
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("cos"))
+      .select(col("query_id"), col("neighbor_id"),
+        (dot / (col("_qn") * col("_cn"))).as("cos"))
       // a NULL score (dimension-mismatched query/corpus pair — DotProduct
       // returns null by contract) is DROPPED, matching what the
       // descending-order window did before the heap pre-reduce existed;
@@ -571,18 +572,19 @@ object Similarity extends Serializable {
   /** Train-once IVF index PERSISTENCE — the 100 TB operating mode: k-means
     * training and corpus cell assignment are the expensive, corpus-wide
     * passes, and a serving workload must not repeat them per query batch
-    * (the live [[ivfTopK]] replays both every call). `saveIvfIndex` runs
-    * them once and writes a VERSION directory `dir/v<n>/`:
+    * (the live [[ivfTopK]] replays both every call). `saveIvf` runs
+    * them once and writes a VERSION directory `dir/v<n>/` in the storage
+    * `tier` ([[IvfTier]]: float, SQ8 or PQ):
     *
-    *   - `v<n>/corpus`: (neighbor_id, _cv, _cn, cell), PARTITIONED BY
+    *   - `v<n>/corpus`: the tier's rows, e.g. (neighbor_id, _cv, _cn,
+    *     cell) for float, PARTITIONED BY
     *     `cell` — a query batch probing `nprobe` cells then reads ONLY
     *     those cells' files: the broadcast query side drives dynamic
     *     partition pruning on the scoring join, which is the IVF promise
     *     (scan the probed fraction of the corpus, not all of it) realized
     *     at the FILE level;
     *   - `v<n>/centroids`: (cell, _cv);
-    *   - `v<n>/codebooks` and `v<n>/rotation`: the PQ tier's tables
-    *     ([[saveIvfIndexPQ]]);
+    *   - `v<n>/codebooks` and `v<n>/rotation`: the PQ tier's tables;
     *   - `v<n>/_MANIFEST`: the version's flavor and folded-delta ledger
     *     ([[IvfManifest]]), closed before `_COMMIT` is created, so a
     *     reader that sees `_COMMIT` always sees a complete manifest;
@@ -594,11 +596,19 @@ object Similarity extends Serializable {
     *     overwrite would pair old committed centroids with new corpus
     *     partitions — wrong cells probed, silent recall loss).
     *
-    * [[ivfTopKIndexed]] then serves any query batch against the directory:
+    * [[ivfServe]] then serves any query batch against the directory:
     * assign query cells against the tiny centroid table, join the
-    * cell-partitioned corpus, identical results to the live path
-    * (spec-pinned, salted included). Retrain cadence vs corpus drift is
-    * the operator's call, exactly as in any IVF serving system.
+    * cell-partitioned corpus; on the float tier the results are identical
+    * to the live path (spec-pinned, salted included). Retrain cadence vs
+    * corpus drift is the operator's call, exactly as in any IVF serving
+    * system.
+    *
+    * `centroids` (cell, _cv) injects an externally-trained codebook —
+    * offline training on a sample, or a deterministic picker a
+    * differential oracle can replay — and skips the k-means fit
+    * (`nlist`/`sampleFraction`/`seed`/`maxIter` then only train the PQ
+    * codebooks, if any). Over an empty `corpus` it seeds an index that
+    * grows purely by appends.
     *
     * `retain` keeps that many previous COMMITTED versions on disk after
     * the new version commits (default 0 = sweep all) — the same in-flight-
@@ -607,18 +617,22 @@ object Similarity extends Serializable {
     * before the swap finishes its scan; the retained version is swept by
     * the NEXT save/compaction. Uncommitted (crashed) versions are always
     * swept. */
-  def saveIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, nlist: Int, sampleFraction: Double = 1.0,
+  def saveIvf(corpus: DataFrame, idCol: String, vecCol: String,
+      dir: String, tier: IvfTier, nlist: Int, sampleFraction: Double = 1.0,
       seed: Long = 42L, maxIter: Int = 20,
       centroids: Option[DataFrame] = None, retain: Int = 0): Unit = {
-    // `centroids` (cell, _cv) injects an externally-trained codebook —
-    // offline training on a sample, or a deterministic picker a
-    // differential oracle can replay — and skips the k-means fit
-    // (`nlist`/`sampleFraction`/`seed`/`maxIter` unused then)
     val cents = centroids.getOrElse(
       trainCentroids(corpus, vecCol, nlist, sampleFraction, seed, maxIter))
-    commitVersion(corpus.sparkSession, dir, IvfManifest(IvfFlavor.Float),
-      retain, assignedRows(corpus, cents, idCol, vecCol), cents)
+    val assigned = assignedRows(corpus, cents, idCol, vecCol)
+    val (rows, extra) = tier match {
+      case IvfTier.Float => (assigned, Nil)
+      case IvfTier.Sq8 => (quantizeProjection(assigned), Nil)
+      case pq: IvfTier.Pq =>
+        pqEncode(corpus, vecCol, assigned, cents, pq, sampleFraction, seed,
+          maxIter)
+    }
+    commitVersion(corpus.sparkSession, dir, IvfManifest(tier.flavor), retain,
+      rows, cents, extra: _*)
   }
 
   /** The float serving projection WITH its cell assignment —
@@ -636,11 +650,11 @@ object Similarity extends Serializable {
       .toDF("neighbor_id", "_cv", "_cn", "cell")
 
   /** The SQ8 serving projection (neighbor_id, _qoff, _qstep, _cq, _cn,
-    * cell) over an [[assignedRows]] input — shared by
-    * [[saveIvfIndexQuantized]] and the quantized branch of
-    * [[appendIvfIndex]]. Quantization params are PER ROW, so encoding a
-    * delivery needs nothing from the stored corpus — what makes quantized
-    * append delivery-proportional. Bytes are CENTERED: b = round((x −
+    * cell) over an [[assignedRows]] input — shared by the SQ8 branches of
+    * [[saveIvf]] and [[appendIvfIndex]] (the [[IvfTier.Sq8]] contract).
+    * Quantization params are PER ROW, so encoding a delivery needs
+    * nothing from the stored corpus — what makes quantized append
+    * delivery-proportional. Bytes are CENTERED: b = round((x −
     * lo)/step) − 128 ∈ [−128, 127] (tinyint cannot hold 0..255),
     * reconstructed as v̂ = o + step·b with offset o = lo + 128·step. A
     * constant vector (step 0) stores b = 0 and o = lo — exact
@@ -658,9 +672,8 @@ object Similarity extends Serializable {
   }
 
   /** The version commit protocol, the one tail of every version writer
-    * ([[saveIvfIndex]], [[saveIvfIndexQuantized]], [[saveIvfIndexPQ]],
-    * [[rewriteIvfIndex]], [[compactIvfIndex]]): the tables land in the
-    * next `v<n>` dir (`corpus` partitioned by cell, `centroids` and each
+    * ([[saveIvf]], [[rewriteIvfIndex]], [[compactIvfIndex]]): the tables
+    * land in the next `v<n>` dir (`corpus` partitioned by cell, `centroids` and each
     * of `extra` as one file), then the manifest, then `_COMMIT`; then
     * versions older than `n` are swept, keeping the newest `retain`
     * COMMITTED ones (uncommitted/crashed versions are always swept).
@@ -843,7 +856,7 @@ object Similarity extends Serializable {
     }
   }
 
-  /** Highest COMMITTED version dir of a [[saveIvfIndex]] root. */
+  /** Highest COMMITTED version dir of a [[saveIvf]] root. */
   private def latestIvfVersion(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     val f = new org.apache.hadoop.fs.Path(dir)
@@ -852,8 +865,13 @@ object Similarity extends Serializable {
       .filter(v => f.exists(new org.apache.hadoop.fs.Path(v._2, "_COMMIT")))
       .sortBy(_._1).lastOption.map(_._2)
       .getOrElse(throw new IllegalArgumentException(
-        s"no committed IVF index under $dir — run saveIvfIndex first"))
+        s"no committed IVF index under $dir — run saveIvf first"))
   }
+
+  /** The flavor of an index root's highest committed version. */
+  private[graft] def ivfFlavor(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String): IvfFlavor =
+    IvfManifest.read(spark, latestIvfVersion(spark, indexDir)).flavor
 
   /** The saved centroid table (cell, _cv) of an index root's highest
     * committed version. */
@@ -871,11 +889,13 @@ object Similarity extends Serializable {
       indexDir: String): DataFrame =
     cellStats(ivfCorpus(spark, latestIvfVersion(spark, indexDir)))
 
-  /** IVF top-k against a [[saveIvfIndex]] directory (highest committed
+  /** IVF top-k against a [[saveIvf]] directory (highest committed
     * version): no training, no corpus assignment, and the scoring join
     * scans only the probed cells' partitions (dynamic partition pruning
-    * from the broadcast query side). Same contract as [[ivfTopK]]
-    * otherwise, `salt` included.
+    * from the broadcast query side). The version's manifest, read once,
+    * picks the query side and score of its [[IvfTier]]; the allowlist and
+    * `refine` ([[IvfRefine]]) then apply the same way to every tier. Same
+    * contract as [[ivfTopK]] otherwise, `salt` included.
     *
     * `allow` switches on FILTERED search — the vector-database "search
     * within a predicate" feature: candidates are restricted to the ids in
@@ -888,21 +908,34 @@ object Similarity extends Serializable {
     * shuffles on the uniform id key when the list is corpus-scale (e.g.
     * "only documents surviving the latest prepare"); no skew exists on
     * either side by the unique-id contract. */
-  def ivfTopKIndexed(queries: DataFrame, indexDir: String, idCol: String,
+  def ivfServe(queries: DataFrame, dir: String, idCol: String,
       vecCol: String, k: Int, nprobe: Int, salt: Int = 1,
-      allow: Option[DataFrame] = None,
+      refine: Option[IvfRefine] = None, allow: Option[DataFrame] = None,
       allowIdCol: String = "vec_id"): DataFrame = {
     val spark = queries.sparkSession
-    val vdir = latestIvfVersion(spark, indexDir)
+    val vdir = latestIvfVersion(spark, dir)
     val cents = readParquetDir(spark, s"$vdir/centroids")
+    def probed = probedQueries(queries, cents, idCol, vecCol, nprobe)
+    val (q, dot) = IvfManifest.read(spark, vdir).flavor match {
+      case IvfFlavor.Float => (probed, dotNative(col("_qv"), col("_cv")))
+      case IvfFlavor.Sq8 =>
+        (probed.withColumn("_qs", aggregate(col("_qv"), lit(0.0d),
+            (acc, x) => acc + x.cast("double"))),
+          col("_qoff").cast("double") * col("_qs") + col("_qstep")
+            .cast("double") * dotNativeByte(col("_qv"), col("_cq")))
+      case pq: IvfFlavor.Pq =>
+        pqQueries(queries, vdir, pq, cents, idCol, vecCol, nprobe)
+    }
     val corpus = allow match {
       case Some(a) => ivfCorpus(spark, vdir).join(
         a.select(col(allowIdCol).as("neighbor_id")),
         Seq("neighbor_id"), "left_semi")
       case None => ivfCorpus(spark, vdir)
     }
-    ivfScore(probedQueries(queries, cents, idCol, vecCol, nprobe),
-      corpus, k, salt)
+    val candidates = ivfScore(q, corpus, refine.fold(k)(k * _.factor), salt,
+      dot)
+    refine.fold(candidates)(r =>
+      refineCandidates(candidates, queries, r.corpus, idCol, vecCol, k))
   }
 
   /** Explicit schema of a parquet dir written by this module, read from
@@ -1042,7 +1075,7 @@ object Similarity extends Serializable {
   }
 
   /** Incremental corpus growth for a persisted index — the serving-time
-    * complement of [[saveIvfIndex]]: a 100 TB corpus grows continuously,
+    * complement of [[saveIvf]]: a 100 TB corpus grows continuously,
     * and re-running k-means + full corpus assignment per delivery would
     * make index freshness cost corpus-proportional work. `appendIvfIndex`
     * assigns ONLY the new vectors against the stored centroids (no
@@ -1056,9 +1089,9 @@ object Similarity extends Serializable {
     *
     * Contracts: ids in `newVectors` must be new to the index (the reader
     * does not dedup — same as appending to any corpus table); writers are
-    * single-threaded (same as [[saveIvfIndex]]); centroids go stale as the
+    * single-threaded (same as [[saveIvf]]); centroids go stale as the
     * appended distribution drifts from the trained one — [[cellStats]]
-    * over the served corpus diagnoses drift, a [[saveIvfIndex]] rebuild
+    * over the served corpus diagnoses drift, a [[saveIvf]] rebuild
     * (full retrain, version-swap, old version serves throughout) repairs
     * it. Delta-dir count is bounded by [[compactIvfIndex]] cadence.
     *
@@ -1076,7 +1109,7 @@ object Similarity extends Serializable {
     * ([[quantizeProjection]]), so nothing corpus-proportional happens and the
     * cheapest serving tier stays fresh by the same delivery-proportional
     * appends as the float tier. Served results after a quantized append
-    * are exactly [[saveIvfIndexQuantized]] over the grown corpus with the
+    * are exactly an SQ8 [[saveIvf]] over the grown corpus with the
     * stored centroids (spec-pinned across compaction and crash replay):
     * per-row encoding cannot depend on arrival order. */
   def appendIvfIndex(newVectors: DataFrame, idCol: String, vecCol: String,
@@ -1153,86 +1186,10 @@ object Similarity extends Serializable {
     }
   }
 
-  /** 8-bit scalar-quantized (SQ8) IVF tier — the storage-bound serving
-    * mode: each stored vector is (offset: float, step: float, bytes:
-    * array<tinyint>), ~4× smaller than float32, so at the 100 TB shape a
-    * probed-cell scan moves a quarter of the bytes. Quantization is PURE
-    * COLUMN MATH (per-row min/max + transform round — no UDFs, stays in
-    * codegen); the true vector norm `_cn` is kept in float-precision so
-    * the cosine denominator is exact and only the dot is approximate:
-    * dot(q, v̂) = o·Σqᵢ + step·dot(q, bytes). Approximation is gated by a
-    * recall floor in the spec, not an exactness oracle — the honest
-    * contract for lossy storage. Constant-component vectors (max = min)
-    * take step 0 and reconstruct exactly.
-    *
-    * Same version layout and commit protocol as [[saveIvfIndex]]; the
-    * manifest records the SQ8 flavor, so [[appendIvfIndex]] quantizes
-    * deliveries per-row and the SQ8 tier grows by the same
-    * delivery-proportional appends as the float tier — never a silent
-    * float/byte schema mix. `retain` as in [[saveIvfIndex]]. */
-  def saveIvfIndexQuantized(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, nlist: Int, sampleFraction: Double = 1.0,
-      seed: Long = 42L, maxIter: Int = 20,
-      centroids: Option[DataFrame] = None, retain: Int = 0): Unit = {
-    val cents = centroids.getOrElse(
-      trainCentroids(corpus, vecCol, nlist, sampleFraction, seed, maxIter))
-    commitVersion(corpus.sparkSession, dir, IvfManifest(IvfFlavor.Sq8),
-      retain, quantizeProjection(assignedRows(corpus, cents, idCol, vecCol)),
-      cents)
-  }
-
-  /** Serve a [[saveIvfIndexQuantized]] directory: exact query vectors
-    * against reconstructed corpus dots — `cos ≈ (o·Σqᵢ + step·dot(q,
-    * bytes)) / (‖q‖·‖v‖)` with the exact stored ‖v‖. Same probed-cell
-    * pruning, heap pre-reduce, and salt contract as [[ivfTopKIndexed]]. */
-  def ivfTopKQuantized(queries: DataFrame, indexDir: String, idCol: String,
-      vecCol: String, k: Int, nprobe: Int, salt: Int = 1): DataFrame = {
-    val spark = queries.sparkSession
-    val vdir = latestIvfVersion(spark, indexDir)
-    val cents = readParquetDir(spark, s"$vdir/centroids")
-    val q = probedQueries(queries, cents, idCol, vecCol, nprobe)
-      .withColumn("_qs", aggregate(col("_qv"), lit(0.0d),
-        (acc, x) => acc + x.cast("double")))
-    val c = ivfCorpus(spark, vdir)
-    val recon = col("_qoff").cast("double") * col("_qs") +
-      col("_qstep").cast("double") * dotNativeByte(col("_qv"), col("_cq"))
-    ivfScore(q, c, k, salt, score = recon / (col("_qn") * col("_cn")))
-  }
-
-  /** SQ8 + REFINE — the standard remedy for quantized rank scrambling
-    * among near-tied neighbors (quantization noise ≥ the score gaps that
-    * order them): the quantized index proposes `k·refineFactor`
-    * candidates per query (cheap, ¼-byte scan), then ONLY those
-    * candidates are re-scored exactly against a full-precision corpus
-    * and the true top-k survives. The refine join touches
-    * |queries|·k·refineFactor rows, never the corpus scan — at scale
-    * store `refineCorpus` bucketed by id so the candidate join is a
-    * bucket-pruned lookup rather than a shuffle of the corpus.
-    *
-    * `refineCorpus` should cover every indexed id; a candidate ABSENT
-    * from it keeps its quantized score instead of being silently dropped
-    * (a freshly-appended delivery whose full-precision rows haven't
-    * landed in the refine store yet must not shrink result sets below k
-    * with no signal). Fallback rows are NOT silently mixed into the
-    * exact ranking: the output carries a `refined` flag (false = the
-    * score is the raw quantized cosine — callers detect a stale refine
-    * store by `NOT refined` rows appearing), and ranking orders exact
-    * rows ahead of fallback ones so a lossy score can never displace an
-    * exactly re-scored candidate from the top-k. */
-  def ivfTopKQuantizedRefined(queries: DataFrame, indexDir: String,
-      refineCorpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      nprobe: Int, refineFactor: Int = 4, salt: Int = 1): DataFrame = {
-    require(refineFactor >= 1, s"refineFactor must be >= 1, got $refineFactor")
-    refineCandidates(
-      ivfTopKQuantized(queries, indexDir, idCol, vecCol,
-        k * refineFactor, nprobe, salt),
-      queries, refineCorpus, idCol, vecCol, k)
-  }
-
-  /** The shared refine tail (see [[ivfTopKQuantizedRefined]] for the
-    * contract): exact rescoring of a lossy tier's candidate set against
-    * a full-precision corpus, quantized-score fallback + `refined` flag
-    * for candidates absent from it, exact rows ranked ahead. */
+  /** The refine tail of [[ivfServe]] (the [[IvfRefine]] contract): exact
+    * rescoring of the index's candidate set against a full-precision
+    * corpus, index-score fallback + `refined` flag for candidates absent
+    * from it, exact rows ranked ahead. */
   private def refineCandidates(candidates: DataFrame, queries: DataFrame,
       refineCorpus: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
@@ -1566,7 +1523,7 @@ object Similarity extends Serializable {
     * Input rows must carry (`idCol`, `vecCol`); train on the RESIDUAL
     * sample when the index is residual-encoded (the space the codes
     * actually quantize). Output: (i, _rv) — row i of R as float, the
-    * table [[saveIvfIndexPQ]] accepts via `rotation`. */
+    * table [[IvfTier.Pq]] accepts as its `rotation`. */
   def trainOpqRotation(sample: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int = 256, iters: Int = 8, seed: Long = 42L,
       maxTrainRows: Int = 100000, kmeansIters: Int = 10): DataFrame = {
@@ -1694,7 +1651,7 @@ object Similarity extends Serializable {
   }
 
   /** PER-CELL (local) PQ codebooks — the [[trainPqCodebooks]] variant
-    * behind `saveIvfIndexPQ(perCell = true)`: each coarse cell trains its
+    * behind `IvfTier.Pq(perCell = true)`: each coarse cell trains its
     * OWN m×k codebook table on ITS residuals, so total quantizer capacity
     * (and total training data) grows with `nlist` while each k-means
     * stays sample-bounded. The shape that makes it distributed: ONE
@@ -1945,66 +1902,24 @@ object Similarity extends Serializable {
     (r.getInt(0) + 1, r.getInt(1))
   }
 
-  /** Product-quantized IVF tier — the deepest-compression serving mode:
-    * each stored vector is `m` one-byte codes + the exact norm (dim-64
-    * float32 at m = 8 → 8 bytes of payload, 32× smaller; vs SQ8's ~4×).
-    * Scoring is ADC (asymmetric distance computation): per query, an
-    * m×k lookup table of partial dots against every sub-centroid is
-    * built ONCE (a broadcast-codebook pass over the query batch — the
-    * small side), and each candidate scores as m table lookups:
-    * `dot(q, v̂) = Σₘ lut[m][code_m]`, cosine with the exact stored
-    * norm. Approximation is recall-gated in the spec like SQ8 — the
-    * honest lossy contract — and [[ivfTopKPQRefined]] is the exact
-    * remedy.
-    *
-    * Same version/commit protocol as the other tiers, plus a
-    * `codebooks` table in the version dir (carried by compaction and
-    * rewrite); the manifest records the PQ flavor, and
-    * [[appendIvfIndex]] PQ-encodes deliveries against the STORED
-    * codebooks, so the PQ tier grows by the same
-    * delivery-proportional appends — never a mixed-format corpus.
-    * `centroids`/`codebooks` seed an empty index; `retain` as in
-    * [[saveIvfIndex]]. */
-  def saveIvfIndexPQ(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, nlist: Int, pqM: Int = 8, pqK: Int = 256,
-      sampleFraction: Double = 1.0, seed: Long = 42L, maxIter: Int = 20,
-      centroids: Option[DataFrame] = None,
-      codebooks: Option[DataFrame] = None, retain: Int = 0,
-      residual: Boolean = false, perCell: Boolean = false,
-      maxTrainPerCell: Int = 20000,
-      rotation: Option[DataFrame] = None): Unit = {
-    val cents = centroids.getOrElse(
-      trainCentroids(corpus, vecCol, nlist, sampleFraction, seed, maxIter))
-    // `perCell = true` is the LOCAL-codebook layout: each cell trains
-    // its own m×k codebooks on its residuals (capacity and training data
-    // grow with nlist at unchanged code bytes — see
-    // [[trainPqCodebooksLocal]]). Per-cell codebooks always quantize
-    // residuals: k-means is translation-invariant, so per-cell-on-raw
-    // would learn the same codebooks translated by the centroid — the
-    // residual frame keeps the ADC add-back machinery shared with
-    // `residual` (the `Pq` flavor sets it whenever `perCell` is set).
-    val flavor = IvfFlavor.Pq(residual, perCell, rotation.nonEmpty)
-    // ONE assignment pass carrying (_cv, _cn, cell) — every downstream
-    // branch (residual frame, plain encode, the corpus write) consumes
-    // the cell from here; the earlier shape joined a separate
-    // assignCells output back to the corpus twice (residualVectors and
-    // the final write join)
-    val assigned = assignedRows(corpus, cents, idCol, vecCol)
-    // `residual = true` is the FAISS IVFPQ layout: codebooks train on
-    // and codes quantize v − c(cell) instead of v. Residuals concentrate
-    // where the data actually clusters (the coarse structure is already
-    // carried by the cell id), so the same m bytes spend their codes on
-    // the fine structure — bytes unchanged, reconstruction error lower
-    // wherever cells capture real cluster mass. Serving adds dot(q, c)
-    // back per probed cell (see [[ivfTopKPQ]]); appends read the flavor
-    // from the manifest and encode against the same residual space.
-    // `rotation` (the OPQ layout — see [[trainOpqRotation]]): codes
-    // quantize R·r (or R·v on the plain path) instead of r. R is
-    // orthogonal, so reconstruction error, stored norms, and the `_qerr`
-    // scale are unchanged in meaning; serving rotates the QUERY instead
-    // of unrotating the corpus (see [[ivfTopKPQ]]). Composes freely with
-    // residual and perCell — the rotation applies to whatever space the
-    // codes quantize.
+  /** The [[IvfTier.Pq]] branch of [[saveIvf]]: codebooks (trained unless
+    * injected) and the PQ rows over an [[assignedRows]] input, plus the
+    * version's extra tables — `codebooks` (carried by compaction and
+    * rewrite, so appends keep encoding against them) and `rotation`. */
+  private def pqEncode(corpus: DataFrame, vecCol: String,
+      assigned: DataFrame, cents: DataFrame, tier: IvfTier.Pq,
+      sampleFraction: Double, seed: Long,
+      maxIter: Int): (DataFrame, Seq[(String, DataFrame)]) = {
+    val IvfTier.Pq(pqM, pqK, _, perCell, maxTrainPerCell, codebooks,
+      rotation) = tier
+    // per-cell codebooks always quantize residuals: k-means is
+    // translation-invariant, so per-cell-on-raw would learn the same
+    // codebooks translated by the centroid (the flavor sets `residual`
+    // whenever `perCell` is set). Residuals spend the same m bytes on the
+    // fine structure the cell id does not carry; the rotation is
+    // orthogonal, so stored norms and the `_qerr` scale keep their
+    // meaning. The serving side of both is on [[IvfTier.Pq]].
+    val flavor = tier.flavor
     val rotM = rotation.map(rotationMatrix)
     val res0 =
       if (flavor.residual) Some(residualVectors(assigned, cents))
@@ -2094,10 +2009,9 @@ object Similarity extends Serializable {
     val cbCols =
       if (perCell) Seq(col("cell"), col("m"), col("code"), col("_cbv"))
       else Seq(col("m"), col("code"), col("_cbv"))
-    commitVersion(corpus.sparkSession, dir, IvfManifest(flavor), retain,
-      rows, cents, Seq("codebooks" -> cbs.select(cbCols: _*)) ++
-        rotation.map(r => "rotation" ->
-          r.select(col("i").cast("int").as("i"), col("_rv"))): _*)
+    (rows, Seq("codebooks" -> cbs.select(cbCols: _*)) ++
+      rotation.map(r => "rotation" ->
+        r.select(col("i").cast("int").as("i"), col("_rv"))))
   }
 
   /** CODEBOOK-DRIFT diagnostic for a PQ index — the [[ivfIndexStats]]
@@ -2111,7 +2025,7 @@ object Similarity extends Serializable {
     * codebooks and their `_qerr` rises — so `mean_qerr(deltaN) ≫
     * mean_qerr(base)` is the drift alarm that raw ADC recall is
     * degrading, measurable WITHOUT ground-truth queries. Remedy:
-    * [[refreshPqCodebooks]] (or serve [[ivfTopKPQRefined]], which is
+    * [[refreshPqCodebooks]] (or serve with an [[IvfRefine]], which is
     * drift-immune but pays a full-precision rescore per query).
     *
     * Each unit aggregates separately (a handful of tiny driver-composed
@@ -2156,7 +2070,7 @@ object Similarity extends Serializable {
     * centroids are reused (cell assignments are not what drifted; see
     * [[ivfIndexStats]] for that axis), the subspace count is read from
     * the stored codebooks so the layout is preserved, and the whole
-    * re-encode rides [[saveIvfIndexPQ]]'s version-swap protocol —
+    * re-encode rides [[saveIvf]]'s version-swap protocol —
     * `retain = 1` (the default here, unlike the save paths) keeps the
     * previous committed version serving concurrent readers until the
     * next rebuild/compaction sweeps it. The operational loop:
@@ -2170,27 +2084,21 @@ object Similarity extends Serializable {
     val pq = pqFlavor(spark, vdir, "refresh retrains PQ codebooks only")
     val cents = readParquetDir(spark, s"$vdir/centroids")
     val (m, _) = pqShape(readParquetDir(spark, s"$vdir/codebooks"))
-    saveIvfIndexPQ(corpus, idCol, vecCol, indexDir,
-      nlist = 0 /* unused: centroids are injected */, pqM = m, pqK = pqK,
-      sampleFraction = sampleFraction, seed = seed, maxIter = maxIter,
-      centroids = Some(cents), retain = retain,
-      residual = pq.residual, perCell = pq.perCell,
-      rotation =
-        if (pq.rotated) Some(readParquetDir(spark, s"$vdir/rotation"))
-        else None)
+    val tier = IvfTier.Pq(m, pqK, pq.residual, pq.perCell, rotation =
+      Option.when(pq.rotated)(readParquetDir(spark, s"$vdir/rotation")))
+    // nlist: the stored cell count (the centroids are injected, not trained)
+    saveIvf(corpus, idCol, vecCol, indexDir, tier, cents.count().toInt,
+      sampleFraction, seed, maxIter, Some(cents), retain)
   }
 
-  /** Serve a [[saveIvfIndexPQ]] directory via ADC: per query the m×k
-    * partial-dot lookup table is built against the stored codebooks
-    * (keyed m·256 + code into a map column, carried on the broadcast
-    * query side), each probed-cell candidate costs m map lookups. Same
-    * probed-cell pruning, heap pre-reduce, and salt contract as
-    * [[ivfTopKIndexed]]. */
-  def ivfTopKPQ(queries: DataFrame, indexDir: String, idCol: String,
-      vecCol: String, k: Int, nprobe: Int, salt: Int = 1): DataFrame = {
+  /** The [[IvfTier.Pq]] query side of [[ivfServe]]: (query_id, _qv, _qn,
+    * cell, _qc, _lut) and the ADC dot over it — per query the m×k
+    * partial-dot lookup table against the stored codebooks, plus dot(q,
+    * c(cell)) per probed cell on a residual index. */
+  private def pqQueries(queries: DataFrame, vdir: String, pq: IvfFlavor.Pq,
+      cents: DataFrame, idCol: String, vecCol: String,
+      nprobe: Int): (DataFrame, Column) = {
     val spark = queries.sparkSession
-    val vdir = latestIvfVersion(spark, indexDir)
-    val cents = readParquetDir(spark, s"$vdir/centroids")
     val cbs = readParquetDir(spark, s"$vdir/codebooks")
     val (mk, sub) = pqShape(cbs)
     // the per-query LUT is a NESTED DENSE array — lut[m][code] (codes
@@ -2213,7 +2121,6 @@ object Similarity extends Serializable {
     // Per-row work is O(nlist + m·k·(dim/m)); kernels are the shared
     // bit-identical ones (topCellsKernel / rotateKernel / dotKernel —
     // the DotProduct contract).
-    val pq = pqFlavor(spark, vdir, "ivfTopKPQ serves PQ codes only")
     val local = pq.perCell
     val residual = pq.residual
     val rotOpt: Option[Array[Array[Float]]] =
@@ -2318,22 +2225,7 @@ object Similarity extends Serializable {
         element_at(element_at(col("_lut"), lit(mm + 1)),
           element_at(col("_pq"), lit(mm + 1)).cast("int") + lit(128 + 1)))
       .reduce(_ + _)
-    val approxDot = if (residual) col("_qc") + adc else adc
-    ivfScore(q, ivfCorpus(spark, vdir), k, salt,
-      score = approxDot / (col("_qn") * col("_cn")))
-  }
-
-  /** PQ + REFINE: the [[ivfTopKQuantizedRefined]] remedy on the PQ
-    * proposal tier — candidates from [[ivfTopKPQ]], exact rescoring,
-    * same fallback/`refined`-flag contract (shared tail). */
-  def ivfTopKPQRefined(queries: DataFrame, indexDir: String,
-      refineCorpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      nprobe: Int, refineFactor: Int = 4, salt: Int = 1): DataFrame = {
-    require(refineFactor >= 1, s"refineFactor must be >= 1, got $refineFactor")
-    refineCandidates(
-      ivfTopKPQ(queries, indexDir, idCol, vecCol,
-        k * refineFactor, nprobe, salt),
-      queries, refineCorpus, idCol, vecCol, k)
+    (q, if (residual) col("_qc") + adc else adc)
   }
 
   /** Rewrite the serving corpus of an index through `f` (a filter /

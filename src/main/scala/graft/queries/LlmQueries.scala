@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.llm.{Bpe, Corpus, Dedup, Gates, Multimodal, Quality, Relevance, Sampling, Similarity, TextStats}
+import graft.llm.{Bpe, Corpus, Dedup, Gates, IvfRefine, IvfTier, Multimodal, Quality, Relevance, Sampling, Similarity, TextStats}
 import Q._
 
 /** LLM training-data pipeline queries over the `documents` and `embeddings`
@@ -139,10 +139,10 @@ object LlmQueries {
       val cents = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
       val idx = java.nio.file.Files.createTempDirectory("graft_ann3").toString
-      Similarity.saveIvfIndex(e, "vec_id", "embedding", idx, nlist = 8,
-        centroids = Some(cents))
+      Similarity.saveIvf(e, "vec_id", "embedding", idx, IvfTier.Float,
+        nlist = 8, centroids = Some(cents))
       val q = e.filter(col("vec_id") < 50)
-      sortAll(Similarity.ivfTopKIndexed(q, idx, "vec_id", "embedding",
+      sortAll(Similarity.ivfServe(q, idx, "vec_id", "embedding",
           k = 5, nprobe = 3)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos")))
@@ -158,12 +158,12 @@ object LlmQueries {
       val cents = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
       val idx = java.nio.file.Files.createTempDirectory("graft_ann4").toString
-      Similarity.saveIvfIndex(e.filter(col("vec_id") % 2 === 0), "vec_id",
-        "embedding", idx, nlist = 8, centroids = Some(cents))
+      Similarity.saveIvf(e.filter(col("vec_id") % 2 === 0), "vec_id",
+        "embedding", idx, IvfTier.Float, nlist = 8, centroids = Some(cents))
       Similarity.appendIvfIndex(e.filter(col("vec_id") % 2 =!= 0), "vec_id",
         "embedding", idx)
       val q = e.filter(col("vec_id") < 50)
-      sortAll(Similarity.ivfTopKIndexed(q, idx, "vec_id", "embedding",
+      sortAll(Similarity.ivfServe(q, idx, "vec_id", "embedding",
           k = 5, nprobe = 3)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos")))
@@ -182,15 +182,15 @@ object LlmQueries {
       val cents = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
       val idx = java.nio.file.Files.createTempDirectory("graft_ann5").toString
-      Similarity.saveIvfIndexQuantized(e.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nlist = 8, centroids = Some(cents))
+      Similarity.saveIvf(e.filter(col("vec_id") % 2 === 0), "vec_id",
+        "embedding", idx, IvfTier.Sq8, nlist = 8, centroids = Some(cents))
       Similarity.appendIvfIndex(e.filter(col("vec_id") % 2 =!= 0), "vec_id",
         "embedding", idx)
       val q = e.filter(col("vec_id") < 50)
       // factor sized so k·factor ≥ corpus: candidates = ALL probed pairs
       val factor = (e.count() / 5 + 1).toInt
-      sortAll(Similarity.ivfTopKQuantizedRefined(q, idx, e, "vec_id",
-          "embedding", k = 5, nprobe = 3, refineFactor = factor)
+      sortAll(Similarity.ivfServe(q, idx, "vec_id", "embedding", k = 5,
+          nprobe = 3, refine = Some(IvfRefine(e, factor)))
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos")))
     }),
@@ -218,15 +218,15 @@ object LlmQueries {
         .select(col("m"), col("code"),
           slice(col("embedding"), col("m") * 8 + 1, lit(8)).as("_cbv"))
       val idx = java.nio.file.Files.createTempDirectory("graft_ann6").toString
-      Similarity.saveIvfIndexPQ(e.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nlist = 8, pqM = 8, pqK = 8,
-        centroids = Some(cents), codebooks = Some(cbs))
+      Similarity.saveIvf(e.filter(col("vec_id") % 2 === 0), "vec_id",
+        "embedding", idx, IvfTier.Pq(m = 8, k = 8, codebooks = Some(cbs)),
+        nlist = 8, centroids = Some(cents))
       Similarity.appendIvfIndex(e.filter(col("vec_id") % 2 =!= 0), "vec_id",
         "embedding", idx)
       val q = e.filter(col("vec_id") < 50)
       val factor = (e.count() / 5 + 1).toInt
-      sortAll(Similarity.ivfTopKPQRefined(q, idx, e, "vec_id",
-          "embedding", k = 5, nprobe = 3, refineFactor = factor)
+      sortAll(Similarity.ivfServe(q, idx, "vec_id", "embedding", k = 5,
+          nprobe = 3, refine = Some(IvfRefine(e, factor)))
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos")))
     }),
@@ -249,15 +249,15 @@ object LlmQueries {
         .select(col("m"), col("code"),
           slice(col("embedding"), col("m") * 8 + 1, lit(8)).as("_cbv"))
       val idx = java.nio.file.Files.createTempDirectory("graft_ann8").toString
-      Similarity.saveIvfIndexPQ(e.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nlist = 8, pqM = 8, pqK = 8,
-        centroids = Some(cents), codebooks = Some(cbs), residual = true)
+      Similarity.saveIvf(e.filter(col("vec_id") % 2 === 0), "vec_id",
+        "embedding", idx, IvfTier.Pq(m = 8, k = 8, codebooks = Some(cbs),
+          residual = true), nlist = 8, centroids = Some(cents))
       Similarity.appendIvfIndex(e.filter(col("vec_id") % 2 =!= 0), "vec_id",
         "embedding", idx, Some("b1"))
       val q = e.filter(col("vec_id") < 50)
       val factor = (e.count() / 5 + 1).toInt
-      sortAll(Similarity.ivfTopKPQRefined(q, idx, e, "vec_id",
-          "embedding", k = 5, nprobe = 3, refineFactor = factor)
+      sortAll(Similarity.ivfServe(q, idx, "vec_id", "embedding", k = 5,
+          nprobe = 3, refine = Some(IvfRefine(e, factor)))
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos")))
     }),
@@ -287,15 +287,15 @@ object LlmQueries {
         .select(col("cell"), col("m").cast("int").as("m"), col("code"),
           slice(col("embedding"), col("m") * 8 + 1, lit(8)).as("_cbv"))
       val idx = java.nio.file.Files.createTempDirectory("graft_ann10").toString
-      Similarity.saveIvfIndexPQ(e.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nlist = 8, pqM = 8, pqK = 8,
-        centroids = Some(cents), codebooks = Some(cbs), perCell = true)
+      Similarity.saveIvf(e.filter(col("vec_id") % 2 === 0), "vec_id",
+        "embedding", idx, IvfTier.Pq(m = 8, k = 8, codebooks = Some(cbs),
+          perCell = true), nlist = 8, centroids = Some(cents))
       Similarity.appendIvfIndex(e.filter(col("vec_id") % 2 =!= 0), "vec_id",
         "embedding", idx, Some("b1"))
       val q = e.filter(col("vec_id") < 50)
       val factor = (e.count() / 5 + 1).toInt
-      sortAll(Similarity.ivfTopKPQRefined(q, idx, e, "vec_id",
-          "embedding", k = 5, nprobe = 3, refineFactor = factor)
+      sortAll(Similarity.ivfServe(q, idx, "vec_id", "embedding", k = 5,
+          nprobe = 3, refine = Some(IvfRefine(e, factor)))
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos")))
     }),
@@ -323,16 +323,16 @@ object LlmQueries {
           when(j === lit(63) - col("id").cast("int"), lit(1.0f))
             .otherwise(lit(0.0f))).as("_rv"))
       val idx = java.nio.file.Files.createTempDirectory("graft_ann11").toString
-      Similarity.saveIvfIndexPQ(e.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nlist = 8, pqM = 8, pqK = 8,
-        centroids = Some(cents), codebooks = Some(cbs), residual = true,
-        rotation = Some(rot))
+      Similarity.saveIvf(e.filter(col("vec_id") % 2 === 0), "vec_id",
+        "embedding", idx, IvfTier.Pq(m = 8, k = 8, codebooks = Some(cbs),
+          residual = true, rotation = Some(rot)), nlist = 8,
+        centroids = Some(cents))
       Similarity.appendIvfIndex(e.filter(col("vec_id") % 2 =!= 0), "vec_id",
         "embedding", idx, Some("b1"))
       val q = e.filter(col("vec_id") < 50)
       val factor = (e.count() / 5 + 1).toInt
-      sortAll(Similarity.ivfTopKPQRefined(q, idx, e, "vec_id",
-          "embedding", k = 5, nprobe = 3, refineFactor = factor)
+      sortAll(Similarity.ivfServe(q, idx, "vec_id", "embedding", k = 5,
+          nprobe = 3, refine = Some(IvfRefine(e, factor)))
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos")))
     }),
@@ -356,9 +356,9 @@ object LlmQueries {
         .select(col("m"), col("code"),
           slice(col("embedding"), col("m") * 8 + 1, lit(8)).as("_cbv"))
       val idx = java.nio.file.Files.createTempDirectory("graft_ann7").toString
-      Similarity.saveIvfIndexPQ(e.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nlist = 8, pqM = 8, pqK = 8,
-        centroids = Some(cents), codebooks = Some(cbs))
+      Similarity.saveIvf(e.filter(col("vec_id") % 2 === 0), "vec_id",
+        "embedding", idx, IvfTier.Pq(m = 8, k = 8, codebooks = Some(cbs)),
+        nlist = 8, centroids = Some(cents))
       Similarity.appendIvfIndex(e.filter(col("vec_id") % 2 =!= 0), "vec_id",
         "embedding", idx, Some("b1"))
       sortAll(Similarity.pqIndexStats(s, idx)
@@ -1203,11 +1203,11 @@ object LlmQueries {
       val cents = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
       val idx = java.nio.file.Files.createTempDirectory("graft_ann9").toString
-      Similarity.saveIvfIndex(e, "vec_id", "embedding", idx, nlist = 8,
-        centroids = Some(cents))
+      Similarity.saveIvf(e, "vec_id", "embedding", idx, IvfTier.Float,
+        nlist = 8, centroids = Some(cents))
       val q = e.filter(col("vec_id") < 50)
       val allow = e.filter(col("vec_id") % 3 === 0).select("vec_id")
-      sortAll(Similarity.ivfTopKIndexed(q, idx, "vec_id", "embedding",
+      sortAll(Similarity.ivfServe(q, idx, "vec_id", "embedding",
           k = 5, nprobe = 3, allow = Some(allow))
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos")))

@@ -8,7 +8,7 @@ import graft.llm.Similarity
 
 /** Ingest-time ANN index freshness: a checkpointed poller that appends
   * every newly-landed embedding file to a persisted IVF index
-  * ([[graft.llm.Similarity.saveIvfIndex]]) — the serving loop of a
+  * ([[graft.llm.Similarity.saveIvf]]) — the serving loop of a
   * training-data pipeline where the corpus grows by deliveries and query
   * batches must see them without a corpus-wide rebuild per poll.
   *
@@ -20,7 +20,7 @@ import graft.llm.Similarity
   * lists a bounded number of delta dirs per query, not one per poll ever
   * run. Work is DELIVERY-proportional; the corpus-proportional passes
   * (k-means retrain, full re-assignment) happen only in an operator-
-  * initiated [[graft.llm.Similarity.saveIvfIndex]] rebuild with the
+  * initiated [[graft.llm.Similarity.saveIvf]] rebuild with the
   * poller stopped (same stop-the-poller contract as
   * [[DedupStream.repairMerges]]).
   *
@@ -53,7 +53,7 @@ object IvfStream {
   /** One incremental poll: append every embedding file new to the
     * checkpoint to the index, compacting every `compactEvery` batches
     * (0 disables compaction). The index must exist —
-    * [[graft.llm.Similarity.saveIvfIndex]] seeds it. `retain` previous
+    * [[graft.llm.Similarity.saveIvf]] seeds it. `retain` previous
     * committed versions survive each fold
     * ([[graft.llm.Similarity.compactIvfIndex]]) — set 1 when query
     * batches are served concurrently with the poller, so a reader that

@@ -32,14 +32,14 @@ import graft.llm.{Gates, Similarity}
   * convergent at every cut point.
   *
   * Seed the index before the first poll — with a corpus, or EMPTY with
-  * externally-trained centroids (`saveIvfIndex(centroids = Some(...))`
+  * externally-trained centroids (`saveIvf(centroids = Some(...))`
   * over zero rows) to grow purely by ingest.
   *
   * Documented deviation, inherited from [[DedupStream]]: clusters never
   * merge across batches, so a later bridge doc attaches to ONE stored rep
   * while batch semantics would merge two clusters — after an offline
   * [[DedupStream.repairMerges]], reps rewritten away remain in the index
-  * until the next operator-initiated full rebuild (`saveIvfIndex` over
+  * until the next operator-initiated full rebuild (`saveIvf` over
   * the repaired representative corpus, poller stopped): the index is a
   * superset of the repaired representative set, never missing one.
   *

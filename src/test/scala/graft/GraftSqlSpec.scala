@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.llm.{IvfRefine, IvfTier}
 
 /** The SQL façade exposes the tables to spark.sql so relational operators
   * run from SQL text and interleave with the typed operator APIs. */
@@ -335,15 +336,16 @@ class GraftSqlSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    graft.llm.Similarity.saveIvfIndex(
+    graft.llm.Similarity.saveIvf(
       Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"),
-      "vec_id", "embedding", index, nlist = 4, centroids = Some(cents))
+      "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
+      centroids = Some(cents))
     def vec(id: Long) = { val a = new Array[Float](8); a((id % 8).toInt) = 1.0f; a }
     def land(name: String, rows: (Long, String)*): Unit =
       rows.map { case (id, t) => (id, t, vec(id)) }
         .toDF("doc_id", "text", "embedding").write.parquet(s"$landing/$name")
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = graft.llm.Similarity.ivfTopKIndexed(probe, index,
+    def indexedIds() = graft.llm.Similarity.ivfServe(probe, index,
         "vec_id", "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     def q = "SELECT doc_id, rep_id FROM " +
@@ -374,9 +376,10 @@ class GraftSqlSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    graft.llm.Similarity.saveIvfIndex(
+    graft.llm.Similarity.saveIvf(
       Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"),
-      "vec_id", "embedding", index, nlist = 4, centroids = Some(cents))
+      "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
+      centroids = Some(cents))
     def vec(id: Long) = { val a = new Array[Float](8); a((id % 8).toInt) = 1.0f; a }
     def uniq(tag: String) = (0 until 42).map(i => s"${tag}_u$i").mkString(" ")
     val benchText = (0 until 42).map(i => s"bm$i").mkString(" ")
@@ -454,7 +457,7 @@ class GraftSqlSpec extends AnyFunSuite {
     val fromSql = spark.sql("SELECT query_id, neighbor_id, cos FROM " +
       s"graft_ivf_topk_indexed_t('ivfidx_q', '$dir', 'vec_id', 'embedding', 5, 3)")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val typed = graft.llm.Similarity.ivfTopKIndexed(
+    val typed = graft.llm.Similarity.ivfServe(
         spark.table("ivfidx_q"), dir, "vec_id", "embedding", 5, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fromSql === typed)
@@ -471,7 +474,7 @@ class GraftSqlSpec extends AnyFunSuite {
       s"graft_ivf_topk_indexed_t('ivfidx_q', '$dir', 'vec_id', 'embedding', " +
       "5, 3, 1, 'ivfidx_allow')")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val typedF = graft.llm.Similarity.ivfTopKIndexed(
+    val typedF = graft.llm.Similarity.ivfServe(
         spark.table("ivfidx_q"), dir, "vec_id", "embedding", 5, 3,
         allow = Some(spark.table("ivfidx_allow")))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -523,7 +526,7 @@ class GraftSqlSpec extends AnyFunSuite {
     val fromSql = spark.sql("SELECT query_id, neighbor_id, cos FROM " +
       s"graft_ivf_topk_q_t('ivfq_q', '$dir', 'vec_id', 'embedding', 5, 3)")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val typed = graft.llm.Similarity.ivfTopKQuantized(
+    val typed = graft.llm.Similarity.ivfServe(
         spark.table("ivfq_q"), dir, "vec_id", "embedding", 5, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fromSql === typed)
@@ -553,9 +556,9 @@ class GraftSqlSpec extends AnyFunSuite {
       s"graft_ivf_topk_qr_t('ivfqr_q', '$dir', 'ivfqr_c', 'vec_id', " +
       "'embedding', 5, 2, 8)")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val typed = graft.llm.Similarity.ivfTopKQuantizedRefined(
-        spark.table("ivfqr_q"), dir, spark.table("ivfqr_c"), "vec_id",
-        "embedding", 5, 2, refineFactor = 8)
+    val typed = graft.llm.Similarity.ivfServe(
+        spark.table("ivfqr_q"), dir, "vec_id",
+        "embedding", 5, 2, refine = Some(IvfRefine(spark.table("ivfqr_c"), 8)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fromSql === typed)
     assert(fromSql.nonEmpty)
@@ -588,7 +591,7 @@ class GraftSqlSpec extends AnyFunSuite {
     val rawSql = spark.sql("SELECT query_id, neighbor_id, cos FROM " +
       s"graft_ivf_topk_pq_t('ivfpq_q', '$dir', 'vec_id', 'embedding', 5, 2)")
       .collect().map(key).toSet
-    val rawTyped = graft.llm.Similarity.ivfTopKPQ(spark.table("ivfpq_q"),
+    val rawTyped = graft.llm.Similarity.ivfServe(spark.table("ivfpq_q"),
         dir, "vec_id", "embedding", 5, 2)
       .collect().map(key).toSet
     assert(rawSql === rawTyped)
@@ -597,9 +600,9 @@ class GraftSqlSpec extends AnyFunSuite {
       s"graft_ivf_topk_pqr_t('ivfpq_q', '$dir', 'ivfpq_c', 'vec_id', " +
       "'embedding', 5, 2, 8)")
       .collect().map(key).toSet
-    val refTyped = graft.llm.Similarity.ivfTopKPQRefined(
-        spark.table("ivfpq_q"), dir, spark.table("ivfpq_c"), "vec_id",
-        "embedding", 5, 2, refineFactor = 8)
+    val refTyped = graft.llm.Similarity.ivfServe(
+        spark.table("ivfpq_q"), dir, "vec_id",
+        "embedding", 5, 2, refine = Some(IvfRefine(spark.table("ivfpq_c"), 8)))
       .collect().map(key).toSet
     assert(refSql === refTyped)
     assert(refSql.nonEmpty)
@@ -617,7 +620,7 @@ class GraftSqlSpec extends AnyFunSuite {
     val rresSql = spark.sql("SELECT query_id, neighbor_id, cos FROM " +
       s"graft_ivf_topk_pq_t('ivfpq_q', '$rdir', 'vec_id', 'embedding', 5, 2)")
       .collect().map(key).toSet
-    val rresTyped = graft.llm.Similarity.ivfTopKPQ(spark.table("ivfpq_q"),
+    val rresTyped = graft.llm.Similarity.ivfServe(spark.table("ivfpq_q"),
         rdir, "vec_id", "embedding", 5, 2)
       .collect().map(key).toSet
     assert(rresSql === rresTyped)
@@ -638,7 +641,7 @@ class GraftSqlSpec extends AnyFunSuite {
     val lSql = spark.sql("SELECT query_id, neighbor_id, cos FROM " +
       s"graft_ivf_topk_pq_t('ivfpq_q', '$ldir', 'vec_id', 'embedding', 5, 2)")
       .collect().map(key).toSet
-    val lTyped = graft.llm.Similarity.ivfTopKPQ(spark.table("ivfpq_q"),
+    val lTyped = graft.llm.Similarity.ivfServe(spark.table("ivfpq_q"),
         ldir, "vec_id", "embedding", 5, 2)
       .collect().map(key).toSet
     assert(lSql === lTyped)
@@ -661,7 +664,7 @@ class GraftSqlSpec extends AnyFunSuite {
     val oSql = spark.sql("SELECT query_id, neighbor_id, cos FROM " +
       s"graft_ivf_topk_pq_t('ivfpq_q', '$odir', 'vec_id', 'embedding', 5, 2)")
       .collect().map(key).toSet
-    val oTyped = graft.llm.Similarity.ivfTopKPQ(spark.table("ivfpq_q"),
+    val oTyped = graft.llm.Similarity.ivfServe(spark.table("ivfpq_q"),
         odir, "vec_id", "embedding", 5, 2)
       .collect().map(key).toSet
     assert(oSql === oTyped)
@@ -741,8 +744,9 @@ class GraftSqlSpec extends AnyFunSuite {
       (0L, Array.tabulate(8)(j => if (j % 2 == 0) 1f else 0f)),
       (1L, Array.tabulate(8)(j => if (j % 2 == 1) 1f else 0f)))
       .toDF("cell", "_cv")
-    graft.llm.Similarity.saveIvfIndexPQ(a, "vec_id", "embedding", dir,
-      nlist = 2, pqM = 4, pqK = 4, centroids = Some(cents))
+    graft.llm.Similarity.saveIvf(a, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 4, k = 4),
+      nlist = 2, centroids = Some(cents))
     graft.llm.Similarity.appendIvfIndex(b, "vec_id", "embedding", dir,
       Some("b1"))
     def key(r: org.apache.spark.sql.Row) = (r.getString(0), r.getLong(1),
@@ -1461,9 +1465,10 @@ class GraftSqlSpec extends AnyFunSuite {
       val a = new Array[Float](8); a(0) = 1.0f; a(1) = fine; a
     }
     val cents = Seq((0L, v(0.0f))).toDF("cell", "_cv")
-    graft.llm.Similarity.saveIvfIndex(
+    graft.llm.Similarity.saveIvf(
       Seq((900L, v(0.0f))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", index, nlist = 1, centroids = Some(cents))
+      "vec_id", "embedding", index, IvfTier.Float, nlist = 1,
+      centroids = Some(cents))
     def member(tag: String): String =
       (0 until 42).map(i => s"${tag}_w$i").mkString(" ")
     // the bridge chain: A(1) kept; 11 near A dropped; 21 near 11 only —
@@ -1539,5 +1544,92 @@ class GraftSqlSpec extends AnyFunSuite {
           e.getMessage.contains(f.params.head), f.name)
       }
     }
+  }
+
+  test("registerFunctions: a second call replaces nothing; a new session registers its own") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    GraftSql.registerFunctions(spark)
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-replaced", null, null, true,
+        Array.empty[Property]) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("replaced a previously registered function")) replaced.add(m)
+      }
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try GraftSql.registerFunctions(spark)
+    finally { root.removeAppender(appender); appender.stop() }
+    assert(replaced.isEmpty, s"${replaced.size} replacement WARNs, e.g. ${replaced.peek}")
+    // registration is per session: a new session starts from the built-ins
+    val s2 = spark.newSession()
+    GraftSql.registerFunctions(s2)
+    s2.sql("SELECT id AS event_id, timestamp_micros(id * 10) AS ts FROM range(3)")
+      .createOrReplaceTempView("reg_v")
+    assert(s2.sql("SELECT * FROM graft_sessionize_t('reg_v', 'ts', 100)")
+      .count() === 3L)
+  }
+
+  test("IVF serve names × index flavors: a matching name ≡ ivfServe, a mismatch names the manifest's flavor") {
+    import spark.implicits._
+    GraftSql.registerFunctions(spark)
+    def vec(id: Long): Array[Float] = {
+      val a = new Array[Float](16)
+      a((id % 4).toInt) = 1.0f
+      (0 until 16).foreach(j => a(j) = a(j) + ((id * 31 + j * 7) % 11).toFloat * 4e-6f)
+      a
+    }
+    val corpus = (0L until 200L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+    corpus.createOrReplaceTempView("ivfmx_c")
+    corpus.filter($"vec_id" < 20).createOrReplaceTempView("ivfmx_q")
+    // explicit centroids and codebooks (the first vectors, 4-dim slices as
+    // codes): the test is about dispatch, not training
+    import org.apache.spark.sql.functions.{explode, lit, sequence, slice}
+    val cents = corpus.filter($"vec_id" < 4)
+      .select($"vec_id".cast("int").as("cell"), $"embedding".as("_cv"))
+    val cbs = corpus.filter($"vec_id" < 16)
+      .select($"vec_id".cast("int").as("code"),
+        explode(sequence(lit(0), lit(3))).as("m"), $"embedding")
+      .select($"m", $"code", slice($"embedding", $"m" * 4 + 1, lit(4)).as("_cbv"))
+    val dirs = Seq("float" -> IvfTier.Float, "sq8" -> IvfTier.Sq8,
+        "pq" -> IvfTier.Pq(m = 4, k = 16, codebooks = Some(cbs))).map {
+      case (flavor, tier) =>
+        val d = java.nio.file.Files.createTempDirectory("graft_sql_ivfmx").toString
+        graft.llm.Similarity.saveIvf(corpus, "vec_id", "embedding", d, tier,
+          nlist = 4, centroids = Some(cents))
+        flavor -> d
+    }
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))
+    // each serve name with the flavor it implies and whether it refines
+    val names = Seq(("graft_ivf_topk_indexed_t", "float", false),
+      ("graft_ivf_topk_q_t", "sq8", false), ("graft_ivf_topk_qr_t", "sq8", true),
+      ("graft_ivf_topk_pq_t", "pq", false), ("graft_ivf_topk_pqr_t", "pq", true))
+    var mismatches = 0
+    for ((fn, implied, refine) <- names; (flavor, d) <- dirs) {
+      val args =
+        if (refine) s"'ivfmx_q', '$d', 'ivfmx_c', 'vec_id', 'embedding', 5, 2, 8"
+        else s"'ivfmx_q', '$d', 'vec_id', 'embedding', 5, 2"
+      def viaSql() = spark.sql(s"SELECT query_id, neighbor_id, cos FROM $fn($args)")
+      if (flavor == implied) {
+        val typed = graft.llm.Similarity.ivfServe(spark.table("ivfmx_q"), d,
+          "vec_id", "embedding", 5, 2,
+          refine = Option.when(refine)(IvfRefine(spark.table("ivfmx_c"), 8)))
+        val got = viaSql().collect().map(key).toSet
+        assert(got.nonEmpty && got === typed.collect().map(key).toSet,
+          s"$fn on the $flavor index")
+      } else {
+        val e = intercept[IllegalArgumentException](viaSql())
+        assert(e.getMessage.contains(fn) && e.getMessage.contains(s"'$flavor'"),
+          s"$fn on the $flavor index: ${e.getMessage}")
+        mismatches += 1
+      }
+    }
+    assert(mismatches === 10)
   }
 }

@@ -316,14 +316,15 @@ class LlmSpec extends AnyFunSuite {
   test("persisted IVF index serves identical results to the live path and prunes probed cells") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfidx").toString
     val q = embs.filter(col("vec_id") % 37 === 0)
-    Similarity.saveIvfIndex(embs, "vec_id", "embedding", dir, nlist = 8)
+    Similarity.saveIvf(embs, "vec_id", "embedding", dir, IvfTier.Float,
+      nlist = 8)
     val cents = Similarity.trainCentroids(embs, "embedding", 8)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val live = rows(Similarity.ivfTopK(q, embs, cents, "vec_id", "embedding",
       k = 5, nprobe = 3))
     assert(live.nonEmpty)
-    val served = Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    val served = Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)
     assert(rows(served) === live, "indexed ≡ live")
     // the scoring join prunes the cell-partitioned corpus scan (dynamic
@@ -331,7 +332,7 @@ class LlmSpec extends AnyFunSuite {
     assert(served.queryExecution.executedPlan.toString
       .contains("dynamicpruning"), "the corpus scan must prune probed cells")
     // salted serving stays exact too
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3, salt = 4)) === live)
     // the corpus layout is cell-partitioned (the probed-cells-only scan
     // at the file level)
@@ -341,12 +342,13 @@ class LlmSpec extends AnyFunSuite {
     // a crashed rebuild (uncommitted version dir, no _COMMIT) is invisible
     // to readers — the old version keeps serving consistent results
     val crashed = new java.io.File(s"$dir/v2/corpus"); crashed.mkdirs()
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)) === live)
     // a completed rebuild commits v3, serves identically, and sweeps both
     // the crashed v2 and the superseded v1
-    Similarity.saveIvfIndex(embs, "vec_id", "embedding", dir, nlist = 8)
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    Similarity.saveIvf(embs, "vec_id", "embedding", dir, IvfTier.Float,
+      nlist = 8)
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)) === live)
     val vdirs = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.toSeq
@@ -355,7 +357,8 @@ class LlmSpec extends AnyFunSuite {
 
   test("parquetDirSchema \u2261 Spark inference on index layouts (partitioned corpus + metadata tables)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfschema").toString
-    Similarity.saveIvfIndex(embs, "vec_id", "embedding", dir, nlist = 8)
+    Similarity.saveIvf(embs, "vec_id", "embedding", dir, IvfTier.Float,
+      nlist = 8)
     for (sub <- Seq("corpus", "centroids")) {
       val path = s"$dir/v1/$sub"
       val inferred = spark.read.parquet(path).schema
@@ -373,11 +376,12 @@ class LlmSpec extends AnyFunSuite {
   test("filtered ANN serving: true top-k of the allowed subset, not a post-filter of the global top-k") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfflt").toString
     val q = embs.filter(col("vec_id") % 37 === 0)
-    Similarity.saveIvfIndex(embs, "vec_id", "embedding", dir, nlist = 8)
+    Similarity.saveIvf(embs, "vec_id", "embedding", dir, IvfTier.Float,
+      nlist = 8)
     val allow = embs.filter(col("vec_id") % 3 === 0).select("vec_id")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val filtered = rows(Similarity.ivfTopKIndexed(q, dir, "vec_id",
+    val filtered = rows(Similarity.ivfServe(q, dir, "vec_id",
       "embedding", k = 5, nprobe = 3, allow = Some(allow)))
     // ≡ serving a corpus that only ever contained the allowed ids (same
     // stored centroids: inject them so assignments match)
@@ -385,21 +389,46 @@ class LlmSpec extends AnyFunSuite {
       .select(col("cell"), col("_cv"))
     val dirAllowed = java.nio.file.Files
       .createTempDirectory("graft_ivfflt2").toString
-    Similarity.saveIvfIndex(embs.filter(col("vec_id") % 3 === 0), "vec_id",
-      "embedding", dirAllowed, nlist = 8, centroids = Some(cents))
-    val subsetServe = rows(Similarity.ivfTopKIndexed(q, dirAllowed,
+    Similarity.saveIvf(embs.filter(col("vec_id") % 3 === 0), "vec_id",
+      "embedding", dirAllowed, IvfTier.Float, nlist = 8,
+      centroids = Some(cents))
+    val subsetServe = rows(Similarity.ivfServe(q, dirAllowed,
       "vec_id", "embedding", k = 5, nprobe = 3))
     assert(filtered === subsetServe,
       "filtered serve ≡ serving the allowed-only corpus")
     // and ≠ post-filtering the unfiltered top-k: that returns fewer than
     // k for queries whose global winners are disallowed
-    val global = Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    val global = Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)
     val postFiltered = rows(global.filter(col("neighbor_id") % 3 === 0))
     assert(postFiltered.subsetOf(filtered) && postFiltered.size < filtered.size,
       "post-filtering loses allowed neighbors ranked below global winners")
     // every returned neighbor honors the predicate
     assert(filtered.forall(_._2 % 3 == 0))
+    // the compressed tiers filter the same way: SQ8 and PQ encode per row,
+    // so with the same centroids (and PQ codebooks) the allowlisted serve
+    // equals serving an index saved from the allowed rows only, exactly
+    val cbs = embs.filter(col("vec_id") < 16) // 8-dim slices as codes
+      .select(col("vec_id").cast("int").as("code"),
+        explode(sequence(lit(0), lit(7))).as("m"), col("embedding"))
+      .select(col("m"), col("code"),
+        slice(col("embedding"), col("m") * 8 + 1, lit(8)).as("_cbv"))
+    for ((name, tier) <- Seq("sq8" -> IvfTier.Sq8,
+        "pq" -> IvfTier.Pq(m = 8, k = 16, codebooks = Some(cbs)))) {
+      def serve(corpus: org.apache.spark.sql.DataFrame,
+          allow: Option[org.apache.spark.sql.DataFrame]) = {
+        val d = java.nio.file.Files.createTempDirectory("graft_ivfflt_" + name)
+          .toString
+        Similarity.saveIvf(corpus, "vec_id", "embedding", d, tier, nlist = 8,
+          centroids = Some(cents))
+        rows(Similarity.ivfServe(q, d, "vec_id", "embedding", k = 5,
+          nprobe = 3, allow = allow))
+      }
+      val tierFiltered = serve(embs, Some(allow))
+      assert(tierFiltered.nonEmpty && tierFiltered.forall(_._2 % 3 == 0), name)
+      assert(tierFiltered === serve(embs.filter(col("vec_id") % 3 === 0), None),
+        s"$name: filtered serve ≡ serving the allowed-only corpus")
+    }
   }
 
   test("IVF append: served ≡ live over the grown corpus; crash-safe deltas; compaction folds") {
@@ -410,39 +439,40 @@ class LlmSpec extends AnyFunSuite {
     val q = embs.filter(col("vec_id") % 37 === 0)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    Similarity.saveIvfIndex(base, "vec_id", "embedding", dir, nlist = 8)
+    Similarity.saveIvf(base, "vec_id", "embedding", dir, IvfTier.Float,
+      nlist = 8)
     // live reference: the full grown corpus scored against the STORED
     // centroids (append never retrains)
     val cents = Similarity.ivfCentroids(spark, dir)
     def live(corpus: org.apache.spark.sql.DataFrame) = rows(
       Similarity.ivfTopK(q, corpus, cents, "vec_id", "embedding", k = 5, nprobe = 3))
     Similarity.appendIvfIndex(growth1, "vec_id", "embedding", dir)
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)) === live(base.union(growth1)), "after first append")
     // a crashed append (no _COMMIT) is invisible to readers
     val crashed = new java.io.File(s"$dir/v1/delta2/corpus"); crashed.mkdirs()
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)) === live(base.union(growth1)))
     // the next append sweeps it and serves the further-grown corpus
     Similarity.appendIvfIndex(growth2, "vec_id", "embedding", dir)
     val full = live(base.union(growth1).union(growth2))
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)) === full, "after second append")
     assert(!new java.io.File(s"$dir/v1/delta2").exists(),
       "crashed delta must be swept by the next successful append")
     assert(new java.io.File(s"$dir/v1").listFiles().map(_.getName)
       .count(_.startsWith("delta")) === 2)
     // salted serving over base+deltas stays exact
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3, salt = 4)) === full)
     // a crashed compaction (uncommitted version) is invisible
     new java.io.File(s"$dir/v2/corpus").mkdirs()
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)) === full)
     // compaction folds deltas into one new committed version, same
     // centroids, identical results; old version + crashed v2 swept
     Similarity.compactIvfIndex(spark, dir)
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding",
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3)) === full, "after compaction")
     val vdirs = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.toSeq
@@ -458,9 +488,10 @@ class LlmSpec extends AnyFunSuite {
   test("appending an all-excluded delivery leaves NO delta (an empty partitioned dir would poison union reads)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfempty").toString
-    Similarity.saveIvfIndex(embs.limit(100), "vec_id", "embedding", dir, nlist = 4)
+    Similarity.saveIvf(embs.limit(100), "vec_id", "embedding", dir,
+      IvfTier.Float, nlist = 4)
     val q = embs.filter(col("vec_id") % 37 === 0)
-    def rows() = Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding", 5, 2)
+    def rows() = Similarity.ivfServe(q, dir, "vec_id", "embedding", 5, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val before = rows()
     // every vector zero-norm → assignCells drops all rows by contract
@@ -480,24 +511,25 @@ class LlmSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfq").toString
     val fdir = java.nio.file.Files.createTempDirectory("graft_ivff").toString
     val q = embs.filter(col("vec_id") < 50)
-    Similarity.saveIvfIndexQuantized(embs, "vec_id", "embedding", dir, nlist = 8)
-    Similarity.saveIvfIndex(embs, "vec_id", "embedding", fdir, nlist = 8)
+    Similarity.saveIvf(embs, "vec_id", "embedding", dir, IvfTier.Sq8, nlist = 8)
+    Similarity.saveIvf(embs, "vec_id", "embedding", fdir, IvfTier.Float,
+      nlist = 8)
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "neighbor_id")
     val exact = pairs(Similarity.cosineTopK(q, embs, "vec_id", "embedding", 5))
-    val served = pairs(Similarity.ivfTopKQuantized(q, dir, "vec_id",
+    val served = pairs(Similarity.ivfServe(q, dir, "vec_id",
       "embedding", k = 5, nprobe = 3))
     val recall = Similarity.recallAgainst(exact, served, 5).head.getDouble(1)
     // IVF(float, nprobe=3) itself is the probing ceiling; quantization
     // must not lose more than a few points below it
-    val floatServed = pairs(Similarity.ivfTopKIndexed(q, fdir, "vec_id",
+    val floatServed = pairs(Similarity.ivfServe(q, fdir, "vec_id",
       "embedding", k = 5, nprobe = 3))
     val floatRecall = Similarity.recallAgainst(exact, floatServed, 5)
       .head.getDouble(1)
     assert(recall >= floatRecall - 0.05,
       s"SQ8 recall $recall fell too far below float-IVF recall $floatRecall")
     // salted serving returns the identical set
-    assert(pairs(Similarity.ivfTopKQuantized(q, dir, "vec_id", "embedding",
+    assert(pairs(Similarity.ivfServe(q, dir, "vec_id", "embedding",
         5, 3, salt = 4)).collect().toSet === served.collect().toSet)
     // storage: quantized corpus bytes well under the float corpus
     def corpusBytes(d: String) = {
@@ -511,10 +543,10 @@ class LlmSpec extends AnyFunSuite {
     val const = Seq((1L, Array.fill(8)(0.25f)), (2L, Array.fill(8)(0.25f)),
       (3L, Array(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
     val cdir = java.nio.file.Files.createTempDirectory("graft_ivfqc").toString
-    Similarity.saveIvfIndexQuantized(const, "vec_id", "embedding", cdir,
+    Similarity.saveIvf(const, "vec_id", "embedding", cdir, IvfTier.Sq8,
       nlist = 2, centroids = Some(Seq((0L, Array.fill(8)(0.25f)),
         (1L, Array(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f))).toDF("cell", "_cv")))
-    val cServed = Similarity.ivfTopKQuantized(
+    val cServed = Similarity.ivfServe(
         const.filter(col("vec_id") === 1L), cdir, "vec_id", "embedding", 2, 2)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toMap
     assert(math.abs(cServed(2L) - 1.0) < 1e-9,
@@ -522,9 +554,9 @@ class LlmSpec extends AnyFunSuite {
     // refine: with every cell probed and a full-width candidate set, the
     // refined result IS the exact top-k (the quantized tier only
     // proposes; exact rescoring decides) — and scores are exact cosines
-    val refined = Similarity.ivfTopKQuantizedRefined(q, dir, embs,
+    val refined = Similarity.ivfServe(q, dir,
         "vec_id", "embedding", k = 5, nprobe = 8,
-        refineFactor = embs.count().toInt / 5 + 1)
+        refine = Some(IvfRefine(embs, embs.count().toInt / 5 + 1)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val exactRows = Similarity.cosineTopK(q, embs, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -539,30 +571,30 @@ class LlmSpec extends AnyFunSuite {
     val half2 = embs.filter(col("vec_id") % 2 =!= 0)
     val cents8 = Similarity.ivfCentroids(spark, dir).localCheckpoint(true)
     val gdir = java.nio.file.Files.createTempDirectory("graft_ivfqg").toString
-    Similarity.saveIvfIndexQuantized(half1, "vec_id", "embedding", gdir,
+    Similarity.saveIvf(half1, "vec_id", "embedding", gdir, IvfTier.Sq8,
       nlist = 8, centroids = Some(cents8))
     Similarity.appendIvfIndex(half2, "vec_id", "embedding", gdir, Some("b7"))
     def full(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val grownServed = full(Similarity.ivfTopKQuantized(q, gdir, "vec_id",
+    val grownServed = full(Similarity.ivfServe(q, gdir, "vec_id",
       "embedding", k = 5, nprobe = 3))
-    assert(grownServed === full(Similarity.ivfTopKQuantized(q, dir, "vec_id",
+    assert(grownServed === full(Similarity.ivfServe(q, dir, "vec_id",
       "embedding", k = 5, nprobe = 3)),
       "append-grown quantized index must serve exactly the full-save result")
     // replaying the named delta converges (same dir rewritten)
     Similarity.appendIvfIndex(half2, "vec_id", "embedding", gdir, Some("b7"))
-    assert(full(Similarity.ivfTopKQuantized(q, gdir, "vec_id", "embedding",
+    assert(full(Similarity.ivfServe(q, gdir, "vec_id", "embedding",
       5, 3)) === grownServed)
     // compaction folds the quantized delta and carries the flavor marker:
     // a post-fold append must still quantize (not land float rows)
     Similarity.compactIvfIndex(spark, gdir)
     assert(IvfManifest.read(spark, s"$gdir/v2").flavor === IvfFlavor.Sq8,
       "compaction must carry the SQ8 flavor forward")
-    assert(full(Similarity.ivfTopKQuantized(q, gdir, "vec_id", "embedding",
+    assert(full(Similarity.ivfServe(q, gdir, "vec_id", "embedding",
       5, 3)) === grownServed, "across the fold")
     // a replay of the folded delta no-ops via the _FOLDED ledger
     Similarity.appendIvfIndex(half2, "vec_id", "embedding", gdir, Some("b7"))
-    assert(full(Similarity.ivfTopKQuantized(q, gdir, "vec_id", "embedding",
+    assert(full(Similarity.ivfServe(q, gdir, "vec_id", "embedding",
       5, 3)) === grownServed, "folded replay must no-op")
   }
 
@@ -571,14 +603,14 @@ class LlmSpec extends AnyFunSuite {
     val cents = embs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-    Similarity.saveIvfIndexPQ(embs, "vec_id", "embedding", dir, nlist = 8,
-      pqM = 8, pqK = 64, centroids = Some(cents))
+    Similarity.saveIvf(embs, "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 8, k = 64), nlist = 8, centroids = Some(cents))
     val q = embs.filter(col("vec_id") < 50)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id")
     val exact = Similarity.cosineTopK(q, embs, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id")
-    val served = pairs(Similarity.ivfTopKPQ(q, dir, "vec_id", "embedding",
+    val served = pairs(Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 5, nprobe = 3))
     val recall = Similarity.recallAgainst(exact, served, 5).head.getDouble(1)
     // 8 bytes of payload per dim-64 vector is a LOSSY proposal tier, and
@@ -590,17 +622,18 @@ class LlmSpec extends AnyFunSuite {
     // the refine pass below as the exact remedy.
     assert(recall >= 0.2, s"PQ raw recall $recall below the sanity floor")
     val dirSmall = java.nio.file.Files.createTempDirectory("graft_ivfpqs").toString
-    Similarity.saveIvfIndexPQ(embs, "vec_id", "embedding", dirSmall,
-      nlist = 8, pqM = 8, pqK = 8, centroids = Some(cents))
+    Similarity.saveIvf(embs, "vec_id", "embedding", dirSmall,
+      IvfTier.Pq(m = 8, k = 8),
+      nlist = 8, centroids = Some(cents))
     val recallSmall = Similarity.recallAgainst(exact,
-      pairs(Similarity.ivfTopKPQ(q, dirSmall, "vec_id", "embedding",
+      pairs(Similarity.ivfServe(q, dirSmall, "vec_id", "embedding",
         k = 5, nprobe = 3)), 5).head.getDouble(1)
     assert(recall > recallSmall,
       s"recall must grow with codebook size: k=64 $recall vs k=8 $recallSmall")
     // storage: PQ corpus bytes well under the SQ8 corpus (codes are
     // m bytes vs dim bytes + per-row params)
     val qdir = java.nio.file.Files.createTempDirectory("graft_ivfpq8").toString
-    Similarity.saveIvfIndexQuantized(embs, "vec_id", "embedding", qdir,
+    Similarity.saveIvf(embs, "vec_id", "embedding", qdir, IvfTier.Sq8,
       nlist = 8, centroids = Some(cents))
     def corpusBytes(d: String) = {
       def walk(f: java.io.File): Long =
@@ -611,9 +644,9 @@ class LlmSpec extends AnyFunSuite {
       s"PQ ${corpusBytes(dir)} vs SQ8 ${corpusBytes(qdir)}")
     // full-width refine: exact rescoring decides every rank → equals the
     // exact scan, scores included, regardless of the proposal tier
-    val refined = Similarity.ivfTopKPQRefined(q, dir, embs, "vec_id",
+    val refined = Similarity.ivfServe(q, dir, "vec_id",
         "embedding", k = 5, nprobe = 8,
-        refineFactor = embs.count().toInt / 5 + 1)
+        refine = Some(IvfRefine(embs, embs.count().toInt / 5 + 1)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val exactRows = Similarity.cosineTopK(q, embs, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -624,14 +657,15 @@ class LlmSpec extends AnyFunSuite {
       embs.filter(col("vec_id") % 2 === 0), "embedding", 8, 16)
     val gdir = java.nio.file.Files.createTempDirectory("graft_ivfpqg").toString
     val fdir = java.nio.file.Files.createTempDirectory("graft_ivfpqf").toString
-    Similarity.saveIvfIndexPQ(embs.filter(col("vec_id") % 2 === 0),
-      "vec_id", "embedding", gdir, nlist = 8, centroids = Some(cents),
-      codebooks = Some(cbs))
+    Similarity.saveIvf(embs.filter(col("vec_id") % 2 === 0),
+      "vec_id", "embedding", gdir, IvfTier.Pq(codebooks = Some(cbs)), nlist = 8,
+      centroids = Some(cents))
     Similarity.appendIvfIndex(embs.filter(col("vec_id") % 2 =!= 0),
       "vec_id", "embedding", gdir, Some("b3"))
-    Similarity.saveIvfIndexPQ(embs, "vec_id", "embedding", fdir, nlist = 8,
-      centroids = Some(cents), codebooks = Some(cbs))
-    def full(d: String) = Similarity.ivfTopKPQ(q, d, "vec_id", "embedding",
+    Similarity.saveIvf(embs, "vec_id", "embedding", fdir,
+      IvfTier.Pq(codebooks = Some(cbs)),
+      nlist = 8, centroids = Some(cents))
+    def full(d: String) = Similarity.ivfServe(q, d, "vec_id", "embedding",
         5, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val grown = full(gdir)
@@ -666,8 +700,8 @@ class LlmSpec extends AnyFunSuite {
       (1L, Array.tabulate(8)(j => if (j % 2 == 1) 1f else 0f)))
       .toDF("cell", "_cv")
     val dir = java.nio.file.Files.createTempDirectory("graft_pqdrift").toString
-    Similarity.saveIvfIndexPQ(a, "vec_id", "embedding", dir, nlist = 2,
-      pqM = 4, pqK = 4, centroids = Some(cents))
+    Similarity.saveIvf(a, "vec_id", "embedding", dir, IvfTier.Pq(m = 4, k = 4),
+      nlist = 2, centroids = Some(cents))
     def stats() = Similarity.pqIndexStats(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val s0 = stats()
@@ -685,7 +719,7 @@ class LlmSpec extends AnyFunSuite {
     // even-component centroids, so every ADC dot against the query's odd
     // components is ~0 — the measurable recall rot behind the alarm
     val q = b.filter(col("vec_id") === 100L)
-    def top1Cos() = Similarity.ivfTopKPQ(q, dir, "vec_id", "embedding",
+    def top1Cos() = Similarity.ivfServe(q, dir, "vec_id", "embedding",
       k = 1, nprobe = 2).head.getDouble(2)
     assert(math.abs(top1Cos()) < 0.1, "drifted codebooks flatten B scores")
     // refresh: retrain on the full-precision source of truth, same coarse
@@ -727,10 +761,12 @@ class LlmSpec extends AnyFunSuite {
     }.toDF("cell", "_cv")
     val plainDir = java.nio.file.Files.createTempDirectory("graft_pqp").toString
     val resDir = java.nio.file.Files.createTempDirectory("graft_pqr").toString
-    Similarity.saveIvfIndexPQ(corpus, "vec_id", "embedding", plainDir,
-      nlist = 4, pqM = 4, pqK = 2, centroids = Some(cents))
-    Similarity.saveIvfIndexPQ(corpus, "vec_id", "embedding", resDir,
-      nlist = 4, pqM = 4, pqK = 2, centroids = Some(cents), residual = true)
+    Similarity.saveIvf(corpus, "vec_id", "embedding", plainDir,
+      IvfTier.Pq(m = 4, k = 2),
+      nlist = 4, centroids = Some(cents))
+    Similarity.saveIvf(corpus, "vec_id", "embedding", resDir,
+      IvfTier.Pq(m = 4, k = 2, residual = true),
+      nlist = 4, centroids = Some(cents))
     def meanErr(d: String) = Similarity.pqIndexStats(spark, d)
       .filter(col("source") === "base").head.getDouble(2)
     assert(meanErr(resDir) < 1e-3,
@@ -742,7 +778,7 @@ class LlmSpec extends AnyFunSuite {
     val q = corpus.filter(col("vec_id") < 8)
     val exact = Similarity.cosineTopK(q, corpus, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6))).toSet
-    val raw = Similarity.ivfTopKPQ(q, resDir, "vec_id", "embedding",
+    val raw = Similarity.ivfServe(q, resDir, "vec_id", "embedding",
         k = 3, nprobe = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6))).toSet
     assert(raw === exact, "zero-error residual codes serve the exact ranking")
@@ -751,12 +787,12 @@ class LlmSpec extends AnyFunSuite {
     // split by id RANGE: an even/odd split would correlate with the
     // offset sign and train the codebooks on half the residual alphabet
     val gdir = java.nio.file.Files.createTempDirectory("graft_pqrg").toString
-    Similarity.saveIvfIndexPQ(corpus.filter(col("vec_id") < 100),
-      "vec_id", "embedding", gdir, nlist = 4, pqM = 4, pqK = 2,
-      centroids = Some(cents), residual = true)
+    Similarity.saveIvf(corpus.filter(col("vec_id") < 100),
+      "vec_id", "embedding", gdir, IvfTier.Pq(m = 4, k = 2, residual = true),
+      nlist = 4, centroids = Some(cents))
     Similarity.appendIvfIndex(corpus.filter(col("vec_id") >= 100),
       "vec_id", "embedding", gdir, Some("b1"))
-    def serve(d: String) = Similarity.ivfTopKPQ(q, d, "vec_id", "embedding",
+    def serve(d: String) = Similarity.ivfServe(q, d, "vec_id", "embedding",
         3, 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6))).toSet
     val grown = serve(gdir)
@@ -804,10 +840,12 @@ class LlmSpec extends AnyFunSuite {
     }.toDF("cell", "_cv")
     val sharedDir = java.nio.file.Files.createTempDirectory("graft_pqs").toString
     val localDir = java.nio.file.Files.createTempDirectory("graft_pql").toString
-    Similarity.saveIvfIndexPQ(corpus, "vec_id", "embedding", sharedDir,
-      nlist = 4, pqM = 4, pqK = 2, centroids = Some(cents), residual = true)
-    Similarity.saveIvfIndexPQ(corpus, "vec_id", "embedding", localDir,
-      nlist = 4, pqM = 4, pqK = 2, centroids = Some(cents), perCell = true)
+    Similarity.saveIvf(corpus, "vec_id", "embedding", sharedDir,
+      IvfTier.Pq(m = 4, k = 2, residual = true),
+      nlist = 4, centroids = Some(cents))
+    Similarity.saveIvf(corpus, "vec_id", "embedding", localDir,
+      IvfTier.Pq(m = 4, k = 2, perCell = true),
+      nlist = 4, centroids = Some(cents))
     def meanErr(d: String) = Similarity.pqIndexStats(spark, d)
       .filter(col("source") === "base").head.getDouble(2)
     assert(meanErr(localDir) < 1e-3,
@@ -820,7 +858,7 @@ class LlmSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
       .toSet
-    def serve(d: String) = Similarity.ivfTopKPQ(q, d, "vec_id", "embedding",
+    def serve(d: String) = Similarity.ivfServe(q, d, "vec_id", "embedding",
         3, 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
       .toSet
@@ -829,9 +867,9 @@ class LlmSpec extends AnyFunSuite {
     // append-grown ≡ full save: _PQLOCAL routes delivery encoding through
     // the stored CELL's codebooks (range split — see the residual test)
     val gdir = java.nio.file.Files.createTempDirectory("graft_pqlg").toString
-    Similarity.saveIvfIndexPQ(corpus.filter(col("vec_id") < 100),
-      "vec_id", "embedding", gdir, nlist = 4, pqM = 4, pqK = 2,
-      centroids = Some(cents), perCell = true)
+    Similarity.saveIvf(corpus.filter(col("vec_id") < 100),
+      "vec_id", "embedding", gdir, IvfTier.Pq(m = 4, k = 2, perCell = true),
+      nlist = 4, centroids = Some(cents))
     Similarity.appendIvfIndex(corpus.filter(col("vec_id") >= 100),
       "vec_id", "embedding", gdir, Some("b1"))
     val grown = serve(gdir)
@@ -917,11 +955,12 @@ class LlmSpec extends AnyFunSuite {
       m = 4, k = 4, iters = 40, maxTrainRows = 256).localCheckpoint()
     val idDir = java.nio.file.Files.createTempDirectory("graft_opq_id").toString
     val rotDir = java.nio.file.Files.createTempDirectory("graft_opq_r").toString
-    Similarity.saveIvfIndexPQ(corpus, "vec_id", "embedding", idDir,
-      nlist = 1, pqM = 4, pqK = 4, centroids = Some(cents))
-    Similarity.saveIvfIndexPQ(corpus, "vec_id", "embedding", rotDir,
-      nlist = 1, pqM = 4, pqK = 4, centroids = Some(cents),
-      rotation = Some(rot))
+    Similarity.saveIvf(corpus, "vec_id", "embedding", idDir,
+      IvfTier.Pq(m = 4, k = 4),
+      nlist = 1, centroids = Some(cents))
+    Similarity.saveIvf(corpus, "vec_id", "embedding", rotDir,
+      IvfTier.Pq(m = 4, k = 4, rotation = Some(rot)),
+      nlist = 1, centroids = Some(cents))
     def meanErr(dd: String) = Similarity.pqIndexStats(spark, dd)
       .filter(col("source") === "base").head.getDouble(2)
     val (eId, eRot) = (meanErr(idDir), meanErr(rotDir))
@@ -930,13 +969,14 @@ class LlmSpec extends AnyFunSuite {
         s"identity=$eId rotated=$eRot")
     // append-grown ≡ full save through the rotated encode path
     val gdir = java.nio.file.Files.createTempDirectory("graft_opq_g").toString
-    Similarity.saveIvfIndexPQ(corpus.filter(col("vec_id") < 128),
-      "vec_id", "embedding", gdir, nlist = 1, pqM = 4, pqK = 4,
-      centroids = Some(cents), rotation = Some(rot))
+    Similarity.saveIvf(corpus.filter(col("vec_id") < 128),
+      "vec_id", "embedding", gdir,
+      IvfTier.Pq(m = 4, k = 4, rotation = Some(rot)),
+      nlist = 1, centroids = Some(cents))
     Similarity.appendIvfIndex(corpus.filter(col("vec_id") >= 128),
       "vec_id", "embedding", gdir, Some("b1"))
     val qs = corpus.filter(col("vec_id") < 8)
-    def serve(dd: String) = Similarity.ivfTopKPQ(qs, dd, "vec_id",
+    def serve(dd: String) = Similarity.ivfServe(qs, dd, "vec_id",
         "embedding", 3, 1).collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
       .toSet
@@ -947,9 +987,10 @@ class LlmSpec extends AnyFunSuite {
     val storedCbs = spark.read.parquet(s"$gdir/v1/codebooks")
       .localCheckpoint()
     val fdir = java.nio.file.Files.createTempDirectory("graft_opq_f").toString
-    Similarity.saveIvfIndexPQ(corpus, "vec_id", "embedding", fdir,
-      nlist = 1, pqM = 4, pqK = 4, centroids = Some(cents),
-      codebooks = Some(storedCbs), rotation = Some(rot))
+    Similarity.saveIvf(corpus, "vec_id", "embedding", fdir,
+      IvfTier.Pq(m = 4, k = 4, codebooks = Some(storedCbs),
+      rotation = Some(rot)),
+      nlist = 1, centroids = Some(cents))
     assert(serve(gdir) === serve(fdir),
       "append-grown rotated index serves the explicit-codebook full save")
     // compaction and refresh carry the rotation artifacts
@@ -968,8 +1009,8 @@ class LlmSpec extends AnyFunSuite {
     val n = 256
     val exact = Similarity.cosineTopK(qs, corpus, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val refined = Similarity.ivfTopKPQRefined(qs, gdir, corpus, "vec_id",
-        "embedding", 3, 1, refineFactor = n / 3 + 1)
+    val refined = Similarity.ivfServe(qs, gdir, "vec_id",
+        "embedding", 3, 1, refine = Some(IvfRefine(corpus, n / 3 + 1)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(refined === exact)
   }
@@ -996,9 +1037,10 @@ class LlmSpec extends AnyFunSuite {
         when(j === lit(7) - col("id").cast("int"), lit(1.0f))
           .otherwise(lit(0.0f))).as("_rv"))
     val dir = java.nio.file.Files.createTempDirectory("graft_pqlr").toString
-    Similarity.saveIvfIndexPQ(corpus.filter(col("vec_id") < 100),
-      "vec_id", "embedding", dir, nlist = 4, pqM = 4, pqK = 2,
-      centroids = Some(cents), perCell = true, rotation = Some(rot))
+    Similarity.saveIvf(corpus.filter(col("vec_id") < 100),
+      "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 4, k = 2, perCell = true, rotation = Some(rot)),
+      nlist = 4, centroids = Some(cents))
     assert(IvfManifest.read(spark, s"$dir/v1").flavor ===
       IvfFlavor.Pq(residual = true, perCell = true, rotated = true))
     Similarity.appendIvfIndex(corpus.filter(col("vec_id") >= 100),
@@ -1014,7 +1056,7 @@ class LlmSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
       .toSet
-    val raw = Similarity.ivfTopKPQ(q, dir, "vec_id", "embedding", 3, 4)
+    val raw = Similarity.ivfServe(q, dir, "vec_id", "embedding", 3, 4)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
       .toSet
@@ -1041,9 +1083,10 @@ class LlmSpec extends AnyFunSuite {
           .otherwise(lit(0.0f))).as("_rv"))
     val flavor = IvfFlavor.Pq(residual = true, perCell = true, rotated = true)
     val dir = java.nio.file.Files.createTempDirectory("graft_pqleg").toString
-    Similarity.saveIvfIndexPQ(corpus.filter(col("vec_id") < 100),
-      "vec_id", "embedding", dir, nlist = 4, pqM = 4, pqK = 2,
-      centroids = Some(cents), perCell = true, rotation = Some(rot))
+    Similarity.saveIvf(corpus.filter(col("vec_id") < 100),
+      "vec_id", "embedding", dir,
+      IvfTier.Pq(m = 4, k = 2, perCell = true, rotation = Some(rot)),
+      nlist = 4, centroids = Some(cents))
     assert(new java.io.File(s"$dir/v1").list().filterNot(_.startsWith("."))
       .toSet === Set("corpus", "centroids", "codebooks", "rotation",
         "_MANIFEST", "_COMMIT"))
@@ -1051,7 +1094,7 @@ class LlmSpec extends AnyFunSuite {
     Similarity.appendIvfIndex(b1, "vec_id", "embedding", dir, Some("b1"))
     Similarity.compactIvfIndex(spark, dir)
     val q = corpus.filter(col("vec_id") < 8)
-    def serve() = Similarity.ivfTopKPQ(q, dir, "vec_id", "embedding", 3, 4)
+    def serve() = Similarity.ivfServe(q, dir, "vec_id", "embedding", 3, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val before = serve()
     // rewrite v2 into the pre-manifest layout: markers plus the ledger
@@ -1143,9 +1186,9 @@ class LlmSpec extends AnyFunSuite {
     }.toDF("cell", "_cv")
     val dir = java.nio.file.Files.createTempDirectory("graft_pqle").toString
     // save WITHOUT cell 3's rows: its codebook is the zero fallback
-    Similarity.saveIvfIndexPQ(corpus.filter(col("vec_id") % 4 =!= 3),
-      "vec_id", "embedding", dir, nlist = 4, pqM = 4, pqK = 2,
-      centroids = Some(cents), perCell = true)
+    Similarity.saveIvf(corpus.filter(col("vec_id") % 4 =!= 3),
+      "vec_id", "embedding", dir, IvfTier.Pq(m = 4, k = 2, perCell = true),
+      nlist = 4, centroids = Some(cents))
     val storedCells = spark.read.parquet(s"$dir/v1/codebooks")
       .select("cell").distinct().collect().map(_.getInt(0)).toSet
     assert(storedCells === Set(0, 1, 2, 3),
@@ -1162,7 +1205,7 @@ class LlmSpec extends AnyFunSuite {
     assert(st("base") < 1e-3 && st("deltab1") > 0.37 && st("deltab1") < 0.38,
       s"zero-codebook encodes at the residual-norm error: $st")
     val q = corpus.filter(col("vec_id") === 3)
-    val raw = Similarity.ivfTopKPQ(q, dir, "vec_id", "embedding", 3, 1)
+    val raw = Similarity.ivfServe(q, dir, "vec_id", "embedding", 3, 1)
       .collect()
     assert(raw.nonEmpty && raw.forall(_.getLong(1) % 4 === 3),
       "the once-empty cell serves its appended rows")
@@ -1170,8 +1213,8 @@ class LlmSpec extends AnyFunSuite {
     val exact = Similarity.cosineTopK(q, corpus.filter(col("vec_id") % 4 === 3),
         "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val refined = Similarity.ivfTopKPQRefined(q, dir, corpus, "vec_id",
-        "embedding", 3, 1, refineFactor = 20)
+    val refined = Similarity.ivfServe(q, dir, "vec_id",
+        "embedding", 3, 1, refine = Some(IvfRefine(corpus, 20)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(refined === exact)
   }
@@ -1181,8 +1224,9 @@ class LlmSpec extends AnyFunSuite {
     val cents = embs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
     val dir = java.nio.file.Files.createTempDirectory("graft_pqleg").toString
-    Similarity.saveIvfIndexPQ(embs.filter(col("vec_id") % 2 === 0), "vec_id",
-      "embedding", dir, nlist = 8, pqM = 8, pqK = 16, centroids = Some(cents))
+    Similarity.saveIvf(embs.filter(col("vec_id") % 2 === 0), "vec_id",
+      "embedding", dir, IvfTier.Pq(m = 8, k = 16), nlist = 8,
+      centroids = Some(cents))
     // simulate a pre-_qerr base: rewrite the base corpus without the column
     val base = s"$dir/v1/corpus"
     val legacy = spark.read.parquet(base).drop("_qerr").localCheckpoint()
@@ -1194,7 +1238,7 @@ class LlmSpec extends AnyFunSuite {
       "embedding", dir, Some("b1"))
     // mixed schema serves (allowMissingColumns union), new delta is stamped
     val q = embs.filter(col("vec_id") < 10)
-    assert(Similarity.ivfTopKPQ(q, dir, "vec_id", "embedding", 5, 3)
+    assert(Similarity.ivfServe(q, dir, "vec_id", "embedding", 5, 3)
       .count() > 0)
     val st = Similarity.pqIndexStats(spark, dir).collect()
       .map(r => r.getString(0) -> Option(r.get(2))).toMap
@@ -1208,16 +1252,18 @@ class LlmSpec extends AnyFunSuite {
       .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
     val cbs = Similarity.trainPqCodebooks(embs, "embedding", 8, 16)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpqe").toString
-    Similarity.saveIvfIndexPQ(embs.filter(lit(false)), "vec_id", "embedding",
-      dir, nlist = 8, centroids = Some(cents), codebooks = Some(cbs))
+    Similarity.saveIvf(embs.filter(lit(false)), "vec_id", "embedding",
+      dir, IvfTier.Pq(codebooks = Some(cbs)), nlist = 8,
+      centroids = Some(cents))
     val q = embs.filter(col("vec_id") < 10)
-    assert(Similarity.ivfTopKPQ(q, dir, "vec_id", "embedding", 5, 8)
+    assert(Similarity.ivfServe(q, dir, "vec_id", "embedding", 5, 8)
       .count() === 0L, "empty-seeded PQ index serves empty")
     Similarity.appendIvfIndex(embs, "vec_id", "embedding", dir, Some("b1"))
     val fdir = java.nio.file.Files.createTempDirectory("graft_ivfpqef").toString
-    Similarity.saveIvfIndexPQ(embs, "vec_id", "embedding", fdir, nlist = 8,
-      centroids = Some(cents), codebooks = Some(cbs))
-    def rows(d: String) = Similarity.ivfTopKPQ(q, d, "vec_id", "embedding",
+    Similarity.saveIvf(embs, "vec_id", "embedding", fdir,
+      IvfTier.Pq(codebooks = Some(cbs)),
+      nlist = 8, centroids = Some(cents))
+    def rows(d: String) = Similarity.ivfServe(q, d, "vec_id", "embedding",
         5, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rows(dir) === rows(fdir),
@@ -1229,7 +1275,7 @@ class LlmSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfqs").toString
     val cents = embs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
-    Similarity.saveIvfIndexQuantized(embs, "vec_id", "embedding", dir,
+    Similarity.saveIvf(embs, "vec_id", "embedding", dir, IvfTier.Sq8,
       nlist = 8, centroids = Some(cents))
     val q = embs.filter(col("vec_id") < 10)
     // refine store covering fewer rows than k — exact rescores rank
@@ -1237,9 +1283,9 @@ class LlmSpec extends AnyFunSuite {
     // rows only surface to FILL the k; with 3 refinable ids and k = 5
     // every query must show both kinds, flagged
     val stale = embs.filter(col("vec_id") < 3)
-    val out = Similarity.ivfTopKQuantizedRefined(q, dir, stale,
+    val out = Similarity.ivfServe(q, dir,
         "vec_id", "embedding", k = 5, nprobe = 8,
-        refineFactor = embs.count().toInt / 5 + 1)
+        refine = Some(IvfRefine(stale, embs.count().toInt / 5 + 1)))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
     assert(out.exists(!_._4), "odd-id neighbors must surface as fallback")
@@ -1251,9 +1297,9 @@ class LlmSpec extends AnyFunSuite {
         s"query $qid mixes fallback rows into the exact prefix")
     }
     // full-coverage refine flags every row refined=true
-    val fullCov = Similarity.ivfTopKQuantizedRefined(q, dir, embs,
+    val fullCov = Similarity.ivfServe(q, dir,
         "vec_id", "embedding", k = 5, nprobe = 8,
-        refineFactor = embs.count().toInt / 5 + 1)
+        refine = Some(IvfRefine(embs, embs.count().toInt / 5 + 1)))
       .collect().map(_.getBoolean(3))
     assert(fullCov.nonEmpty && fullCov.forall(identity))
   }
@@ -1265,7 +1311,7 @@ class LlmSpec extends AnyFunSuite {
       .select(col("vec_id").as("cell"), col("embedding").as("_cv"))
     val half1 = embs.filter(col("vec_id") % 2 === 0)
     val half2 = embs.filter(col("vec_id") % 2 =!= 0)
-    Similarity.saveIvfIndexQuantized(half1, "vec_id", "embedding", dir,
+    Similarity.saveIvf(half1, "vec_id", "embedding", dir, IvfTier.Sq8,
       nlist = 8, centroids = Some(cents))
     // simulate a pre-marker release's index: delete the flavor marker
     val marker = new java.io.File(s"$dir/v1/_MANIFEST")
@@ -1277,10 +1323,10 @@ class LlmSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val fullDir = java.nio.file.Files.createTempDirectory("graft_ivfqf").toString
-    Similarity.saveIvfIndexQuantized(embs, "vec_id", "embedding", fullDir,
+    Similarity.saveIvf(embs, "vec_id", "embedding", fullDir, IvfTier.Sq8,
       nlist = 8, centroids = Some(cents))
-    assert(pairs(Similarity.ivfTopKQuantized(q, dir, "vec_id", "embedding", 5, 3))
-      === pairs(Similarity.ivfTopKQuantized(q, fullDir, "vec_id", "embedding", 5, 3)),
+    assert(pairs(Similarity.ivfServe(q, dir, "vec_id", "embedding", 5, 3))
+      === pairs(Similarity.ivfServe(q, fullDir, "vec_id", "embedding", 5, 3)),
       "legacy append-grown index must serve the full-save result")
     Similarity.compactIvfIndex(spark, dir)
     assert(new java.io.File(s"$dir/v2/_MANIFEST").exists() &&
@@ -1297,14 +1343,14 @@ class LlmSpec extends AnyFunSuite {
     // zero rows + external centroids: no readable corpus schema — the
     // case where schema inference would misread the index as float and a
     // committed float delta would brick every later quantized read
-    Similarity.saveIvfIndexQuantized(embs.limit(0), "vec_id", "embedding",
-      dir, nlist = 8, centroids = Some(cents))
+    Similarity.saveIvf(embs.limit(0), "vec_id", "embedding",
+      dir, IvfTier.Sq8, nlist = 8, centroids = Some(cents))
     Similarity.appendIvfIndex(embs, "vec_id", "embedding", dir, Some("b0"))
     val fdir = java.nio.file.Files.createTempDirectory("graft_ivfqf").toString
-    Similarity.saveIvfIndexQuantized(embs, "vec_id", "embedding", fdir,
+    Similarity.saveIvf(embs, "vec_id", "embedding", fdir, IvfTier.Sq8,
       nlist = 8, centroids = Some(cents))
     val q = embs.filter(col("vec_id") < 50)
-    def full(d: String) = Similarity.ivfTopKQuantized(q, d, "vec_id",
+    def full(d: String) = Similarity.ivfServe(q, d, "vec_id",
         "embedding", k = 5, nprobe = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(full(dir) === full(fdir),
@@ -1316,33 +1362,34 @@ class LlmSpec extends AnyFunSuite {
     def versions = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.toSeq
     val vid = col("vec_id")
-    Similarity.saveIvfIndex(embs.filter(vid % 2 === 0), "vec_id", "embedding",
-      dir, nlist = 8)
+    Similarity.saveIvf(embs.filter(vid % 2 === 0), "vec_id", "embedding",
+      dir, IvfTier.Float, nlist = 8)
     // rebuild with retain=1: the version a concurrent query batch may
     // still be scanning survives until the NEXT save
-    Similarity.saveIvfIndex(embs, "vec_id", "embedding", dir, nlist = 8,
-      retain = 1)
+    Similarity.saveIvf(embs, "vec_id", "embedding", dir, IvfTier.Float,
+      nlist = 8, retain = 1)
     assert(versions === Seq("v1", "v2"), s"retain=1 must keep v1: $versions")
     // serving resolves the newest committed version
     val q = embs.filter(vid % 37 === 0)
-    val v2Rows = Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding", 5, 3)
+    val v2Rows = Similarity.ivfServe(q, dir, "vec_id", "embedding", 5, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cents = Similarity.ivfCentroids(spark, dir).localCheckpoint(true)
     val live = Similarity.ivfTopK(q, embs, cents, "vec_id", "embedding", 5, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(v2Rows === live, "serve-newest must hold with retained versions")
-    Similarity.saveIvfIndex(embs, "vec_id", "embedding", dir, nlist = 8,
-      retain = 1)
+    Similarity.saveIvf(embs, "vec_id", "embedding", dir, IvfTier.Float,
+      nlist = 8, retain = 1)
     assert(versions === Seq("v2", "v3"), s"next save must sweep v1: $versions")
     // quantized save path: same contract
     val qdir = java.nio.file.Files.createTempDirectory("graft_ivfqret").toString
     def qversions = new java.io.File(qdir).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.toSeq
-    Similarity.saveIvfIndexQuantized(embs, "vec_id", "embedding", qdir, nlist = 8)
-    Similarity.saveIvfIndexQuantized(embs, "vec_id", "embedding", qdir,
+    Similarity.saveIvf(embs, "vec_id", "embedding", qdir, IvfTier.Sq8,
+      nlist = 8)
+    Similarity.saveIvf(embs, "vec_id", "embedding", qdir, IvfTier.Sq8,
       nlist = 8, retain = 1)
     assert(qversions === Seq("v1", "v2"))
-    Similarity.saveIvfIndexQuantized(embs, "vec_id", "embedding", qdir,
+    Similarity.saveIvf(embs, "vec_id", "embedding", qdir, IvfTier.Sq8,
       nlist = 8, retain = 1)
     assert(qversions === Seq("v2", "v3"))
   }
@@ -1352,8 +1399,8 @@ class LlmSpec extends AnyFunSuite {
     val vid = col("vec_id")
     def versions = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.toSeq
-    Similarity.saveIvfIndex(embs.filter(vid % 3 === 0), "vec_id", "embedding",
-      dir, nlist = 8)
+    Similarity.saveIvf(embs.filter(vid % 3 === 0), "vec_id", "embedding",
+      dir, IvfTier.Float, nlist = 8)
     Similarity.appendIvfIndex(embs.filter(vid % 3 === 1), "vec_id", "embedding", dir)
     Similarity.compactIvfIndex(spark, dir, retain = 1)
     assert(versions === Seq("v1", "v2"),
@@ -1364,7 +1411,7 @@ class LlmSpec extends AnyFunSuite {
     val grown = embs.filter(vid % 3 === 0).union(embs.filter(vid % 3 === 1))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(Similarity.ivfTopKIndexed(q, dir, "vec_id", "embedding", 5, 3))
+    assert(rows(Similarity.ivfServe(q, dir, "vec_id", "embedding", 5, 3))
       === rows(Similarity.ivfTopK(q, grown, cents, "vec_id", "embedding", 5, 3)))
     // the next fold retains v2 and sweeps v1
     Similarity.appendIvfIndex(embs.filter(vid % 3 === 2), "vec_id", "embedding", dir)

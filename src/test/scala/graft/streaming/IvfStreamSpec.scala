@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.{Tables, TestSpark}
-import graft.llm.Similarity
+import graft.llm.{IvfTier, Similarity}
 
 /** The IVF ingest poller must serve, after every poll, exactly what the
   * live IVF path computes over the accumulated corpus with the STORED
@@ -25,13 +25,14 @@ class IvfStreamSpec extends AnyFunSuite {
     val base = embs.filter(vid % 4 === 0)
     val deliveries = (1 to 3).map(m => embs.filter(vid % 4 === m))
     val q = embs.filter(vid % 37 === 0)
-    Similarity.saveIvfIndex(base, "vec_id", "embedding", index, nlist = 8)
+    Similarity.saveIvf(base, "vec_id", "embedding", index, IvfTier.Float,
+      nlist = 8)
     // eager: later compactions sweep v1's files out from under a lazy plan
     val cents = Similarity.ivfCentroids(spark, index).localCheckpoint(true)
     def live(corpus: org.apache.spark.sql.DataFrame) = rows(
       Similarity.ivfTopK(q, corpus, cents, "vec_id", "embedding", k = 5, nprobe = 3))
     def served() = rows(
-      Similarity.ivfTopKIndexed(q, index, "vec_id", "embedding", k = 5, nprobe = 3))
+      Similarity.ivfServe(q, index, "vec_id", "embedding", k = 5, nprobe = 3))
 
     // poll 1: one delivery, no compaction yet (compactEvery = 2 → folds
     // on batch ids 1, 3, …)
@@ -93,7 +94,7 @@ class IvfStreamSpec extends AnyFunSuite {
     val base = embs.filter(vid % 4 === 0)
     val deliveries = (1 to 3).map(m => embs.filter(vid % 4 === m))
     val q = embs.filter(vid % 37 === 0)
-    Similarity.saveIvfIndexQuantized(base, "vec_id", "embedding", index,
+    Similarity.saveIvf(base, "vec_id", "embedding", index, IvfTier.Sq8,
       nlist = 8)
     val cents = Similarity.ivfCentroids(spark, index).localCheckpoint(true)
     // the parity reference: quantize the WHOLE accumulated corpus in one
@@ -102,12 +103,12 @@ class IvfStreamSpec extends AnyFunSuite {
     // must serve bit-identically
     def rebuilt(corpus: org.apache.spark.sql.DataFrame) = {
       val d = java.nio.file.Files.createTempDirectory("graft_ivfqref").toString
-      Similarity.saveIvfIndexQuantized(corpus, "vec_id", "embedding", d,
+      Similarity.saveIvf(corpus, "vec_id", "embedding", d, IvfTier.Sq8,
         nlist = 8, centroids = Some(cents))
-      rows(Similarity.ivfTopKQuantized(q, d, "vec_id", "embedding", 5, 3))
+      rows(Similarity.ivfServe(q, d, "vec_id", "embedding", 5, 3))
     }
     def served() = rows(
-      Similarity.ivfTopKQuantized(q, index, "vec_id", "embedding", 5, 3))
+      Similarity.ivfServe(q, index, "vec_id", "embedding", 5, 3))
 
     deliveries(0).write.parquet(s"$landing/d0")
     IvfStream.pollAppend(spark, landing, index, work, compactEvery = 2)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import graft.llm.{Gates, Similarity}
+import graft.llm.{Gates, IvfTier, Similarity}
 
 /** The composed dedup→index ingest loop: after every poll the ANN index
   * must contain EXACTLY the cluster representatives accumulated so far —
@@ -44,14 +44,15 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select("doc_id", "embedding")
+    Similarity.saveIvf(delivery().select("doc_id", "embedding")
         .withColumnRenamed("doc_id", "vec_id"),
-      "vec_id", "embedding", index, nlist = 4, centroids = Some(cents))
+      "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
+      centroids = Some(cents))
 
     // all indexed ids, via a full-probe serve (k and nprobe large enough
     // to return the whole corpus)
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 
@@ -108,11 +109,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
       centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 
@@ -174,11 +175,12 @@ class PipelineStreamSpec extends AnyFunSuite {
     })).toDF("cell", "_cv")
     // empty-seeded QUANTIZED index: the marker (written over zero corpus
     // rows) is the only record of the flavor — ingest must quantize
-    Similarity.saveIvfIndexQuantized(delivery().select(
+    Similarity.saveIvf(delivery().select(
         col("doc_id").as("vec_id"), col("embedding")),
-      "vec_id", "embedding", index, nlist = 4, centroids = Some(cents))
+      "vec_id", "embedding", index, IvfTier.Sq8, nlist = 4,
+      centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKQuantized(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(indexedIds() === Set.empty, "empty-seeded quantized index serves empty")
@@ -228,12 +230,12 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cbs = (0 until 4).flatMap(m => (0 until 4).map { c =>
       val a = new Array[Float](2); a(c % 2) = c.toFloat; (m, c, a)
     }).toDF("m", "code", "_cbv")
-    Similarity.saveIvfIndexPQ(delivery().select(
+    Similarity.saveIvf(delivery().select(
         col("doc_id").as("vec_id"), col("embedding")),
-      "vec_id", "embedding", index, nlist = 4, centroids = Some(cents),
-      codebooks = Some(cbs))
+      "vec_id", "embedding", index, IvfTier.Pq(codebooks = Some(cbs)),
+      nlist = 4, centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKPQ(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(indexedIds() === Set.empty, "empty-seeded PQ index serves empty")
@@ -280,11 +282,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-        col("embedding")), "vec_id", "embedding", index, nlist = 4,
-      centroids = Some(cents))
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+        col("embedding")), "vec_id", "embedding", index, IvfTier.Float,
+        nlist = 4, centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     // DedupStreamSpec's bridge-chain corpus: A_k/B_k distinct until
@@ -328,11 +330,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
       centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 
@@ -401,11 +403,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
       centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 
@@ -462,11 +464,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
       centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 
@@ -541,11 +543,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
       centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 
@@ -588,11 +590,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
       centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 
@@ -644,8 +646,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
       centroids = Some(cents))
 
     // 80-token documents over a shared vocabulary: the clean ones pass
@@ -715,11 +717,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
       centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 
@@ -760,11 +762,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     val cents = (0L until 4L).map(c => (c, {
       val a = new Array[Float](8); a(c.toInt * 2) = 1.0f; a
     })).toDF("cell", "_cv")
-    Similarity.saveIvfIndex(delivery().select(col("doc_id").as("vec_id"),
-      col("embedding")), "vec_id", "embedding", index, nlist = 4,
+    Similarity.saveIvf(delivery().select(col("doc_id").as("vec_id"),
+      col("embedding")), "vec_id", "embedding", index, IvfTier.Float, nlist = 4,
       centroids = Some(cents))
     val probe = Seq((999999L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    def indexedIds() = Similarity.ivfTopKIndexed(probe, index, "vec_id",
+    def indexedIds() = Similarity.ivfServe(probe, index, "vec_id",
         "embedding", k = 1000, nprobe = 4)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 
