@@ -47,6 +47,13 @@ object Tables {
     // scale splits should track row groups, not raw compressed bytes.
     .config("spark.sql.files.openCostInBytes",
       sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", String.valueOf(256 * 1024)))
+    // Generated classes are cached per JVM in an LRU of 100 entries by
+    // default. A handful of graft queries generate more than 100 between
+    // them, so each pass evicts the next query's classes and compiles them
+    // all again (25–46 compiles per warm pass of four queries); 1000
+    // entries keep a warm pass at zero. Static: read when the first class
+    // is generated.
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   /** Inferred schema per table path, memoized for the JVM: the driver's
     * synthetic tables are immutable test fixtures, and every

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.behavior.Detectors
 import graft.behavior.Detectors.{FightEvent, FightParams}
@@ -11,71 +11,86 @@ import scala.collection.mutable.ArrayBuffer
 
 /** End-to-end INCREMENTAL fight detection — the reference's operational
   * mode (`combine_pose_id_automated.py:149-185`: a 30-minute polling loop
-  * over newly-landed chunk files), rebuilt on Structured Streaming as a
-  * three-stage medallion pipeline, each stage one streaming query with its
-  * own checkpoint (exactly-once file tracking replaces the reference's
-  * processed-set bookkeeping):
+  * over newly-landed chunk files), rebuilt as ONE checkpointed Structured
+  * Streaming query per `workDir`. A poll is one `AvailableNow` run of that
+  * query over every epoch's pose files, the poller's frontier markers and
+  * the blob files (exactly-once file tracking replaces the reference's
+  * processed-set bookkeeping). Its single micro-batch runs the whole
+  * detector in `foreachBatch` as batch code on the caller's session, with
+  * the state between polls carried explicitly ([[Carry]]):
   *
-  *   1. bronze→silver: per-frame wide pivot (time-window aggregation on the
-  *      frame slot) + columnar features — [[Detectors.withFeatures]], the
-  *      same expression tree the batch detector uses;
-  *   2. silver→filled: `flatMapGroupsWithState` forward-fill of the
-  *      centroid distance ACROSS micro-batches (the cross-chunk carry the
-  *      reference loses at its per-chunk job boundaries) + candidate /
-  *      bridge flags + dense-spine synthesis (interior slot gaps become
-  *      empty frames, exactly like the batch frame tensor);
-  *   3. filled→gold: `session_window` assembly of candidate∪bridge frames
-  *      into SUPER-SESSIONS (gap ≥ both batch sessionization gaps, so no
-  *      cross-super interaction exists), then — per closed super-session,
-  *      in `foreachBatch` — the EXACT batch tail [[Detectors.fightsTail]]
-  *      over the filled sink slice: same two-phase sessionization, same
+  *   0. blob speed: [[carryBlobSpeed]] extends the batch recipe
+  *      [[Detectors.blobSpeed]] sample by sample per epoch, so a poll's
+  *      work is proportional to the delivery, not to the blob history;
+  *   1. silver: the pose rows of every frame slot the frontier closed →
+  *      per-frame wide pivot + features through [[Poll.pivotFeatures]],
+  *      the same expression tree the batch detector uses;
+  *   2. filled: [[fillAndFlag]] forward-fills the centroid distance ACROSS
+  *      polls (the cross-chunk carry the reference loses at its per-chunk
+  *      job boundaries), folds the fight conditions into candidate /
+  *      bridge flags and synthesizes interior slot gaps as empty frames,
+  *      exactly like the batch frame tensor;
+  *   3. gold: candidate ∪ bridge frames assemble into SUPER-SESSIONS
+  *      ([[superSessions]]; gap ≥ both batch sessionization gaps, so no
+  *      cross-super interaction exists), and every closed super-session
+  *      runs the EXACT batch tail [[Detectors.fightsTail]] over its filled
+  *      rows ([[eventsFromSpans]]): same two-phase sessionization, same
   *      min-size counts, same kernel span [firstF−1, lastF], same event
-  *      timestamps. One shared implementation; batch and stream cannot
-  *      drift. Events are written exactly once (append-mode closed
-  *      sessions + idempotent per-micro-batch output dirs).
+  *      timestamps. Batch and stream cannot drift.
   *
-  * End-of-data flush: a poll writes two marker rows at the frontier
-  * `upToUs` into a side channel unioned with the pose source. Markers
-  * advance the event-time watermark (flushing every frame slot strictly
-  * before the frontier through all three stages) without contributing pose
-  * data — the reference's "watch until period end + slack" in watermark
-  * form. The poll contract is the file-discovery contract: `upToUs` must
-  * not exceed the earliest event time that could still arrive.
+  * Layout under `workDir`:
+  *   - `ckpt_fight/`: the query's checkpoint (offset and commit logs, the
+  *     per-source file logs);
+  *   - `markers/`: one frontier-marker file per poll;
+  *   - `state/b<batchId>`: the carry after micro-batch `batchId` — both
+  *     frontiers, the rows of still-open frame slots, the fill carry, the
+  *     blob carry and the speeds of frames not yet emitted, the open
+  *     super-sessions and the filled rows they (or the next one) can still
+  *     reach. A micro-batch reads the newest snapshot below its own id,
+  *     writes its own and deletes the ones older than the one it read: a
+  *     replay after a crash between these writes and the commit-log entry
+  *     recomputes bit-identical state and events, and a poll reads one
+  *     snapshot however many polls came before;
+  *   - `events/b<batchId>`: the events that micro-batch closed, written
+  *     with overwrite, so a replay is idempotent;
+  *   - `blob_speed/b<batchId>`: that micro-batch's stage-0 rows, read only
+  *     by [[blobSpeeds]].
   *
-  * Condition 3 (blob speed): stage 0, a fourth checkpointed query drained
-  * before stage 2, carries the batch recipe [[Detectors.blobSpeed]]
-  * across polls in `flatMapGroupsWithState` keyed by epoch
-  * ([[carryBlobSpeed]]): per poll it reads only the newly landed blob
-  * files. Its sink holds each frame's speed once as a final row when the
-  * frame's smoothing windows are complete, plus per poll a provisional
-  * set for the pending tail (at most four kept samples' windows still
-  * open, truncated at the newest sample). Stage 2 stream-static-joins
-  * every final row plus each epoch's newest provisional set
-  * ([[blobSpeeds]]), which is exactly the recipe over all blob rows landed
-  * so far, the end of an epoch's blob stream included. Omitting `blobDir`
-  * disables condition 3, exactly like `blob = None` in batch.
+  * Frontier rule (what the event-time watermark of a stateful query would
+  * do, reproduced exactly): a poll writes marker rows at the frontier
+  * `upToUs` and one frame before it. The silver frontier is the largest
+  * frame-slot time seen so far, GLOBAL across epochs, at millisecond
+  * precision. A slot is emitted once its end is at or before the frontier;
+  * a pose row whose slot ended at or before the previous frontier arrived
+  * late and is dropped. Markers advance the frontier without contributing
+  * pose data — the reference's "watch until period end + slack" — so each
+  * poll flushes every slot strictly before `upToUs`. The gold frontier is
+  * the largest slot time among the filled rows; a super-session closes
+  * once its last frame's time plus the gap is at or before it, and a
+  * candidate whose time plus the gap is at or before the previous gold
+  * frontier is dropped as late. The poll contract is the file-discovery
+  * contract: `upToUs` must not exceed the earliest event time that could
+  * still arrive.
   *
-  * Deviations from batch [[Detectors.detectFights]] (documented): a camera
-  * gap that SPANS a poll frontier gets
-  * its synthesized empty frames one poll late, where the watermark drops
-  * them — a session the batch mode would bridge across such a gap may
-  * close early or split (graceful; the reference's own chunked incremental
-  * mode has the same boundary artifact, without the cross-chunk ffill
-  * carry). Interior gaps — any dropout that does not straddle a frontier —
-  * are exact.
+  * Deviation from batch [[Detectors.detectFights]] (documented): a camera
+  * gap that SPANS a poll frontier gets its synthesized empty frames one
+  * poll late, where the gold late rule drops those a gap or more behind
+  * the previous gold frontier — a session the batch mode would bridge
+  * across such a gap may close early or split (graceful; the reference's
+  * own chunked incremental mode has the same boundary artifact, without
+  * the cross-chunk ffill carry). Interior gaps — any dropout that does not
+  * straddle a frontier — are exact. Of a frontier-spanning gap only the
+  * frames within one gap horizon of the previous gold frontier are built,
+  * so an outage over many polls costs the poll that ends it no more than
+  * a short gap.
   *
-  * Scale: stage 1 and 3a are keyed stateful aggregations (parallel across
-  * (epoch, frame slot) / (epoch, session)); stage 2's sequential carry is
-  * inherently serial PER EPOCH but parallel ACROSS epochs — every stage's
-  * state and frame grid is keyed by epoch, so a multi-rig deployment runs
+  * Scale: every carry is keyed by epoch, so a multi-rig deployment runs
   * ONE poller over all its epochs ([[pollFightsMulti]]): one streaming
-  * query and ONE checkpoint per stage, each epoch with its own `t0us`
-  * frame grid, identity pair, and optional blob source. Multiple silver
-  * files per poll land in ONE micro-batch (AvailableNow, no
-  * maxFilesPerTrigger) and are ordered inside the stateful closure, so
-  * shuffle-randomized file layout cannot reorder the carry. Stage 3b's
-  * slice read prunes the filled sink to the closed spans' frame range via
-  * parquet min/max stats before the broadcast range join.
+  * query and one checkpoint whatever the epoch count, each epoch with its
+  * own `t0us` frame grid, identity pair and optional blob source. The
+  * silver pivot and the tail run as distributed jobs; the sequential
+  * carries (stages 0 and 2, the session assembly) run per epoch on the
+  * driver over the rows of one poll.
   */
 object FightStream {
 
@@ -90,28 +105,20 @@ object FightStream {
       start_ts: java.sql.Timestamp, end_ts: java.sql.Timestamp,
       duration_sec: Double, end_x: Double, end_y: Double)
 
-  /** Silver rows: one per observed (epoch, frame slot), reference feature
+  /** Silver rows: one per emitted (epoch, frame slot), reference feature
     * columns (NaN = missing, exactly like the batch wide table).
     * `isMarker` flags frontier-marker-only slots (no real pose row landed
-    * in the slot) — they advance watermarks but carry no data. */
+    * in the slot) — they advance the gold frontier but carry no data. */
   case class SilverRow(epoch: String, frame: Long, tsUs: Long,
       c0x: Double, c0y: Double, c1x: Double, c1y: Double,
       cdist: Double, nh0: Double, nh1: Double, is0: Double, is1: Double,
       isEmpty: Boolean, isMarker: Boolean)
 
-  /** Silver row + the per-frame smoothed blob speed (stage 2 input after
-    * the stream-static speed join; `Double.MaxValue` = condition 3 disabled,
-    * NaN = no blob sample for the frame → not a candidate, like batch's
-    * null-left-join semantics). */
-  case class SilverSpeed(epoch: String, frame: Long, tsUs: Long,
-      c0x: Double, c0y: Double, c1x: Double, c1y: Double,
-      cdist: Double, nh0: Double, nh1: Double, is0: Double, is1: Double,
-      isEmpty: Boolean, isMarker: Boolean, speed: Double)
-
   /** Filled rows: silver + forward-filled centroid distance folded into the
     * candidate (`isFight`) and empty-frame bridge (`isBridge`) flags, plus
     * the synthesized dense-spine empty frames for interior slot gaps.
     * Marker rows pass through with both flags false. */
+  @SerialVersionUID(1L)
   case class FilledRow(epoch: String, frame: Long, tsUs: Long,
       c0x: Double, c0y: Double, c1x: Double, c1y: Double,
       isFight: Boolean, isBridge: Boolean, isMarker: Boolean)
@@ -134,6 +141,7 @@ object FightStream {
     * truncated at the newest sample like the batch recipe's at the end of
     * a stream; it is superseded by the epoch's next provisional set
     * (`asOfUs` = the newest sample time when the set was written). */
+  @SerialVersionUID(1L)
   case class BlobSpeedRow(epoch: String, frame: Long, blob_speed: Double,
       isFinal: Boolean, asOfUs: Long)
 
@@ -142,22 +150,105 @@ object FightStream {
     * the lag speeds of up to five kept samples before the pending ones
     * (their smoothing context) and the pending kept samples, those of the
     * frames not yet written as final. */
+  @SerialVersionUID(1L)
   case class BlobCarry(lastRawUs: Long, lastUs: Long, lastX: Double, lastY: Double,
       hist: Seq[Double], pendFrame: Seq[Long], pendLag: Seq[Double])
 
-  /** Stage 1 plan: N per-epoch pose streams (each unioned with its marker
-    * channel and tagged by [[Poll.prePivot]] with its OWN `t0us` grid and
-    * identity pair as literals) → ONE epoch-keyed per-frame-slot wide
-    * pivot + features. One streaming query, one checkpoint; plan size is
-    * linear in epochs (2 file sources each), state is keyed by
-    * (epoch, slot). */
-  def silverQueryMulti(spark: SparkSession, epochs: Seq[FightEpoch],
-      markerDirs: Seq[String], parts: Map[String, String], fps: Double): DataFrame = {
+  /** A pose or marker row (null identity) of a frame slot the silver
+    * frontier has not closed yet; `frame` on its epoch's grid. */
+  @SerialVersionUID(1L)
+  private[streaming] case class SlotRow(tUs: Long, identity: String, part: String,
+      x: java.lang.Double, y: java.lang.Double, frame: Long)
+
+  /** One epoch's carry between polls: the rows of open frame slots, the
+    * fill carry (last observed frame, last non-NaN centroid distance), the
+    * blob carry, the final and newest provisional blob speeds of frames
+    * whose slot is still open, the open super-sessions (minF, maxF) and
+    * the non-marker filled rows from the first open session's kernel start
+    * (or the last such row when none is open) on. */
+  @SerialVersionUID(1L)
+  private[streaming] case class EpochCarry(pending: Seq[SlotRow], fill: Option[(Long, Double)],
+      blob: Option[BlobCarry], finals: Seq[(Long, Double)],
+      provisional: Seq[(Long, Double)], sessions: Seq[(Long, Long)],
+      rows: Seq[FilledRow])
+
+  /** The poller's state after one micro-batch: the silver and gold
+    * frontiers (µs, millisecond precision) and one carry per epoch, in
+    * epoch order. */
+  @SerialVersionUID(1L)
+  private[streaming] case class Carry(silverUs: Long, goldUs: Long, epochs: Seq[EpochCarry])
+
+  private val emptyEpoch = EpochCarry(Nil, None, None, Nil, Nil, Nil, Nil)
+
+  /** Test seam: runs with (workDir, batchId, filled rows the batch built)
+    * after a micro-batch's state and event writes, before its commit-log
+    * entry. */
+  @volatile private[streaming] var afterBatchWrites: (String, Long, Int) => Unit =
+    (_, _, _) => ()
+
+  /** A total order on slot rows, so a snapshot's bytes do not depend on
+    * the order the micro-batch's rows were collected in. */
+  private val slotOrder: Ordering[SlotRow] =
+    Ordering.by[SlotRow, (Long, Long, Option[String], Option[String])](r =>
+      (r.frame, r.tUs, Option(r.identity), Option(r.part)))
+      .orElse(Ordering.by[SlotRow, (Option[Double], Option[Double])](r =>
+        (Option(r.x).map(_.doubleValue), Option(r.y).map(_.doubleValue)))(
+        Ordering.Tuple2(Ordering.Option(Ordering.Double.TotalOrdering),
+          Ordering.Option(Ordering.Double.TotalOrdering))))
+
+  /** The one streaming source: every epoch's pose rows (skeleton parts
+    * only, like [[Poll.prePivot]]), the frontier markers repeated for
+    * every epoch, and the blob samples of the epochs with a `blobDir`,
+    * as `e` (epoch position), `blob`, `tUs`, `identity`, `part`, `x`, `y`
+    * and `frame` on the epoch's grid. File sources are positional (pose
+    * per epoch, markers, blob per epoch with a source), which the epoch
+    * and blob manifests pin. */
+  private def pollInput(spark: SparkSession, epochs: Seq[FightEpoch],
+      markerDir: String, parts: Map[String, String], fps: Double): DataFrame = {
+    def tagged(df: DataFrame, e: Column, t0: Column, blob: Boolean) =
+      df.filter(col("tUs").isNotNull).select(e.as("e"), lit(blob).as("blob"),
+        col("tUs"), col("identity"), col("part"), col("x"), col("y"),
+        Cols.frameId(col("tUs"), t0, fps).as("frame"))
+    val withUs = (df: DataFrame) => df.withColumn("tUs", unix_micros(col("time")))
+    val pose = epochs.zipWithIndex.map { case (ep, i) =>
+      tagged(withUs(spark.readStream.schema(poseSchema).parquet(ep.poseDir)
+        .filter(col("identity").isNull || Detectors.lpartCol(parts).isNotNull)),
+        lit(i), lit(ep.t0us), blob = false)
+    }
+    val noPose = Seq("identity", "part").map(lit(null).cast(StringType).as(_)) ++
+      Seq("x", "y").map(lit(null).cast(DoubleType).as(_))
+    val markers = Poll.markerText(spark, markerDir)
+      .select((col("tUs") +: noPose) :+
+        explode(array(epochs.zipWithIndex.map { case (ep, i) =>
+          struct(lit(i).as("e"), lit(ep.t0us).as("t0")) }: _*)).as("_m"): _*)
+    val blobs = epochs.zipWithIndex.flatMap { case (ep, i) => ep.blobDir.map { bd =>
+      tagged(withUs(spark.readStream.schema(blobSchema).parquet(bd).na.drop(Seq("x", "y")))
+        .select(col("tUs") +: noPose.take(2) :+ col("x") :+ col("y"): _*),
+        lit(i), lit(ep.t0us), blob = true)
+    } }
+    (pose ++ Seq(tagged(markers, col("_m.e"), col("_m.t0"), blob = false)) ++ blobs)
+      .reduce(_.unionByName(_))
+  }
+
+  /** Stage 1: the rows of the closing slots of each epoch (position, rows)
+    * → one silver row per slot, through [[Poll.prePivot]] with the epoch's
+    * own grid and identity pair and ONE [[Poll.pivotFeatures]] over the
+    * union. */
+  private def silverRows(spark: SparkSession, epochs: Seq[FightEpoch],
+      closing: Seq[(Int, Seq[SlotRow])], parts: Map[String, String],
+      fps: Double): Array[SilverRow] = {
+    import spark.implicits._
     import Detectors.nn
-    val branches = epochs.zip(markerDirs).map { case (e, md) =>
-      val pose = spark.readStream.schema(poseSchema).parquet(e.poseDir)
-        .unionByName(spark.readStream.schema(poseSchema).parquet(md))
-      Poll.prePivot(pose, e.epoch, parts, fps, e.t0us, e.ids)
+    val branches = closing.map { case (i, rs) =>
+      val e = epochs(i)
+      // an RDD, not a local relation: the optimizer would evaluate the
+      // pre-pivot projections over every row and compare the rows in its
+      // fixed-point checks, a cost that grows with the delivery
+      val local = spark.createDataset(spark.sparkContext.parallelize(rs,
+        1 + rs.length / 100000))
+        .select(timestamp_micros(col("tUs")).as("time"), col("identity"),
+          col("part"), col("x"), col("y"))
+      Poll.prePivot(local, e.epoch, parts, fps, e.t0us, e.ids)
     }
     Poll.pivotFeatures(branches.reduce(_.unionByName(_)), fps).select(
       col("epoch"), col("frame"), col("tsUs"),
@@ -167,186 +258,123 @@ object FightStream {
       nn(col("nh0")).as("nh0"), nn(col("nh1")).as("nh1"),
       nn(col("is0")).as("is0"), nn(col("is1")).as("is1"),
       col("isEmpty"), (col("nReal") === 0).as("isMarker"))
+      .as[SilverRow].collect()
   }
 
-  /** Stage 2 plan: forward-fill `cdist` across frames AND micro-batches,
-    * fold the fight conditions into flags, and SYNTHESIZE the batch dense
-    * spine — every interior slot gap (no pose rows delivered at all)
+  /** Stage 2 over one epoch's emitted silver rows, sorted by frame, each
+    * with its blob speed (`Double.MaxValue` = condition 3 disabled, NaN =
+    * no blob sample for the frame → not a candidate, like batch's
+    * null-left-join semantics): forward-fill `cdist` across frames and
+    * polls, fold the fight conditions into flags, and SYNTHESIZE the batch
+    * dense spine — every interior slot gap (no pose rows delivered at all)
     * becomes empty frames with the forward-filled centroid distance, so
     * camera dropouts bridge sessions exactly as the batch detector's dense
-    * frame tensor does. State = (last observed frame, last non-NaN cdist)
-    * PER EPOCH (`groupByKey(_.epoch)`): the carry is sequential within an
-    * epoch, parallel across epochs.
+    * frame tensor does. `prior` / the returned carry: (last observed
+    * frame, last non-NaN cdist).
     *
-    * Marker-only slots pass through with both flags false (watermark
-    * carriers, never data) and do not advance the spine: a marker slot
-    * below a later real frame is re-synthesized as a true empty frame and
-    * the duplicate marker row is dropped by the gold-stage candidate
-    * filter and the `!isMarker` slice filter. */
-  def fillAndFlag(silver: Dataset[SilverSpeed], p: FightParams,
-      t0ByEpoch: Map[String, Long]): Dataset[FilledRow] = {
-    val spark = silver.sparkSession
-    import spark.implicits._
+    * Gap frames below `from` are not built: no span, session or carry of
+    * the poll can reach them (see [[pollBatch]]), and a camera outage that
+    * spans many polls would otherwise be expanded whole, one row per
+    * frame, on the driver.
+    *
+    * Marker-only slots pass through with both flags false and do not
+    * advance the spine: a marker slot below a later real frame is
+    * re-synthesized as a true empty frame, and the marker row never
+    * reaches a session or the tail. */
+  private[streaming] def fillAndFlag(epoch: String, t0us: Long,
+      prior: Option[(Long, Double)], silver: Seq[(SilverRow, Double)],
+      p: FightParams, from: Long): (Option[(Long, Double)], Seq[FilledRow]) = {
     val durUs = frameDurUs(p.fps)
-    silver.groupByKey(_.epoch)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (epoch: String, it: Iterator[SilverSpeed], state: GroupState[(Long, Double)]) =>
-          // fail with the CONTRACT, not a bare NoSuchElementException deep
-          // in a task: a sink row keyed by an epoch outside the configured
-          // set means the fixed-epoch-set contract was broken (an epoch
-          // was dropped from the Seq, or a foreign file landed in the sink)
-          val t0us = t0ByEpoch.getOrElse(epoch, throw new IllegalStateException(
-            s"silver sink contains rows for epoch '$epoch', which is not in " +
-              s"this poll's epoch set ${t0ByEpoch.keys.mkString("[", ", ", "]")}" +
-              " — the epoch set of a workDir is fixed for its lifetime " +
-              "(removing an epoch requires a new workDir)"))
-          var (lastF, lastCd) =
-            if (state.exists) state.get else (Long.MinValue, Double.NaN)
-          // chunks of lazy iterators: synthesized gaps never materialize an
-          // array (an hour-long camera gap is 180 k rows), snapshot locals
-          // keep them correct after the state vars move on
-          val chunks = scala.collection.mutable.ArrayBuffer.empty[Iterator[FilledRow]]
-          it.toArray.sortBy(_.frame).foreach { r =>
-            if (r.isMarker) {
-              chunks += Iterator.single(FilledRow(epoch, r.frame, r.tsUs,
-                Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-                isFight = false, isBridge = false, isMarker = true))
-            } else {
-              if (lastF != Long.MinValue && r.frame > lastF + 1) {
-                val (f0, f1, cd) = (lastF + 1, r.frame - 1, lastCd)
-                val bridge = cd < p.maxDistance // NaN compares false
-                chunks += (f0 to f1).iterator.map(f =>
-                  FilledRow(epoch, f, t0us + f * durUs,
-                    Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-                    isFight = false, isBridge = bridge, isMarker = false))
-              }
-              val cd = if (!r.cdist.isNaN) r.cdist else lastCd
-              val cond1 = cd < p.maxDistance
-              // Scala NaN > t is FALSE — the same NaN-drops-the-frame
-              // semantics as the batch core's gtNanFalse (numpy parity)
-              val cond2 = r.nh0 > p.maxNoseHeadDistance ||
-                r.nh1 > p.maxNoseHeadDistance ||
-                r.is0 > p.maxInterspinalDistance ||
-                r.is1 > p.maxInterspinalDistance
-              val cond3 = r.speed > p.minBlobSpeed // NaN (no sample) → false
-              chunks += Iterator.single(FilledRow(epoch, r.frame, r.tsUs,
-                r.c0x, r.c0y, r.c1x, r.c1y,
-                isFight = cond1 && cond2 && cond3,
-                isBridge = cond1 && r.isEmpty, isMarker = false))
-              lastF = r.frame
-              if (!r.cdist.isNaN) lastCd = r.cdist
-            }
-          }
-          if (lastF != Long.MinValue) state.update((lastF, lastCd))
-          chunks.iterator.flatten
+    var (lastF, lastCd) = prior.getOrElse((Long.MinValue, Double.NaN))
+    val out = ArrayBuffer.empty[FilledRow]
+    silver.foreach { case (r, speed) =>
+      if (r.isMarker) {
+        out += FilledRow(epoch, r.frame, r.tsUs,
+          Double.NaN, Double.NaN, Double.NaN, Double.NaN,
+          isFight = false, isBridge = false, isMarker = true)
+      } else {
+        if (lastF != Long.MinValue && r.frame > lastF + 1) {
+          val bridge = lastCd < p.maxDistance // NaN compares false
+          (math.max(lastF + 1, from) until r.frame).foreach(f => out += FilledRow(epoch, f,
+            t0us + f * durUs, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
+            isFight = false, isBridge = bridge, isMarker = false))
+        }
+        val cd = if (!r.cdist.isNaN) r.cdist else lastCd
+        val cond1 = cd < p.maxDistance
+        // Scala NaN > t is FALSE — the same NaN-drops-the-frame
+        // semantics as the batch core's gtNanFalse (numpy parity)
+        val cond2 = r.nh0 > p.maxNoseHeadDistance ||
+          r.nh1 > p.maxNoseHeadDistance ||
+          r.is0 > p.maxInterspinalDistance ||
+          r.is1 > p.maxInterspinalDistance
+        val cond3 = speed > p.minBlobSpeed // NaN (no sample) → false
+        out += FilledRow(epoch, r.frame, r.tsUs, r.c0x, r.c0y, r.c1x, r.c1y,
+          isFight = cond1 && cond2 && cond3,
+          isBridge = cond1 && r.isEmpty, isMarker = false)
+        lastF = r.frame
+        if (!r.cdist.isNaN) lastCd = r.cdist
       }
+    }
+    (if (lastF != Long.MinValue) Some((lastF, lastCd)) else None, out.toSeq)
   }
 
-  /** Stage 3a plan: candidate∪bridge frames → closed SUPER-SESSION spans,
-    * keyed by epoch. The super gap = max(maxFrameGap,
-    * maxFrameGapWEmptyFrames) dominates both batch sessionization phases,
-    * so every set of frames that either phase could chain lands inside ONE
-    * super-session — running the exact batch tail per closed super-session
-    * is then exact. The watermark node sits BEFORE the candidate filter so
-    * every frame (markers included) advances it. Emits one
-    * (epoch, minF, maxF) span per closed super-session. */
-  def goldSessions(filled: DataFrame, p: FightParams,
-      t0ByEpoch: Map[String, Long]): DataFrame = {
-    val durUs = frameDurUs(p.fps)
-    // merge iff frame diff <= superGap, like the batch cumulative-sum form
-    // (session_window splits at >= gap, so +0.5 frame)
-    val superGap = math.max(p.maxFrameGap, p.maxFrameGapWEmptyFrames)
-    val gapUs = math.round((superGap + 0.5) * durUs.toDouble)
-    val t0Expr = element_at(typedLit(t0ByEpoch), col("epoch"))
-    filled
-      .withColumn("tFrame", timestamp_micros(t0Expr + col("frame") * durUs))
-      .withWatermark("tFrame", "0 seconds")
-      // The never-true third disjunct REFERENCES THE WATERMARK COLUMN, which
-      // is the one thing PushPredicateThroughNonJoin refuses to push below
-      // an EventTimeWatermark node. Without it the candidate filter is
-      // pushed under the watermark exec, which then only ever sees candidate
-      // rows — frontier markers and trailing empty frames are dropped before
-      // the max-event-time stat, the watermark freezes at the last
-      // candidate, and open sessions never close. (Verified: a plain filter
-      // froze the watermark at the fight's final frame; a rand() guard gets
-      // optimized away.)
-      .filter(col("isFight") || col("isBridge") ||
-        unix_micros(col("tFrame")) < lit(Long.MinValue + 1))
-      .groupBy(col("epoch"), session_window(col("tFrame"), s"$gapUs microseconds"))
-      .agg(min(col("frame")).as("minF"), max(col("frame")).as("maxF"))
-      .select(col("epoch"), col("minF"), col("maxF"))
+  /** Stage 3a over one epoch: the open super-sessions (minF, maxF) plus
+    * the new candidate∪bridge frames → the super-sessions after the merge,
+    * in frame order. Two frames chain iff they are at most `superGap` =
+    * max(maxFrameGap, maxFrameGapWEmptyFrames) frames apart, which
+    * dominates both batch sessionization phases, so every set of frames
+    * that either phase could chain lands inside ONE super-session —
+    * running the exact batch tail per closed super-session is then exact. */
+  private[streaming] def superSessions(open: Seq[(Long, Long)], frames: Seq[Long],
+      superGap: Long): Seq[(Long, Long)] = {
+    val out = ArrayBuffer.empty[(Long, Long)]
+    (open ++ frames.map(f => (f, f))).sortBy(_._1).foreach { case (lo, hi) =>
+      if (out.nonEmpty && lo - out.last._2 <= superGap)
+        out(out.length - 1) = (out.last._1, math.max(out.last._2, hi))
+      else out += ((lo, hi))
+    }
+    out.toSeq
   }
 
-  /** Stage 3b (foreachBatch body): closed super-session spans → the EXACT
-    * batch tail ([[Detectors.fightsTail]] — same two-phase sessionization,
-    * min-size counts, kernel span [firstF−1, lastF] and event timestamps as
-    * `detectFights`) over the filled sink sliced to the spans. ONE
-    * distributed job for all epochs' spans: the shard key is
-    * `epoch:spanStart` (spans within an epoch are ≥ superGap apart, so each
-    * is an independent shard). */
+  /** Stage 3b: closed super-session spans → the EXACT batch tail
+    * ([[Detectors.fightsTail]] — same two-phase sessionization, min-size
+    * counts, kernel span [firstF−1, lastF] and event timestamps as
+    * `detectFights`) over the filled rows stored under `filledDir`, sliced
+    * to the spans. ONE distributed job for all epochs' spans: the shard
+    * key is `epoch:spanStart` (spans within an epoch are ≥ superGap apart,
+    * so each is an independent shard). The poller runs the same tail over
+    * the filled rows it carries ([[spanEvents]]). */
   def eventsFromSpans(spark: SparkSession, spans: Array[(String, Long, Long)],
       filledDir: String, p: FightParams): Dataset[EpochFightEvent] = {
     import spark.implicits._
-    val lo = spans.map(_._2).min - 1 // kernel span reaches one frame left
-    val hi = spans.map(_._3).max
-    val spanDf = spans.toSeq.toDF("_e", "_lo", "_hi")
-    val slice = spark.read.schema(filledSchema).parquet(filledDir)
+    spanEvents(spark, spans, spark.read.schema(filledSchema).parquet(filledDir)
       // rows written before the epoch column existed read back as null =
       // the single-epoch key "" — null === "" would silently drop a
       // legacy deployment's pre-upgrade frames from the slice
       .withColumn("epoch", coalesce(col("epoch"), lit("")))
-      .filter(!col("isMarker") && col("frame") >= lo && col("frame") <= hi)
-    val flagged = slice.join(broadcast(spanDf),
-        col("epoch") === col("_e") &&
-          col("frame") >= col("_lo") - 1 && col("frame") <= col("_hi"))
-      .withColumn(Detectors.G,
-        concat(col("_e"), lit(":"), col("_lo").cast("string")))
-      .select(col(Detectors.G), col("frame"), col("tsUs"),
-        col("c0x"), col("c0y"), col("c1x"), col("c1y"),
-        col("isFight"), col("isBridge"))
+      // the kernel span reaches one frame left of a span
+      .filter(col("frame") >= spans.map(_._2).min - 1 && col("frame") <= spans.map(_._3).max)
+      .as[FilledRow].collect().toSeq, p)
+  }
+
+  /** [[eventsFromSpans]] over filled rows held by the driver: each span's
+    * non-marker rows in [minF − 1, maxF], keyed `epoch:minF`. */
+  private def spanEvents(spark: SparkSession, spans: Seq[(String, Long, Long)],
+      filled: Seq[FilledRow], p: FightParams): Dataset[EpochFightEvent] = {
+    import spark.implicits._
+    val flagged = spans.flatMap { case (e, lo, hi) =>
+      filled.filter(r => r.epoch == e && !r.isMarker && r.frame >= lo - 1 && r.frame <= hi)
+        .map(r => (s"$e:$lo", r.frame, r.tsUs, r.c0x, r.c0y, r.c1x, r.c1y,
+          r.isFight, r.isBridge))
+    }.toDF(Detectors.G, "frame", "tsUs", "c0x", "c0y", "c1x", "c1y", "isFight", "isBridge")
     Detectors.fightsTail(flagged, p).map { f =>
       val epoch = f.g.substring(0, f.g.lastIndexOf(':'))
       EpochFightEvent(epoch, f.start_ts, f.end_ts, f.duration_sec, f.end_x, f.end_y)
     }
   }
 
-  private val silverSchema = org.apache.spark.sql.Encoders.product[SilverRow].schema
   private val filledSchema = org.apache.spark.sql.Encoders.product[FilledRow].schema
   private val eventSchema = org.apache.spark.sql.Encoders.product[EpochFightEvent].schema
-  private val blobSpeedSchema = org.apache.spark.sql.Encoders.product[BlobSpeedRow].schema
-
-  private def drain(df: DataFrame, outPath: String, checkpoint: String): Unit =
-    Poll.drain(df, outPath, checkpoint)
-
-  private def ensureDir(spark: SparkSession, path: String): Unit =
-    Poll.ensureDir(spark, path)
-
-  /** Stage 0 plan: one blob file source per epoch with a `blobDir`
-    * (positional, like stage 1's pose sources), tagged with the epoch key
-    * and framed on its `t0us` grid as literals, into ONE epoch-keyed
-    * sequential carry ([[carryBlobSpeed]]) — the batch recipe
-    * [[Detectors.blobSpeed]] extended sample by sample, so per-poll work
-    * is proportional to the delivery, not to the blob history. */
-  def blobSpeedQuery(spark: SparkSession, epochs: Seq[FightEpoch],
-      p: FightParams): Dataset[BlobSpeedRow] = {
-    import spark.implicits._
-    val branches = epochs.flatMap(e => e.blobDir.map { bd =>
-      val tUs = unix_micros(col("time"))
-      spark.readStream.schema(blobSchema).parquet(bd)
-        .na.drop(Seq("x", "y"))
-        .select(lit(e.epoch).as("epoch"), tUs.as("tUs"),
-          Cols.frameId(tUs, lit(e.t0us), p.fps).as("frame"), col("x"), col("y"))
-    })
-    branches.reduce(_.unionByName(_)).as[BlobSample]
-      .groupByKey(_.epoch)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (epoch: String, it: Iterator[BlobSample], state: GroupState[BlobCarry]) =>
-          val (carry, rows) = carryBlobSpeed(epoch, state.getOption,
-            it.toArray.sortBy(_.tUs), p.cm2px)
-          carry.foreach(state.update)
-          rows.iterator
-      }
-  }
 
   /** One epoch's stage-0 step over time-ordered `samples`: the batch
     * recipe as a sequential carry. A sample under 10 ms after the previous
@@ -381,7 +409,7 @@ object FightStream {
     val advanced = prior.forall(_.lastRawUs != lastRaw)
     // hist holds every earlier kept sample while there are fewer than
     // five, so clipping the window at index 0 is the stream start
-    val all = hist ++ lags
+    val all = (hist ++ lags).toArray
     def smoothed(g: Int): Double = {
       var sum = 0.0
       for (k <- math.max(0, g - 5) to math.min(all.length - 1, g + 4)) sum += all(k)
@@ -408,36 +436,166 @@ object FightStream {
       frames.drop(nFinal).toSeq, lags.drop(nFinal).toSeq)), out.toSeq)
   }
 
-  /** The per-frame blob speeds stage 2 joins: every final stage-0 row plus
-    * each epoch's newest provisional set. Columns `epoch, frame,
-    * blob_speed`; one row per (epoch, frame) with a kept blob sample. */
+  /** The per-frame blob speeds so far: every final stage-0 row plus each
+    * epoch's newest provisional set, i.e. the batch recipe over all blob
+    * rows landed so far. Columns `epoch, frame, blob_speed`; one row per
+    * (epoch, frame) with a kept blob sample. */
   def blobSpeeds(spark: SparkSession, workDir: String): DataFrame = {
-    val sp = spark.read.schema(blobSpeedSchema).parquet(s"$workDir/blob_speed")
-    val newest = sp.filter(!col("isFinal"))
-      .groupBy("epoch").agg(max(col("asOfUs")).as("_newest"))
-    sp.join(broadcast(newest), Seq("epoch"), "left")
-      .filter(col("isFinal") || col("asOfUs") === col("_newest"))
-      .select("epoch", "frame", "blob_speed")
+    import spark.implicits._
+    val rows = Poll.snapshots(spark, s"$workDir/blob_speed")
+      .flatMap { case (_, path) => Poll.readSnapshot[Seq[BlobSpeedRow]](spark, path) }
+    val newest = rows.filter(!_.isFinal).groupMapReduce(_.epoch)(_.asOfUs)(math.max)
+    rows.filter(r => r.isFinal || newest.get(r.epoch).contains(r.asOfUs))
+      .map(r => (r.epoch, r.frame, r.blob_speed)).toDF("epoch", "frame", "blob_speed")
   }
+
+  /** One micro-batch of the poll query: the whole detector over the
+    * batch's rows and the carry of the newest snapshot below `batchId`. */
+  private def pollBatch(spark: SparkSession, epochs: Seq[FightEpoch],
+      workDir: String, parts: Map[String, String], p: FightParams,
+      batch: DataFrame, batchId: Long): Unit = {
+    val durUs = frameDurUs(p.fps)
+    val stateDir = s"$workDir/state"
+    val snaps = Poll.snapshots(spark, stateDir)
+    val (readId, prior) = snaps.filter(_._1 < batchId).lastOption match {
+        case Some((id, path)) => (id, Poll.readSnapshot[Carry](spark, path))
+        case None if batchId == 0 =>
+          (-1L, Carry(0L, 0L, Seq.fill(epochs.length)(emptyEpoch)))
+        case None => throw new IllegalStateException(
+          s"fight poller state below batch $batchId is missing from $stateDir")
+      }
+    val t0 = epochs.map(_.t0us).toIndexedSeq
+    def tFrame(e: Int, frame: Long) = t0(e) + frame * durUs
+    // the end of the frame slot a tumbling window on the slot grid time
+    // assigns (windows align to the unix epoch, not to t0)
+    def slotEnd(e: Int, frame: Long) = {
+      val t = tFrame(e, frame)
+      t - Math.floorMod(t, durUs) + durUs
+    }
+    // a watermark holds milliseconds
+    def toMs(us: Long) = us / 1000 * 1000
+
+    // the micro-batch's rows, materialized once and handed to the driver;
+    // one String per distinct identity and part name, not one per row
+    val poseIn = Array.fill(epochs.length)(ArrayBuffer.empty[SlotRow])
+    val blobIn = Array.fill(epochs.length)(ArrayBuffer.empty[BlobSample])
+    val names = scala.collection.mutable.HashMap.empty[String, String]
+    def name(s: String) = if (s == null) null else names.getOrElseUpdate(s, s)
+    batch.collect().foreach { r =>
+      val e = r.getInt(0)
+      if (r.getBoolean(1))
+        blobIn(e) += BlobSample(epochs(e).epoch, r.getLong(2), r.getLong(7),
+          r.getDouble(5), r.getDouble(6))
+      else poseIn(e) += SlotRow(r.getLong(2), name(r.getString(3)), name(r.getString(4)),
+        r.get(5).asInstanceOf[java.lang.Double], r.get(6).asInstanceOf[java.lang.Double],
+        r.getLong(7))
+    }
+
+    // stage 1: split live rows into closing and still-open slots
+    val silverUs = poseIn.indices.flatMap(e => poseIn(e).map(r => tFrame(e, r.frame)))
+      .maxOption.fold(prior.silverUs)(t => math.max(prior.silverUs, toMs(t)))
+    val (closing, pending) = epochs.indices.map { e =>
+      (prior.epochs(e).pending ++
+        poseIn(e).filter(r => slotEnd(e, r.frame) > prior.silverUs))
+        .partition(r => slotEnd(e, r.frame) <= silverUs)
+    }.unzip
+    val silver = {
+      val todo = closing.zipWithIndex.collect { case (rs, e) if rs.nonEmpty => (e, rs) }
+      val byKey = epochs.indices.map(e => epochs(e).epoch -> e).toMap
+      val rows = if (todo.isEmpty) Array.empty[SilverRow]
+        else silverRows(spark, epochs, todo, parts, p.fps)
+      rows.groupBy(r => byKey(r.epoch)).withDefaultValue(Array.empty[SilverRow])
+    }
+
+    // stages 0 and 2 per epoch
+    val superGap = math.max(p.maxFrameGap, p.maxFrameGapWEmptyFrames)
+    val gapUs = math.round((superGap + 0.5) * durUs.toDouble)
+    val blobOut = ArrayBuffer.empty[BlobSpeedRow]
+    val filled = epochs.indices.map { e =>
+      val ep = epochs(e)
+      val c = prior.epochs(e)
+      val (blob, speedRows) =
+        if (blobIn(e).isEmpty) (c.blob, Nil)
+        else carryBlobSpeed(ep.epoch, c.blob, blobIn(e).sortBy(s => (s.tUs, s.x, s.y))(
+          Ordering.Tuple3(Ordering.Long, Ordering.Double.TotalOrdering,
+            Ordering.Double.TotalOrdering)).toSeq, p.cm2px)
+      blobOut ++= speedRows
+      val finals = c.finals ++ speedRows.filter(_.isFinal).map(r => (r.frame, r.blob_speed))
+      val provisional =
+        if (speedRows.exists(!_.isFinal))
+          speedRows.filter(!_.isFinal).map(r => (r.frame, r.blob_speed))
+        else c.provisional
+      val speed: Long => Double =
+        if (ep.blobDir.isEmpty) _ => Double.MaxValue
+        else {
+          val m = provisional.toMap ++ finals
+          f => m.getOrElse(f, Double.NaN)
+        }
+      // every span of this poll starts at the first open session or at a
+      // frame the gold late rule keeps (t + gap > the previous gold
+      // frontier); the tail reaches one frame left of a span
+      val firstKept = Math.floorDiv(prior.goldUs - gapUs - t0(e), durUs) + 1
+      val from = math.min(c.sessions.headOption.fold(Long.MaxValue)(_._1), firstKept) - 1
+      val (fill, rows) = fillAndFlag(ep.epoch, ep.t0us, c.fill,
+        silver(e).sortBy(_.frame).map(r => (r, speed(r.frame))).toSeq, p, from)
+      // a frame whose slot is closed can no longer be emitted
+      (c.copy(pending = pending(e).sorted(slotOrder), fill = fill,
+        blob = blob, provisional = provisional,
+        finals = finals.filter(f => slotEnd(e, f._1) > silverUs).sortBy(_._1)), rows)
+    }
+
+    // stage 3: super-sessions per epoch, the exact tail over closed ones
+    val goldUs = filled.indices.flatMap(e => filled(e)._2.map(r => tFrame(e, r.frame)))
+      .maxOption.fold(prior.goldUs)(t => math.max(prior.goldUs, toMs(t)))
+    val spans = ArrayBuffer.empty[(String, Long, Long)]
+    val slice = ArrayBuffer.empty[FilledRow]
+    val carries = filled.indices.map { e =>
+      val (c, rows) = filled(e)
+      val cands = rows.filter(r => (r.isFight || r.isBridge) &&
+        tFrame(e, r.frame) + gapUs > prior.goldUs).map(_.frame)
+      val (closed, open) = superSessions(c.sessions, cands, superGap)
+        .partition(s => tFrame(e, s._2) + gapUs <= goldUs)
+      val pool = (c.rows ++ rows.filterNot(_.isMarker)).sortBy(_.frame)
+      if (closed.nonEmpty) slice ++= pool
+      spans ++= closed.map { case (lo, hi) => (epochs(e).epoch, lo, hi) }
+      val keepFrom = open.headOption.map(_._1 - 1)
+        .getOrElse(pool.lastOption.fold(Long.MaxValue)(_.frame))
+      c.copy(sessions = open, rows = pool.filter(_.frame >= keepFrom))
+    }
+    if (spans.nonEmpty) {
+      import spark.implicits._
+      spanEvents(spark, spans.toSeq, slice.toSeq, p).toDF()
+        .write.mode("overwrite").parquet(s"$workDir/events/b$batchId")
+    }
+    if (blobOut.nonEmpty)
+      Poll.writeSnapshot(spark, s"$workDir/blob_speed/b$batchId", blobOut.toSeq)
+    Poll.writeSnapshot(spark, s"$stateDir/b$batchId", Carry(silverUs, goldUs, carries))
+    Poll.delete(spark, snaps.filter(_._1 < readId).map(_._2))
+    afterBatchWrites(workDir, batchId, filled.map(_._2.length).sum)
+  }
+
+  /** The checkpoints of the earlier four-query layout (one per stage). */
+  private val fourQueryCheckpoints =
+    Seq("ckpt_blob_speed", "ckpt_silver", "ckpt_filled", "ckpt_gold")
 
   /** One incremental poll over N epochs (the reference's 30-minute loop
     * body, one poller for the whole deployment): ingest all pose chunk
     * files under each epoch's `poseDir` with event time < `upToUs`, advance
     * every stage, and append newly-closed fight events under
     * `workDir/events` tagged with their epoch. Re-running with no new data
-    * is a no-op (checkpoints); events are emitted exactly once. ONE
-    * checkpoint per stage regardless of epoch count.
+    * emits nothing (checkpoint); events are emitted exactly once. ONE
+    * streaming query and ONE checkpoint regardless of epoch count.
     *
-    * `upToUs` is the discovery frontier, GLOBAL across epochs (the
-    * event-time watermark is per-query, not per-key): all data strictly
-    * before it must already be in EVERY epoch's `poseDir` — a lagging rig
-    * holds the frontier for the whole poller, exactly like the slowest
-    * chunk holds the reference's polling loop. Later-arriving rows below
-    * the frontier would be dropped as late. The converse also binds, and
-    * binds harder with many epochs: NO row at-or-after the frontier may
-    * have landed yet — the watermark rides the max event time seen, so one
-    * rig's early rows push it past the frontier and turn every other
-    * rig's still-in-flight rows below that point late. Deliveries must be
+    * `upToUs` is the discovery frontier, GLOBAL across epochs (like an
+    * event-time watermark, it is one per poller, not per key): all data
+    * strictly before it must already be in EVERY epoch's `poseDir` — a
+    * lagging rig holds the frontier for the whole poller, exactly like the
+    * slowest chunk holds the reference's polling loop. Later-arriving rows
+    * below the frontier would be dropped as late. The converse also binds,
+    * and binds harder with many epochs: NO row at-or-after the frontier may
+    * have landed yet — the frontier rides the max event time seen, so one
+    * rig's early rows push it past `upToUs` and turn every other rig's
+    * still-in-flight rows below that point late. Deliveries must be
     * wall-clock-cut across epochs; pick `upToUs` = the earliest event
     * time that could still arrive OR already sits undelivered, over all
     * epochs. Events are only emitted once
@@ -445,16 +603,15 @@ object FightStream {
     * poll of an epoch pass `epochEndUs + (max(maxFrameGap,
     * maxFrameGapWEmptyFrames) + 2) frames` or more.
     *
-    * The epoch SET of a `workDir` is fixed for its lifetime: the stage-1
-    * query has 2 file sources per epoch, and Structured Streaming pins the
+    * The epoch SET of a `workDir` is fixed for its lifetime: the query has
+    * one pose file source per epoch, and Structured Streaming pins the
     * source count in the checkpoint. Onboarding a new epoch = a new
     * `workDir` (epochs are independent; old events remain readable).
     * ENFORCED: the ordered epoch list is persisted to `workDir/epochs.txt`
     * on the first poll and must match exactly (same keys, same ORDER — the
-    * source slots and per-epoch dirs are positional) on every later poll.
-    * Which epochs have a `blobDir` is fixed the same way (stage 0 has one
-    * positional source per such epoch), recorded in
-    * `workDir/blob_sources.txt`.
+    * source slots and carries are positional) on every later poll.
+    * Which epochs have a `blobDir` is fixed the same way (one positional
+    * blob source per such epoch), recorded in `workDir/blob_sources.txt`.
     *
     * Blob contract (condition 3): a frame's speed is exact once four kept
     * blob samples follow it; before that stage 2 sees the truncated-window
@@ -462,91 +619,48 @@ object FightStream {
     * data should run a few samples past `upToUs` when the pose frontier
     * gets there. Blob samples must land in time order across polls: a
     * sample at or before the newest sample of an earlier poll is dropped,
-    * like a late pose row. Stage 0's sink and checkpoint
-    * (`workDir/blob_speed`, `workDir/ckpt_blob_speed`) replace the
-    * hour-bucketed `workDir/speed` table of earlier versions, which is
-    * left untouched: the first poll of such a `workDir` reads its whole
-    * blob history in one stage-0 batch, a one-time catch-up whose samples
-    * pass through one task per epoch.
+    * like a late pose row.
     *
-    * Memory contract: each poll's silver rows pass through one stateful
-    * task PER EPOCH ([[fillAndFlag]]'s sequential carry), so a poll must be
-    * bounded per epoch — at the reference cadence (30 min at 50 fps ≈ 90 k
-    * slots) that is a few MB. Catching up over a LONG backlog (days of
-    * pose data) must be split into multiple polls with stepped `upToUs`,
-    * not one giant poll; `maxFilesPerTrigger` is no substitute because
-    * file discovery order within one backlog batch does not follow frame
-    * order. */
+    * Earlier versions ran one checkpointed query per stage
+    * (`ckpt_blob_speed`, `ckpt_silver`, `ckpt_filled`, `ckpt_gold`); one
+    * query cannot resume those checkpoints, so such a `workDir` is refused
+    * with an `IllegalStateException`. Poll into a new `workDir`; the events
+    * already emitted stay readable through [[fightEvents]].
+    *
+    * Memory contract: a poll's new rows pass through the driver once
+    * (every epoch's skeleton-part rows and blob samples) and the rows of
+    * its closing slots stay there until the silver pivot has run, so
+    * driver heap grows with the rows of one poll. Measured at the
+    * reference cadence (30 min at 50 fps, 2 mice × 4 parts: 720 k pose
+    * rows per epoch and poll) on 4 cores with a 3 GB heap, the heap after
+    * a collection peaked near 1.0 GB for one epoch and 1.3 GB for two.
+    * Catching up over a LONG backlog (days of pose data) must be split
+    * into multiple polls with stepped `upToUs`, not one giant poll. */
   def pollFightsMulti(spark: SparkSession, epochs: Seq[FightEpoch],
       workDir: String, parts: Map[String, String], p: FightParams,
       upToUs: Long): Unit = {
-    import spark.implicits._
     require(epochs.nonEmpty, "at least one epoch")
     require(epochs.map(_.epoch).distinct.length == epochs.length,
       "epoch keys must be unique")
-    // the stage checkpoints and per-epoch dirs are positional — the epoch
-    // sequence must be byte-identical on every poll of this workDir
+    val root = new org.apache.hadoop.fs.Path(workDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fourQueryCheckpoints.find(d => fs.exists(new org.apache.hadoop.fs.Path(root, d)))
+      .foreach { d => throw new IllegalStateException(
+        s"workDir '$workDir' holds '$d', a checkpoint of the earlier four-query " +
+          "fight poller, which the one-query poller cannot resume. Poll into a " +
+          "new workDir; the events already emitted stay readable through " +
+          "FightStream.fightEvents / fightEventsByEpoch.") }
+    // the sources and carries are positional — the epoch sequence must be
+    // byte-identical on every poll of this workDir
     Poll.checkEpochManifest(spark, workDir, epochs.map(_.epoch))
     Poll.checkBlobManifest(spark, workDir,
       epochs.map(e => (e.epoch, e.blobDir.isDefined)))
-    val durUs = frameDurUs(p.fps)
-    val markerRoot = s"$workDir/markers"
-    val silverDir = s"$workDir/silver"
-    val filledDir = s"$workDir/filled"
-    val eventsDir = s"$workDir/events"
-    // single-epoch workDirs keep the pre-multi layout (markers/ directly
-    // under workDir): the stage-1 checkpoint pins its source PATHS
-    val markerDirs =
-      if (epochs.lengthCompare(1) == 0) Seq(markerRoot)
-      else epochs.indices.map(i => s"$markerRoot/m$i")
-    Seq(silverDir, filledDir, eventsDir).foreach(ensureDir(spark, _))
-    val t0ByEpoch = epochs.map(e => e.epoch -> e.t0us).toMap
-    markerDirs.foreach { md =>
-      ensureDir(spark, md)
-      Poll.writeMarkers(spark, md, upToUs, durUs)
-    }
-    val hasBlob = epochs.exists(_.blobDir.isDefined)
-    // condition 3: stage 0 extends the blob-speed sink BEFORE stage 2
-    // reads it (stream-static join below)
-    if (hasBlob)
-      drain(blobSpeedQuery(spark, epochs, p).toDF(), s"$workDir/blob_speed",
-        s"$workDir/ckpt_blob_speed")
-    drain(silverQueryMulti(spark, epochs, markerDirs, parts, p.fps),
-      silverDir, s"$workDir/ckpt_silver")
-    val silver = spark.readStream.schema(silverSchema).parquet(silverDir)
-      // pre-epoch-column rows read back as null = the single-epoch key ""
-      .withColumn("epoch", coalesce(col("epoch"), lit("")))
-    // stream-static left join against the stage-0 speeds (batch joins the
-    // same shape onto the dense spine); an epoch with no blob source gets
-    // speed = MaxValue (condition 3 off, like blob = None), one WITH a
-    // source but no sample for a frame gets NaN (not a candidate, like
-    // batch's null left join)
-    val withSpeed = if (hasBlob) {
-      val defaults = epochs.map(e =>
-        e.epoch -> (if (e.blobDir.isDefined) Double.NaN else Double.MaxValue)).toMap
-      silver.join(blobSpeeds(spark, workDir), Seq("epoch", "frame"), "left")
-        .withColumn("speed", coalesce(col("blob_speed"),
-          element_at(typedLit(defaults), col("epoch"))))
-        .drop("blob_speed")
-    } else silver.withColumn("speed", lit(Double.MaxValue))
-    drain(fillAndFlag(withSpeed.as[SilverSpeed], p, t0ByEpoch).toDF(),
-      filledDir, s"$workDir/ckpt_filled")
-    val filled = spark.readStream.schema(filledSchema).parquet(filledDir)
-      .withColumn("epoch", coalesce(col("epoch"), lit("")))
-    // gold: closed super-session spans → exact batch tail over the filled
-    // sink slice, written per micro-batch under an id-keyed subdir —
-    // overwrite of the same subdir makes checkpoint replays idempotent
-    // (exactly-once events without relying on sink transactionality)
-    goldSessions(filled, p, t0ByEpoch).writeStream
-      .option("checkpointLocation", s"$workDir/ckpt_gold")
-      .outputMode("append")
+    val markerDir = s"$workDir/markers"
+    Poll.writeMarkerText(spark, markerDir, upToUs, frameDurUs(p.fps))
+    pollInput(spark, epochs, markerDir, parts, p.fps).writeStream
+      .option("checkpointLocation", s"$workDir/ckpt_fight")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spans = batch.select("epoch", "minF", "maxF").collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        if (spans.nonEmpty)
-          eventsFromSpans(batch.sparkSession, spans, filledDir, p).toDF()
-            .write.mode("overwrite").parquet(s"$eventsDir/b$batchId")
-        ()
+        pollBatch(spark, epochs, workDir, parts, p, batch, batchId)
       }
       .trigger(Trigger.AvailableNow()).start().awaitTermination()
   }

@@ -9,7 +9,8 @@ import graft.functions.Cols
 
 /** Shared plumbing for the incremental detector pollers
   * ([[FightStream]], [[TubeStream]]): the per-frame-slot silver pivot, the
-  * frontier-marker watermark protocol, and the drain / event-dir helpers.
+  * frontier markers (both formats), the drain / event-dir helpers and the
+  * per-micro-batch snapshot files of explicitly carried state.
   * ONE pivot implementation — the two streams' feature tables cannot drift
   * from each other, and both ride [[Detectors.withFeatures]] /
   * [[Detectors.pivotAggs]], so they cannot drift from the batch cores
@@ -107,7 +108,10 @@ private[streaming] object Poll {
     ()
   }
 
-  /** Append the frontier-marker pair at (upTo − 1 frame, upTo): the pair
+  /** Append the frontier-marker pair at (upTo − 1 frame, upTo) as parquet
+    * pose rows with null identity, the form the tube poller's stateful
+    * stages read (kept only until that poller moves to the one-query
+    * pattern of [[FightStream]], which reads [[markerText]]): the pair
     * advances the watermark to exactly upTo, flushing every frame slot
     * STRICTLY before the frontier — the slot containing upTo stays
     * pending, so rows for it arriving in a later poll are merged, not
@@ -125,6 +129,27 @@ private[streaming] object Poll {
     spark.createDataFrame(spark.sparkContext.parallelize(markers, 1), poseSchema)
       .write.mode("append").parquet(markerDir)
   }
+
+  /** Add the frontier-marker pair at (upTo − 1 frame, upTo) as one text
+    * file per frontier (one µs time per line), renamed into place whole so
+    * the marker source never reads a torn file. Same pair and flushing
+    * rule as [[writeMarkers]]. */
+  def writeMarkerText(spark: SparkSession, markerDir: String, upToUs: Long,
+      durUs: Long): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(markerDir, s"$upToUs.txt")
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dst)) {
+      val tmp = new org.apache.hadoop.fs.Path(markerDir, s".$upToUs.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(s"${upToUs - durUs}\n$upToUs\n".getBytes("UTF-8")) finally out.close()
+      if (!fs.rename(tmp, dst))
+        throw new java.io.IOException(s"marker rename failed: $dst")
+    }
+  }
+
+  /** The marker files [[writeMarkerText]] writes, as a stream of `tUs`. */
+  def markerText(spark: SparkSession, markerDir: String): DataFrame =
+    spark.readStream.text(markerDir).select(col("value").cast(LongType).as("tUs"))
 
   /** Persist and validate the ORDERED epoch list of a multi-epoch
     * `workDir`. The stage-1 streaming sources and the per-epoch marker
@@ -150,17 +175,18 @@ private[streaming] object Poll {
   }
 
   /** Persist and validate which epochs of a fight `workDir` have a blob
-    * source. Stage 0 of [[FightStream.pollFightsMulti]] has one positional
-    * file source per such epoch, pinned in its checkpoint like stage 1's
-    * pose sources, so this set is as fixed as the epoch list. Recorded in
-    * `workDir/blob_sources.txt`, one `blob <key>` or `none <key>` line per
-    * epoch in epoch order, by the first poll that finds it absent. */
+    * source. The query of [[FightStream.pollFightsMulti]] has one
+    * positional blob file source per such epoch, pinned in its checkpoint
+    * like the pose sources, so this set is as fixed as the epoch list.
+    * Recorded in `workDir/blob_sources.txt`, one `blob <key>` or
+    * `none <key>` line per epoch in epoch order, by the first poll that
+    * finds it absent. */
   def checkBlobManifest(spark: SparkSession, workDir: String,
       epochs: Seq[(String, Boolean)]): Unit =
     checkManifest(spark, s"$workDir/blob_sources.txt",
       epochs.map { case (e, hasBlob) => (if (hasBlob) "blob " else "none ") + e },
-      s"blob sources of workDir '$workDir' changed: stage 0 has one " +
-        "positional file source per epoch with a blobDir, so the set of " +
+      s"blob sources of workDir '$workDir' changed: the poll query has one " +
+        "positional blob source per epoch with a blobDir, so the set of " +
         "epochs with a blob source must be identical on every poll",
       "Adding or removing an epoch's blob source requires a new workDir.")
 
@@ -186,6 +212,44 @@ private[streaming] object Poll {
       try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
       finally out.close()
     }
+  }
+
+  /** The snapshot files `b<batchId>` under `dir` as (id, path), by id. */
+  def snapshots(spark: SparkSession, dir: String): Seq[(Long, String)] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.flatMap { s =>
+      val name = s.getPath.getName
+      if (s.isFile && name.startsWith("b"))
+        name.drop(1).toLongOption.map(_ -> s.getPath.toString)
+      else None
+    }.sortBy(_._1)
+  }
+
+  /** Write `value` (Java-serializable) to `path`, replacing it: a replayed
+    * micro-batch rewrites its own snapshot. */
+  def writeSnapshot(spark: SparkSession, path: String, value: AnyRef): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = new java.io.ObjectOutputStream(
+      new java.io.BufferedOutputStream(fs.create(p, true)))
+    try out.writeObject(value) finally out.close()
+  }
+
+  /** Read a value [[writeSnapshot]] wrote. */
+  def readSnapshot[T](spark: SparkSession, path: String): T = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = new java.io.ObjectInputStream(
+      new java.io.BufferedInputStream(fs.open(p)))
+    try in.readObject().asInstanceOf[T] finally in.close()
+  }
+
+  /** Delete `paths` (superseded snapshots). */
+  def delete(spark: SparkSession, paths: Seq[String]): Unit = paths.foreach { s =>
+    val p = new org.apache.hadoop.fs.Path(s)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
   }
 
   /** The per-micro-batch gold event dirs under `workDir/events`. */

@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.behavior.Detectors
 import graft.behavior.Detectors.{Roi, TubeParams, TubeTestEvent}
 
-/** End-to-end INCREMENTAL tube-test detection — [[FightStream]]'s
-  * medallion design applied to the reference's second detector
+/** End-to-end INCREMENTAL tube-test detection — a checkpointed medallion
+  * design over the reference's second detector
   * (`social_behavior_detection/social_behaviour_detection.py:100-390`),
   * in TWO stages: tube tests have no forward-fill and no empty-frame
   * bridging, so no stateful stage is needed at all.
@@ -34,10 +34,11 @@ import graft.behavior.Detectors.{Roi, TubeParams, TubeTestEvent}
   *      clip is exact whether the epoch ended at the last real frame or
   *      continues beyond the frontier.
   *
-  * Frontier markers, the poll/discovery contract, the multi-epoch
-  * one-poller design (ONE checkpoint per stage, state keyed by epoch,
-  * global frontier), and exactly-once event emission (idempotent
-  * per-micro-batch event dirs) are identical to [[FightStream]]. The ROI
+  * Frontier markers (here as parquet rows that advance each stage's
+  * watermark), the poll/discovery contract and the multi-epoch one-poller
+  * design (ONE checkpoint per stage, state keyed by epoch, global
+  * frontier) follow [[FightStream]], as does exactly-once event emission
+  * (idempotent per-micro-batch event dirs). The ROI
   * gate is static per-epoch configuration and evaluates inside the silver
   * plan, exactly where batch evaluates it.
   */
@@ -111,10 +112,12 @@ object TubeStream {
     silver
       .withColumn("tFrame", timestamp_micros(t0Expr + col("frame") * durUs))
       .withWatermark("tFrame", "0 seconds")
-      // the never-true watermark-column disjunct keeps this filter ABOVE
-      // the EventTimeWatermark node (see FightStream.goldSessions): markers
-      // and non-candidate slots must still advance the watermark, or open
-      // sessions never close
+      // the never-true disjunct REFERENCES THE WATERMARK COLUMN, which is
+      // the one thing PushPredicateThroughNonJoin refuses to push below an
+      // EventTimeWatermark node: a plain candidate filter would be pushed
+      // under it, markers and non-candidate slots would no longer advance
+      // the watermark, and open sessions would never close (a rand() guard
+      // gets optimized away)
       .filter(col("isCand") || unix_micros(col("tFrame")) < lit(Long.MinValue + 1))
       .groupBy(col("epoch"), session_window(col("tFrame"), s"$gapUs microseconds"))
       .agg(min(col("frame")).as("minF"), max(col("frame")).as("maxF"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import graft.TestSpark
 import graft.behavior.Detectors
+import scala.jdk.CollectionConverters._
 
 /** Condition 3 across polls: stage 0 of the fight poller carries the blob
   * speed recipe from poll to poll, and after every poll the speeds stage 2
@@ -150,4 +151,49 @@ class BlobSpeedStreamSpec extends AnyFunSuite {
     }
     assert(dropped.getMessage.contains("blob sources"))
   }
+
+  test("a poll's reads outside its new input stay flat over 20 polls") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[CountingFs].getName)
+    val t0us = java.sql.Timestamp.valueOf("2024-08-02 08:00:00").getTime * 1000L
+    val base = Files.createTempDirectory("graft_bounded").toString
+    val (poseDir, blobDir, work) = (s"$base/pose", s"$base/blob", s"$base/work")
+    // what a poll opens or lists, outside the delivered files and the
+    // checkpoint (Spark's own logs, bounded by its compaction interval)
+    val skip = Seq(poseDir, blobDir, s"$work/ckpt_")
+    val counts = (0 until 20).map { i =>
+      val frames = i * 100 until (i + 1) * 100
+      poseDf(t0us, "", frames.flatMap(apartFrame(_, ("A", "B"))))
+        .drop("epoch").write.parquet(s"$poseDir/c$i")
+      blobDf(frames.map(f => (t0us + f * durUs, Option(500.0 + f % 3), Option(100.0))))
+        .write.parquet(s"$blobDir/c$i")
+      CountingFs.ops.clear()
+      FightStream.pollFights(spark, s"countfs://$poseDir/*", s"countfs://$work",
+        parts, p, t0us, Seq("A", "B"), t0us + (i + 1) * 100 * durUs,
+        blobDir = Some(s"countfs://$blobDir/*"))
+      CountingFs.ops.asScala.count(op => !skip.exists(op.drop(5).startsWith))
+    }
+    info(s"files opened + dirs listed per poll: ${counts.mkString(", ")}")
+    assert(counts(4) > 0)
+    assert(counts(19) <= counts(4), counts)
+  }
+}
+
+/** The local file system under the `countfs` scheme, recording every file
+  * it opens and every directory it lists. */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    CountingFs.ops.add(s"open ${f.toUri.getPath}")
+    super.open(f, bufferSize)
+  }
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingFs.ops.add(s"list ${f.toUri.getPath}")
+    super.listStatus(f)
+  }
+}
+
+object CountingFs {
+  val ops = new java.util.concurrent.ConcurrentLinkedQueue[String]
 }

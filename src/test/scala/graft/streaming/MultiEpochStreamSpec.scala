@@ -93,8 +93,8 @@ class MultiEpochStreamSpec extends AnyFunSuite {
     assert(wantA.size === 1 && wantB.size === 1)
     assert(wantA !== wantB, "fixture: the two epochs' events must differ")
     assert(got === Map("rig:A" -> wantA, "rigB" -> wantB))
-    // ONE checkpoint per stage, regardless of epoch count
-    assert(ckptDirs(work) === Seq("ckpt_filled", "ckpt_gold", "ckpt_silver"))
+    // ONE checkpoint per poller, regardless of epoch count
+    assert(ckptDirs(work) === Seq("ckpt_fight"))
     // idempotency: an empty re-poll emits nothing new
     FightStream.pollFightsMulti(spark, epochs, work, parts, p,
       cut2us + 20L * durUs)
@@ -205,5 +205,17 @@ class MultiEpochStreamSpec extends AnyFunSuite {
       .write.parquet(s"$base/evwork/events/b0")
     val evs = FightStream.fightEventsByEpoch(spark, s"$base/evwork").collect()
     assert(evs.map(_.epoch).toSeq === Seq(""))
+  }
+
+  test("a workDir of the four-query fight poller is refused with its remedy") {
+    val work = Files.createTempDirectory("graft_oldlayout").toString
+    new java.io.File(s"$work/ckpt_silver").mkdirs()
+    val e = intercept[IllegalStateException] {
+      FightStream.pollFights(spark, s"$work/pose/*", work, parts,
+        Detectors.FightParams(), t0Aus, Seq("A", "B"), t0Aus + 100L * durUs)
+    }
+    assert(e.getMessage.contains("ckpt_silver"))
+    assert(e.getMessage.contains("new workDir"))
+    assert(e.getMessage.contains("fightEvents"))
   }
 }

@@ -429,4 +429,139 @@ class StreamingSpec extends AnyFunSuite {
     val after3 = spark.read.parquet(out).as[Long].collect().sorted
     assert(after3 === Array(1L, 2L, 3L, 4L, 5L))
   }
+
+  /** A 50 fps two-mouse pose stream: frames in `fight` close, contorted and
+    * moving; every other frame apart. Frame f lands at t0 + f·20 ms + f % 7 ms. */
+  object FightFixture {
+    import graft.behavior.Detectors
+    import spark.implicits._
+    val parts = Map("nose" -> "nose", "head" -> "head",
+      "centroid" -> "spine2", "tail_base" -> "spine4")
+    val p = Detectors.FightParams()
+    val t0 = java.sql.Timestamp.valueOf("2024-10-01 09:00:00")
+    val t0us = t0.getTime * 1000L
+    def mouse(f: Int, id: String, cx: Double, cy: Double, noseHead: Double) = Seq(
+      (f, id, "nose", cx + 8 + noseHead, cy), (f, id, "head", cx + 8, cy),
+      (f, id, "spine2", cx, cy), (f, id, "spine4", cx - 10, cy))
+    def rows(maxF: Int, fight: Range, minF: Int = 0) = (minF to maxF).flatMap { f =>
+      if (fight.contains(f)) {
+        val x = 100.0 + (f - fight.start) * 10.0
+        mouse(f, "A", x, 100, 10.0) ++ mouse(f, "B", x + 3, 104, 10.0)
+      } else mouse(f, "A", 100, 100, 2.0) ++ mouse(f, "B", 4000, 4000, 2.0)
+    }
+    def poseDf(rs: Seq[(Int, String, String, Double, Double)]) =
+      rs.map { case (f, id, part, x, y) =>
+        (new java.sql.Timestamp(t0.getTime + f * 20L + f % 7), id, part, x, y)
+      }.toDF("time", "identity", "part", "x", "y")
+    /** Blob moving with the fight, static elsewhere. */
+    def blobDf(lo: Int, hi: Int, fight: Range) = (lo until hi).map { f =>
+      (new java.sql.Timestamp(t0.getTime + f * 20L),
+        if (fight.contains(f)) 100.0 + (f - fight.start) * 10.0 else 500.0, 100.0)
+    }.toDF("time", "x", "y")
+    def key(e: Detectors.FightEvent) =
+      (e.start_ts.getTime, e.end_ts.getTime, e.duration_sec, e.end_x, e.end_y)
+    /** Deliver the rows of frames [from, cut) and poll with the frontier at
+      * frame `cut`. */
+    def deliverAndPoll(base: String, rs: Seq[(Int, String, String, Double, Double)],
+        from: Int, cut: Int, blob: Option[Range] = None): Unit = {
+      val chunk = rs.filter(r => r._1 >= from && r._1 < cut)
+      if (chunk.nonEmpty) poseDf(chunk).write.parquet(s"$base/pose/c$cut")
+      blob.foreach(fight => blobDf(from, cut, fight).write.parquet(s"$base/blob/c$cut"))
+      FightStream.pollFights(spark, s"$base/pose/*", s"$base/work", parts, p, t0us,
+        Seq("A", "B"), t0us + cut * 20000L, blob.map(_ => s"$base/blob/*"))
+    }
+    def events(base: String) =
+      FightStream.fightEvents(spark, s"$base/work").collect().map(key).toSet
+  }
+
+  test("a fight is emitted by the first poll whose frontier reaches its horizon") {
+    import FightFixture._
+    // the super-session's last candidate frame is 200
+    val fight = 100 to 200
+    val rs = rows(450, fight)
+    val horizon = 200 + math.max(p.maxFrameGap, p.maxFrameGapWEmptyFrames).toInt + 2
+    val base = Files.createTempDirectory("graft_horizon").toString
+    deliverAndPoll(base, rs, 0, 250)
+    assert(events(base).isEmpty, "mid-stream frontier")
+    deliverAndPoll(base, rs, 250, horizon - 1)
+    assert(events(base).isEmpty, "one frame short of the horizon")
+    deliverAndPoll(base, rs, horizon - 1, horizon)
+    val batch = graft.behavior.Detectors.detectFights(poseDf(rs), None, parts, p)
+      .collect().map(key).toSet
+    assert(batch.size === 1)
+    assert(events(base) === batch, "emitted by the poll that reaches the horizon")
+  }
+
+  test("a poll that dies after its writes replays to identical state and events") {
+    import FightFixture._
+    val fight = 100 to 200
+    val rs = rows(700, fight)
+    val cuts = Seq(150, 450, 700) // the fight closes in the second poll
+    val ref = Files.createTempDirectory("graft_replay_ref").toString
+    cuts.zip(0 +: cuts).foreach { case (cut, from) =>
+      deliverAndPoll(ref, rs, from, cut, Some(fight)) }
+    val crash = Files.createTempDirectory("graft_replay_crash").toString
+    deliverAndPoll(crash, rs, 0, cuts(0), Some(fight))
+    FightStream.afterBatchWrites = (work, id, _) =>
+      if (work == s"$crash/work" && id == 1L) throw new IllegalStateException("injected")
+    try intercept[Exception](deliverAndPoll(crash, rs, cuts(0), cuts(1), Some(fight)))
+    finally FightStream.afterBatchWrites = (_, _, _) => ()
+    def bytes(base: String, rel: String) =
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$base/work/$rel")).toSeq
+    def rowsOf(dir: String) =
+      spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    val (stateAtCrash, eventsAtCrash) =
+      (bytes(crash, "state/b1"), rowsOf(s"$crash/work/events/b1"))
+    assert(eventsAtCrash.nonEmpty, "the failed attempt wrote its events")
+    val snap1 = new java.io.File(s"$crash/work/state/b1")
+    val writtenAtCrash = snap1.lastModified
+    // the next poll replays batch 1 from the snapshot below it, then runs
+    // batch 2 over the new delivery
+    deliverAndPoll(crash, rs, cuts(1), cuts(2), Some(fight))
+    assert(snap1.lastModified > writtenAtCrash, "batch 1 was replayed")
+    assert(bytes(crash, "state/b1") === stateAtCrash)
+    assert(rowsOf(s"$crash/work/events/b1") === eventsAtCrash)
+    def names(base: String, sub: String) = new java.io.File(s"$base/work/$sub")
+      .listFiles().map(_.getName).filterNot(_.startsWith(".")).sorted.toSeq
+    assert(names(crash, "state") === names(ref, "state"))
+    names(ref, "state").foreach(n =>
+      assert(bytes(crash, s"state/$n") === bytes(ref, s"state/$n"), n))
+    assert(names(crash, "events") === names(ref, "events"))
+    names(ref, "events").foreach(n =>
+      assert(rowsOf(s"$crash/work/events/$n") === rowsOf(s"$ref/work/events/$n"), n))
+    val batch = graft.behavior.Detectors.detectFights(poseDf(rs),
+      Some(blobDf(0, 700, fight)), parts, p).collect().map(key).toSet
+    assert(batch.size === 1)
+    assert(events(crash) === batch)
+    assert(events(ref) === batch)
+  }
+
+  test("a camera outage over many polls builds only the gap frames a session can reach") {
+    import FightFixture._
+    val superGap = math.max(p.maxFrameGap, p.maxFrameGapWEmptyFrames).toInt
+    // a fight, then no pose rows over six polls of 10 minutes each, then
+    // another fight
+    val resume = 400 + 6 * 30000
+    val before = rows(400, 100 to 200)
+    val after = rows(resume + 400, resume + 100 to resume + 200, minF = resume)
+    val base = Files.createTempDirectory("graft_outage").toString
+    val built = scala.collection.mutable.ArrayBuffer.empty[Int]
+    FightStream.afterBatchWrites = (work, _, n) => if (work == s"$base/work") built += n
+    try {
+      deliverAndPoll(base, before, 0, 401)
+      (1 to 6).foreach(k => deliverAndPoll(base, Nil, 0, 400 + k * 30000))
+      deliverAndPoll(base, after, resume, resume + 401 + superGap + 2)
+    } finally FightStream.afterBatchWrites = (_, _, _) => ()
+    info(s"filled rows built per poll: ${built.mkString(", ")}")
+    assert(built.length === 8)
+    // the resume poll: its 401 frames, its marker slot and the gap frames
+    // within one gap horizon of the previous gold frontier, not the
+    // 180,000-frame outage
+    assert(built.last >= 401)
+    assert(built.max <= 401 + superGap + 10, built)
+    val batch = graft.behavior.Detectors.detectFights(poseDf(before ++ after), None,
+      parts, p).collect().map(key).toSet
+    assert(batch.size === 2)
+    assert(events(base) === batch)
+  }
 }
