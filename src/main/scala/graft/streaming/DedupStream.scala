@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.Path
 import graft.llm.Dedup
 
 /** Ingest-time NEAR-duplicate dedup: a checkpointed poller that assigns
@@ -46,11 +45,12 @@ import graft.llm.Dedup
   *      skipped, so popular boilerplate re-deliveries add no state), and
   *      (doc_id, rep_id) rows for the whole batch land under `assign/`.
   *
-  * Exactly-once: every state/output write goes to a per-batch directory
-  * (`…/b<batchId>`, overwrite mode), and a replayed micro-batch reads only
-  * state from batches BELOW its own id — a crash between the state write
-  * and the checkpoint commit replays to bit-identical directories instead
-  * of matching the batch against its own half-committed state.
+  * Exactly-once: each table is a [[StateLog]] (per-batch dirs written in
+  * overwrite mode, a replayed micro-batch reads only state BELOW its own
+  * id, snapshot folds and repairs committed by rename) — a crash between
+  * the state write and the checkpoint commit replays to bit-identical
+  * directories instead of matching the batch against its own
+  * half-committed state.
   *
   * Incremental contract (the standard streaming-dedup deviation from
   * batch, documented and spec-pinned): clusters NEVER MERGE across
@@ -65,9 +65,9 @@ import graft.llm.Dedup
   * against a disk-resident index scan; only candidate contents' shingle
   * sets shuffle for verification. State grows with DISTINCT contents (the
   * inherent corpus fingerprint, parquet-compressed); per-batch state dirs
-  * fold into one snapshot every `compactEvery` micro-batches
-  * ([[compactState]]), so the dir count a long-running poller lists and
-  * unions per poll stays bounded at `compactEvery + 1`.
+  * fold into one snapshot every `compactEvery` micro-batches, so the dir
+  * count a long-running poller lists and unions per poll stays bounded at
+  * `compactEvery + 1`.
   * Documents must carry globally-unique non-null ids (they name reps);
   * null-id/null-text rows are dropped at entry like the batch operators.
   */
@@ -93,127 +93,25 @@ object DedupStream {
   private val assignSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("rep_id", LongType)))
 
-  private[streaming] def fs(sp: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(sp.sparkContext.hadoopConfiguration)
-
-  /** Effective state under `root`: the newest committed snapshot
-    * `snap<M>` (if any) plus the per-batch dirs `b<i>` with M < i < below.
-    * The `below` bound keeps a REPLAYED batch blind to its own crashed
-    * half-commit; the `> M` bound keeps a crashed half-deleted compaction
-    * from double-counting folded batch dirs (leftover `b<i>` with i ≤ M
-    * are ignored and swept by the next [[compactState]]). */
-  private[streaming] def readState(sp: SparkSession, root: String, schema: StructType,
-      below: Long): DataFrame = {
-    val (snap, bdirs) = stateDirs(sp, root, below)
-    val dirs = snap.map(_._2).toSeq ++ bdirs.map(_._2)
-    if (dirs.isEmpty)
-      sp.createDataFrame(sp.sparkContext.emptyRDD[Row], schema)
-    else sp.read.schema(schema).parquet(dirs: _*)
-  }
-
-  /** (newest committed snapshot (id, path) with id < below, per-batch dirs
-    * (id, path) above that snapshot and < below). A snapshot counts only
-    * with its `_SUCCESS` marker — it was renamed into place whole, but the
-    * marker guards against a torn non-atomic rename on object stores.
-    * Snapshots come in two flavors — `snap<id>` written by compaction and
-    * `snap<id>r` written by [[repairMerges]] — and the repaired flavor
-    * wins a same-id tie (it supersedes the plain fold it was computed
-    * from, and rename-once commit semantics forbid replacing in place). */
-  private[streaming] def stateDirs(sp: SparkSession, root: String, below: Long)
-      : (Option[(Long, String)], Seq[(Long, String)]) = {
-    val f = fs(sp, root)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) return (None, Nil)
-    val entries = f.listStatus(rootPath).filter(_.isDirectory).map(_.getPath)
-    val snaps = entries.flatMap { q =>
-      snapId(q.getName).filter { case (m, _) =>
-        m < below && f.exists(new Path(q, "_SUCCESS")) }
-        .map { case (m, repaired) => (m, repaired, q.toString) }
-    }
-    // newest id; repaired flavor preferred on a tie
-    val snap = snaps.sortBy(s => (s._1, s._2)).lastOption.map(s => (s._1, s._3))
-    val lo = snap.map(_._1).getOrElse(Long.MinValue)
-    val bdirs = entries.flatMap { q =>
-      val n = q.getName
-      if (n.startsWith("b"))
-        n.drop(1).toLongOption.filter(i => i > lo && i < below)
-          .map(_ -> q.toString)
-      else None
-    }
-    (snap, bdirs.sortBy(_._1).toSeq)
-  }
-
-  /** Parse `snap<id>` / `snap<id>r` → (id, isRepaired). */
-  private def snapId(name: String): Option[(Long, Boolean)] =
-    if (!name.startsWith("snap")) None
-    else {
-      val body = name.drop(4)
-      if (body.endsWith("r")) body.dropRight(1).toLongOption.map((_, true))
-      else body.toLongOption.map((_, false))
-    }
+  private def contentsLog(workDir: String) =
+    StateLog(s"$workDir/contents", contentsSchema)
+  private def indexLog(workDir: String) = StateLog(s"$workDir/index", indexSchema)
+  private[streaming] def assignLog(workDir: String) =
+    StateLog(s"$workDir/assign", assignSchema)
+  private def logs(workDir: String) =
+    Seq(contentsLog(workDir), indexLog(workDir), assignLog(workDir))
 
   /** Fold every state dir below `uptoExclusive` into one snapshot
     * `snap<uptoExclusive-1>` per state table, then sweep the folded
-    * per-batch dirs and superseded snapshots — bounding the directory
-    * count every state read must list and union (a poller that runs for
-    * weeks otherwise accumulates one dir per micro-batch,
-    * `combine_pose_id_automated.py:181-185` territory).
-    *
-    * Crash/replay-safe and idempotent:
-    *   - the snapshot is written to a dot-temp dir and RENAMED into place
-    *     (readers never see a partial snapshot; the `_SUCCESS` marker
-    *     inside survives the rename and gates [[stateDirs]]);
-    *   - a replay that re-triggers compaction finds the snapshot already
-    *     committed, skips the fold, and only re-runs the idempotent sweep;
-    *   - a crash mid-sweep leaves folded `b<i>` dirs behind — readers
-    *     ignore them (i ≤ snapshot id) and the next compaction deletes
-    *     them.
-    *
-    * Runs driver-side inside the poller's foreachBatch (single writer by
-    * the checkpoint contract — do not run concurrently with a live poll
-    * from another process). */
+    * per-batch dirs and superseded snapshots ([[StateLog.compactIfDue]],
+    * every id due) — bounding the directory count every state read must
+    * list and union (a poller that runs for weeks otherwise accumulates
+    * one dir per micro-batch, `combine_pose_id_automated.py:181-185`
+    * territory). Crash/replay-safe and idempotent; single writer (do not
+    * run concurrently with a live poll from another process). */
   def compactState(sp: SparkSession, workDir: String,
-      uptoExclusive: Long): Unit = {
-    require(uptoExclusive > 0, s"nothing to fold below $uptoExclusive")
-    val m = uptoExclusive - 1
-    Seq("contents" -> contentsSchema, "index" -> indexSchema,
-      "assign" -> assignSchema).foreach { case (sub, schema) =>
-      val root = s"$workDir/$sub"
-      val f = fs(sp, root)
-      // either flavor at id m means batches ≤ m are already folded
-      val exists = f.exists(new Path(root, s"snap$m")) ||
-        f.exists(new Path(root, s"snap${m}r"))
-      if (!exists) {
-        val tmp = new Path(root, s".tmpsnap$m")
-        readState(sp, root, schema, uptoExclusive)
-          .write.mode("overwrite").parquet(tmp.toString)
-        if (!f.rename(tmp, new Path(root, s"snap$m")))
-          throw new java.io.IOException(s"compaction rename failed: $root/snap$m")
-      }
-      sweep(sp, root, m)
-    }
-  }
-
-  /** Delete state dirs superseded by a committed snapshot at id `m`:
-    * folded batch dirs (i ≤ m), snapshots of lower id, a PLAIN snap<m>
-    * shadowed by a committed repaired snap<m>r, and stale temps. Safe to
-    * re-run; every deleted dir is unreachable through [[stateDirs]]. */
-  private[streaming] def sweep(sp: SparkSession, root: String, m: Long): Unit = {
-    val f = fs(sp, root)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) return
-    val rAtM = f.exists(new Path(root, s"snap${m}r/_SUCCESS"))
-    f.listStatus(rootPath).map(_.getPath).foreach { q =>
-      val n = q.getName
-      val snap = snapId(n)
-      val foldedB = n.startsWith("b") && n.drop(1).toLongOption.exists(_ <= m)
-      val oldSnap = snap.exists(_._1 < m)
-      val shadowedPlain = snap.contains((m, false)) && rAtM
-      val staleTmp = n.startsWith(".tmpsnap") &&
-        n.drop(8).stripSuffix("r").toLongOption.exists(_ <= m)
-      if (foldedB || oldSnap || shadowedPlain || staleTmp) f.delete(q, true)
-    }
-  }
+      uptoExclusive: Long): Unit =
+    logs(workDir).foreach(_.compactIfDue(sp, uptoExclusive, every = 1))
 
   /** One incremental poll: cluster every document file new to the
     * checkpoint against the corpus state under `workDir`. Landing layout:
@@ -231,11 +129,11 @@ object DedupStream {
 
   /** The accumulated (doc_id, rep_id) assignment table. */
   def assignments(spark: SparkSession, workDir: String): DataFrame =
-    readState(spark, s"$workDir/assign", assignSchema, Long.MaxValue)
+    assignLog(workDir).read(spark)
 
   /** The accumulated distinct-content state (cid, rep_id, _ch, _sh). */
   def contents(spark: SparkSession, workDir: String): DataFrame =
-    readState(spark, s"$workDir/contents", contentsSchema, Long.MaxValue)
+    contentsLog(workDir).read(spark)
 
   /** Offline cross-batch cluster-merge REPAIR — closes the one documented
     * deviation from batch semantics (clusters never merge across batches).
@@ -255,15 +153,14 @@ object DedupStream {
     *     rep. Shingle-less docs have no edges and keep their own reps,
     *     matching batch semantics.
     *
-    * The repaired `contents` and `assign` tables are written as NEW
-    * snapshots at the current max state id (rename-committed; the stale
-    * per-batch dirs and old snapshots become unreadable the instant the
-    * snapshot lands and are swept by the closing compaction). Crash-safe
-    * by idempotence: every write targets a snapshot that either commits
-    * whole or stays absent, readers always see a complete (if possibly
-    * pre-repair) table, and re-running the repair converges — component
-    * edges are keyed by cid/content, never by the rep values being
-    * rewritten.
+    * The repaired `contents` and `assign` tables are committed as
+    * repaired snapshots ([[StateLog.commitRepair]]) at the
+    * [[StateLog.repairFrontier]] — the newest checkpoint-committed state
+    * id — and the index folds to the same id. Crash-safe by idempotence:
+    * every write targets a snapshot that either commits whole or stays
+    * absent, readers always see a complete (if possibly pre-repair) table,
+    * and re-running the repair converges — component edges are keyed by
+    * cid/content, never by the rep values being rewritten.
     *
     * Run with the poller STOPPED (same single-writer contract as
     * [[compactState]]). Cost is the batch-dedup analogue over the distinct
@@ -277,26 +174,12 @@ object DedupStream {
     * `maxBandBucket` is dropped loudly here like in batch, so under a cap
     * the two can differ exactly where batch itself loses recall. */
   def repairMerges(sp: SparkSession, workDir: String, p: Params): Unit = {
-    val tables = Seq("contents", "index", "assign")
-    val dirMax = tables.flatMap { sub =>
-      val (snap, bdirs) = stateDirs(sp, s"$workDir/$sub", Long.MaxValue)
-      snap.map(_._1).toSeq ++ bdirs.map(_._1)
-    }.maxOption.getOrElse(return)
-    // fold only CHECKPOINT-COMMITTED batches: a poller killed mid-batch
-    // leaves half-written b<k> dirs for a batch the checkpoint never
-    // committed — baking those into the repaired snapshot (and sweeping
-    // the b-dirs) would make the inevitable replay of batch k read state
-    // it can't see (snapshot id ≥ its own id) and write assignment dirs
-    // forever shadowed by the snapshot. Cap the fold at the checkpoint's
-    // committed frontier; uncommitted dirs stay for the replay to
-    // overwrite. (Direct processBatch callers — the specs — have no
-    // checkpoint; for them every written dir IS committed, so the dir max
-    // stands.)
-    val maxId = committedFrontier(sp, workDir).getOrElse(dirMax).min(dirMax)
+    val maxId = StateLog.repairFrontier(sp, workDir, logs(workDir): _*)
+      .getOrElse(return)
     val below = maxId + 1
-    val C = readState(sp, s"$workDir/contents", contentsSchema, below)
-    val ix = readState(sp, s"$workDir/index", indexSchema, below)
-    val A = readState(sp, s"$workDir/assign", assignSchema, below)
+    val C = contentsLog(workDir).read(sp, below)
+    val ix = indexLog(workDir).read(sp, below)
+    val A = assignLog(workDir).read(sp, below)
     // banding candidates among stored contents; the same loud cap rule as
     // the batch operator (0 = exact)
     val bt = Dedup.capBandBuckets(ix, Seq("band", "bh"), p.maxBandBucket,
@@ -327,46 +210,16 @@ object DedupStream {
         col("_ch"), col("_sh"))
     val newA = A.join(cidMap.withColumnRenamed("cid", "rep_id"), Seq("rep_id"), "left")
       .select(col("doc_id"), coalesce(col("_nrep"), col("rep_id")).as("rep_id"))
-    // commit: write-to-temp + rename into the REPAIRED snapshot flavor
-    // snap<maxId>r (wins the same-id tie over a plain compaction fold —
-    // rename-once, never replace-in-place), skipping tables whose
-    // repaired snapshot already landed (crashed earlier run)
-    Seq("contents" -> newC, "assign" -> newA).foreach { case (sub, df) =>
-      val root = s"$workDir/$sub"
-      val f = fs(sp, root)
-      val target = new Path(root, s"snap${maxId}r")
-      if (!f.exists(target)) {
-        val tmp = new Path(root, s".tmpsnap${maxId}r")
-        df.write.mode("overwrite").parquet(tmp.toString)
-        if (!f.rename(tmp, target))
-          throw new java.io.IOException(s"repair rename failed: $target")
-      }
-    }
-    // fold the index to the same id and sweep everything superseded
-    // (contents/assign skip their fold — the repaired flavor already
-    // covers id maxId)
+    StateLog.commitRepair(maxId, contentsLog(workDir) -> newC,
+      assignLog(workDir) -> newA)
+    // fold the index to the same id (contents/assign skip their fold —
+    // the repaired flavor already covers id maxId)
     compactState(sp, workDir, maxId + 1)
-  }
-
-  /** Highest micro-batch id the streaming checkpoint has COMMITTED, from
-    * the checkpoint's `commits/` log; None when no checkpoint exists
-    * (state driven through [[processBatch]] directly). */
-  private[streaming] def committedFrontier(sp: SparkSession, workDir: String): Option[Long] = {
-    val commits = new Path(s"$workDir/ckpt/commits")
-    val f = fs(sp, s"$workDir/ckpt")
-    if (!f.exists(commits)) None
-    else f.listStatus(commits).toSeq
-      .flatMap(s => s.getPath.getName.toLongOption).maxOption
   }
 
   private[streaming] def processBatch(sp: SparkSession, batch: DataFrame,
       workDir: String, p: Params, batchId: Long): Unit = {
-    // periodic state compaction BEFORE reading state: every dir folded
-    // here is from a checkpoint-committed batch (this batch only runs
-    // after batchId-1 committed), and a crash-replay of THIS batch
-    // re-enters through the same idempotent fold
-    if (p.compactEvery > 0 && batchId > 0 && batchId % p.compactEvery == 0)
-      compactState(sp, workDir, batchId)
+    logs(workDir).foreach(_.compactIfDue(sp, batchId, p.compactEvery))
     val docs = batch
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
@@ -399,8 +252,8 @@ object DedupStream {
     val cbands = Dedup.minhashBandTable(
       cdocs, "_id", "_text", p.n, p.numHashes, p.bands).localCheckpoint()
 
-    val prevC = readState(sp, s"$workDir/contents", contentsSchema, batchId)
-    val prevIx = readState(sp, s"$workDir/index", indexSchema, batchId)
+    val prevC = contentsLog(workDir).read(sp, batchId)
+    val prevIx = indexLog(workDir).read(sp, batchId)
 
     // 2a. exact tier: a stored content with the identical hash. Restricted
     // to shingle-BEARING contents to mirror the batch operator exactly: a
@@ -450,17 +303,15 @@ object DedupStream {
       .select("_id").distinct()
     val newContents = csets.join(exactSame, Seq("_id"), "left_anti")
       .join(repOf, Seq("_lrep"))
-    newContents
+    contentsLog(workDir).write(batchId, newContents
       .select(col("_id").as("cid"), col("_rep").as("rep_id"),
-        col("_ch"), col("_sh"))
-      .write.mode("overwrite").parquet(s"$workDir/contents/b$batchId")
-    cbands.join(newContents.select("_id"), Seq("_id"), "left_semi")
-      .select(col("band"), col("bh"), col("_id").as("cid"))
-      .write.mode("overwrite").parquet(s"$workDir/index/b$batchId")
+        col("_ch"), col("_sh")))
+    indexLog(workDir).write(batchId,
+      cbands.join(newContents.select("_id"), Seq("_id"), "left_semi")
+        .select(col("band"), col("bh"), col("_id").as("cid")))
     // 5. batch assignment: doc → in-batch cluster → global rep
-    local.select(col("doc_id"), col("_lrep"))
+    assignLog(workDir).write(batchId, local.select(col("doc_id"), col("_lrep"))
       .join(repOf, Seq("_lrep"))
-      .select(col("doc_id"), col("_rep").as("rep_id"))
-      .write.mode("overwrite").parquet(s"$workDir/assign/b$batchId")
+      .select(col("doc_id"), col("_rep").as("rep_id")))
   }
 }

@@ -17,8 +17,8 @@ import graft.llm.{Gates, Similarity}
   *
   * Per micro-batch, inside ONE checkpointed stream:
   *   1. [[DedupStream.processBatch]] clusters the delivery against state
-  *      (its own exactly-once story: per-batch state dirs, replays
-  *      rewrite bit-identically, snapshot compaction);
+  *      (its own exactly-once story, the [[StateLog]] protocol: per-batch
+  *      state dirs, replays rewrite bit-identically, snapshot compaction);
   *   2. the batch's assignment table (`assign/b<id>`) names the new reps:
   *      `rep_id = doc_id` — a doc attaching to any stored cluster gets
   *      the stored (smaller-id) rep instead;
@@ -53,7 +53,7 @@ object PipelineStream {
     StructField("embedding", ArrayType(FloatType, containsNull = false),
       nullable = false)))
 
-  /** Semantic-floor state (`workDir/sem/b<id>` + `snap<m>`): the
+  /** Semantic-floor state (`workDir/sem`, a [[StateLog]]): the
     * (id, coarse cell, vector, kept) of every SCORABLE document the gate
     * ever saw. `kept = true` rows are the survivors — the reference set
     * later deliveries score against; `kept = false` rows (floored at
@@ -62,43 +62,24 @@ object PipelineStream {
     * — without them the chain deviation would be unrepairable (the
     * bridge vector would be gone). State stays corpus-proportional
     * either way. */
-  private[streaming] val semSchema = StructType(Seq(
+  private val semSchema = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("cell", LongType),
     StructField("embedding", ArrayType(FloatType)),
     StructField("kept", BooleanType)))
 
-  /** Fold `sem/b<i>` (i < uptoExclusive) into `snap<uptoExclusive−1>` —
-    * [[DedupStream.compactState]]'s single-table body over the semantic
-    * state (same dot-temp + rename-once commit, same sweep). */
-  private[streaming] def compactSemState(sp: SparkSession, workDir: String,
-      uptoExclusive: Long): Unit = {
-    val root = s"$workDir/sem"
-    val m = uptoExclusive - 1
-    val f = DedupStream.fs(sp, root)
-    if (!f.exists(new org.apache.hadoop.fs.Path(root, s"snap$m"))) {
-      val tmp = new org.apache.hadoop.fs.Path(root, s".tmpsnap$m")
-      DedupStream.readState(sp, root, semSchema, uptoExclusive)
-        .sortWithinPartitions("cell")
-        .write.mode("overwrite").parquet(tmp.toString)
-      if (!f.rename(tmp, new org.apache.hadoop.fs.Path(root, s"snap$m")))
-        throw new java.io.IOException(
-          s"semantic-state compaction rename failed: $root/snap$m")
-    }
-    DedupStream.sweep(sp, root, m)
-  }
+  private def semLog(workDir: String) = StateLog(s"$workDir/sem", semSchema)
+  /** Every `sem` dir is written sorted by cell, so the gate's probed-cell
+    * filter prunes parquet row groups. */
+  private val byCell: DataFrame => DataFrame = _.sortWithinPartitions("cell")
 
   /** Score one delivery through the semantic floor (contract in
-    * [[graft.llm.Gates.Semantic]]) and land its survivors as `sem/b<id>`;
+    * [[graft.llm.Gates.Semantic]]) and land its survivors in the `sem` log;
     * returns the delivery minus floored documents. */
   private def semGate(sp: SparkSession, batch0: DataFrame, workDir: String,
       indexDir: String, semMinCos: Double, compactEvery: Int,
       batchId: Long): DataFrame = {
-    // fold BEFORE reading, the DedupStream discipline: every dir folded
-    // here is from a checkpoint-committed batch, and a replay of THIS
-    // batch re-enters through the same idempotent fold
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      compactSemState(sp, workDir, batchId)
+    semLog(workDir).compactIfDue(sp, batchId, compactEvery, byCell)
     val cents = Similarity.ivfCentroids(sp, indexDir)
     // consumed by the within-delivery dedup, the anti-join, the cell
     // assignment, and the state landing — materialize the poll-sized
@@ -124,7 +105,7 @@ object PipelineStream {
     // shuffles, the DedupStream index-probe shape
     val probedCells = dSide.select("cell").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val state = DedupStream.readState(sp, s"$workDir/sem", semSchema, batchId)
+    val state = semLog(workDir).read(sp, batchId)
       .filter(col("kept") && col("cell").isin(probedCells: _*))
       .select(col("cell"), col("embedding").as("_se"))
     val cos = Similarity.dotNative(col("_se"), col("embedding")) /
@@ -144,7 +125,7 @@ object PipelineStream {
     val drop1Side = drops1
       .join(Similarity.assignCells(drops1, cents, "vec_id", "embedding", 1),
         "vec_id")
-    dSide.join(d2, Seq("vec_id"), "left_anti")
+    val landed = dSide.join(d2, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"), col("embedding"))
       .withColumn("kept", lit(true))
       .unionByName(dSide.join(d2, Seq("vec_id"), "left_semi")
@@ -153,8 +134,7 @@ object PipelineStream {
       .unionByName(drop1Side
         .select(col("vec_id"), col("cell"), col("embedding"))
         .withColumn("kept", lit(false)))
-      .sortWithinPartitions("cell")
-      .write.mode("overwrite").parquet(s"$workDir/sem/b$batchId")
+    semLog(workDir).write(batchId, byCell(landed))
     val floored = d1.select(col("_drop").as("doc_id"))
       .unionByName(d2.select(col("vec_id").as("doc_id")))
     batch0.join(floored, Seq("doc_id"), "left_anti")
@@ -186,8 +166,7 @@ object PipelineStream {
           SpanDupStream.processBatch(sp, batch0.select("doc_id", "text"),
             workDir, SpanDupStream.Params(spanTokens = span.spanTokens,
               compactEvery = p.compactEvery), batchId)
-          val floored = sp.read.schema(SpanDupStream.statsSchema)
-            .parquet(s"$workDir/stats/b$batchId")
+          val floored = SpanDupStream.statsLog(workDir).batch(sp, batchId)
             .filter(col("dup_frac") > span.maxDupFrac)
             .select("doc_id")
           batch0.join(floored, Seq("doc_id"), "left_anti")
@@ -195,13 +174,8 @@ object PipelineStream {
         val batch = gates.filter(spanGated, "doc_id", "text")
         DedupStream.processBatch(sp, batch.select("doc_id", "text"),
           workDir, p, batchId)
-        // explicit schema: an all-filtered batch writes an assignment dir
-        // with zero part files, where schema inference would throw
-        val assigned = sp.read.schema(
-            StructType(Seq(StructField("doc_id", LongType),
-              StructField("rep_id", LongType))))
-          .parquet(s"$workDir/assign/b$batchId")
-        val newReps = assigned.filter(col("rep_id") === col("doc_id"))
+        val newReps = DedupStream.assignLog(workDir).batch(sp, batchId)
+          .filter(col("rep_id") === col("doc_id"))
           .select(col("doc_id").as("vec_id"))
         // dropDuplicates: a doc_id landing twice in one delivery (double-
         // landed file rows) must still append ONE vector — readers never
@@ -244,25 +218,32 @@ object PipelineStream {
       _.join(reps, Seq("neighbor_id"), "left_semi"))
   }
 
+  /** The semantic gate's current survivor set as a (vec_id, cell) table
+    * — every state row with `kept = true`, repaired snapshots included
+    * ([[DedupStream.assignments]]' twin for the `sem/` state). */
+  def semSurvivors(spark: SparkSession, workDir: String): DataFrame =
+    semLog(workDir).read(spark)
+      .filter(col("kept")).select("vec_id", "cell")
+
   /** Offline repair of the semantic gate's cross-delivery deviation —
     * [[DedupStream.repairMerges]]' twin for the `sem/` state. The gate
     * scores each delivery against SURVIVORS only, so a document near an
     * already-DROPPED document (but no survivor) survives where batch
     * [[Similarity.semDedup]] over the full corpus would fold it into the
-    * chain component (documented at [[graft.llm.Gates.Semantic]]). The state carries
-    * every scorable vector it ever gated, dropped ones included (see
-    * `semSchema`), so the FULL within-cell near-dup graph is rebuildable
-    * offline: [[Similarity.semDedupDropped]] over ALL stored vectors
-    * (the index's current coarse centroids, the gate's own geometry),
-    * survivors = component min-ids — exactly the batch rule. Kept flags
-    * rewrite into the `snap<maxId>r` repaired-snapshot flavor (rename-
-    * once, wins the same-id tie, idempotent re-repair skips an existing
-    * snapshot), and newly-dropped documents are pruned from the index
-    * under the version protocol. Run with the poller STOPPED (the
-    * single-writer contract); the restarted poller reads the repaired
-    * snapshot like any other state. Like `repairMerges`, the fold stops
-    * at the checkpoint-committed frontier so a mid-batch crash replays
-    * cleanly. Scope: the sem state and the index — cluster/assignment
+    * chain component (documented at [[graft.llm.Gates.Semantic]]). The
+    * state carries every scorable vector it ever gated, dropped ones
+    * included (see `semSchema`), so the FULL within-cell near-dup graph is
+    * rebuildable offline: [[Similarity.semDedupDropped]] over ALL stored
+    * vectors (the index's current coarse centroids, the gate's own
+    * geometry), survivors = component min-ids — exactly the batch rule.
+    * Kept flags are committed as a repaired snapshot
+    * ([[StateLog.commitRepair]]: wins the same-id tie, an idempotent
+    * re-repair skips an existing one), and newly-dropped documents are
+    * pruned from the index under the version protocol. Run with the
+    * poller STOPPED (the single-writer contract); the restarted poller
+    * reads the repaired snapshot like any other state. Like
+    * `repairMerges`, the fold stops at [[StateLog.repairFrontier]] so a
+    * mid-batch crash replays cleanly. Scope: the sem state and the index — cluster/assignment
     * state keeps its landing-time membership, exactly as the dedup
     * repair leaves the sem state alone. Assumes the semantic gate was
     * enabled for every delivery in this work dir — a pre-gate document
@@ -271,24 +252,11 @@ object PipelineStream {
     *
     * PipelineStreamSpec pins stream + repairSem ≡ batch `semDedup`
     * survivors on the bridge-chain fixture. */
-  /** The semantic gate's current survivor set as a (vec_id, cell) table
-    * — every state row with `kept = true`, repaired snapshots included
-    * ([[DedupStream.assignments]]' twin for the `sem/` state). */
-  def semSurvivors(spark: SparkSession, workDir: String): DataFrame =
-    DedupStream.readState(spark, s"$workDir/sem", semSchema, Long.MaxValue)
-      .filter(col("kept")).select("vec_id", "cell")
-
   def repairSem(spark: SparkSession, workDir: String, indexDir: String,
       semMinCos: Double, retain: Int = 0): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = s"$workDir/sem"
-    val (snap, bdirs) = DedupStream.stateDirs(spark, root, Long.MaxValue)
-    val dirMax = (snap.map(_._1).toSeq ++ bdirs.map(_._1)).maxOption
-      .getOrElse(return)
-    val maxId = DedupStream.committedFrontier(spark, workDir)
-      .getOrElse(dirMax).min(dirMax)
-    val S = DedupStream.readState(spark, root, semSchema, maxId + 1)
-      .localCheckpoint()
+    val log = semLog(workDir)
+    val maxId = StateLog.repairFrontier(spark, workDir, log).getOrElse(return)
+    val S = log.read(spark, maxId + 1).localCheckpoint()
     val cents = Similarity.ivfCentroids(spark, indexDir)
     val drops = Similarity.semDedupDropped(
       S.select(col("vec_id"), col("embedding")), cents,
@@ -297,18 +265,8 @@ object PipelineStream {
         .withColumn("_d", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("embedding"),
         col("_d").isNull.as("kept"))
-    val f = DedupStream.fs(spark, root)
-    val target = new Path(root, s"snap${maxId}r")
-    if (!f.exists(target)) {
-      val tmp = new Path(root, s".tmpsnap${maxId}r")
-      newS.sortWithinPartitions("cell")
-        .write.mode("overwrite").parquet(tmp.toString)
-      if (!f.rename(tmp, target))
-        throw new java.io.IOException(
-          s"semantic repair rename failed: $root/snap${maxId}r")
-    }
-    DedupStream.sweep(spark, root, maxId)
-    val kept = DedupStream.readState(spark, root, semSchema, maxId + 1)
+    StateLog.commitRepair(maxId, log -> byCell(newS))
+    val kept = log.read(spark, maxId + 1)
       .filter(col("kept")).select(col("vec_id").as("neighbor_id"))
     Similarity.rewriteIvfIndex(spark, indexDir, retain)(
       _.join(kept, Seq("neighbor_id"), "left_semi"))

@@ -86,12 +86,6 @@ private[streaming] object Poll {
     Detectors.withFeatures(wide)
   }
 
-  /** Single-epoch form (epoch key `""`): the exact pre-refactor plan shape,
-    * used by the one-epoch pollers. */
-  def silverFeatures(pose: DataFrame, parts: Map[String, String], fps: Double,
-      t0us: Long, ids: Seq[String]): DataFrame =
-    pivotFeatures(prePivot(pose, "", parts, fps, t0us, ids), fps)
-
   /** One AvailableNow pass. A stateful append sink evicts with the
     * watermark its data batch advanced in the trailing no-data batch that
     * AvailableNow runs before it terminates, so what this poll's data

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.Path
 
 /** Ingest-time SPAN-duplication scoring: a checkpointed poller that
   * computes every newly-landed document's duplicate-text fraction
@@ -16,8 +15,8 @@ import org.apache.hadoop.fs.Path
   * per delivery so boilerplate-heavy documents can be floored at ingest
   * instead of in a later corpus-wide pass.
   *
-  * Disk-resident state (the [[DedupStream]] machinery: per-batch dirs
-  * `b<id>`, replays rewrite bit-identically, snapshot compaction):
+  * Disk-resident state, one [[StateLog]] per table (per-batch dirs,
+  * replays rewrite bit-identically, snapshot compaction):
   *   - `wins/b<id>`: (window key, distinct-doc count) — this delivery's
   *     contribution to each window's corpus-wide document frequency. Doc
   *     ids are globally unique and land once (the [[DedupStream]] landing
@@ -57,9 +56,13 @@ object SpanDupStream {
 
   private val winsSchema = StructType(Seq(
     StructField("_w", LongType), StructField("nd", LongType)))
-  private[streaming] val statsSchema = StructType(Seq(
+  private val statsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("n_windows", LongType),
     StructField("n_dup_windows", LongType), StructField("dup_frac", DoubleType)))
+
+  private def winsLog(workDir: String) = StateLog(s"$workDir/wins", winsSchema)
+  private[streaming] def statsLog(workDir: String) =
+    StateLog(s"$workDir/stats", statsSchema)
 
   /** One incremental poll: score every document file new to the
     * checkpoint against the accumulated window state under `workDir`.
@@ -79,15 +82,15 @@ object SpanDupStream {
   /** The accumulated per-document stats — each row scored as of its
     * delivery (see the incremental contract above). */
   def stats(spark: SparkSession, workDir: String): DataFrame =
-    DedupStream.readState(spark, s"$workDir/stats", statsSchema, Long.MaxValue)
+    statsLog(workDir).read(spark)
 
   /** Offline repair closing the stats-final-at-landing deviation: every
     * ALREADY-SCORED document is re-scored against the FINAL corpus and
-    * the result committed as a repaired stats snapshot (`snap<id>r` —
-    * [[DedupStream.repairMerges]]' write-to-temp + rename-once flavor,
-    * which wins the same-id tie over a plain compaction fold), so
-    * [[stats]] serves corrected rows and subsequent polls append beyond
-    * it. Run with the poller STOPPED, like every offline repair here.
+    * the result committed as a repaired stats snapshot
+    * ([[StateLog.commitRepair]], which wins the same-id tie over a plain
+    * compaction fold), so [[stats]] serves corrected rows and subsequent
+    * polls append beyond it. Run with the poller STOPPED, like every
+    * offline repair here.
     *
     * The re-score is the BATCH operator over the landed documents, on
     * purpose: a per-document re-score needs each document's window SET,
@@ -101,69 +104,44 @@ object SpanDupStream {
     * per-delivery window counts are already final at write (doc ids
     * land once), only the scoring snapshot was time-dependent.
     *
-    * Fold cap mirrors [[DedupStream.repairMerges]]: only
-    * checkpoint-committed batches bake into the snapshot; uncommitted
-    * b-dirs stay for their replay to overwrite. Idempotent — a crashed
-    * rescore reruns; an existing repaired snapshot short-circuits. */
+    * Fold cap is [[StateLog.repairFrontier]], as in
+    * [[DedupStream.repairMerges]]: only checkpoint-committed batches bake
+    * into the snapshot; uncommitted batch dirs stay for their replay to
+    * overwrite. Idempotent — a crashed rescore reruns; an existing
+    * repaired snapshot short-circuits. */
   def rescoreStats(sp: SparkSession, landingDir: String, workDir: String,
       p: Params = Params()): Unit = {
-    val root = s"$workDir/stats"
-    val (snap, bdirs) = DedupStream.stateDirs(sp, root, Long.MaxValue)
-    val dirMax = (snap.map(_._1).toSeq ++ bdirs.map(_._1))
-      .maxOption.getOrElse(return)
-    val maxId = DedupStream.committedFrontier(sp, workDir)
-      .getOrElse(dirMax).min(dirMax)
-    val scored = DedupStream
-      .readState(sp, root, statsSchema, maxId + 1).select("doc_id")
+    val log = statsLog(workDir)
+    val maxId = StateLog.repairFrontier(sp, workDir, log).getOrElse(return)
+    val scored = log.read(sp, maxId + 1).select("doc_id")
     val docs = sp.read.schema(landingSchema).parquet(s"$landingDir/*")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
       .join(scored, Seq("doc_id"), "left_semi")
     val re = graft.llm.Dedup.spanDupStats(docs, "doc_id", "text",
       p.spanTokens, p.minDocs)
-    val f = DedupStream.fs(sp, root)
-    val target = new Path(root, s"snap${maxId}r")
-    if (!f.exists(target)) {
-      val tmp = new Path(root, s".tmpsnap${maxId}r")
-      re.write.mode("overwrite").parquet(tmp.toString)
-      if (!f.rename(tmp, target))
-        throw new java.io.IOException(s"rescore rename failed: $target")
-    }
-    DedupStream.sweep(sp, root, maxId)
+    StateLog.commitRepair(maxId, log -> re)
   }
 
   /** Fold every state dir below `uptoExclusive` into one snapshot per
-    * table and sweep the folded dirs — [[DedupStream.compactState]]'s
-    * rename-committed, replay-idempotent protocol. `wins` folds BY
-    * AGGREGATION (summing each window's per-delivery counts — the only
-    * consumer is a sum, so the fold shrinks state to one row per distinct
-    * window); `stats` folds by plain union. */
+    * table and sweep the folded dirs ([[StateLog.compactIfDue]], every id
+    * due). `wins` folds BY AGGREGATION (summing each window's
+    * per-delivery counts — the only consumer is a sum, so the fold
+    * shrinks state to one row per distinct window); `stats` folds by
+    * plain union. */
   def compactState(sp: SparkSession, workDir: String,
-      uptoExclusive: Long): Unit = {
-    require(uptoExclusive > 0, s"nothing to fold below $uptoExclusive")
-    val m = uptoExclusive - 1
-    Seq(
-      ("wins", winsSchema,
-        (df: DataFrame) => df.groupBy("_w").agg(sum("nd").as("nd"))),
-      ("stats", statsSchema, identity[DataFrame] _)
-    ).foreach { case (sub, schema, fold) =>
-      val root = s"$workDir/$sub"
-      val f = DedupStream.fs(sp, root)
-      if (!f.exists(new Path(root, s"snap$m"))) {
-        val tmp = new Path(root, s".tmpsnap$m")
-        fold(DedupStream.readState(sp, root, schema, uptoExclusive))
-          .write.mode("overwrite").parquet(tmp.toString)
-        if (!f.rename(tmp, new Path(root, s"snap$m")))
-          throw new java.io.IOException(s"compaction rename failed: $root/snap$m")
-      }
-      DedupStream.sweep(sp, root, m)
-    }
+      uptoExclusive: Long): Unit = compact(sp, workDir, uptoExclusive, every = 1)
+
+  private def compact(sp: SparkSession, workDir: String, batchId: Long,
+      every: Int): Unit = {
+    winsLog(workDir).compactIfDue(sp, batchId, every,
+      _.groupBy("_w").agg(sum("nd").as("nd")))
+    statsLog(workDir).compactIfDue(sp, batchId, every)
   }
 
   private[streaming] def processBatch(sp: SparkSession, batch: DataFrame,
       workDir: String, p: Params, batchId: Long): Unit = {
-    if (p.compactEvery > 0 && batchId > 0 && batchId % p.compactEvery == 0)
-      compactState(sp, workDir, batchId)
+    compact(sp, workDir, batchId, p.compactEvery)
     val docs = batch
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
@@ -186,21 +164,19 @@ object SpanDupStream {
     // probe the accumulated state with the delivery's window set
     // BROADCAST — the corpus-scale wins table is scanned under it, never
     // shuffled; only matched rows aggregate
-    val prevNd = DedupStream
-      .readState(sp, s"$workDir/wins", winsSchema, batchId)
+    val prevNd = winsLog(workDir).read(sp, batchId)
       .join(broadcast(gcnt.select("_w")), Seq("_w"), "left_semi")
       .groupBy("_w").agg(sum("nd").as("_ndPrev"))
     val tot = gcnt.join(prevNd, Seq("_w"), "left")
       .select(col("_w"),
         (col("nd") + coalesce(col("_ndPrev"), lit(0L))).as("_nd"))
-    g.join(tot, Seq("_w"))
+    statsLog(workDir).write(batchId, g.join(tot, Seq("_w"))
       .groupBy("doc_id").agg(
         sum("_c").as("n_windows"),
         sum(when(col("_nd") >= p.minDocs, col("_c")).otherwise(lit(0L)))
           .as("n_dup_windows"))
       .select(col("doc_id"), col("n_windows"), col("n_dup_windows"),
-        round(col("n_dup_windows") / col("n_windows"), 6).as("dup_frac"))
-      .write.mode("overwrite").parquet(s"$workDir/stats/b$batchId")
-    gcnt.write.mode("overwrite").parquet(s"$workDir/wins/b$batchId")
+        round(col("n_dup_windows") / col("n_windows"), 6).as("dup_frac")))
+    winsLog(workDir).write(batchId, gcnt)
   }
 }
