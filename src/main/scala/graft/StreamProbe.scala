@@ -9,8 +9,9 @@ import graft.streaming.{FightStream, TubeStream}
   * reference's operational cadence — four 30-minute polls over a 2-hour
   * 50 fps epoch (90 k frame slots → 720 k pose rows + 90 k blob rows per
   * poll, one planted fight per half hour) — and measures per-poll wall
-  * time end-to-end (silver + filled + gold, all three checkpointed
-  * streaming stages plus the incremental blob-speed refresh).
+  * time end-to-end (the one checkpointed query of the fight poller: its
+  * file scan, then blob speed, silver, filled and gold on the driver),
+  * then the same cadence over several epochs and for the tube poller.
   *
   * The number that matters operationally: a poll must take far less than
   * the 30-minute cadence it serves. Prints one summary line; run with

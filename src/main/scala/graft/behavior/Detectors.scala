@@ -153,9 +153,10 @@ object Detectors {
   private[graft] def nn(c: Column): Column = coalesce(c, lit(Double.NaN))
 
   /** Shared wide-pivot building blocks — ONE definition for the batch core
-    * ([[wideFramesG]]) and the streaming silver stage
-    * ([[graft.streaming.FightStream]]), so the two feature tables cannot
-    * silently drift apart. */
+    * ([[wideFramesG]]) and the pollers' Spark pivot
+    * ([[graft.streaming.Poll.pivotFeatures]]), so the feature tables cannot
+    * silently drift apart. The fight poller pivots on the driver instead;
+    * `FightDriverSpec` checks that pivot against this one. */
   private[graft] val logicalParts = Seq("nose", "head", "centroid", "tail_base")
   /** Physical→logical part name mapping expression. */
   private[graft] def lpartCol(parts: Map[String, String]): Column =
@@ -394,11 +395,11 @@ object Detectors {
     * empty-frame bridges (G3) through the per-event verdict kernel
     * (`social_behaviour_detection.py:617-762`). `flagged` columns:
     * `_g, frame, tsUs, c0x, c0y, c1x, c1y, isFight, isBridge`; every frame
-    * slot of the shard must be present (dense spine). The SAME function
-    * runs under the batch core (whole corpus) and the streaming gold stage
-    * (closed super-sessions joined back to the filled sink,
-    * [[graft.streaming.FightStream]]) — one implementation, so the two
-    * modes cannot drift. */
+    * slot of the shard must be present (dense spine). The fight poller
+    * ([[graft.streaming.FightStream]]) runs the same rules on the driver
+    * over each closed super-session's filled rows; both end in the one
+    * per-event verdict [[fightOf]], and `FightDriverSpec` checks the two
+    * tails against each other. */
   private[graft] def fightsTail(flagged: DataFrame, p: FightParams): Dataset[GFight] = {
     val spark = flagged.sparkSession
     import spark.implicits._
@@ -435,24 +436,35 @@ object Detectors {
       .as[EvRow]
     rows.groupByKey(r => (r.g, r.ev)).flatMapGroups {
       (key: (String, Long), it: Iterator[EvRow]) =>
-      val g = key._1
       val rs = it.toArray.sortBy(_.frame)
-      if (rs.length < 3) Iterator.empty
-      else {
-        val body = rs.dropRight(1) // reference trims [start−1, end)
-        val verdict = Kernels.fightVerdict(
-          body.map(_.c0x), body.map(_.c0y), body.map(_.c1x), body.map(_.c1y),
-          p.fps, p.cm2px, p.minCentroidSpeed, p.minBothCentroidSpeed)
-        verdict.iterator.flatMap { case (ex, ey) =>
-          // event timestamps use [firstF, lastF] (the span holds one extra
-          // leading frame for the cleanup seed)
-          val startUs = rs.find(_.frame == rs.head.firstF).map(_.tsUs).getOrElse(rs.head.tsUs)
-          val endUs = rs.last.tsUs
-          val dur = (endUs - startUs) / 1e6
-          if (dur > 1.0) Iterator(GFight(g, usToTs(startUs), usToTs(endUs), dur, ex, ey))
-          else Iterator.empty
-        }
-      }
+      fightOf(key._1, rs.head.firstF, rs.map(_.frame), rs.map(_.tsUs),
+        rs.map(_.c0x), rs.map(_.c0y), rs.map(_.c1x), rs.map(_.c1y), p).iterator
+    }
+  }
+
+  /** The verdict on one candidate event, over its kernel rows: frames
+    * [firstF − 1, lastF] in frame order, as parallel arrays. Fewer than
+    * three rows is no event. The speed kernel sees every row but the last
+    * (the reference trims [start−1, end)); the event starts at the row of
+    * `firstF` (the leading row is only the cleanup seed; the first row when
+    * `firstF` is absent), ends at the last row, and is kept only when it
+    * lasts more than one second. The one copy of these rules for
+    * [[fightsTail]] and the fight poller's driver tail
+    * ([[graft.streaming.FightStream]]). */
+  private[graft] def fightOf(g: String, firstF: Long, frame: Array[Long],
+      tsUs: Array[Long], c0x: Array[Double], c0y: Array[Double],
+      c1x: Array[Double], c1y: Array[Double], p: FightParams): Option[GFight] = {
+    val n = frame.length
+    if (n < 3) None
+    else Kernels.fightVerdict(c0x.take(n - 1), c0y.take(n - 1),
+        c1x.take(n - 1), c1y.take(n - 1),
+        p.fps, p.cm2px, p.minCentroidSpeed, p.minBothCentroidSpeed).flatMap { case (ex, ey) =>
+      val i = frame.indexOf(firstF)
+      val startUs = tsUs(if (i >= 0) i else 0)
+      val endUs = tsUs(n - 1)
+      val dur = (endUs - startUs) / 1e6
+      if (dur > 1.0) Some(GFight(g, usToTs(startUs), usToTs(endUs), dur, ex, ey))
+      else None
     }
   }
 

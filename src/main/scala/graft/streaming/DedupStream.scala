@@ -127,11 +127,15 @@ object DedupStream {
       .trigger(Trigger.AvailableNow()).start().awaitTermination()
   }
 
-  /** The accumulated (doc_id, rep_id) assignment table. */
+  /** The accumulated (doc_id, rep_id) assignment table.
+    * Read through [[StateLog.read]]: the DataFrame fixes its file list
+    * when it is built, so re-read it after a poll that compacts. */
   def assignments(spark: SparkSession, workDir: String): DataFrame =
     assignLog(workDir).read(spark)
 
-  /** The accumulated distinct-content state (cid, rep_id, _ch, _sh). */
+  /** The accumulated distinct-content state (cid, rep_id, _ch, _sh).
+    * Read through [[StateLog.read]]: the DataFrame fixes its file list
+    * when it is built, so re-read it after a poll that compacts. */
   def contents(spark: SparkSession, workDir: String): DataFrame =
     contentsLog(workDir).read(spark)
 

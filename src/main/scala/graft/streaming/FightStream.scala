@@ -15,16 +15,16 @@ import scala.collection.mutable.ArrayBuffer
   * Streaming query per `workDir`. A poll is one `AvailableNow` run of that
   * query over every epoch's pose files, the poller's frontier markers and
   * the blob files (exactly-once file tracking replaces the reference's
-  * processed-set bookkeeping). Its single micro-batch runs the whole
-  * detector in `foreachBatch` as batch code on the caller's session, with
-  * the state between polls carried explicitly ([[Carry]]):
+  * processed-set bookkeeping). Its single micro-batch collects its rows
+  * and runs the whole detector in `foreachBatch` as plain code on the
+  * driver, with the state between polls carried explicitly ([[Carry]]):
   *
   *   0. blob speed: [[carryBlobSpeed]] extends the batch recipe
   *      [[Detectors.blobSpeed]] sample by sample per epoch, so a poll's
   *      work is proportional to the delivery, not to the blob history;
   *   1. silver: the pose rows of every frame slot the frontier closed →
-  *      per-frame wide pivot + features through [[Poll.pivotFeatures]],
-  *      the same expression tree the batch detector uses;
+  *      per-frame wide pivot + features ([[silverRows]]), the values the
+  *      batch detector's expression tree gives ([[Poll.pivotFeatures]]);
   *   2. filled: [[fillAndFlag]] forward-fills the centroid distance ACROSS
   *      polls (the cross-chunk carry the reference loses at its per-chunk
   *      job boundaries), folds the fight conditions into candidate /
@@ -33,10 +33,10 @@ import scala.collection.mutable.ArrayBuffer
   *   3. gold: candidate ∪ bridge frames assemble into SUPER-SESSIONS
   *      ([[superSessions]]; gap ≥ both batch sessionization gaps, so no
   *      cross-super interaction exists), and every closed super-session
-  *      runs the EXACT batch tail [[Detectors.fightsTail]] over its filled
-  *      rows ([[eventsFromSpans]]): same two-phase sessionization, same
-  *      min-size counts, same kernel span [firstF−1, lastF], same event
-  *      timestamps. Batch and stream cannot drift.
+  *      runs the rules of the batch tail [[Detectors.fightsTail]] over its
+  *      filled rows ([[tailEvents]]): same two-phase sessionization, same
+  *      min-size counts, same kernel span [firstF−1, lastF], and the same
+  *      per-event verdict and timestamps ([[Detectors.fightOf]]).
   *
   * Layout under `workDir`:
   *   - `ckpt_fight/`: the query's checkpoint (offset and commit logs, the
@@ -87,10 +87,11 @@ import scala.collection.mutable.ArrayBuffer
   * Scale: every carry is keyed by epoch, so a multi-rig deployment runs
   * ONE poller over all its epochs ([[pollFightsMulti]]): one streaming
   * query and one checkpoint whatever the epoch count, each epoch with its
-  * own `t0us` frame grid, identity pair and optional blob source. The
-  * silver pivot and the tail run as distributed jobs; the sequential
-  * carries (stages 0 and 2, the session assembly) run per epoch on the
-  * driver over the rows of one poll.
+  * own `t0us` frame grid, identity pair and optional blob source. Every
+  * stage runs per epoch on the driver over the rows of one poll; Spark
+  * runs the query's file scan and the `events/b<batchId>` write, so a
+  * poll that closes a super-session is two jobs and one that does not
+  * is one.
   */
 object FightStream {
 
@@ -230,35 +231,88 @@ object FightStream {
       .reduce(_.unionByName(_))
   }
 
-  /** Stage 1: the rows of the closing slots of each epoch (position, rows)
-    * → one silver row per slot, through [[Poll.prePivot]] with the epoch's
-    * own grid and identity pair and ONE [[Poll.pivotFeatures]] over the
-    * union. */
-  private def silverRows(spark: SparkSession, epochs: Seq[FightEpoch],
-      closing: Seq[(Int, Seq[SlotRow])], parts: Map[String, String],
-      fps: Double): Array[SilverRow] = {
-    import spark.implicits._
-    import Detectors.nn
-    val branches = closing.map { case (i, rs) =>
-      val e = epochs(i)
-      // an RDD, not a local relation: the optimizer would evaluate the
-      // pre-pivot projections over every row and compare the rows in its
-      // fixed-point checks, a cost that grows with the delivery
-      val local = spark.createDataset(spark.sparkContext.parallelize(rs,
-        1 + rs.length / 100000))
-        .select(timestamp_micros(col("tUs")).as("time"), col("identity"),
-          col("part"), col("x"), col("y"))
-      Poll.prePivot(local, e.epoch, parts, fps, e.t0us, e.ids)
+  /** Stage 1 on the driver: one epoch's closing slot rows → one silver row
+    * per frame slot, in frame order. The values are those of
+    * [[Poll.prePivot]] + [[Poll.pivotFeatures]] (the tube poller's pivot;
+    * `FightDriverSpec` checks the two against each other), quirks
+    * included:
+    *   - a row whose part is not a skeleton part is dropped unless its
+    *     identity is null; per (mouse, logical part) the pivot keeps the
+    *     least (x, y) pair in Spark's struct order (a null field first, NaN
+    *     last, −0.0 equal to 0.0), and a missing or null coordinate reads
+    *     as NaN;
+    *   - mouse 0 is the identity that sorts first in the pair, every other
+    *     identity (null included) is mouse 1;
+    *   - `tsUs` is the least `tUs` of the slot's rows with an identity, or
+    *     the slot's grid time when it has none (a marker-only slot);
+    *   - the features use the operation order of
+    *     [[Detectors.withFeatures]]. */
+  private[streaming] def silverRows(ep: FightEpoch, rows: Seq[SlotRow],
+      parts: Map[String, String], fps: Double): Seq[SilverRow] = {
+    val sorted = ep.ids.sorted
+    require(sorted.length == 2,
+      s"epoch '${ep.epoch}': expected exactly 2 identities, got ${sorted.length}")
+    val id0 = sorted.head
+    val durUs = frameDurUs(fps)
+    // Detectors.lpartCol tests the later logical part first
+    val lpart = Detectors.logicalParts.zipWithIndex.map { case (l, i) => parts(l) -> i }.toMap
+    val slots = scala.collection.mutable.LongMap.empty[Slot]
+    rows.foreach { r =>
+      val l = if (r.part == null) -1 else lpart.getOrElse(r.part, -1)
+      if (r.identity == null || l >= 0) {
+        val s = slots.getOrElseUpdate(r.frame, new Slot)
+        if (r.identity != null) {
+          s.nReal += 1
+          s.tsUs = math.min(s.tsUs, r.tUs)
+        }
+        if (l >= 0) {
+          val k = (if (r.identity == id0) 0 else 4) + l
+          if (s.best(k) == null || pairLess(r, s.best(k))) s.best(k) = r
+        }
+      }
     }
-    Poll.pivotFeatures(branches.reduce(_.unionByName(_)), fps).select(
-      col("epoch"), col("frame"), col("tsUs"),
-      nn(col("m0_centroid_x")).as("c0x"), nn(col("m0_centroid_y")).as("c0y"),
-      nn(col("m1_centroid_x")).as("c1x"), nn(col("m1_centroid_y")).as("c1y"),
-      nn(col("cdist")).as("cdist"),
-      nn(col("nh0")).as("nh0"), nn(col("nh1")).as("nh1"),
-      nn(col("is0")).as("is0"), nn(col("is1")).as("is1"),
-      col("isEmpty"), (col("nReal") === 0).as("isMarker"))
-      .as[SilverRow].collect()
+    slots.keys.toArray.sorted.toSeq.map { f =>
+      val s = slots(f)
+      def x(k: Int) = coord(s.best(k), _.x)
+      def y(k: Int) = coord(s.best(k), _.y)
+      def edist(a: Int, b: Int) = {
+        val dx = x(a) - x(b)
+        val dy = y(a) - y(b)
+        math.sqrt(dx * dx + dy * dy)
+      }
+      def nanmean2(a: Double, b: Double) =
+        if (a.isNaN) b else if (b.isNaN) a else (a + b) / 2.0
+      // slot index: 4 × mouse + logical part (nose, head, centroid, tail_base)
+      SilverRow(ep.epoch, f,
+        if (s.nReal > 0) s.tsUs else ep.t0us + f * durUs,
+        x(2), y(2), x(6), y(6), edist(2, 6), edist(0, 1), edist(4, 5),
+        nanmean2(edist(1, 2), edist(2, 3)), nanmean2(edist(5, 6), edist(6, 7)),
+        isEmpty = (0 until 8).forall(k => x(k).isNaN && y(k).isNaN),
+        isMarker = s.nReal == 0)
+    }
+  }
+
+  /** One frame slot of [[silverRows]]: its rows with an identity, their
+    * least `tUs`, and the row holding each (mouse, part)'s least pair. */
+  private final class Slot {
+    var nReal = 0
+    var tsUs = Long.MaxValue
+    val best = new Array[SlotRow](8)
+  }
+
+  private def coord(r: SlotRow, c: SlotRow => java.lang.Double): Double =
+    if (r == null || c(r) == null) Double.NaN else c(r).doubleValue
+
+  /** Spark's struct order on (x, y): field by field, null first, then
+    * `SQLOrderingUtil.compareDoubles` (NaN greatest, −0.0 == 0.0). */
+  private def pairLess(a: SlotRow, b: SlotRow): Boolean = {
+    def cmp(u: java.lang.Double, v: java.lang.Double): Int =
+      if (u == null) (if (v == null) 0 else -1)
+      else if (v == null) 1
+      else if (u.doubleValue == v.doubleValue) 0
+      else java.lang.Double.compare(u.doubleValue, v.doubleValue)
+    val c = cmp(a.x, b.x)
+    (if (c != 0) c else cmp(a.y, b.y)) < 0
   }
 
   /** Stage 2 over one epoch's emitted silver rows, sorted by frame, each
@@ -336,41 +390,54 @@ object FightStream {
     out.toSeq
   }
 
-  /** Stage 3b: closed super-session spans → the EXACT batch tail
-    * ([[Detectors.fightsTail]] — same two-phase sessionization, min-size
-    * counts, kernel span [firstF−1, lastF] and event timestamps as
-    * `detectFights`) over the filled rows stored under `filledDir`, sliced
-    * to the spans. ONE distributed job for all epochs' spans: the shard
-    * key is `epoch:spanStart` (spans within an epoch are ≥ superGap apart,
-    * so each is an independent shard). The poller runs the same tail over
-    * the filled rows it carries ([[spanEvents]]). */
+  /** Stage 3b: closed super-session spans → fight events over the filled
+    * rows stored under `filledDir`, sliced to the spans; the same driver
+    * tail as the poller's ([[tailEvents]]). */
   def eventsFromSpans(spark: SparkSession, spans: Array[(String, Long, Long)],
       filledDir: String, p: FightParams): Dataset[EpochFightEvent] = {
     import spark.implicits._
-    spanEvents(spark, spans, spark.read.schema(filledSchema).parquet(filledDir)
+    val filled = spark.read.schema(filledSchema).parquet(filledDir)
       // rows written before the epoch column existed read back as null =
       // the single-epoch key "" — null === "" would silently drop a
       // legacy deployment's pre-upgrade frames from the slice
       .withColumn("epoch", coalesce(col("epoch"), lit("")))
       // the kernel span reaches one frame left of a span
       .filter(col("frame") >= spans.map(_._2).min - 1 && col("frame") <= spans.map(_._3).max)
-      .as[FilledRow].collect().toSeq, p)
+      .as[FilledRow].collect().filterNot(_.isMarker).sortBy(_.frame)
+    spans.toSeq.flatMap { case (e, lo, hi) =>
+      tailEvents(e, filled.filter(r => r.epoch == e && r.frame >= lo - 1 && r.frame <= hi), p)
+    }.toDS()
   }
 
-  /** [[eventsFromSpans]] over filled rows held by the driver: each span's
-    * non-marker rows in [minF − 1, maxF], keyed `epoch:minF`. */
-  private def spanEvents(spark: SparkSession, spans: Seq[(String, Long, Long)],
-      filled: Seq[FilledRow], p: FightParams): Dataset[EpochFightEvent] = {
-    import spark.implicits._
-    val flagged = spans.flatMap { case (e, lo, hi) =>
-      filled.filter(r => r.epoch == e && !r.isMarker && r.frame >= lo - 1 && r.frame <= hi)
-        .map(r => (s"$e:$lo", r.frame, r.tsUs, r.c0x, r.c0y, r.c1x, r.c1y,
-          r.isFight, r.isBridge))
-    }.toDF(Detectors.G, "frame", "tsUs", "c0x", "c0y", "c1x", "c1y", "isFight", "isBridge")
-    Detectors.fightsTail(flagged, p).map { f =>
-      val epoch = f.g.substring(0, f.g.lastIndexOf(':'))
-      EpochFightEvent(epoch, f.start_ts, f.end_ts, f.duration_sec, f.end_x, f.end_y)
+  /** Stage 3b on the driver: the events of one closed super-session, from
+    * its slice — the non-marker filled rows in [minF − 1, maxF], in frame
+    * order, one per frame — under the rules of [[Detectors.fightsTail]]:
+    * candidate frames split into sessions where the gap exceeds
+    * `maxFrameGap`, and a session survives with at least `minNumFrames + 1`
+    * frames; the survivors and the bridge frames regroup where the gap
+    * exceeds `maxFrameGapWEmptyFrames`, and a regrouped session survives
+    * when it holds a candidate and at least `minNumFrames + 1` frames. Each
+    * survivor's kernel rows [firstF − 1, lastF] go to
+    * [[Detectors.fightOf]]. */
+  private[streaming] def tailEvents(epoch: String, slice: IndexedSeq[FilledRow],
+      p: FightParams): Seq[EpochFightEvent] = {
+    // ascending frames → their sessions, split where the gap exceeds `gap`
+    def sessions(frames: IndexedSeq[Long], gap: Long): Seq[IndexedSeq[Long]] = {
+      val starts = frames.indices.filter(i => i == 0 || frames(i) - frames(i - 1) > gap)
+      starts.zip(starts.drop(1) :+ frames.length).map { case (a, b) => frames.slice(a, b) }
     }
+    val minFrames = p.minNumFrames + 1
+    val kept = sessions(slice.filter(_.isFight).map(_.frame), p.maxFrameGap)
+      .filter(_.length >= minFrames).flatten.toSet
+    sessions(slice.filter(r => r.isBridge || kept(r.frame)).map(_.frame),
+        p.maxFrameGapWEmptyFrames)
+      .filter(s => s.length >= minFrames && s.exists(kept))
+      .flatMap { s =>
+        val rs = slice.filter(r => r.frame >= s.head - 1 && r.frame <= s.last).toArray
+        Detectors.fightOf(epoch, s.head, rs.map(_.frame), rs.map(_.tsUs),
+          rs.map(_.c0x), rs.map(_.c0y), rs.map(_.c1x), rs.map(_.c1y), p)
+      }
+      .map(f => EpochFightEvent(epoch, f.start_ts, f.end_ts, f.duration_sec, f.end_x, f.end_y))
   }
 
   private val filledSchema = org.apache.spark.sql.Encoders.product[FilledRow].schema
@@ -499,13 +566,8 @@ object FightStream {
         poseIn(e).filter(r => slotEnd(e, r.frame) > prior.silverUs))
         .partition(r => slotEnd(e, r.frame) <= silverUs)
     }.unzip
-    val silver = {
-      val todo = closing.zipWithIndex.collect { case (rs, e) if rs.nonEmpty => (e, rs) }
-      val byKey = epochs.indices.map(e => epochs(e).epoch -> e).toMap
-      val rows = if (todo.isEmpty) Array.empty[SilverRow]
-        else silverRows(spark, epochs, todo, parts, p.fps)
-      rows.groupBy(r => byKey(r.epoch)).withDefaultValue(Array.empty[SilverRow])
-    }
+    val silver = epochs.indices.map(e =>
+      if (closing(e).isEmpty) Nil else silverRows(epochs(e), closing(e), parts, p.fps))
 
     // stages 0 and 2 per epoch
     val superGap = math.max(p.maxFrameGap, p.maxFrameGapWEmptyFrames)
@@ -537,36 +599,32 @@ object FightStream {
       val firstKept = Math.floorDiv(prior.goldUs - gapUs - t0(e), durUs) + 1
       val from = math.min(c.sessions.headOption.fold(Long.MaxValue)(_._1), firstKept) - 1
       val (fill, rows) = fillAndFlag(ep.epoch, ep.t0us, c.fill,
-        silver(e).sortBy(_.frame).map(r => (r, speed(r.frame))).toSeq, p, from)
+        silver(e).map(r => (r, speed(r.frame))), p, from)
       // a frame whose slot is closed can no longer be emitted
       (c.copy(pending = pending(e).sorted(slotOrder), fill = fill,
         blob = blob, provisional = provisional,
         finals = finals.filter(f => slotEnd(e, f._1) > silverUs).sortBy(_._1)), rows)
     }
 
-    // stage 3: super-sessions per epoch, the exact tail over closed ones
+    // stage 3: super-sessions per epoch, the tail over closed ones
     val goldUs = filled.indices.flatMap(e => filled(e)._2.map(r => tFrame(e, r.frame)))
       .maxOption.fold(prior.goldUs)(t => math.max(prior.goldUs, toMs(t)))
-    val spans = ArrayBuffer.empty[(String, Long, Long)]
-    val slice = ArrayBuffer.empty[FilledRow]
-    val carries = filled.indices.map { e =>
+    val (carries, tails) = filled.indices.map { e =>
       val (c, rows) = filled(e)
       val cands = rows.filter(r => (r.isFight || r.isBridge) &&
         tFrame(e, r.frame) + gapUs > prior.goldUs).map(_.frame)
       val (closed, open) = superSessions(c.sessions, cands, superGap)
         .partition(s => tFrame(e, s._2) + gapUs <= goldUs)
-      val pool = (c.rows ++ rows.filterNot(_.isMarker)).sortBy(_.frame)
-      if (closed.nonEmpty) slice ++= pool
-      spans ++= closed.map { case (lo, hi) => (epochs(e).epoch, lo, hi) }
+      val pool = (c.rows ++ rows.filterNot(_.isMarker)).sortBy(_.frame).toIndexedSeq
       val keepFrom = open.headOption.map(_._1 - 1)
         .getOrElse(pool.lastOption.fold(Long.MaxValue)(_.frame))
-      c.copy(sessions = open, rows = pool.filter(_.frame >= keepFrom))
-    }
-    if (spans.nonEmpty) {
-      import spark.implicits._
-      spanEvents(spark, spans.toSeq, slice.toSeq, p).toDF()
+      (c.copy(sessions = open, rows = pool.filter(_.frame >= keepFrom)),
+        closed.map { case (lo, hi) => tailEvents(epochs(e).epoch,
+          pool.filter(r => r.frame >= lo - 1 && r.frame <= hi), p) })
+    }.unzip
+    if (tails.exists(_.nonEmpty))
+      spark.createDataFrame(tails.flatten.flatten)
         .write.mode("overwrite").parquet(s"$workDir/events/b$batchId")
-    }
     if (blobOut.nonEmpty)
       Poll.writeSnapshot(spark, s"$workDir/blob_speed/b$batchId", blobOut.toSeq)
     Poll.writeSnapshot(spark, s"$stateDir/b$batchId", Carry(silverUs, goldUs, carries))
@@ -632,8 +690,12 @@ object FightStream {
     * its closing slots stay there until the silver pivot has run, so
     * driver heap grows with the rows of one poll. Measured at the
     * reference cadence (30 min at 50 fps, 2 mice × 4 parts: 720 k pose
-    * rows per epoch and poll) on 4 cores with a 3 GB heap, the heap after
-    * a collection peaked near 1.0 GB for one epoch and 1.3 GB for two.
+    * rows per epoch and poll) on 4 cores with a 3 GB heap: the live heap,
+    * sampled after a forced full collection every 250 ms, peaked near
+    * 0.37 GB for one epoch and 0.63 GB for two; the heap right after the
+    * JVM's own collections, garbage not yet reclaimed included, reached
+    * 1.2 GB and 1.6 GB. A warm poll took 2.5–3.2 s for one epoch and
+    * 3.4–4.9 s for two.
     * Catching up over a LONG backlog (days of pose data) must be split
     * into multiple polls with stepped `upToUs`, not one giant poll. */
   def pollFightsMulti(spark: SparkSession, epochs: Seq[FightEpoch],

@@ -220,7 +220,9 @@ object PipelineStream {
 
   /** The semantic gate's current survivor set as a (vec_id, cell) table
     * — every state row with `kept = true`, repaired snapshots included
-    * ([[DedupStream.assignments]]' twin for the `sem/` state). */
+    * ([[DedupStream.assignments]]' twin for the `sem/` state).
+    * Read through [[StateLog.read]]: the DataFrame fixes its file list
+    * when it is built, so re-read it after a poll that compacts. */
   def semSurvivors(spark: SparkSession, workDir: String): DataFrame =
     semLog(workDir).read(spark)
       .filter(col("kept")).select("vec_id", "cell")

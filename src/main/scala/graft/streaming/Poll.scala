@@ -11,10 +11,12 @@ import graft.functions.Cols
   * ([[FightStream]], [[TubeStream]]): the per-frame-slot silver pivot, the
   * frontier markers (both formats), the drain / event-dir helpers and the
   * per-micro-batch snapshot files of explicitly carried state.
-  * ONE pivot implementation — the two streams' feature tables cannot drift
-  * from each other, and both ride [[Detectors.withFeatures]] /
-  * [[Detectors.pivotAggs]], so they cannot drift from the batch cores
-  * either. */
+  * The Spark pivot ([[prePivot]] + [[pivotFeatures]]) rides
+  * [[Detectors.withFeatures]] / [[Detectors.pivotAggs]], so it cannot
+  * drift from the batch cores; the tube poller runs it. The fight poller
+  * pivots the rows it already holds on the driver
+  * ([[FightStream.silverRows]]), and `FightDriverSpec` checks that pivot
+  * against this one. */
 private[streaming] object Poll {
 
   val poseSchema: StructType = StructType(Seq(

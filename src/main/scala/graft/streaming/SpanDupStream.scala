@@ -80,7 +80,9 @@ object SpanDupStream {
   }
 
   /** The accumulated per-document stats — each row scored as of its
-    * delivery (see the incremental contract above). */
+    * delivery (see the incremental contract above).
+    * Read through [[StateLog.read]]: the DataFrame fixes its file list
+    * when it is built, so re-read it after a poll that compacts. */
   def stats(spark: SparkSession, workDir: String): DataFrame =
     statsLog(workDir).read(spark)
 

@@ -37,7 +37,10 @@ final case class StateLog(root: String, schema: StructType) {
     new Path(root).getFileSystem(sp.sparkContext.hadoopConfiguration)
 
   /** The effective state below `below`: all rows of the newest committed
-    * snapshot and of the `b<i>` dirs above it, from one listing. */
+    * snapshot and of the `b<i>` dirs above it, from one listing. The
+    * DataFrame fixes its file list when it is built: after a poll that
+    * compacts (and sweeps the `b<i>` it folded), re-read it; an action on
+    * one built before that poll fails with `FAILED_READ_FILE.FILE_NOT_EXIST`. */
   def read(sp: SparkSession, below: Long = Long.MaxValue): DataFrame = {
     val (snap, bdirs) = dirs(sp, below)
     val paths = (snap.toSeq ++ bdirs).map(_._2.toString)
