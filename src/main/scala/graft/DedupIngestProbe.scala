@@ -34,6 +34,7 @@ import graft.streaming.DedupStream
   */
 object DedupIngestProbe {
   def main(args: Array[String]): Unit = {
+    Probe.watchHeap()
     val spark = Tables.configure(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -92,7 +93,7 @@ object DedupIngestProbe {
     println(f"DEDUP_INGEST docs=$nDocs wrong=$nWrong stateRows=$nState " +
       f"maxStateDirs=$maxDirs repair=$repairSec%.1fs wrongAfterRepair=$nWrongR " +
       times.zipWithIndex.map { case (t, i) => f"poll$i=$t%.1fs" }
-        .mkString(" ") + f" peakHeapMb=${Probe.peakHeapMb}")
+        .mkString(" ") + f" heapAfterGcPeakMb=${Probe.heapAfterGcPeakMb}")
     require(nDocs == nBase.toLong * copies, s"expected ${nBase * copies} assignments, got $nDocs")
     require(nWrong == 0L, s"$nWrong documents assigned to a wrong cluster")
     require(maxDirs <= p.compactEvery + 1, s"state dirs grew to $maxDirs")

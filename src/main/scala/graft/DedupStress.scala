@@ -17,6 +17,7 @@ import graft.llm.Dedup
   */
 object DedupStress {
   def main(args: Array[String]): Unit = {
+    Probe.watchHeap()
     val spark = Tables.configure(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -61,7 +62,7 @@ object DedupStress {
     val tCluster = (System.nanoTime() - t1) / 1e9
     println(f"DEDUP_STRESS docs=${nBase * copies} pairs=$nPairs " +
       f"pairsSecs=$tPairs%.1f reps=$nReps clusterSecs=$tCluster%.1f " +
-      f"peakHeapMb=${Probe.peakHeapMb}")
+      f"heapAfterGcPeakMb=${Probe.heapAfterGcPeakMb}")
     // EXACT cluster count: fewer = over-merge (distinct bases collapsed),
     // more = under-merge (a planted group split) — both are failures
     require(nReps == nBase,

@@ -19,6 +19,7 @@ import graft.behavior.Detectors
   */
 object EpochProbe {
   def main(args: Array[String]): Unit = {
+    Probe.watchHeap()
     val spark = Tables.configure(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -89,7 +90,7 @@ object EpochProbe {
 
     println(f"EPOCH_PROBE epochs=$nEpochs poseRows=${nEpochs * framesPerEpoch * 8} " +
       f"events=${events.length} analysisSingle=$analysisNew%.2fs execSingle=$wallNew%.1fs " +
-      f"analysisUnion20=$analysisOld%.1fs peakHeapMb=${Probe.peakHeapMb}")
+      f"analysisUnion20=$analysisOld%.1fs heapAfterGcPeakMb=${Probe.heapAfterGcPeakMb}")
     require(events.length == nEpochs,
       s"expected $nEpochs planted fights, got ${events.length}")
 
@@ -136,7 +137,7 @@ object EpochProbe {
     val tubeWall = (System.nanoTime() - tT1) / 1e9
     println(f"TUBE_EPOCH_PROBE epochs=$nEpochs events=${tubeEvents.length} " +
       f"analysisSingle=$tubeAnalysis%.2fs execSingle=$tubeWall%.1fs " +
-      f"peakHeapMb=${Probe.peakHeapMb}")
+      f"heapAfterGcPeakMb=${Probe.heapAfterGcPeakMb}")
     require(tubeEvents.length == nEpochs,
       s"expected $nEpochs planted tube tests, got ${tubeEvents.length}")
     require(tubeEvents.forall(_.getAs[String]("winner_identity") == "A"),

@@ -19,6 +19,7 @@ import graft.streaming.{FightStream, TubeStream}
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
+    Probe.watchHeap()
     val spark = Tables.configure(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -96,7 +97,8 @@ object StreamProbe {
     val events = FightStream.fightEvents(spark, work).collect()
     println(f"STREAM_PROBE polls=$nPolls framesPerPoll=$framesPerPoll " +
       f"poseRowsPerPoll=${framesPerPoll * 8} events=${events.length} " +
-      f"pollSecs=[${times.map(t => f"$t%.1f").mkString(",")}] flush=$flushS%.1fs")
+      f"pollSecs=[${times.map(t => f"$t%.1f").mkString(",")}] flush=$flushS%.1fs " +
+      f"heapAfterGcPeakMb=${Probe.heapAfterGcPeakMb}")
     require(events.length == nPolls,
       s"expected $nPolls planted fights, got ${events.length}")
 
@@ -148,7 +150,7 @@ object StreamProbe {
       f"poseRowsPerPoll=${framesPerPoll * 8 * nEpochs} " +
       f"events=${mEvents.length} " +
       f"pollSecs=[${mTimes.map(t => f"$t%.1f").mkString(",")}] " +
-      f"flush=$mFlushS%.1fs peakHeapMb=${Probe.peakHeapMb}")
+      f"flush=$mFlushS%.1fs heapAfterGcPeakMb=${Probe.heapAfterGcPeakMb}")
     require(mEvents.length == nEpochs * mPolls,
       s"expected ${nEpochs * mPolls} planted fights, got ${mEvents.length}")
     val perEpoch = mEvents.groupBy(_.epoch).view.mapValues(_.length).toMap
@@ -251,7 +253,7 @@ object StreamProbe {
       f"poseRowsPerPoll=${framesPerPoll * 8 * nEpochs} " +
       f"events=${tEvents.length} " +
       f"pollSecs=[${tTimes.map(t => f"$t%.1f").mkString(",")}] " +
-      f"flush=$tFlushS%.1fs peakHeapMb=${Probe.peakHeapMb}")
+      f"flush=$tFlushS%.1fs heapAfterGcPeakMb=${Probe.heapAfterGcPeakMb}")
     require(tEvents.length == nEpochs * mPolls,
       s"expected ${nEpochs * mPolls} planted tube tests, got ${tEvents.length}")
     require(tEvents.forall(_.winner_identity == "A"),
@@ -309,7 +311,7 @@ object StreamProbe {
       f"poseRowsPerPoll=${framesPerPoll * 4 * nEpochs} " +
       f"idRowsPerPoll=${framesPerPoll * 2 * nEpochs} " +
       f"pollSecs=[${cTimes.map(t => f"$t%.1f").mkString(",")}] " +
-      f"peakHeapMb=${Probe.peakHeapMb}")
+      f"heapAfterGcPeakMb=${Probe.heapAfterGcPeakMb}")
     cEpochs.zipWithIndex.foreach { case (e, i) =>
       val rows = cByEpoch.getOrElse(e.epoch, Array.empty)
       val idents = rows.map(_.getString(1)).toSet

@@ -54,6 +54,21 @@ object Tables {
     // entries keep a warm pass at zero. Static: read when the first class
     // is generated.
     .config("spark.sql.codegen.cache.maxEntries", "1000")
+    // The local file system without shell forks (graft.io.LocalFs). Hadoop's
+    // stock one, without its native library, starts a `chmod` process for
+    // every create or mkdir that carries a permission and a `readlink`
+    // process on each side of every FileContext rename (checkpoint log
+    // entries, `.crc` files, snapshots, committer output): 70–100 processes
+    // per warm fight poll, most of a poll's checkpoint-log time. The
+    // replacement sets the same 9 permission bits through java.nio and
+    // reads a non-link's status directly; sticky bits, symbolic links,
+    // checksums and `.crc` files take the stock code. Only `file://`
+    // changes. Hadoop caches a FileSystem per scheme and user for the JVM,
+    // so this holds only when the first `file://` FileSystem is created
+    // from this session's configuration.
+    .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.io.ForkFreeLocalFs].getName)
 
   /** Inferred schema per table path, memoized for the JVM: the driver's
     * synthetic tables are immutable test fixtures, and every

@@ -91,7 +91,10 @@ import scala.collection.mutable.ArrayBuffer
   * stage runs per epoch on the driver over the rows of one poll; Spark
   * runs the query's file scan and the `events/b<batchId>` write, so a
   * poll that closes a super-session is two jobs and one that does not
-  * is one.
+  * is one. Both jobs run on the caller's session, not on the query's
+  * per-run clone, so their generated classes compile once per JVM, not
+  * once per poll: a warm poll compiles none. On `file://` a warm poll
+  * starts no child process either ([[graft.io.ForkFreeRawLocalFileSystem]]).
   */
 object FightStream {
 
@@ -543,12 +546,15 @@ object FightStream {
     def toMs(us: Long) = us / 1000 * 1000
 
     // the micro-batch's rows, materialized once and handed to the driver;
-    // one String per distinct identity and part name, not one per row
+    // one String per distinct identity and part name, not one per row. The
+    // scan runs on the caller's session: `batch` belongs to the query's
+    // per-run clone, whose new class loader would compile the scan's
+    // generated classes again on every poll
     val poseIn = Array.fill(epochs.length)(ArrayBuffer.empty[SlotRow])
     val blobIn = Array.fill(epochs.length)(ArrayBuffer.empty[BlobSample])
     val names = scala.collection.mutable.HashMap.empty[String, String]
     def name(s: String) = if (s == null) null else names.getOrElseUpdate(s, s)
-    batch.collect().foreach { r =>
+    spark.createDataFrame(batch.rdd, batch.schema).collect().foreach { r =>
       val e = r.getInt(0)
       if (r.getBoolean(1))
         blobIn(e) += BlobSample(epochs(e).epoch, r.getLong(2), r.getLong(7),
@@ -691,11 +697,12 @@ object FightStream {
     * driver heap grows with the rows of one poll. Measured at the
     * reference cadence (30 min at 50 fps, 2 mice × 4 parts: 720 k pose
     * rows per epoch and poll) on 4 cores with a 3 GB heap: the live heap,
-    * sampled after a forced full collection every 250 ms, peaked near
-    * 0.37 GB for one epoch and 0.63 GB for two; the heap right after the
-    * JVM's own collections, garbage not yet reclaimed included, reached
-    * 1.2 GB and 1.6 GB. A warm poll took 2.5–3.2 s for one epoch and
-    * 3.4–4.9 s for two.
+    * sampled after a forced full collection every 250 ms, peaked at
+    * 0.31–0.33 GB for one epoch and 0.50–0.61 GB for two; the whole heap
+    * right after the JVM's own collections ([[graft.Probe.heapAfterGcPeakMb]],
+    * garbage not yet reclaimed included) peaked at 1.0–1.2 GB and
+    * 1.2–1.6 GB. A warm poll took 1.2–1.9 s for one epoch and 1.5–2.8 s
+    * for two.
     * Catching up over a LONG backlog (days of pose data) must be split
     * into multiple polls with stepped `upToUs`, not one giant poll. */
   def pollFightsMulti(spark: SparkSession, epochs: Seq[FightEpoch],

@@ -564,4 +564,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch.size === 2)
     assert(events(base) === batch)
   }
+
+  test("a warm poll starts no shell command and compiles no class") {
+    import FightFixture._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import scala.jdk.CollectionConverters._
+    // five 10 s deliveries, each with a fight that the same poll closes
+    val chunk = 500
+    val base = Files.createTempDirectory("graft_warmpoll").toString
+    def fight(k: Int) = k * chunk + 50 to k * chunk + 150
+    def pose(k: Int) = rows((k + 1) * chunk - 1, fight(k), minF = k * chunk)
+    def poll(k: Int): Unit =
+      deliverAndPoll(base, pose(k), k * chunk, (k + 1) * chunk, Some(fight(k)))
+    (0 until 2).foreach(poll)
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try (2 until 5).foreach(poll) finally rec.stop()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    val jfr = Files.createTempFile("graft_warmpoll", ".jfr")
+    rec.dump(jfr); rec.close()
+    val started = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala.toSeq
+      .groupMapReduce(e => new java.io.File(e.getString("command").trim.split("\\s+")(0))
+        .getName)(_ => 1)(_ + _)
+    info(s"polls 3-5: ${started.values.sum} processes started ($started), " +
+      s"$compiled classes compiled")
+    assert(started.filter(c => Set("chmod", "readlink", "ls", "stat")(c._1)) === Map.empty)
+    assert(compiled === 0)
+    val batch = graft.behavior.Detectors.detectFights(poseDf((0 until 5).flatMap(pose)),
+      Some((0 until 5).map(k => blobDf(k * chunk, (k + 1) * chunk, fight(k))).reduce(_ union _)),
+      parts, p).collect().map(key).toSet
+    assert(batch.size === 5)
+    assert(events(base) === batch)
+  }
 }
