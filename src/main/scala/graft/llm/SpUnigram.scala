@@ -68,13 +68,13 @@ object SpUnigram {
       .filter(!col("w").contains(""))
     val freqs = if (maxWordLen > 0) freqs0.filter(length(col("w")) <= maxWordLen)
       else freqs0
-    val nTypes = freqs.count()
-    require(nTypes <= driverTypeCap,
-      s"spUnigramTrain: $nTypes word types exceed driverTypeCap " +
-        s"$driverTypeCap — the trainer is a driver kernel over the " +
-        "vocab-scale type table")
-    val words = freqs.as[(String, Long)].collect().sortBy(_._1)
-    val pieces = kernel(words, vocab, iters, maxPieceLen, seedVocab, softEm)
+    // one pass over the type table: at most one row past the cap comes back
+    val cap = math.max(-1L, math.min(driverTypeCap, Int.MaxValue - 1L)).toInt
+    val words = freqs.as[(String, Long)].limit(cap + 1).collect()
+    require(words.length <= driverTypeCap,
+      s"spUnigramTrain: more than $driverTypeCap word types (driverTypeCap) " +
+        "— the trainer is a driver kernel over the vocab-scale type table")
+    val pieces = kernel(words.sortBy(_._1), vocab, iters, maxPieceLen, seedVocab, softEm)
     pieces.toSeq.toDF("piece", "cnt")
   }
 

@@ -51,8 +51,10 @@ import scala.collection.mutable.ArrayBuffer
   *     replay after a crash between these writes and the commit-log entry
   *     recomputes bit-identical state and events, and a poll reads one
   *     snapshot however many polls came before;
-  *   - `events/b<batchId>`: the events that micro-batch closed, written
-  *     with overwrite, so a replay is idempotent;
+  *   - `events/b<batchId>`: the events that micro-batch closed, one
+  *     parquet file the driver writes ([[Poll.writeEvents]]) into
+  *     `events/.b<batchId>.tmp` and renames over the dir, so a replay
+  *     replaces it whole;
   *   - `blob_speed/b<batchId>`: that micro-batch's stage-0 rows, read only
   *     by [[blobSpeeds]].
   *
@@ -88,13 +90,13 @@ import scala.collection.mutable.ArrayBuffer
   * ONE poller over all its epochs ([[pollFightsMulti]]): one streaming
   * query and one checkpoint whatever the epoch count, each epoch with its
   * own `t0us` frame grid, identity pair and optional blob source. Every
-  * stage runs per epoch on the driver over the rows of one poll; Spark
-  * runs the query's file scan and the `events/b<batchId>` write, so a
-  * poll that closes a super-session is two jobs and one that does not
-  * is one. Both jobs run on the caller's session, not on the query's
-  * per-run clone, so their generated classes compile once per JVM, not
-  * once per poll: a warm poll compiles none. On `file://` a warm poll
-  * starts no child process either ([[graft.io.ForkFreeRawLocalFileSystem]]).
+  * stage runs per epoch on the driver over the rows of one poll, the
+  * `events/b<batchId>` write included; Spark runs only the query's file
+  * scan, so a poll is one job, in one wave of at most one task per core.
+  * That job runs on the caller's session, not on the query's per-run
+  * clone, so its generated classes compile once per JVM, not once per
+  * poll: a warm poll compiles none. On `file://` a warm poll starts no
+  * child process either ([[graft.io.ForkFreeRawLocalFileSystem]]).
   */
 object FightStream {
 
@@ -444,7 +446,7 @@ object FightStream {
   }
 
   private val filledSchema = org.apache.spark.sql.Encoders.product[FilledRow].schema
-  private val eventSchema = org.apache.spark.sql.Encoders.product[EpochFightEvent].schema
+  private[streaming] val eventSchema = org.apache.spark.sql.Encoders.product[EpochFightEvent].schema
 
   /** One epoch's stage-0 step over time-ordered `samples`: the batch
     * recipe as a sequential carry. A sample under 10 ms after the previous
@@ -549,12 +551,16 @@ object FightStream {
     // one String per distinct identity and part name, not one per row. The
     // scan runs on the caller's session: `batch` belongs to the query's
     // per-run clone, whose new class loader would compile the scan's
-    // generated classes again on every poll
+    // generated classes again on every poll. It runs in one wave, at most
+    // one task per core: `coalesce` only merges partitions, so a batch
+    // with fewer than the cores keeps its own
     val poseIn = Array.fill(epochs.length)(ArrayBuffer.empty[SlotRow])
     val blobIn = Array.fill(epochs.length)(ArrayBuffer.empty[BlobSample])
     val names = scala.collection.mutable.HashMap.empty[String, String]
     def name(s: String) = if (s == null) null else names.getOrElseUpdate(s, s)
-    spark.createDataFrame(batch.rdd, batch.schema).collect().foreach { r =>
+    val in = batch.rdd
+    spark.createDataFrame(in.coalesce(math.min(in.getNumPartitions,
+        spark.sparkContext.defaultParallelism)), batch.schema).collect().foreach { r =>
       val e = r.getInt(0)
       if (r.getBoolean(1))
         blobIn(e) += BlobSample(epochs(e).epoch, r.getLong(2), r.getLong(7),
@@ -629,8 +635,7 @@ object FightStream {
           pool.filter(r => r.frame >= lo - 1 && r.frame <= hi), p) })
     }.unzip
     if (tails.exists(_.nonEmpty))
-      spark.createDataFrame(tails.flatten.flatten)
-        .write.mode("overwrite").parquet(s"$workDir/events/b$batchId")
+      Poll.writeEvents(spark, s"$workDir/events/b$batchId", eventSchema, tails.flatten.flatten)
     if (blobOut.nonEmpty)
       Poll.writeSnapshot(spark, s"$workDir/blob_speed/b$batchId", blobOut.toSeq)
     Poll.writeSnapshot(spark, s"$stateDir/b$batchId", Carry(silverUs, goldUs, carries))

@@ -248,6 +248,63 @@ private[streaming] object Poll {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
   }
 
+  /** Write a micro-batch's event rows (case classes whose fields are the
+    * string, timestamp and double columns of `schema`) as the one parquet
+    * file of `dir`, from the driver: a few rows cost no Spark job. The
+    * file goes to the dot-prefixed sibling `.<name>.tmp` first, which
+    * [[eventParquetDirs]] and Spark's reader skip, and that dir is renamed
+    * over `dir`, so a replay replaces its own dir whole. Columns are typed
+    * as Spark writes them, except timestamps: INT64 TIMESTAMP(MICROS, UTC)
+    * rather than INT96, which a reader with the explicit schema reads to
+    * the same values. */
+  def writeEvents(spark: SparkSession, dir: String, schema: StructType,
+      rows: Seq[Product]): Unit = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
+    import org.apache.parquet.schema.Type.Repetition
+    val message = Types.buildMessage().addFields(schema.fields.toSeq.map { f =>
+      val rep = if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED
+      (f.dataType match {
+        case StringType =>
+          Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType())
+        case TimestampType => Types.primitive(INT64, rep).as(
+          LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS))
+        case DoubleType => Types.primitive(DOUBLE, rep)
+        case t => throw new IllegalArgumentException(
+          s"writeEvents: column ${f.name} has unsupported type $t")
+      }).named(f.name): org.apache.parquet.schema.Type
+    }: _*).named("spark_schema")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dst = new org.apache.hadoop.fs.Path(dir)
+    val tmp = new org.apache.hadoop.fs.Path(dst.getParent, s".${dst.getName}.tmp")
+    val fs = dst.getFileSystem(conf)
+    fs.delete(tmp, true)
+    val out = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(tmp, "part-00000.parquet"), conf))
+      .withConf(conf).withType(message)
+      // a file with this key holds proleptic-Gregorian values, which
+      // Spark reads without rebasing whatever its rebase settings
+      .withExtraMetaData(java.util.Map.of("org.apache.spark.version",
+        org.apache.spark.SPARK_VERSION_SHORT))
+      .build()
+    try rows.foreach { r =>
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(message)
+      schema.fields.indices.foreach { i => r.productElement(i) match {
+        case null =>
+        case s: String => g.add(i, s)
+        // the µs Spark's encoder stores for a java.sql.Timestamp
+        case t: java.sql.Timestamp =>
+          g.add(i, org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t))
+        case d: Double => g.add(i, d)
+      } }
+      out.write(g)
+    } finally out.close()
+    fs.delete(dst, true)
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"events rename failed: $dst")
+  }
+
   /** The per-micro-batch gold event dirs under `workDir/events`. */
   def eventParquetDirs(spark: SparkSession, workDir: String): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(s"$workDir/events")

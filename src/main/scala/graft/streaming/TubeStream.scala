@@ -224,8 +224,8 @@ object TubeStream {
       // pre-epoch-column rows read back as the single-epoch key ""
       .withColumn("epoch", coalesce(col("epoch"), lit("")))
     // gold: closed spans → exact batch tail over the densified silver
-    // slice, written per micro-batch under an id-keyed subdir — overwrite
-    // of the same subdir makes checkpoint replays idempotent
+    // slice, collected and written per micro-batch by the driver under an
+    // id-keyed subdir — a replay replaces the same subdir whole
     goldSessions(silver, p, t0ByEpoch).writeStream
       .option("checkpointLocation", s"$workDir/ckpt_gold")
       .outputMode("append")
@@ -233,9 +233,8 @@ object TubeStream {
         val spans = batch.select("epoch", "minF", "maxF").collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         if (spans.nonEmpty)
-          eventsFromSpans(batch.sparkSession, spans, silverDir, p, epochs)
-            .toDF()
-            .write.mode("overwrite").parquet(s"$eventsDir/b$batchId")
+          Poll.writeEvents(batch.sparkSession, s"$eventsDir/b$batchId", eventSchema,
+            eventsFromSpans(batch.sparkSession, spans, silverDir, p, epochs).collect().toSeq)
         ()
       }
       .trigger(Trigger.AvailableNow()).start().awaitTermination()

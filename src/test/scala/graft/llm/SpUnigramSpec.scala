@@ -114,4 +114,18 @@ class SpUnigramSpec extends AnyFunSuite {
     val vocabSet = a.map(_._1).toSet
     assert(chars.subsetOf(vocabSet), s"missing chars: ${chars -- vocabSet}")
   }
+
+  test("train refuses more than driverTypeCap word types") {
+    import spark.implicits._
+    // four word types: 'a' 'b' 'c' 'd'
+    val docs = Seq((1L, "a b c d a"), (2L, "b c")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException](
+      SpUnigram.train(docs, "doc_id", "text", vocab = 10, driverTypeCap = 3L))
+    assert(e.getMessage.contains("more than 3 word types"), e.getMessage)
+    intercept[IllegalArgumentException](
+      SpUnigram.train(docs, "doc_id", "text", vocab = 10, driverTypeCap = -1L))
+    // at the cap the whole type table reaches the kernel
+    val atCap = SpUnigram.train(docs, "doc_id", "text", vocab = 10, driverTypeCap = 4L)
+    assert(atCap.collect().map(_.getString(0)).toSet === Set("a", "b", "c", "d"))
+  }
 }

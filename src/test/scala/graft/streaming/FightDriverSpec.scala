@@ -253,4 +253,52 @@ class FightDriverSpec extends AnyFunSuite {
     assert(got.length > 5, "fixture: the random spans must emit events")
     assertSameTail(spans, tp.copy(minNumFrames = 1, maxFrameGap = 2, maxFrameGapWEmptyFrames = 5))
   }
+
+  test("driver-written events read back like Spark-written ones") {
+    import FightStream.EpochFightEvent
+    def ts(us: Long) = {
+      val t = new java.sql.Timestamp(Math.floorDiv(us, 1000L))
+      t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+      t
+    }
+    val rows = Seq(
+      // sub-millisecond
+      EpochFightEvent("", ts(1727773200123456L), ts(1727773201000001L), 0.877, Double.NaN, 12.5),
+      // pre-1970, a non-ASCII key
+      EpochFightEvent("Käfig-β", ts(-1234567L), ts(-1L), 1.234567,
+        Double.PositiveInfinity, Double.NegativeInfinity),
+      EpochFightEvent("rig 2", ts(-86400000000L * 365 * 30 + 7L), ts(0L), 0.0, -0.0, Double.NaN),
+      EpochFightEvent("", ts(1727773260000999L), ts(1727773261999999L), 1.999, 3.25, Double.MaxValue))
+    def key(e: EpochFightEvent) = (e.epoch, e.start_ts.getTime, e.start_ts.getNanos,
+      e.end_ts.getTime, e.end_ts.getNanos, java.lang.Double.doubleToLongBits(e.duration_sec),
+      java.lang.Double.doubleToLongBits(e.end_x), java.lang.Double.doubleToLongBits(e.end_y))
+    val want = rows.map(key).sorted
+    val base = java.nio.file.Files.createTempDirectory("graft_events").toString
+    def read(work: String) =
+      FightStream.fightEventsByEpoch(spark, s"$base/$work").collect().map(key).sorted.toSeq
+    spark.createDataFrame(rows).write.parquet(s"$base/spark/events/b0")
+    Poll.writeEvents(spark, s"$base/driver/events/b0", FightStream.eventSchema, rows)
+    assert(read("spark") === want)
+    assert(read("driver") === want)
+    // the driver file: one part file, no temp dir left, µs timestamps
+    val driverDir = new java.io.File(s"$base/driver/events")
+    assert(driverDir.list().toSeq === Seq("b0"))
+    val parts = new java.io.File(driverDir, "b0").list().filterNot(_.startsWith("."))
+    assert(parts.toSeq === Seq("part-00000.parquet"))
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$base/driver/events/b0/part-00000.parquet"),
+        spark.sparkContext.hadoopConfiguration))
+    val schema = footer.getFileMetaData.getSchema
+    try assert(schema.getType(schema.getFieldIndex("start_ts")).toString ===
+      "optional int64 start_ts (TIMESTAMP(MICROS,true))")
+    finally footer.close()
+    // a replay replaces its dir whole
+    Poll.writeEvents(spark, s"$base/driver/events/b0", FightStream.eventSchema, rows.take(1))
+    assert(read("driver") === Seq(key(rows.head)))
+    // a legacy Spark-written b0 beside a driver-written b1: one scan reads both
+    spark.createDataFrame(rows.take(2)).write.parquet(s"$base/mixed/events/b0")
+    Poll.writeEvents(spark, s"$base/mixed/events/b1", FightStream.eventSchema, rows.drop(2))
+    assert(read("mixed") === want)
+  }
 }

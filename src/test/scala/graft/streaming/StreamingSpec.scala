@@ -464,12 +464,18 @@ class StreamingSpec extends AnyFunSuite {
       * frame `cut`. */
     def deliverAndPoll(base: String, rs: Seq[(Int, String, String, Double, Double)],
         from: Int, cut: Int, blob: Option[Range] = None): Unit = {
+      deliver(base, rs, from, cut, blob)
+      pollAt(base, cut, blob.isDefined)
+    }
+    def deliver(base: String, rs: Seq[(Int, String, String, Double, Double)],
+        from: Int, cut: Int, blob: Option[Range]): Unit = {
       val chunk = rs.filter(r => r._1 >= from && r._1 < cut)
       if (chunk.nonEmpty) poseDf(chunk).write.parquet(s"$base/pose/c$cut")
       blob.foreach(fight => blobDf(from, cut, fight).write.parquet(s"$base/blob/c$cut"))
-      FightStream.pollFights(spark, s"$base/pose/*", s"$base/work", parts, p, t0us,
-        Seq("A", "B"), t0us + cut * 20000L, blob.map(_ => s"$base/blob/*"))
     }
+    def pollAt(base: String, cut: Int, blob: Boolean): Unit =
+      FightStream.pollFights(spark, s"$base/pose/*", s"$base/work", parts, p, t0us,
+        Seq("A", "B"), t0us + cut * 20000L, if (blob) Some(s"$base/blob/*") else None)
     def events(base: String) =
       FightStream.fightEvents(spark, s"$base/work").collect().map(key).toSet
   }
@@ -568,20 +574,54 @@ class StreamingSpec extends AnyFunSuite {
   test("a warm poll starts no shell command and compiles no class") {
     import FightFixture._
     import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
     import scala.jdk.CollectionConverters._
     // five 10 s deliveries, each with a fight that the same poll closes
     val chunk = 500
     val base = Files.createTempDirectory("graft_warmpoll").toString
     def fight(k: Int) = k * chunk + 50 to k * chunk + 150
     def pose(k: Int) = rows((k + 1) * chunk - 1, fight(k), minF = k * chunk)
-    def poll(k: Int): Unit =
-      deliverAndPoll(base, pose(k), k * chunk, (k + 1) * chunk, Some(fight(k)))
-    (0 until 2).foreach(poll)
+    def deliver(k: Int): Unit =
+      FightFixture.deliver(base, pose(k), k * chunk, (k + 1) * chunk, Some(fight(k)))
+    def poll(k: Int): Unit = pollAt(base, (k + 1) * chunk, blob = true)
+    // the jobs and tasks of one poll. Listener events arrive on their own
+    // thread, so the poll runs between two one-task RDD jobs in the group
+    // "flush": what the listener sees between their starts is the poll's
+    val sc = spark.sparkContext
+    def flush(): Unit = {
+      sc.setJobGroup("flush", "listener flush")
+      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+    }
+    def jobsAndTasks(k: Int): (Int, Int) = {
+      var jobs, tasks = 0
+      var flushStages = Set.empty[Int]
+      val flushes = new java.util.concurrent.CountDownLatch(2)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == "flush")) {
+            flushStages ++= j.stageIds
+            flushes.countDown()
+          } else if (flushes.getCount == 1) jobs += 1
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+          if (flushes.getCount == 1 && !flushStages(t.stageId)) tasks += 1
+      }
+      deliver(k)
+      sc.addSparkListener(listener)
+      try {
+        flush()
+        poll(k)
+        flush()
+        assert(flushes.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally sc.removeSparkListener(listener)
+      (jobs, tasks)
+    }
+    (0 until 2).foreach { k => deliver(k); poll(k) }
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
     val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    try (2 until 5).foreach(poll) finally rec.stop()
+    val perPoll = try (2 until 5).map(jobsAndTasks) finally rec.stop()
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
     val jfr = Files.createTempFile("graft_warmpoll", ".jfr")
     rec.dump(jfr); rec.close()
@@ -589,7 +629,9 @@ class StreamingSpec extends AnyFunSuite {
       .groupMapReduce(e => new java.io.File(e.getString("command").trim.split("\\s+")(0))
         .getName)(_ => 1)(_ + _)
     info(s"polls 3-5: ${started.values.sum} processes started ($started), " +
-      s"$compiled classes compiled")
+      s"$compiled classes compiled, (jobs, tasks) per poll $perPoll")
+    assert(perPoll.map(_._1) === Seq(1, 1, 1))
+    perPoll.foreach(jt => assert(jt._2 <= sc.defaultParallelism, perPoll))
     assert(started.filter(c => Set("chmod", "readlink", "ls", "stat")(c._1)) === Map.empty)
     assert(compiled === 0)
     val batch = graft.behavior.Detectors.detectFights(poseDf((0 until 5).flatMap(pose)),
